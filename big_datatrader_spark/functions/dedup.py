@@ -383,26 +383,6 @@ def mix_consts(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(toks: Column, num_hashes: int,
-                      shingle_n: int = 3) -> Column:
-    """Array of ``num_hashes`` minhash values over n-gram shingles,
-    hash_j(s) = (a_j * (h60(s) mod p) + b_j) mod p.
-
-    Column-expression form (used for small/inline cases and as the
-    semantic spec). The table-level pipeline below
-    (``minhash_signatures``) computes the same thing via
-    explode + flat hash projections + groupBy: flat projections are
-    whole-stage-codegen'd, while lambda bodies inside higher-order
-    functions run interpreted — measured >10x difference at 5k docs.
-    """
-    hs = F.transform(shingles(toks, shingle_n), lambda s: h60(s) % _MIX_P)
-    return F.array(*[
-        F.array_min(F.transform(
-            hs, lambda h: (F.lit(a) * h + F.lit(b)) % _MIX_P))
-        for a, b in mix_consts(num_hashes)
-    ])
-
-
 def minhash_signatures(df: DataFrame, *, text_col: str, id_col: str,
                        num_hashes: int, shingle_n: int = 3) -> DataFrame:
     """(doc_id, sig array<long>) via the codegen-friendly plan:

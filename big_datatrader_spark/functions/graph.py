@@ -16,49 +16,12 @@ collected array is never corpus-scale.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, functions as F
+
+from ..session import scan_floor
 
 _PAIRS = ("flatten(transform(ps, x -> "
           "transform(ps, y -> struct(x AS a, y AS b))))")
-
-
-def _parallel_agg_input(li: DataFrame) -> DataFrame:
-    """Restore aggregation parallelism when the lineitem scan cannot
-    feed the cores (r15, guide §2 "derive partitioning from the
-    input" / §2.5 input skew: "one huge unsplittable file — fix at
-    the source if you can; otherwise repartition immediately after
-    the read").
-
-    A parquet file is parallelizable only down to its row groups,
-    and the driver testdata writes each table as ONE row group — so
-    the per-order collect_set's PARTIAL aggregate (an
-    ObjectHashAggregate that sort-falls-back at 128 distinct keys)
-    runs on a single core no matter how many cores the session has.
-    When the scan has fewer than half the session's cores worth of
-    splits, hash-repartition the raw (l_orderkey, l_partkey) rows by
-    the aggregation key first: the exchange count is unchanged (the
-    aggregate reuses the repartition's hash partitioning instead of
-    inserting its own), the shuffle carries 16-byte rows the scan
-    task writes far faster than it can build per-order sets, and the
-    set-building runs on every core. Measured (interleaved min-of-3,
-    OPTIMIZATION_r15.md): sf0.1 edge build 1.88 -> 1.36s (spreads
-    disjoint); sf1 — 32 scan splits, rule does NOT fire — plain
-    partial aggregation stays (guide §2.3 "aggregate before you
-    shuffle" holds once the map side is actually parallel; forcing
-    the repartition there measured a wash). Raising the
-    ObjectHashAggregate fallback threshold instead was measured and
-    rejected (worse at both scales: the giant per-partition hash map
-    of sets pays more in GC than the sort fallback costs)."""
-    try:
-        n_splits = li.rdd.getNumPartitions()
-    except Exception:
-        return li
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if 2 * n_splits <= cpus:
-        return li.repartition(F.col("l_orderkey"))
-    return li
 
 
 def copurchase_pairs(li: DataFrame, a_name: str, b_name: str,
@@ -77,7 +40,10 @@ def copurchase_pairs(li: DataFrame, a_name: str, b_name: str,
     attribute instead of plain ``distinct()``. This keeps the dated
     edge build (temporal reachability) on the same single lineitem
     scan as the rest of the graph family."""
-    parts = (_parallel_agg_input(li).groupBy("l_orderkey")
+    # the per-order collect_set's partial aggregate (an
+    # ObjectHashAggregate) runs on every core only above the floor;
+    # raising its sort-fallback threshold instead measured worse
+    parts = (scan_floor(li, "l_orderkey").groupBy("l_orderkey")
              .agg(F.collect_set("l_partkey").alias("ps")))
     cond: Column = (F.col(a_name) < F.col(b_name) if ordered
                     else F.col(a_name) != F.col(b_name))

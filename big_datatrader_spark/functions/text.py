@@ -13,7 +13,7 @@ Tokenization convention (shared with every oracle): tokens are the
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # Tiny per-language stopword inventories for the n-gram/stopword
 # language-ID heuristic. Order matters: ties resolve in LANGS order.
@@ -25,33 +25,6 @@ STOPWORDS: dict[str, list[str]] = {
     "zh": ["的", "是", "在", "了", "我", "有"],
 }
 LANGS = list(STOPWORDS)
-
-
-def parallel_text_input(docs: DataFrame) -> DataFrame:
-    """Restore tokenization parallelism when the documents scan
-    cannot feed the cores (r15, guide §2 "derive partitioning from
-    the input" / §2.5 input skew — the winnowing_fingerprints r8
-    precedent generalized): the driver parquet stores each table as
-    ONE row group, and a parquet file parallelizes only down to its
-    row groups, so every tokenize/array-op chain above the raw scan
-    ran on a single core at any session width. When the scan has
-    fewer than half the session's cores worth of splits,
-    hash-repartition the raw rows by doc_id first — the text bytes
-    shuffle once (KB..MB per split at these SFs) and the per-doc CPU
-    work fans out to every core. Measured (interleaved min-of-3,
-    OPTIMIZATION_r15.md): text_token_stats sf1 2.64 -> 0.79s noop
-    (3.3x, disjoint spreads), sf0.1 0.78 -> 0.65s. Inert on layouts
-    with enough row groups (a 100 TB corpus), so map-side behavior
-    at scale is unchanged."""
-    import os
-    try:
-        n_splits = docs.rdd.getNumPartitions()
-    except Exception:
-        return docs
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if 2 * n_splits <= cpus:
-        return docs.repartition(F.col("doc_id"))
-    return docs
 
 
 def tokens(text: Column) -> Column:

@@ -388,19 +388,3 @@ def ma_crossover_backtest(df: DataFrame, *,
     return grouped_src.groupBy(symbol_col).applyInPandas(
         run, schema=out_schema)
 
-
-def partition_invariant(df_builder, partitions: Sequence[int] = (1, 2, 4, 8, 16)):
-    """Port of the reference's benchmark oracle (main.py:590-619): the
-    same query at several partition counts must agree. Returns the list
-    of (n_partitions, rows) for the caller to assert on."""
-    outs = []
-    for p in partitions:
-        rows = df_builder(p).collect()
-        outs.append((p, sorted(map(tuple, rows))))
-    return outs
-
-
-def shares_expression(per_trade: float, price_col: str = "close"):
-    """U1 (reference main.py:467-471): the per-row delayed task collapses
-    to a column expression."""
-    return F.try_divide(F.lit(float(per_trade)), F.col(price_col))

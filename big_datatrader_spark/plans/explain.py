@@ -22,16 +22,6 @@ def physical_plan(df: DataFrame) -> str:
         df._jdf.queryExecution(), "formatted")
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
-def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
-    plan = physical_plan(df)
-    return any(fragment in line for line in plan.splitlines()
-               if "PushedFilters" in line)
-
-
 def scan_read_columns(df: DataFrame) -> list[list[str]]:
     """Column lists of every ReadSchema in the plan (one per scan)."""
     import re

@@ -14,7 +14,10 @@ Conventions (SURVEY.md §7.4):
 
 from __future__ import annotations
 
+import json
+import re
 from dataclasses import dataclass, field
+from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -318,12 +321,12 @@ def leased_doc_tokens(spark, sf_dir: str) -> "DataFrame | None":
     from pyspark.sql import functions as F
 
     from ..functions import text as TX
+    from ..session import scan_floor
     from ..sources.parquet_source import table
     # r15: the lease build is the one tokenize pass the whole scoped
-    # text family shares — parallel_text_input keeps it off a single
-    # core when the scan layout starves the session (guide §2.5; the
-    # one-row-group driver parquet ran it serially at every sf)
-    docs = TX.parallel_text_input(table(spark, sf_dir, "documents"))
+    # text family shares — scan_floor keeps it off a single core when
+    # the scan layout starves the session
+    docs = scan_floor(table(spark, sf_dir, "documents"), "doc_id")
     rel = docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
@@ -351,996 +354,95 @@ def shared_or(cache, key: str, df: DataFrame, *, eager: bool = True,
 
 
 # ---------------------------------------------------------------------------
-# Driver-window rotation. The driver's correctness gate only checks the
-# FIRST 50 registry entries each round, so ordering IS the evidence
-# pipeline: the window head carries queries changed this round, then
-# the never-driver-evidenced backlog, then rows-only-by-design queries
-# due for their 2-round re-evidence, then already-green queries
-# oldest-evidence-first so every query keeps accumulating recent
-# driver rows. Round 9 drained the r2-staleness tail completely;
-# round 10 drained 23 of the 49 r3-stale greens; round 11 drained
-# the rest. Round 12's head: the changed/new set, the four r10
-# rows-only members due on their 2-round cadence (surfaced by the
-# rows_only_due tier), then the r4-stale greens oldest-first — the
-# source of truth for all window arithmetic is `python
-# tools/evidence_report.py` (VERDICT r10 ask #4: paste its numbers,
-# do not hand-derive them).
+# Driver-window rotation. The driver's correctness gate checks only the
+# first _WINDOW registry entries each round, so the order is the evidence
+# pipeline: queries changed since the latest record lead, then the
+# never-evidenced backlog, then rows-only queries (oracle=None) whose last
+# clean run is >= 2 rounds old together with their hash-exact companions,
+# then greens oldest-evidence-first. load_registry derives the evidence from
+# the committed driver records CORRECTNESS_r<N>.json beside the package;
+# the current round is the latest record plus one. `python
+# tools/evidence_report.py` prints the resulting window arithmetic.
 
 _WINDOW = 50
-_CURRENT_ROUND = 15
-
-# Queries whose code or oracle changed (or are new) this round — they
-# need fresh driver evidence regardless of prior greens, so they lead
-# the window. Every name here MUST be registered: _window_order
-# asserts membership (VERDICT r6: _R6_CHANGED named a phantom query
-# and the slot silently fell through).
-# Round 9 (VERDICT r8 asks): the set settled at 18 entries, two of
-# them r2-stale greens already in the head, so the 50-slot window
-# still drains all 33 queries whose latest evidence is r2 (VERDICT
-# r8 ask #2) — the arithmetic is re-derived in the header comment
-# above and pinned by test_rotation. Names are added as queries are
-# written or replanned this round; _window_order hard-fails on
-# ghosts.
-# Round 12 (VERDICT r11 asks): the four r10 rows-only members
-# (ann_ivf_topk, ann_lsh_topk, approx_aggregates, hll_partial_merge)
-# hit their 2-round cadence this round — the rows_only_due tier
-# surfaces them automatically, costing no _CHANGED slot. Names below
-# are queries written or replanned this round; _window_order
-# hard-fails on ghosts.
-# Round 13 (VERDICT r12 asks): bpe_learn_merges hits its 2-round
-# rows-only cadence this round; ask #2 makes the companion pairing
-# structural, so its hash-exact twin bpe_pair_counts_round1 is pulled
-# into the same window by the companion tier (no _CHANGED slot).
-# Names below are queries written or replanned this round;
-# _window_order hard-fails on ghosts.
-# Round 15 (OPTIMIZATION round 2): queries whose physical plan changes
-# this round (same declared results — every replan is oracle-proven
-# before it lands). Names are added as plans change, _window_order
-# hard-fails on ghosts.
-_R15_CHANGED = (
-    # replanned (guide §2.4/§4, VERDICT r14 ask #5 — the edit1
-    # persist-before-sort recipe): the four decode queries whose
-    # final orderBy's range-bounds sampling job re-ran the
-    # mapInPandas decode kernel a second time now persist the
-    # pre-sort relation via run_scoped (sf1 interleaved A/B: -26% to
-    # -38%); values oracle-identical. The two FOLD members of the
-    # r14 sweep (macd_histogram, time_decay_ewma) were converted,
-    # measured worse/wash (their kernels are cheap state machines),
-    # and reverted to their r14 forms — doc notes carry the numbers.
-    'multimodal_feature_extract',
-    'multimodal_frame_sample',
-    'multimodal_ppm_decode',
-    'multimodal_wav_decode',
-    # replanned (guide §5, VERDICT r14 ask #3 redirected by the r15
-    # sf1 stage profile): the eager train persist — ~91% of the
-    # dedges cache re-materialized — dropped for a filter view over
-    # the cached dedges; sf1 14.7 -> 12.3s interleaved, values
-    # oracle-identical at sf0.01/sf0.1
-    'link_prediction_holdout_eval',
-    # replanned (guide §2, VERDICT r14 ask #2): iteration shuffle
-    # width now derives from the edge cache's materialized size
-    # (~16 MB/task, floor 8 = the sf0.1-measured winner, cap
-    # $SPARK_GRAFT_CPUS) instead of a scale-frozen constant; AQE-on
-    # and wide-width alternatives measured at both scales
-    # (plans/r15/ab_hits_*.json), values oracle-identical
-    'hits_hub_authority',
-    # replanned (guide §2/§2.5, functions/graph.py
-    # _parallel_agg_input): the shared co-purchase edge build
-    # hash-repartitions the lineitem projection by l_orderkey before
-    # the per-order collect_set WHEN the scan has fewer splits than
-    # half the cores (the driver parquet is one row group per table,
-    # so the partial aggregate ran on ONE core at every sf) — same
-    # exchange count, aggregation parallel; edge build 1.88 -> 1.36s
-    # at sf0.1, rule inert at sf1+ (32 splits). Every consumer of
-    # the shared build re-evidences; values oracle-identical.
-    'pagerank_copurchase',
-    'personalized_pagerank',
-    'label_propagation_communities',
-    'modularity_brand_partition',
-    'local_clustering_coefficient',
-    'link_prediction_common_neighbors',
-    'gnn_feature_propagation',
-    'triangle_count_copurchase',
-    'sssp_copurchase',
-    'temporal_reachability_copurchase',
-    'graph_family_scoped_audit',
-    # replanned (guide §2/§2.5, VERDICT r14 ask #7): the suite's
-    # worst 10x scaler was one narrow tokenize pass serialized by the
-    # one-row-group documents scan; parallel_text_input repartitions
-    # by doc_id when the layout starves the cores (sf1 2.64 -> 0.79s
-    # noop; inert on multi-row-group layouts). The doc_tokens lease
-    # build gained the same floor, so the scoped audit re-evidences
-    # with it; values oracle-identical.
-    'text_token_stats',
-    'text_family_scoped_audit',
-    # replanned (same §2.5 floor): the shared BM25 tokenize+explode
-    # (_bm25_parts) fed its tf exchange from the single scan task;
-    # parallel_text_input moves it onto every core (tf stage
-    # 1.98 -> 0.47s at sf1) — one extra real exchange on starved
-    # layouts only, values oracle-identical for all three consumers
-    'hybrid_rrf_retrieval',
-    'bm25_more_like_this',
-    'hard_negative_mining',
-)
-
-# Round 14 (OPTIMIZATION round 1): queries whose physical plan changed
-# this round (same declared results — every replan is oracle-proven
-# before it lands). A replanned spark_fn earns fresh driver evidence
-# by rule; names are added as plans change, _window_order hard-fails
-# on ghosts.
-_R14_CHANGED = (
-    # replanned for performance (guide §2.3/§3.2): anti-join / test-set
-    # relations pre-filtered to the broadcast query-node set — the
-    # full-train sort-merge shuffle is gone; values oracle-identical
-    'link_prediction_holdout_eval',
-    'link_prediction_common_neighbors',
-    # replanned (guide §2.4): query-private ewd=edges⋈outdeg cache
-    # dropped for the family edge lease + node-sized outdeg; values
-    # oracle-identical
-    'personalized_pagerank',
-    # replanned (guide §2.4): pre-sort result persisted so the output
-    # sort's range-bounds sampling job no longer re-runs the
-    # levenshtein verify chain a second time; values oracle-identical
-    'edit1_deletion_neighborhood_pairs',
-)
-
-_R13_CHANGED = (
-    'text_family_scoped_audit',  # NEW (ask #3): driver evidence ON
-                                 # the doc_tokens lease — opens a
-                                 # scope, runs the seven text-family
-                                 # members through the shared
-                                 # tokenized relation, oracles the
-                                 # per-member exact summaries, asserts
-                                 # the memo holds exactly the
-                                 # doc_tokens key and clean exit
-    # ask #3: the seven text-family members gained the scoped branch
-    # (leased_doc_tokens / _leased_gram_rows / _leased_tok_rows) —
-    # unscoped optimized plans verified bit-identical to the
-    # pre-lease forms (tests/test_round13_ops.py), but a replanned
-    # spark_fn earns fresh driver evidence by rule
-    'text_token_stats',
-    'token_frequencies',
-    'stem_token_frequencies',
-    'tf_idf_top_terms',
-    'doc_perplexity_bigram',
-    'kneser_ney_bigram_ppl',
-    'doc_perplexity_trigram_backoff',
-    # ask #4: the three checkpoint-opaque allowlist entries now expose
-    # pre-checkpoint builders as Query.plan_fn (runtime-verified BNLJ
-    # bounds like every other entry; _BNLJ_RUNTIME_OPAQUE is empty) —
-    # spark_fn moved to run_scoped, values identical, replanned code
-    # earns fresh evidence by rule
-    'join_cardinality_profile',
-    'max_concurrent_sessions',
-    'scan_pruning_preflight',
-    # ask #5: the HITS oracle's accumulators typed down from HUGEINT
-    # to BIGINT (engine-checked overflow; halves DuckDB aggregate
-    # state — the sf1 spill fix); the scoped audit's composed oracle
-    # changes transitively, so both earn fresh evidence
-    'hits_hub_authority',
-    'graph_family_scoped_audit',
-    # ask #6: new surface — Common-Crawl-style URL curation and the
-    # Lee-et-al suffix-window pair dedup
-    'url_canonicalization',
-    'domain_dedup_rate_profile',
-    'suffix_window_pair_dedup',
-    # ADVICE r12 #3's class swept repo-wide: the canon concat under
-    # this fingerprint was the one other silent-divergence site
-    # (concat_ws skips NULLs, the oracle's '||' propagates) — fixed
-    # like _zir_canon_spark; values unchanged on non-null data but
-    # changed code earns fresh evidence by rule
-    'dataset_content_fingerprint',
-)
-
-_R12_CHANGED = (
-    'graph_family_scoped_audit',  # NEW (ask #3): driver evidence ON
-                                  # the SharedScope path — opens a
-                                  # scope, runs family members through
-                                  # their leases, returns an oracled
-                                  # deterministic summary; asserts no
-                                  # leftover cache at scope exit
-    'link_prediction_holdout_eval',  # ask #4: dated co-purchase edge
-                                     # build joins the SharedScope
-                                     # lease (copurchase_edges_dated
-                                     # key); unscoped plan unchanged
-    'temporal_reachability_copurchase',  # ask #4: same dated-edge
-                                         # lease
-    'zorder_morton_preflight',  # NEW (ask #8): predict the Morton
-                                # bucket set of the query rectangle
-                                # from the rule alone (quadrant
-                                # decomposition, zero I/O), then
-                                # hash-prove pruning touched exactly
-                                # the predicted file set
-    'csls_margin_pair_mining',  # NEW: margin-based (CSLS) NN pair
-                                # mining (Artetxe & Schwenk) — exact
-                                # BIGINT 2K*dot - ktop_x - ktop_y
-                                # over quantized components, hub
-                                # demotion the raw-kNN miners lack
-    'zorder_incremental_recluster',  # NEW: incremental OPTIMIZE —
-                                     # backfill merges by rewriting
-                                     # ONLY its Z-blocks (dynamic
-                                     # partition overwrite), touched
-                                     # set predicted by the quadrant
-                                     # decomposition, untouched
-                                     # region fingerprint-proven
-                                     # original
-    'streaming_state_preflight',  # NEW: state-store rows predicted
-                                  # from the batch table (distinct
-                                  # keys), proven from the engine's
-                                  # own StreamingQueryProgress
-                                  # numRowsTotal — the pre-flight
-                                  # discipline on the streaming
-                                  # engine's scarce resource
-)
-
-_R11_CHANGED = (
-    'hits_hub_authority',  # ask #2: serialized MEMORY_AND_DISK edge
-                           # cache adopted (training_ops.py:3258-72,
-                           # eager count KEPT — the lazy-persist
-                           # ablation was measured and REJECTED, see
-                           # SCALING.md "hits ablation"); the r10
-                           # 2.3x "regression" was adjudicated a
-                           # warm-edge-cache measurement artifact
-                           # (r9's finally lacked edges.unpersist);
-                           # values hash-identical, 4.45->3.61s sf0.1
-    'ngram_pair_blowup_audit',  # NEW (ask #5): shingle-df profile
-                                # predicting the exact-jaccard pair
-                                # join's candidate cardinality from
-                                # posting-list stats BEFORE the join
-                                # runs — shares _capped_shingles with
-                                # the scorer so it cannot profile a
-                                # different candidate set
-    'bucketed_copartitioned_join',  # ADVICE #4: write-both-tables /
-                                    # broadcast-guard setup factored
-                                    # into sources/bucketed.py's
-                                    # bucketed_pair_tables(), shared
-                                    # with the plan test — plan change
-                                    # earns fresh evidence
-    'zorder_pruned_scan',  # ADVICE #1/#2: morton_code now asserts
-                           # the max LANDING position (interleaved
-                           # bit index), not sum(bits); write_zordered
-                           # logs when it shrinks bits — same values,
-                           # guard change earns fresh evidence
-    'scan_pruning_preflight',  # NEW: the I/O member of the pre-flight
-                               # trilogy — explicit-rule partitioned
-                               # layout, touched buckets computed from
-                               # the rule alone before the scan, hash
-                               # proves partition pruning delivered
-                               # exactly the predicted file set
-    # NOT here despite touching their builders: the SharedScope
-    # wiring (ask #7 spike) is a pure fall-through with no scope
-    # open — shared_or returns exactly the old cache()/passthrough
-    # relation, so pagerank/ppr/lpa/link-pred-CN/gnn execute
-    # bit-identical plans under the driver (the bloom r9 precedent:
-    # byte-identical execution keeps its standing evidence; pinned
-    # by test_scope.py value-identity plus the unchanged plan/
-    # lifecycle suites). hits IS here, but for the serialized edge
-    # cache, which changes its executed plan.
-)
-
-_R10_CHANGED = (
-    'link_prediction_holdout_eval',  # ask #2: dated co-purchase edge
-                                     # list built ONCE (persist +
-                                     # finally-release), wedge/train/
-                                     # test/scoring all derive from it
-    'personalized_pagerank',  # ask #3: localCheckpoint(eager) +
-                              # finally-unpersist for ewd/seeds (the
-                              # golden_record_survivorship pattern)
-    'label_propagation_communities',  # ask #3 sweep: edges persist
-                                      # released the same way
-    'edit1_pair_blowup_audit',  # NEW (ask #7): per deletion-key
-                                # candidate-cardinality profile so a
-                                # pathological corpus is detectable
-                                # BEFORE the expansion join runs
-    'dedup_ngram_jaccard_capped',  # ADVICE #3: survivor gate reuses
-                                   # the capped shingle relation from
-                                   # ngram_jaccard_pairs instead of
-                                   # re-deriving shingles + window
-    'hits_hub_authority',  # ask #6: edge cache now released in the
-                           # finally (collected result needs nothing)
-    # --- ask #3 sweep: every remaining persist-without-release site
-    # converted to the scoped-cache pattern (run_scoped: eager
-    # one-build caches, eager result checkpoint, finally-release;
-    # pre-checkpoint builders exposed as Query.plan_fn so the plan
-    # tests audit the real shape — ADVICE r9 #1). Values re-verified
-    # hash-exact at sf0.001 during the round; the plan change earns
-    # fresh driver evidence for each.
-    'pagerank_copurchase',
-    'local_clustering_coefficient',
-    'link_prediction_common_neighbors',
-    'gnn_feature_propagation',
-    'mad_robust_outliers',
-    'quantile_normalization',
-    'triangle_count_copurchase',
-    'corpus_dedup_pipeline',
-    'temporal_reachability_copurchase',  # tedges released post-loop
-    'kmeans_lloyd_refinement',
-    'golden_record_survivorship',  # run_scoped + plan_fn (ADVICE #1)
-    # ADVICE #3 touched the shared collapsed-pairs skeleton: the
-    # uncapped member and the cluster consumer re-evidence with it
-    # (plans identical by construction, values re-verified hash-exact
-    # at sf0.001; the capped member is the one whose plan changed)
-    'dedup_ngram_jaccard',
-    'dedup_clusters',
-    # bench admission (ask #4) + shares the factored candidate
-    # helper with the new blow-up audit — same plan, fresh evidence
-    'edit1_deletion_neighborhood_pairs',
-    # NEW beyond the asks (format_ops): compaction proven lossless
-    # under the driver gate, and the order-insensitive dataset
-    # content fingerprint (sum-of-h60 mod 2^62 — partition-, file-
-    # and row-order-invariant dataset versioning with no sort)
-    'compacted_scan_equivalence',
-    'dataset_content_fingerprint',
-    # NEW: the bucketed-table layout (sources/bucketed.py, until now
-    # only unit-tested) proven value-lossless under the driver gate;
-    # the zero-exchange co-located join is pinned in test_plans
-    'bucketed_copartitioned_join',
-)
-
-_R9_CHANGED = (
-    'approx_aggregates_error_audit',  # NEW (ask #3): exact integer
-                                      # error rows for approx_count_
-                                      # distinct/percentile_approx vs
-                                      # exact aggregates, full oracle
-    'link_prediction_holdout_eval',  # NEW (ask #8): held-out latest-
-                                     # day edges, hits@k as exact
-                                     # integers, full oracle
-    'range_pruned_time_scan',  # NEW (ask #7): time-range scan on the
-                               # repartitionByRange layout; row-group
-                               # pruning proven in test_plans.py
-    # bloom_exact_membership is NOT here despite the ADVICE r8 #1
-    # edit: the oracle now derives its hash-row CTE from _BF_K, and
-    # with _BF_K = 3 the generated SQL is byte-identical to the old
-    # hardcoded string (verified against the r8 tree) — neither
-    # engine's text changed, so its fresh r8 green stands and the
-    # slot goes to the round's one new query instead
-    'join_cardinality_profile',  # unpersist in finally (ADVICE r8 #3)
-    'max_concurrent_sessions',   # unpersist in finally (ADVICE r8 #3)
-    'winnowing_fingerprints',  # profiled +20% regression (ask #4);
-                               # replan/evidence per SCALING.md note
-    't_closeness_audit',  # NEW: privacy-trio completion — exact
-                          # variational-distance audit, full oracle
-    'personalized_pagerank',  # NEW: random walk with restart to a
-                              # seed set, exact integers, full oracle
-    'edit1_deletion_neighborhood_pairs',  # NEW: SymSpell deletion-
-                                          # key blocking + levenshtein
-                                          # verify, full oracle
-    'ann_hamming_sign_topk',  # NEW: sign-bit binary ANN — the one
-                              # approximate index whose distance is
-                              # deterministic, so FULL oracle
-    'golden_record_survivorship',  # NEW: MDM survivorship over
-                                   # token-set dup clusters, full
-                                   # oracle
-    'zorder_pruned_scan',  # NEW: 2-D Morton-interleaved layout +
-                           # both-dims pruned scan, full oracle —
-                           # extends ask #7's 1-D range pruning;
-                           # takes the one spare head slot (the
-                           # window still drains all 33 r2-stale
-                           # greens — verified by the budget check
-                           # in tests/test_rotation.py)
-    # dedup_ngram_jaccard was an r2-stale green already inside the
-    # head, so moving it up to the changed tier costs NO drain slot:
-    # its shingle join now runs at distinct-text grain
-    # (ngram_jaccard_pairs_collapsed — the duplication-proof replan,
-    # measured at sf1 in SCALING.md), values re-verified hash-exact
-    # at sf0.001/0.01/0.1
-    'dedup_ngram_jaccard',
-    # dedup_ngram_jaccard_capped — also r2-stale, also slot-free: its
-    # df cutoff now counts DISTINCT TEXTS (collapsed build + oracle
-    # change): the id-grain cap classified sf1's verbatim copies as
-    # boilerplate and zeroed the whole result, so the scale-path twin
-    # was measuring an empty computation (SCALING.md)
-    'dedup_ngram_jaccard_capped',
-    # minhash_signatures hoisted its doc_id exchange above the
-    # shingle expansion (plan-neutral exchange count, parallel md5 —
-    # functions/dedup.py): values re-verified hash-exact, but the
-    # plan change earns fresh evidence for every consumer;
-    # dedup_clusters additionally consumes the collapsed jaccard
-    # build now
-    'dedup_minhash_lsh',
-    'dedup_clusters',
-    'blocking_quality_metrics',
-    'blocking_quality_metrics_sampled',
-)
-
-_R8_CHANGED = (
-    'temporal_reachability_copurchase',  # one-scan dated edge build
-                                         # (VERDICT r7 ask #3)
-    'ivf_vs_exact_eval',   # NEW (ask #2): IVF probe-sweep recall@k,
-                           # integer-exact assignment, full oracle
-    'pq_vs_exact_eval',    # NEW (ask #2): ADC top-k recall vs exact
-                           # integer L2^2 truth, full oracle
-    'blocking_quality_metrics_sampled',  # NEW (ask #5): PC/RR on a
-                                         # deterministic md5 50% doc
-                                         # sample, full oracle
-    'blocking_quality_metrics',  # body refactored into the shared
-                                 # _blocking_metrics helper this
-                                 # round — needs fresh evidence
-    'streaming_offset_source_windowed',  # NEW (ask #7 / "missing
-                                         # #1"): offset-tracked
-                                         # source -> watermarked
-                                         # window agg across 3
-                                         # micro-batches, full oracle
-    'hll_exact_register_sketch',  # NEW: md5-register HLL with
-                                  # partial merge, full oracle —
-                                  # pins hll_partial_merge's
-                                  # mechanism hash-exact
-    'bloom_exact_membership',  # NEW: size-from-n Bloom filter with
-                               # exact FP audit — completes the
-                               # mergeable-sketch trio
-    'link_prediction_common_neighbors',  # NEW: RA/common-neighbor
-                                         # non-edge scoring (wedge
-                                         # join), full oracle
-    'gnn_feature_propagation',  # NEW: 2-round GraphSAGE-mean integer
-                                # feature smoothing, full oracle
-    'universe_sample_join',  # NEW: key-universe sampling closed
-                             # under joins (BlinkDB/Quickr shape),
-                             # scan-local hash predicate, full oracle
-    'kmeans_lloyd_refinement',  # NEW: 2-iteration integer Lloyd's
-                                # k-means (assign + floor-mean
-                                # update), full unrolled-CTE oracle
-    'incremental_join_maintenance',  # NEW: two-term join-delta IVM
-                                     # vs full-recompute oracle
-    'stratified_split_exact',  # NEW: exact per-stratum 80/10/10 by
-                               # hash rank, full oracle
-    'l_diversity_audit',  # NEW: distinct-sensitive-count privacy
-                          # audit next to k_anonymity, full oracle
-    'functional_dependency_audit',  # NEW: g3 approximate-FD error
-                                    # over 6 candidates, full oracle
-    'streaming_outer_join_null_emission',  # NEW: stream-stream LEFT
-                                           # OUTER join, watermark-
-                                           # gated null emission,
-                                           # closed-form oracle
-    'join_cardinality_profile',  # NEW: exact equi-join cardinality
-                                 # + hottest key from key-grain
-                                 # stats, full oracle
-    'max_concurrent_sessions',  # NEW: sweep-line concurrency peak,
-                                # two-phase prefix sum, full oracle
-)
-
-_R7_CHANGED = (
-    'bpe_pair_counts_round1',  # NEW (VERDICT r5 ask #5, r6 ask #2):
-                               # BPE round-1 pair counts, full oracle
-    'hits_hub_authority',      # cache rotation changed the plan (max
-                               # scalar is now collected driver state,
-                               # top-50 driver-collected): values
-                               # re-verified hash-exact at sf0.001/
-                               # 0.01/0.1, but the plan change earns
-                               # fresh driver evidence
-    'span_corruption_mask',    # NEW: T5 denoising-mask selection,
-                               # hash-gated spans, full oracle
-    'ngram_novelty_score',     # NEW: per-doc 5-gram novelty vs
-                               # earlier docs, full oracle
-    # one-scan co-purchase edge build (functions/graph.py) replaced
-    # the lineitem self-join in the whole graph family: identical
-    # edge sets, re-verified hash-exact at sf0.001/0.01/0.1, but the
-    # plan change earns fresh driver evidence
-    'pagerank_copurchase',
-    'sssp_copurchase',
-    'triangle_count_copurchase',
-    'local_clustering_coefficient',
-    'modularity_brand_partition',
-    # NEW (late r7, queries/scale_ops.py): the distribution-strategy
-    # trio — runtime-filter pre-join, salt-replicated skew join,
-    # curriculum interleave — each with a full oracle
-    'runtime_filter_semi_join',
-    'skew_salted_join',
-    'curriculum_interleave',
-    # NEW (late r7, second batch): smoothed-LM scoring, tokenizer
-    # budgeting, embedding-quality audit, diversity re-ranking —
-    # each with a full hash-exact oracle
-    'kneser_ney_bigram_ppl',   # training_ops.py: interpolated KN
-                               # bigram perplexity, exact fractions
-    'tokenizer_fertility',     # llm_text.py: tokens/word +
-                               # chars/token per (lang, source)
-    'knn_prototype_accuracy',  # vector_ops.py: 5-NN majority vote
-                               # over a 64-prototype broadcast
-    'mmr_diverse_rerank',      # vector_ops.py: integer-exact MMR
-                               # over a bounded candidate pool
-    # NEW (late r7, third batch, training_ops.py)
-    'label_propagation_communities',  # deterministic sync LPA over
-                                      # the co-purchase graph
-    'sparse_tfidf_cosine_pairs',      # inverted-index sparse cosine
-                                      # with exact integer gate
-    # NEW (late r7, fourth batch)
-    'asof_join_nearest_tolerance',    # analytics.py: merge_asof
-                                      # 'nearest' with 4h tolerance
-    'decision_split_information_gain',  # training_ops.py: binned
-                                        # split scan, exact gain
-    'streaming_watermark_late_drop',  # streaming_ops.py: 3-batch
-                                      # drain, exact two-watermark
-                                      # late-drop oracle
-    # NEW (late r7, fifth batch, queries/format_ops.py): sink+source
-    # format round-trips proven lossless by original-table oracles
-    'orc_roundtrip_revenue',
-    'jsonl_roundtrip_events',
-    'partitioned_pruned_event_scan',
-    # NEW (late r7, sixth batch): eval metrics over the engine's own
-    # outputs — blocker quality and ranking drift
-    'blocking_quality_metrics',       # llm_dedup.py: LSH pairs-
-                                      # completeness / reduction ratio
-    'rank_biased_overlap_parts',      # training_ops.py: RBO between
-                                      # qty- and revenue-ranked tops
-    'recursive_cte_date_spine',       # training_ops.py: WITH
-                                      # RECURSIVE run BY SPARK (4.x)
-    'schema_evolution_union_scan',    # format_ops.py: mergeSchema
-                                      # across parquet generations
-    'csv_quarantine_scan',            # format_ops.py: PERMISSIVE
-                                      # malformed-record quarantine
-    'ridge_normal_equations',         # training_ops.py: one-pass
-                                      # exact Gram + Cramer solve
-    'ips_policy_value',               # training_ops.py: off-policy
-                                      # IPS evaluation, exact cents
-    'churn_label_generation',         # training_ops.py: horizon
-                                      # labels via one lead() window
-    'stoploss_takeprofit_backtest',   # reference_ops.py: exit-rule
-                                      # strategy, recursive-CTE oracle
-    'temporal_reachability_copurchase',  # corpus_ops.py: time-
-                                         # respecting earliest arrival
-    'touch_attribution_revenue',      # analytics.py: first/last-touch
-                                      # models from one range frame
-)
-# Round-agnostic alias: tests and tools reference _CHANGED so a round
-# bump is one constant rename that cannot break them (VERDICT r6 #1).
-_CHANGED = _R15_CHANGED
-
-# Driver-green per round (CORRECTNESS_r0N.json, hash-exact rows).
-_R1_GREEN = frozenset({
-    'anti_join_parts_no_bulk_orders', 'asof_join_purchase_to_click',
-    'crossover_signals', 'cube_order_stats', 'date_range_filter',
-    'evenly_spaced_backtest', 'evenly_spaced_backtest_maxtrades',
-    'event_type_pivot', 'export_buy_rows', 'grouping_sets_revenue',
-    'hourly_event_rollup', 'json_filter', 'last_tick_per_user',
-    'orders_above_customer_avg', 'orders_by_quarter',
-    'priciest_lineitem_per_part', 'q10_top_return_customers',
-    'q13_customer_order_distribution', 'q14_promo_share',
-    'q15_top_supplier', 'q16_supplier_variety',
-    'q17_small_quantity_revenue', 'q18_large_orders',
-    'q19_disjunctive_revenue', 'q1_pricing_summary',
-    'q22_inactive_customers', 'q3_top_unshipped_orders',
-    'q4_order_priority_check', 'q5_supplier_volume_by_nation',
-    'q6_forecast_revenue', 'q7_nation_pair_volume',
-    'range_frame_hourly_avg', 'range_join_nearby_clicks', 'rolling_ma',
-    'rollup_revenue', 'running_total_per_user', 'segment_stats',
-    'semi_join_customers_with_urgent_orders', 'set_ops_except',
-    'set_ops_high_value_customers', 'shares_vectorized_udf',
-    'sliding_window_rollup', 'stride_signals',
-    'stride_signals_derived_step', 'string_functions_showcase',
-    'top_orders_per_customer', 'topk_earliest_buys',
-    'union_distinct_event_users', 'upsert_customers_merge',
-    'value_percentiles',
-})
-
-_R2_GREEN = frozenset({
-    'q2_min_cost_supplier', 'q8_market_share', 'q9_profit_by_nation_year',
-    'q11_important_parts', 'q20_excess_suppliers', 'q21_waiting_suppliers',
-    'json_props_extract', 'regex_doc_numbers', 'text_token_stats',
-    'text_quality_score', 'lang_id', 'doc_fingerprint',
-    'token_frequencies', 'token_count_bpe_ish', 'dedup_exact',
-    'dedup_ngram_jaccard', 'dedup_minhash_lsh', 'dedup_simhash',
-    'dedup_clusters', 'dedup_exact_kept', 'dedup_embedding_cosine',
-    'ann_bruteforce_topk', 'embedding_norms', 'multimodal_binary_meta',
-    'streaming_hourly_rollup', 'streaming_distinct_user_types',
-    'streaming_click_purchase_join', 'sessionize_events',
-    'incremental_dedup_exact', 'incremental_dedup_minhash',
-    'dedup_ngram_jaccard_capped',
-    # r2-window repeats of r1 greens (fresh evidence)
-    'q1_pricing_summary', 'q3_top_unshipped_orders',
-    'q5_supplier_volume_by_nation', 'top_orders_per_customer',
-    'running_total_per_user', 'set_ops_high_value_customers',
-    'set_ops_except', 'union_distinct_event_users',
-})
-
-_R3_GREEN = frozenset({
-    'ann_pq_adc_topk', 'array_values_per_user', 'autocorr_lag1',
-    'bigram_conditional_prob', 'candle_patterns', 'cms_heavy_hitters',
-    'contamination_check', 'daily_var_per_user', 'dataset_split_assign',
-    'doc_chunking', 'doc_perplexity_bigram', 'embedding_gram_matrix',
-    'embedding_pq_codes', 'evenly_spaced_portfolio',
-    'full_outer_daily_activity', 'funnel_conversion', 'fuzzy_part_pairs',
-    'global_shuffle_rank', 'linreg_trend_per_user',
-    'listagg_sources_by_lang', 'ma_crossover_backtest',
-    'ma_crossover_positions', 'map_event_type_counts',
-    'math_null_surface', 'max_drawdown', 'multimodal_frame_sample',
-    'multimodal_ppm_decode', 'ntile_deciles', 'pagerank_copurchase',
-    'pii_redaction', 'q12_priority_lines', 'quality_repetition_signals',
-    'scd2_user_state', 'semdedup_embeddings', 'set_ops_bag_semantics',
-    'stem_token_frequencies', 'streaming_exactly_once_dedup',
-    'streaming_running_position', 'streaming_session_window',
-    'streaming_topk_trending', 'table_profile',
-    'temperature_mixture_sample', 'tf_idf_top_terms', 'twap_per_user',
-    'unpivot_event_metrics', 'user_spend_rank_distribution',
-    'volatility_sharpe', 'vwap_per_part', 'weekly_retention_cohorts',
-    'zscore_anomalies',
-})
-
-_R4_GREEN = frozenset({
-    'atr_breakout_signals', 'benford_first_digit_audit',
-    'cdc_apply_changes', 'chi2_independence_test',
-    'chunk_dedup_substrings', 'corpus_dedup_pipeline',
-    'corpus_quality_filter', 'cross_doc_repetition',
-    'cusum_change_detection', 'deterministic_sample',
-    'embedding_kmeans_assign', 'ewma_indicator',
-    'exact_global_quantiles', 'feature_standardize',
-    'fk_integrity_checks', 'interval_overlap_join', 'k_anonymity_audit',
-    'kelly_position_sizing', 'ks_two_sample_test',
-    'lang_mixture_rebalance', 'market_basket_lift',
-    'mutual_information_features', 'negative_sampling', 'ohlc_bars',
-    'per_group_reservoir', 'precision_recall_thresholds',
-    'psi_feature_drift', 'recursive_interest_schedule',
-    'resample_forward_fill', 'roc_auc_exact',
-    'rolling_market_correlation', 'rsi_bollinger_bands',
-    'salted_hot_key_agg', 'seasonal_decompose_additive',
-    'sequence_packing_bins', 'skyline_parts_per_brand', 'snapshot_diff',
-    'spearman_value_k_corr', 'sql_revenue_by_priority',
-    'stratified_sample_events', 'triangle_count_copurchase',
-    'value_histogram', 'welch_t_test', 'winsorized_user_stats',
-    'zorder_locality',
-})
-
-# Rows-only-by-design queries the r4 window re-ran clean (no oracle —
-# approximate/sketch semantics). They count as r4-evidenced for
-# rotation; re-evidence on a 2-round cadence (due r6).
-_R4_ROWS_ONLY = frozenset({
-    'hll_partial_merge', 'ann_lsh_topk', 'ann_ivf_topk',
-    'approx_aggregates', 'multimodal_feature_extract',
-})
-
-# CORRECTNESS_r05.json via tools/record_round.py (49 hash-exact,
-# 1 rows-only, 0 RED) — pasted verbatim, per VERDICT r5 ask #1.
-_R5_GREEN = frozenset({
-    'ann_dim_truncation_recall', 'ann_pq_adc_trained_topk',
-    'anova_f_oneway', 'audio_frame_features', 'bm25_more_like_this',
-    'boilerplate_chunk_removal', 'brier_logloss_calibration',
-    'char_entropy_quality', 'clickstream_paths_topk',
-    'cohort_ltv_curves', 'conformal_interval_coverage',
-    'cooccurrence_pmi', 'correlation_matrix_daily',
-    'cramers_v_effect', 'cuped_adjusted_lift',
-    'doc_perplexity_trigram_backoff', 'domain_cap_sample',
-    'dsir_importance_weights', 'embedding_pq_trained_codes',
-    'equidepth_histogram', 'event_markov_transitions',
-    'feature_hashing_vectors', 'gini_spend_concentration',
-    'haar_wavelet_coeffs', 'hard_negative_mining',
-    'hits_hub_authority', 'holt_linear_smoothing',
-    'holt_winters_seasonal', 'hybrid_rrf_retrieval', 'image_patchify',
-    'incremental_agg_maintenance', 'interarrival_burstiness',
-    'isotonic_calibration', 'item_item_similarity',
-    'jl_random_projection', 'js_divergence_lang_tokens',
-    'k_core_membership', 'kaplan_meier_survival',
-    'kmv_distinct_sketch', 'kruskal_wallis_h', 'lag_feature_matrix',
-    'local_clustering_coefficient', 'lsh_vs_exact_eval',
-    'macd_histogram', 'mad_robust_outliers', 'mann_whitney_u',
-    'multimodal_feature_extract', 'variant_props_stats',
-    'window_funnel_depth',
-})
-
-_R5_ROWS_ONLY = frozenset({
-    'bpe_learn_merges',
-})
-
-# CORRECTNESS_r06.json via tools/record_round.py (46 hash-exact,
-# 4 rows-only, 0 RED) — pasted verbatim (VERDICT r6 ask #3).
-_R6_GREEN = frozenset({
-    'anti_join_parts_no_bulk_orders', 'asof_join_purchase_to_click',
-    'crossover_signals', 'cube_order_stats', 'date_range_filter',
-    'evenly_spaced_backtest', 'evenly_spaced_backtest_maxtrades',
-    'modularity_brand_partition', 'multimodal_wav_decode',
-    'naive_bayes_lang_score', 'nb_calibration_curve',
-    'ngram_containment_pairs', 'obv_indicator',
-    'percentile_interpolated_per_type', 'phrase_search_positional',
-    'pit_dimension_lookup', 'poisson_bootstrap_ci',
-    'python_datasource_ticks', 'quadratic_trend_fit',
-    'quantile_normalization', 'rec_hitrate_popularity',
-    'rec_ndcg_popularity', 'repeated_ngram_span_mask',
-    'rfm_segmentation', 'rollup_cascade_reuse',
-    'sorted_neighborhood_pairs', 'sortino_downside_ratio',
-    'sprt_sequential_test', 'sssp_copurchase',
-    'stochastic_oscillator', 'streaming_cdc_upsert',
-    'streaming_enriched_rollup', 'streaming_python_datasource',
-    'target_encoding_oof', 'theil_sen_slope', 'time_decay_ewma',
-    'token_drift_movers', 'udaf_median_cents', 'udtf_sentence_spans',
-    'wasserstein_distance_drift', 'weighted_median_price',
-    'weighted_sample_es', 'window_functions_showcase',
-    'winnowing_fingerprints', 'woe_information_value', 'zipf_law_fit',
-})
-
-_R6_ROWS_ONLY = frozenset({
-    'ann_ivf_topk', 'ann_lsh_topk', 'approx_aggregates',
-    'hll_partial_merge',
-})
-
-# CORRECTNESS_r07.json via tools/record_round.py (49 hash-exact,
-# 1 rows-only, 0 RED) — pasted verbatim (VERDICT r7 ask #1).
-_R7_GREEN = frozenset({
-    'asof_join_nearest_tolerance', 'blocking_quality_metrics',
-    'bpe_pair_counts_round1', 'churn_label_generation',
-    'csv_quarantine_scan', 'curriculum_interleave',
-    'decision_split_information_gain', 'event_type_pivot',
-    'export_buy_rows', 'grouping_sets_revenue', 'hits_hub_authority',
-    'hourly_event_rollup', 'ips_policy_value', 'json_filter',
-    'jsonl_roundtrip_events', 'kneser_ney_bigram_ppl',
-    'knn_prototype_accuracy', 'label_propagation_communities',
-    'last_tick_per_user', 'local_clustering_coefficient',
-    'mmr_diverse_rerank', 'modularity_brand_partition',
-    'ngram_novelty_score', 'orc_roundtrip_revenue',
-    'orders_above_customer_avg', 'orders_by_quarter',
-    'pagerank_copurchase', 'partitioned_pruned_event_scan',
-    'priciest_lineitem_per_part', 'q10_top_return_customers',
-    'q13_customer_order_distribution', 'q14_promo_share',
-    'q15_top_supplier', 'q16_supplier_variety',
-    'rank_biased_overlap_parts', 'recursive_cte_date_spine',
-    'ridge_normal_equations', 'runtime_filter_semi_join',
-    'schema_evolution_union_scan', 'skew_salted_join',
-    'span_corruption_mask', 'sparse_tfidf_cosine_pairs',
-    'sssp_copurchase', 'stoploss_takeprofit_backtest',
-    'streaming_watermark_late_drop',
-    'temporal_reachability_copurchase', 'tokenizer_fertility',
-    'touch_attribution_revenue', 'triangle_count_copurchase',
-})
-
-_R7_ROWS_ONLY = frozenset({
-    'bpe_learn_merges',
-})
-
-# CORRECTNESS_r08.json via tools/record_round.py (46 hash-exact,
-# 4 rows-only, 0 RED) — pasted verbatim (VERDICT r8 ask #1).
-_R8_GREEN = frozenset({
-    'ann_bruteforce_topk', 'blocking_quality_metrics',
-    'blocking_quality_metrics_sampled', 'bloom_exact_membership',
-    'dedup_clusters', 'dedup_embedding_cosine', 'dedup_exact',
-    'dedup_exact_kept', 'dedup_minhash_lsh',
-    'functional_dependency_audit', 'gnn_feature_propagation',
-    'hll_exact_register_sketch', 'incremental_join_maintenance',
-    'ivf_vs_exact_eval', 'join_cardinality_profile',
-    'kmeans_lloyd_refinement', 'l_diversity_audit',
-    'link_prediction_common_neighbors', 'max_concurrent_sessions',
-    'pq_vs_exact_eval', 'q17_small_quantity_revenue',
-    'q18_large_orders', 'q19_disjunctive_revenue',
-    'q22_inactive_customers', 'q4_order_priority_check',
-    'q6_forecast_revenue', 'q7_nation_pair_volume',
-    'range_frame_hourly_avg', 'range_join_nearby_clicks',
-    'rolling_ma', 'rollup_revenue', 'segment_stats',
-    'semi_join_customers_with_urgent_orders', 'shares_vectorized_udf',
-    'sliding_window_rollup', 'stratified_split_exact',
-    'streaming_offset_source_windowed',
-    'streaming_outer_join_null_emission', 'stride_signals',
-    'stride_signals_derived_step', 'string_functions_showcase',
-    'temporal_reachability_copurchase', 'topk_earliest_buys',
-    'universe_sample_join', 'upsert_customers_merge',
-    'value_percentiles',
-})
-
-_R8_ROWS_ONLY = frozenset({
-    'ann_ivf_topk', 'ann_lsh_topk', 'approx_aggregates',
-    'hll_partial_merge',
-})
-
-# CORRECTNESS_r09.json via tools/record_round.py (49 hash-exact,
-# 1 rows-only, 0 RED) — pasted verbatim (VERDICT r9 ask #1).
-_R9_GREEN = frozenset({
-    'ann_hamming_sign_topk', 'approx_aggregates_error_audit',
-    'blocking_quality_metrics', 'blocking_quality_metrics_sampled',
-    'dedup_clusters', 'dedup_minhash_lsh', 'dedup_ngram_jaccard',
-    'dedup_ngram_jaccard_capped', 'dedup_simhash', 'doc_fingerprint',
-    'edit1_deletion_neighborhood_pairs', 'embedding_norms',
-    'golden_record_survivorship', 'incremental_dedup_exact',
-    'incremental_dedup_minhash', 'join_cardinality_profile',
-    'json_props_extract', 'lang_id', 'link_prediction_holdout_eval',
-    'max_concurrent_sessions', 'multimodal_binary_meta',
-    'personalized_pagerank', 'q11_important_parts',
-    'q1_pricing_summary', 'q20_excess_suppliers',
-    'q21_waiting_suppliers', 'q2_min_cost_supplier',
-    'q3_top_unshipped_orders', 'q5_supplier_volume_by_nation',
-    'q8_market_share', 'q9_profit_by_nation_year',
-    'range_pruned_time_scan', 'regex_doc_numbers',
-    'running_total_per_user', 'sessionize_events', 'set_ops_except',
-    'set_ops_high_value_customers', 'streaming_click_purchase_join',
-    'streaming_distinct_user_types', 'streaming_hourly_rollup',
-    't_closeness_audit', 'text_quality_score', 'text_token_stats',
-    'token_count_bpe_ish', 'token_frequencies',
-    'top_orders_per_customer', 'union_distinct_event_users',
-    'winnowing_fingerprints', 'zorder_pruned_scan',
-})
-
-_R9_ROWS_ONLY = frozenset({
-    'bpe_learn_merges',
-})
-
-# CORRECTNESS_r10.json via tools/record_round.py (46 hash-exact,
-# 4 rows-only, 0 RED) — pasted verbatim (VERDICT r10 ask #1).
-_R10_GREEN = frozenset({
-    'ann_pq_adc_topk', 'array_values_per_user', 'autocorr_lag1',
-    'bigram_conditional_prob', 'bucketed_copartitioned_join',
-    'candle_patterns', 'cms_heavy_hitters',
-    'compacted_scan_equivalence', 'contamination_check',
-    'corpus_dedup_pipeline', 'daily_var_per_user',
-    'dataset_content_fingerprint', 'dataset_split_assign',
-    'dedup_clusters', 'dedup_ngram_jaccard',
-    'dedup_ngram_jaccard_capped', 'doc_chunking',
-    'doc_perplexity_bigram', 'edit1_deletion_neighborhood_pairs',
-    'edit1_pair_blowup_audit', 'embedding_gram_matrix',
-    'embedding_pq_codes', 'evenly_spaced_portfolio',
-    'full_outer_daily_activity', 'funnel_conversion',
-    'fuzzy_part_pairs', 'global_shuffle_rank',
-    'gnn_feature_propagation', 'golden_record_survivorship',
-    'hits_hub_authority', 'kmeans_lloyd_refinement',
-    'label_propagation_communities',
-    'link_prediction_common_neighbors',
-    'link_prediction_holdout_eval', 'linreg_trend_per_user',
-    'listagg_sources_by_lang', 'local_clustering_coefficient',
-    'ma_crossover_backtest', 'ma_crossover_positions',
-    'mad_robust_outliers', 'map_event_type_counts',
-    'pagerank_copurchase', 'personalized_pagerank',
-    'quantile_normalization', 'temporal_reachability_copurchase',
-    'triangle_count_copurchase',
-})
-
-_R10_ROWS_ONLY = frozenset({
-    'ann_ivf_topk', 'ann_lsh_topk', 'approx_aggregates',
-    'hll_partial_merge',
-})
-
-# CORRECTNESS_r11.json via tools/record_round.py (49 hash-exact,
-# 1 rows-only, 0 RED) — pasted verbatim (VERDICT r11 ask #1).
-_R11_GREEN = frozenset({
-    'atr_breakout_signals', 'benford_first_digit_audit',
-    'bucketed_copartitioned_join', 'cdc_apply_changes',
-    'chi2_independence_test', 'chunk_dedup_substrings',
-    'corpus_quality_filter', 'cross_doc_repetition',
-    'cusum_change_detection', 'deterministic_sample',
-    'embedding_kmeans_assign', 'ewma_indicator',
-    'exact_global_quantiles', 'feature_standardize',
-    'fk_integrity_checks', 'hits_hub_authority',
-    'interval_overlap_join', 'k_anonymity_audit',
-    'kelly_position_sizing', 'ks_two_sample_test',
-    'math_null_surface', 'max_drawdown', 'multimodal_frame_sample',
-    'multimodal_ppm_decode', 'ngram_pair_blowup_audit',
-    'ntile_deciles', 'pii_redaction', 'q12_priority_lines',
-    'quality_repetition_signals', 'scan_pruning_preflight',
-    'scd2_user_state', 'semdedup_embeddings', 'set_ops_bag_semantics',
-    'stem_token_frequencies', 'streaming_exactly_once_dedup',
-    'streaming_running_position', 'streaming_session_window',
-    'streaming_topk_trending', 'table_profile',
-    'temperature_mixture_sample', 'tf_idf_top_terms', 'twap_per_user',
-    'unpivot_event_metrics', 'user_spend_rank_distribution',
-    'volatility_sharpe', 'vwap_per_part', 'weekly_retention_cohorts',
-    'zorder_pruned_scan', 'zscore_anomalies',
-})
-
-_R11_ROWS_ONLY = frozenset({
-    'bpe_learn_merges',
-})
-
-# CORRECTNESS_r12.json via tools/record_round.py (46 hash-exact,
-# 4 rows-only, 0 RED) — pasted verbatim (VERDICT r11 ask #1).
-_R12_GREEN = frozenset({
-    'ann_dim_truncation_recall', 'ann_pq_adc_trained_topk',
-    'anova_f_oneway', 'audio_frame_features', 'bm25_more_like_this',
-    'boilerplate_chunk_removal', 'brier_logloss_calibration',
-    'char_entropy_quality', 'clickstream_paths_topk',
-    'cohort_ltv_curves', 'conformal_interval_coverage',
-    'cooccurrence_pmi', 'correlation_matrix_daily',
-    'cramers_v_effect', 'csls_margin_pair_mining',
-    'graph_family_scoped_audit', 'lang_mixture_rebalance',
-    'link_prediction_holdout_eval', 'market_basket_lift',
-    'mutual_information_features', 'negative_sampling', 'ohlc_bars',
-    'per_group_reservoir', 'precision_recall_thresholds',
-    'psi_feature_drift', 'recursive_interest_schedule',
-    'resample_forward_fill', 'roc_auc_exact',
-    'rolling_market_correlation', 'rsi_bollinger_bands',
-    'salted_hot_key_agg', 'seasonal_decompose_additive',
-    'sequence_packing_bins', 'skyline_parts_per_brand',
-    'snapshot_diff', 'spearman_value_k_corr',
-    'sql_revenue_by_priority', 'stratified_sample_events',
-    'streaming_state_preflight', 'temporal_reachability_copurchase',
-    'value_histogram', 'welch_t_test', 'winsorized_user_stats',
-    'zorder_incremental_recluster', 'zorder_locality',
-    'zorder_morton_preflight',
-})
-
-_R12_ROWS_ONLY = frozenset({
-    'ann_ivf_topk', 'ann_lsh_topk', 'approx_aggregates',
-    'hll_partial_merge',
-})
-
-# CORRECTNESS_r13.json via tools/record_round.py (49 hash-exact,
-# 1 rows-only, 0 RED) — pasted verbatim.
-_R13_GREEN = frozenset({
-    'bpe_pair_counts_round1', 'cuped_adjusted_lift',
-    'dataset_content_fingerprint', 'doc_perplexity_bigram',
-    'doc_perplexity_trigram_backoff', 'domain_cap_sample',
-    'domain_dedup_rate_profile', 'dsir_importance_weights',
-    'embedding_pq_trained_codes', 'equidepth_histogram',
-    'event_markov_transitions', 'feature_hashing_vectors',
-    'gini_spend_concentration', 'graph_family_scoped_audit',
-    'haar_wavelet_coeffs', 'hard_negative_mining',
-    'hits_hub_authority', 'holt_linear_smoothing',
-    'holt_winters_seasonal', 'hybrid_rrf_retrieval', 'image_patchify',
-    'incremental_agg_maintenance', 'interarrival_burstiness',
-    'isotonic_calibration', 'item_item_similarity',
-    'jl_random_projection', 'join_cardinality_profile',
-    'js_divergence_lang_tokens', 'k_core_membership',
-    'kaplan_meier_survival', 'kmv_distinct_sketch',
-    'kneser_ney_bigram_ppl', 'kruskal_wallis_h', 'lag_feature_matrix',
-    'lsh_vs_exact_eval', 'macd_histogram', 'mann_whitney_u',
-    'max_concurrent_sessions', 'multimodal_feature_extract',
-    'scan_pruning_preflight', 'stem_token_frequencies',
-    'suffix_window_pair_dedup', 'text_family_scoped_audit',
-    'text_token_stats', 'tf_idf_top_terms', 'token_frequencies',
-    'url_canonicalization', 'variant_props_stats',
-    'window_funnel_depth',
-})
-
-_R13_ROWS_ONLY = frozenset({
-    'bpe_learn_merges',
-})
-
-# CORRECTNESS_r14.json via tools/record_round.py (46 hash-exact,
-# 4 rows-only, 0 RED) — pasted verbatim.
-_R14_GREEN = frozenset({
-    'anti_join_parts_no_bulk_orders', 'approx_aggregates_error_audit',
-    'asof_join_purchase_to_click', 'crossover_signals',
-    'cube_order_stats', 'date_range_filter',
-    'edit1_deletion_neighborhood_pairs', 'evenly_spaced_backtest',
-    'evenly_spaced_backtest_maxtrades', 'hll_exact_register_sketch',
-    'ivf_vs_exact_eval', 'link_prediction_common_neighbors',
-    'link_prediction_holdout_eval', 'lsh_vs_exact_eval',
-    'multimodal_wav_decode', 'naive_bayes_lang_score',
-    'nb_calibration_curve', 'ngram_containment_pairs',
-    'obv_indicator', 'percentile_interpolated_per_type',
-    'personalized_pagerank', 'phrase_search_positional',
-    'pit_dimension_lookup', 'poisson_bootstrap_ci',
-    'python_datasource_ticks', 'quadratic_trend_fit',
-    'rec_hitrate_popularity', 'rec_ndcg_popularity',
-    'repeated_ngram_span_mask', 'rfm_segmentation',
-    'rollup_cascade_reuse', 'sorted_neighborhood_pairs',
-    'sortino_downside_ratio', 'sprt_sequential_test',
-    'stochastic_oscillator', 'streaming_cdc_upsert',
-    'streaming_enriched_rollup', 'streaming_python_datasource',
-    'target_encoding_oof', 'theil_sen_slope', 'time_decay_ewma',
-    'token_drift_movers', 'udaf_median_cents', 'udtf_sentence_spans',
-    'wasserstein_distance_drift', 'weighted_median_price',
-})
-
-_R14_ROWS_ONLY = frozenset({
-    'ann_ivf_topk', 'ann_lsh_topk', 'approx_aggregates',
-    'hll_partial_merge',
-})
-
-_ROUND_GREENS = (_R1_GREEN, _R2_GREEN, _R3_GREEN,
-                 _R4_GREEN | _R4_ROWS_ONLY,
-                 _R5_GREEN | _R5_ROWS_ONLY,
-                 _R6_GREEN | _R6_ROWS_ONLY,
-                 _R7_GREEN | _R7_ROWS_ONLY,
-                 _R8_GREEN | _R8_ROWS_ONLY,
-                 _R9_GREEN | _R9_ROWS_ONLY,
-                 _R10_GREEN | _R10_ROWS_ONLY,
-                 _R11_GREEN | _R11_ROWS_ONLY,
-                 _R12_GREEN | _R12_ROWS_ONLY,
-                 _R13_GREEN | _R13_ROWS_ONLY,
-                 _R14_GREEN | _R14_ROWS_ONLY)
-
-# Rows-only-by-design queries (oracle=None) re-evidence on a 2-round
-# cadence: membership here per round records WHICH round last produced
-# a clean rows-only row, so the due check below is mechanical.
-_ROWS_ONLY_ROUNDS = {4: _R4_ROWS_ONLY - _R5_GREEN, 5: _R5_ROWS_ONLY,
-                     6: _R6_ROWS_ONLY, 7: _R7_ROWS_ONLY,
-                     8: _R8_ROWS_ONLY, 9: _R9_ROWS_ONLY,
-                     10: _R10_ROWS_ONLY, 11: _R11_ROWS_ONLY,
-                     12: _R12_ROWS_ONLY, 13: _R13_ROWS_ONLY,
-                     14: _R14_ROWS_ONLY}
-
-_DRIVER_VERIFIED = frozenset().union(*_ROUND_GREENS)
+_RECORDS_DIR = Path(__file__).resolve().parents[2]
+_ROWS_ONLY_FROM = 4  # r2's no-oracle rows predate the rows-only policy
+Evidence = dict[int, tuple[frozenset, frozenset]]  # round: (green, rows-only)
 
 
-# Each rows-only-by-design query (oracle=None — bucketed-ANN / sketch /
-# merge-order results DuckDB cannot reproduce bit-for-bit) is paired
-# with a hash-exact companion that proves the same machinery under a
-# full oracle. VERDICT r12 ask #2: the pairing guarantee ("rows-only
-# ran clean AND its exactness companion is fresh") must be structural,
-# not incidental — when a rows-only member hits its re-evidence
-# cadence, _window_order pulls its companion into the same window so
-# both rows land in one CORRECTNESS file.
+def classify(row: dict) -> str | None:
+    """One driver record row -> "rows_only", "green", or None (red: no
+    evidence). A no-oracle row counts only when the query produced rows
+    (a positive int; True is not a count), so a silently empty rows-only
+    query is never rotated out as evidenced."""
+    rows = row.get("spark_rows")
+    if (row.get("err") == "no_oracle" and isinstance(rows, int)
+            and not isinstance(rows, bool) and rows > 0):
+        return "rows_only"
+    if (row.get("rows_match") and row.get("schema_match")
+            and row.get("hash_match")):
+        return "green"
+    return None
+
+
+def load_evidence(records_dir: Path = _RECORDS_DIR) -> Evidence:
+    """Classify every CORRECTNESS_r<N>.json in ``records_dir``. Raises
+    when there is no record or the rounds are not 1..N without a gap."""
+    paths = {}
+    for p in records_dir.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m:
+            paths[int(m[1])] = p
+    if not paths:
+        raise FileNotFoundError(f"no CORRECTNESS_r*.json in {records_dir}")
+    if sorted(paths) != list(range(1, len(paths) + 1)):
+        raise ValueError(f"driver records must be rounds 1..N without a "
+                         f"gap, found {sorted(paths)} in {records_dir}")
+    evidence = {}
+    for rnd in sorted(paths):
+        kinds = {n: classify(row)
+                 for n, row in json.loads(paths[rnd].read_text()).items()}
+        evidence[rnd] = (
+            frozenset(n for n, k in kinds.items() if k == "green"),
+            frozenset(n for n, k in kinds.items()
+                      if k == "rows_only" and rnd >= _ROWS_ONLY_FROM))
+    return evidence
+
+
+def current_round(evidence: Evidence) -> int:
+    return max(evidence) + 1
+
+
+def last_round(evidence: Evidence, name: str) -> int:
+    """Latest round with green or rows-only evidence; 0 = never."""
+    return max((rnd for rnd, (green, rows_only) in evidence.items()
+                if name in green or name in rows_only), default=0)
+
+
+def _last_rows_only(evidence: Evidence, reg) -> dict[str, int]:
+    # Only queries still registered with oracle=None run on the rows-only
+    # cadence (multimodal_feature_extract gained an oracle after r4).
+    return {n: rnd for rnd, (_, rows_only) in sorted(evidence.items())
+            for n in rows_only if n in reg and reg[n].oracle is None}
+
+
+def rows_only_due(evidence: Evidence, reg) -> frozenset:
+    """Rows-only queries whose last clean run is >= 2 rounds before the
+    current round: their re-evidence cadence."""
+    current = current_round(evidence)
+    return frozenset(n for n, rnd in _last_rows_only(evidence, reg).items()
+                     if rnd <= current - 2)
+
+
+# Queries whose code, oracle or plan changed since the latest record: they
+# need fresh driver evidence regardless of prior greens, so they lead the
+# window. Every name must be registered (_window_order hard-fails).
+_CHANGED: tuple[str, ...] = ()
+
+# Each rows-only-by-design query (oracle=None — results DuckDB cannot
+# reproduce bit-for-bit) is paired with a hash-exact companion proving the
+# same machinery; when the member is due, _window_order pulls its
+# companion into the same window so both rows land in one record.
 _ROWS_ONLY_COMPANIONS = {
     'ann_lsh_topk': 'lsh_vs_exact_eval',
     'ann_ivf_topk': 'ivf_vs_exact_eval',
@@ -1350,63 +452,43 @@ _ROWS_ONLY_COMPANIONS = {
 }
 
 
-def _window_order(names):
-    """Codified window rotation (VERDICT r4 ask #7, so head ordering
-    can't regress to hand-curation): changed-this-round first, then the
-    never-driver-evidenced backlog alphabetically, then rows-only
-    queries whose last clean run is >= 2 rounds old (their re-evidence
-    cadence) TOGETHER WITH their hash-exact companions (VERDICT r12
-    ask #2), then evidenced queries oldest-round-first (alphabetical
-    within a round). The driver checks the first _WINDOW entries;
-    everything after that order is immaterial but kept deterministic."""
-    names = list(names)
-    # A changed-set entry that is not registered would silently waste
-    # its window slot (VERDICT r6: _R6_CHANGED named a query that was
-    # never written). Fail loudly instead.
-    ghosts = [n for n in _CHANGED if n not in set(names)]
-    assert not ghosts, f"_CHANGED names unregistered queries: {ghosts}"
-
-    def last_evidence_round(n):
-        rounds = [i + 1 for i, s in enumerate(_ROUND_GREENS) if n in s]
-        return max(rounds) if rounds else 0  # 0 = never evidenced
-    changed = {n: i for i, n in enumerate(_CHANGED)}
-    last_rows_only = {}
-    for rnd, s in _ROWS_ONLY_ROUNDS.items():
-        for n in s:
-            last_rows_only[n] = max(rnd, last_rows_only.get(n, 0))
-    rows_only_due = frozenset(
-        n for n, rnd in last_rows_only.items()
-        if rnd <= _CURRENT_ROUND - 2)
+def _window_order(reg, evidence: Evidence, changed: tuple) -> list[str]:
+    """The registry names in rotation order (header comment above),
+    alphabetical within a tier. Evidence and the changed tuple are
+    arguments so a test can replay any prefix of the records."""
+    # A changed entry that is not registered would silently waste its
+    # window slot (VERDICT r6 shipped exactly that). Fail loudly.
+    ghosts = [n for n in changed if n not in reg]
+    if ghosts:
+        raise ValueError(f"_CHANGED names unregistered queries: {ghosts}")
     # Every rows-only member must declare a companion; a companion must
-    # itself be registered. Hard-fail like the _CHANGED ghost check —
-    # a misspelled companion would silently break the pairing.
-    unpaired = sorted(last_rows_only.keys() - _ROWS_ONLY_COMPANIONS.keys())
+    # itself be registered — a misspelling would silently break pairing.
+    unpaired = sorted(_last_rows_only(evidence, reg).keys()
+                      - _ROWS_ONLY_COMPANIONS.keys())
     if unpaired:
         raise ValueError(
             f"rows-only queries missing a _ROWS_ONLY_COMPANIONS entry: "
             f"{unpaired}")
-    ghost_companions = sorted(
-        set(_ROWS_ONLY_COMPANIONS.values()) - set(names))
+    ghost_companions = sorted(set(_ROWS_ONLY_COMPANIONS.values()) - set(reg))
     if ghost_companions:
         raise ValueError(
             f"_ROWS_ONLY_COMPANIONS names unregistered queries: "
             f"{ghost_companions}")
-    companions_due = frozenset(
-        _ROWS_ONLY_COMPANIONS[n] for n in rows_only_due)
+    due = rows_only_due(evidence, reg)
+    due |= {_ROWS_ONLY_COMPANIONS[n] for n in due}
+    order = {n: i for i, n in enumerate(changed)}
 
     def tier(n):
-        last = last_evidence_round(n)
+        last = last_round(evidence, n)
         if last == 0:
             return 0                    # backlog: never evidenced
-        if n in rows_only_due or n in companions_due:
+        if n in due:
             return 1                    # rows-only re-evidence due,
                                         # plus its hash-exact companion
         return 1 + last                 # greens, stalest first
 
-    return sorted(names, key=lambda n: (
-        changed.get(n, len(_CHANGED)),          # changed queries lead
-        tier(n),
-        n))
+    return sorted(reg, key=lambda n: (order.get(n, len(changed)),
+                                      tier(n), n))
 
 
 def load_registry() -> dict[str, Query]:
@@ -1431,7 +513,8 @@ def load_registry() -> dict[str, Query]:
     from . import format_ops  # noqa: F401
     # LAST: composes other modules' registered oracles (scoped audit)
     from . import scoped_ops  # noqa: F401
-    ordered = {n: REGISTRY[n] for n in _window_order(REGISTRY)}
+    ordered = {n: REGISTRY[n]
+               for n in _window_order(REGISTRY, load_evidence(), _CHANGED)}
     REGISTRY.clear()
     REGISTRY.update(ordered)
     return REGISTRY

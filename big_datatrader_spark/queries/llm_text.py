@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..functions import text as TX
+from ..session import scan_floor
 from ..sources.parquet_source import table
 from . import leased_doc_tokens, query
 
@@ -81,11 +82,11 @@ def text_token_stats(spark, sf_dir):
     # r15 (guide §2/§2.5, VERDICT r14 ask #7): the whole query is one
     # narrow tokenize+array-op pass, and the driver parquet's
     # one-row-group layout ran it on a single core at every sf (the
-    # suite's worst 10x scaler: 7.2x wall at sf1). parallel_text_input
+    # suite's worst 10x scaler: 7.2x wall at sf1). scan_floor
     # hash-repartitions the raw rows by doc_id when the scan cannot
     # feed the cores — measured sf1 2.64 -> 0.79s (3.3x), sf0.1
     # 0.78 -> 0.65s; inert on multi-row-group layouts.
-    docs = TX.parallel_text_input(table(spark, sf_dir, "documents"))
+    docs = scan_floor(table(spark, sf_dir, "documents"), "doc_id")
     return docs.select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),

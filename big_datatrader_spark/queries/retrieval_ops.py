@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Window, functions as F
 
 from ..functions import text as TX
+from ..session import scan_floor
 from ..sources.parquet_source import table
 from . import query
 
@@ -91,11 +92,11 @@ def _bm25_parts(spark, sf_dir):
 
     r15 (guide §2/§2.5): the tokenize+explode feeding the tf
     exchange ran in the SCAN stage — one task on the one-row-group
-    driver parquet at any sf. parallel_text_input repartitions by
+    driver parquet at any sf. scan_floor repartitions by
     doc_id when the layout starves the cores: the tf stage measured
     1.98 -> 0.47s at sf1 (interleaved min-of-3, disjoint spreads);
     inert on multi-row-group inputs."""
-    docs = TX.parallel_text_input(table(spark, sf_dir, "documents"))
+    docs = scan_floor(table(spark, sf_dir, "documents"), "doc_id")
     tk = docs.select("doc_id",
                      F.explode(TX.tokens(F.col("text"))).alias("tok"))
     tf = tk.groupBy("doc_id", "tok").agg(

@@ -20,6 +20,7 @@ from pyspark.sql import Window, functions as F
 from ..functions import text as TX
 from ..functions.dedup import h60
 from ..functions import graph as GR
+from ..session import _cpus
 from ..sources.parquet_source import table
 from . import (active_scope, copurchase_edges_key as _edges_key,
                lazy_cache, leased_copurchase_edges,
@@ -3219,15 +3220,13 @@ def _hits_iter_width(edges) -> int:
     size: cached-plan stats are exact after the eager count, so this
     costs no job. Clamped below by the sf0.1-calibrated floor and
     above by the session's core budget."""
-    import os
     try:
         size = int(edges._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
     except Exception:  # stats unavailable -> keep the floor
         size = 0
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     return max(_HITS_ITER_PARTITIONS,
-               min(cpus, size // _HITS_BYTES_PER_TASK))
+               min(_cpus(), size // _HITS_BYTES_PER_TASK))
 
 
 def _hits_oracle() -> str:

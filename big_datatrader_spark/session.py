@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # Confs that can be applied to an already-running session.
 RUNTIME_CONFS: dict[str, str] = {
@@ -49,6 +49,28 @@ RUNTIME_CONFS: dict[str, str] = {
 
 def _cpus() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def scan_floor(df: DataFrame, key: str) -> DataFrame:
+    """Restore parallelism above a scan that cannot feed the cores by
+    repartitioning immediately after the read.
+
+    A parquet file splits only down to its row groups, and the driver
+    testdata writes each table as ONE row group, so the first aggregate
+    or per-row chain above the scan ran on a single core at any session
+    width. When the scan has at most half the session's cores worth of
+    splits, hash-repartition the raw rows by ``key``; where an aggregate
+    on ``key`` follows, it reuses that partitioning, so the exchange
+    count is unchanged. Inert on layouts with enough row groups.
+    Measured (interleaved min-of-3, OPTIMIZATION_r15.md): co-purchase
+    edge build sf0.1 1.88 -> 1.36s; text_token_stats sf1 2.64 -> 0.79s."""
+    try:
+        n_splits = df.rdd.getNumPartitions()
+    except Exception:
+        return df
+    if 2 * n_splits <= _cpus():
+        return df.repartition(F.col(key))
+    return df
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:

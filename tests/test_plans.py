@@ -489,7 +489,7 @@ def test_round4b_exchange_budgets(spark, sf001):
         # explode+shuffle — measured 19% faster at sf0.1, and the
         # scan count (the 100 TB cost) drops from 2 to 1
         "naive_bayes_lang_score": 16,
-        # 33 > the pre-r15 26: parallel_text_input's conditional
+        # 33 > the pre-r15 26: scan_floor's conditional
         # doc_id repartition fires on the one-row-group test layout
         # and the static count charges it once per docs-subtree
         # embedding across the two ranker chains (ReusedExchange at

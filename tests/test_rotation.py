@@ -3,34 +3,52 @@
 The driver evidences only the first 50 registry entries per round, so
 the rotation IS the evidence pipeline. These tests pin its invariants
 against an INDEPENDENT reimplementation of the tier policy (changed ->
-backlog -> rows-only-due -> stalest greens) computed from the recorded
-per-round evidence sets — so a typo in a green set, a phantom name in
-the changed set, or an edit to _window_order cannot silently waste
-window slots (the exact failure modes of rounds 5-6: a changed-set
-entry that was never registered, and tests pinned to an obsolete
-backlog-only head shape). Everything references the round-agnostic
-``Q._CHANGED`` alias so a round bump cannot strand them.
+backlog -> rows-only-due -> stalest greens) computed from the per-round
+evidence the package derives from the committed CORRECTNESS_r*.json
+records — so a phantom name in the changed set, a misclassified record
+row, or an edit to _window_order cannot silently waste window slots.
+A golden replay of the r01-r14 records pins the derived order to the
+one the hand-kept evidence sets produced before they were derived.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+import subprocess
+import sys
+from pathlib import Path
+
+import pytest
+
 from big_datatrader_spark import queries as Q
 
 REG = Q.load_registry()
+EVIDENCE = Q.load_evidence()
+CURRENT = Q.current_round(EVIDENCE)
+ROOT = Path(__file__).resolve().parents[1]
 
 
 def _last_green_round(n):
-    rounds = [i + 1 for i, s in enumerate(Q._ROUND_GREENS) if n in s]
+    rounds = [rnd for rnd, (green, rows_only) in EVIDENCE.items()
+              if n in green | rows_only]
     return max(rounds) if rounds else 0  # 0 = never driver-evidenced
+
+
+def _rows_only_rounds():
+    """{round: rows-only queries} for queries still registered
+    rows-only-by-design (oracle=None)."""
+    return {rnd: {n for n in rows_only if REG[n].oracle is None}
+            for rnd, (_, rows_only) in EVIDENCE.items()}
 
 
 def _rows_only_due():
     last = {}
-    for rnd, s in Q._ROWS_ONLY_ROUNDS.items():
+    for rnd, s in _rows_only_rounds().items():
         for n in s:
             last[n] = max(rnd, last.get(n, 0))
     return frozenset(n for n, rnd in last.items()
-                     if rnd <= Q._CURRENT_ROUND - 2)
+                     if rnd <= CURRENT - 2)
 
 
 def _expected_order():
@@ -58,11 +76,10 @@ def test_no_ghost_names_anywhere():
     set must exist in the registry — a ghost in a green set silently
     re-queues an evidenced query; a ghost in the changed set silently
     wastes the head slot (round 6 shipped exactly that)."""
-    for rnd, s in enumerate(Q._ROUND_GREENS, start=1):
-        ghosts = {n for n in s if n not in REG}
+    for rnd, (green, rows_only) in EVIDENCE.items():
+        ghosts = {n for n in green if n not in REG}
         assert not ghosts, f"round-{rnd} green set has ghosts: {ghosts}"
-    for rnd, s in Q._ROWS_ONLY_ROUNDS.items():
-        ghosts = {n for n in s if n not in REG}
+        ghosts = {n for n in rows_only if n not in REG}
         assert not ghosts, (
             f"rows-only round-{rnd} set has ghosts: {ghosts}")
     ghosts = {n for n in Q._CHANGED if n not in REG}
@@ -117,7 +134,7 @@ def test_rows_only_companions_are_structural():
     the pairing guarantee is enforced by the rotation, not incidental
     scheduling."""
     rows_only = set()
-    for s in Q._ROWS_ONLY_ROUNDS.values():
+    for s in _rows_only_rounds().values():
         rows_only |= s
     missing = rows_only - Q._ROWS_ONLY_COMPANIONS.keys()
     assert not missing, f"rows-only queries without a companion: {missing}"
@@ -141,33 +158,100 @@ def test_rows_only_companions_are_structural():
 
 
 def test_current_round_covers_recorded_evidence():
-    """_CURRENT_ROUND must be strictly ahead of every recorded round
-    (greens and rows-only): recording round N's evidence without
-    bumping the round constant would silently freeze the due cadence."""
-    assert Q._CURRENT_ROUND == len(Q._ROUND_GREENS) + 1
-    assert all(rnd < Q._CURRENT_ROUND for rnd in Q._ROWS_ONLY_ROUNDS)
+    """The loader found every committed record, rounds 1-15 with no
+    gap, and the current round is the latest record plus one —
+    committing round N's record moves the due cadence by itself."""
+    assert sorted(EVIDENCE) == list(range(1, 16))
+    assert CURRENT == 16
 
 
 def test_rotation_is_deterministic():
-    assert list(Q._window_order(REG)) == list(Q._window_order(REG))
+    assert (Q._window_order(REG, EVIDENCE, Q._CHANGED)
+            == Q._window_order(REG, EVIDENCE, Q._CHANGED))
 
 
-def test_r9_window_drains_the_r2_staleness_tail():
-    """VERDICT r8 ask #2 commitment, pinned: every query whose latest
-    driver evidence is round 2 — the oldest evidence in the registry —
-    must sit inside the round-9 window head, so after this round no
-    query's evidence is older than r3. Adding or replanning one more
-    query than the head budget allows (18 changed + 1 rows-only-due
-    + 31 remaining stale = 50; two changed entries are themselves
-    r2-stale, so all 33 r2 queries stay in) breaks this test, which
-    is the point. Round-9-specific by design: it self-disables once
-    the round constant moves on."""
-    if Q._CURRENT_ROUND != 9:
-        return
-    head = set(list(REG)[:Q._WINDOW])
-    stale = {n for n in REG if _last_green_round(n) == 2}
-    stranded = stale - head
-    assert not stranded, f"r2-stale greens evicted from window: {stranded}"
+# The changed tuple the r15 window was built with, before the evidence
+# was derived from the records.
+_R15_WINDOW_CHANGED = (
+    'multimodal_feature_extract', 'multimodal_frame_sample',
+    'multimodal_ppm_decode', 'multimodal_wav_decode',
+    'link_prediction_holdout_eval', 'hits_hub_authority',
+    'pagerank_copurchase', 'personalized_pagerank',
+    'label_propagation_communities', 'modularity_brand_partition',
+    'local_clustering_coefficient', 'link_prediction_common_neighbors',
+    'gnn_feature_propagation', 'triangle_count_copurchase',
+    'sssp_copurchase', 'temporal_reachability_copurchase',
+    'graph_family_scoped_audit', 'text_token_stats',
+    'text_family_scoped_audit', 'hybrid_rrf_retrieval',
+    'bm25_more_like_this', 'hard_negative_mining',
+)
+
+
+def test_golden_replay_of_r01_to_r14_reproduces_the_r15_order():
+    """Replaying records r01-r14 at round 15 with the r15 changed tuple
+    reproduces, name for name, the 339-query order the hand-pasted
+    per-round evidence sets produced."""
+    evidence = {rnd: e for rnd, e in EVIDENCE.items() if rnd <= 14}
+    order = Q._window_order(REG, evidence, _R15_WINDOW_CHANGED)
+    assert len(order) == 339
+    assert hashlib.sha256("\n".join(order).encode()).hexdigest() == (
+        "51ea314dca00f6631601c0d24a6b24a16ecc2b51451d3e4dd1187551a5f2284d")
+
+
+def _row(**kw):
+    base = {"rows_match": None, "schema_match": None, "hash_match": None,
+            "spark_rows": None, "oracle_rows": None, "err": None}
+    base.update(kw)
+    return base
+
+
+def _load_as_rounds_1_to_4(tmp_path, record):
+    for rnd in range(1, 5):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(
+            json.dumps(record))
+    return Q.load_evidence(tmp_path)
+
+
+def test_classify_green_and_clean_rows_only(tmp_path):
+    green = _row(rows_match=True, schema_match=True, hash_match=True,
+                 spark_rows=10, oracle_rows=10)
+    rows_only = _row(spark_rows=8, err="no_oracle")
+    assert Q.classify(green) == "green"
+    assert Q.classify(rows_only) == "rows_only"
+    ev = _load_as_rounds_1_to_4(tmp_path, {"g": green, "ro": rows_only})
+    # rows-only counts as evidence only from round 4 on
+    assert ev[3] == (frozenset({"g"}), frozenset())
+    assert ev[4] == (frozenset({"g"}), frozenset({"ro"}))
+
+
+@pytest.mark.parametrize("row", [
+    # a silently empty rows-only query must not rotate out as evidenced
+    _row(spark_rows=0, err="no_oracle"),
+    # the query died before counting
+    _row(spark_rows=None, err="no_oracle"),
+    _row(spark_rows=12, err="spark: boom"),
+], ids=["zero_row_no_oracle", "none_row_no_oracle", "other_error"])
+def test_classify_red_is_no_evidence(row, tmp_path):
+    assert Q.classify(row) is None
+    ev = _load_as_rounds_1_to_4(tmp_path, {"red": row})
+    assert ev[4] == (frozenset(), frozenset())
+
+
+def test_load_evidence_rejects_unusable_records(tmp_path):
+    with pytest.raises(FileNotFoundError):
+        Q.load_evidence(tmp_path)
+    for rnd in (1, 3):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text("{}")
+    with pytest.raises(ValueError, match="gap"):
+        Q.load_evidence(tmp_path)
+
+
+def test_evidence_report_runs():
+    r = subprocess.run([sys.executable, str(ROOT / "tools" /
+                                            "evidence_report.py")],
+                       capture_output=True, text=True, cwd=ROOT)
+    assert r.returncode == 0, r.stdout + r.stderr
+    assert f"round: {CURRENT}" in r.stdout
 
 
 def test_registered_fn_is_the_query_it_claims_to_be():

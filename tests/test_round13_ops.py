@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from big_datatrader_spark.queries import (SharedScope, doc_tokens_key,
                                           leased_doc_tokens,
                                           load_registry)
+from big_datatrader_spark.session import scan_floor
 
 REG = load_registry()
 
@@ -88,10 +89,10 @@ def test_unscoped_plans_bit_identical_to_inline_twins(spark, sf0001):
 
     # text_token_stats: inline tokens expression repeated per column
     # (r15: the registered form routes the scan through
-    # parallel_text_input — the twin does the same, so this pin keeps
+    # scan_floor — the twin does the same, so this pin keeps
     # asserting lease-vs-inline identity, not the scan floor)
     toks = TX.tokens(F.col("text"))
-    twin2 = TX.parallel_text_input(docs).select(
+    twin2 = scan_floor(docs, "doc_id").select(
         "doc_id",
         F.length("text").cast("long").alias("n_chars"),
         F.size(toks).cast("long").alias("n_tokens"),

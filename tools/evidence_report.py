@@ -1,7 +1,8 @@
 """Rotation evidence report — the per-round bookkeeping ritual's eyes.
 
-Prints, from the recorded per-round green/rows-only sets in
-queries/__init__.py:
+Prints, from the per-round green/rows-only sets that
+big_datatrader_spark.queries derives from the committed driver
+records (CORRECTNESS_r*.json):
 
 - the staleness histogram (latest driver evidence round per query),
 - the current window head (what the driver will check this round),
@@ -25,48 +26,36 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from big_datatrader_spark import queries as Q  # noqa: E402
 
 
-def last_round(name: str) -> int:
-    rounds = [i + 1 for i, s in enumerate(Q._ROUND_GREENS) if name in s]
-    return max(rounds) if rounds else 0
-
-
-def rows_only_due() -> frozenset:
-    latest: dict[str, int] = {}
-    for rnd, s in Q._ROWS_ONLY_ROUNDS.items():
-        for n in s:
-            latest[n] = max(rnd, latest.get(n, 0))
-    return frozenset(n for n, rnd in latest.items()
-                     if rnd <= Q._CURRENT_ROUND - 2)
-
-
 def main() -> int:
     reg = Q.load_registry()
     names = list(reg)
     head = names[:Q._WINDOW]
-    hist = Counter(last_round(n) for n in names)
+    ev = Q.load_evidence()
+    rnd = Q.current_round(ev)
+    hist = Counter(Q.last_round(ev, n) for n in names)
     print(f"registry: {len(names)} queries; window: {Q._WINDOW}; "
-          f"round: {Q._CURRENT_ROUND}")
+          f"round: {rnd}")
     print("staleness histogram (0 = never evidenced):",
           dict(sorted(hist.items())))
-    changed, due = set(Q._CHANGED), rows_only_due()
+    changed, due = set(Q._CHANGED), Q.rows_only_due(ev, reg)
     companions = {Q._ROWS_ONLY_COMPANIONS[n] for n in due}
     tiers = Counter()
     for n in head:
         if n in changed:
             tiers["changed"] += 1
-        elif last_round(n) == 0:
+        elif Q.last_round(ev, n) == 0:
             tiers["backlog"] += 1
         elif n in due:
             tiers["rows_only_due"] += 1
         elif n in companions:
             tiers["companion_due"] += 1
         else:
-            tiers[f"green_r{last_round(n)}"] += 1
+            tiers[f"green_r{Q.last_round(ev, n)}"] += 1
     print("window head tiers:", dict(tiers))
     post = Counter()
     head_set = set(head)
     for n in names:
-        post[Q._CURRENT_ROUND if n in head_set else last_round(n)] += 1
+        post[rnd if n in head_set else Q.last_round(ev, n)] += 1
     print("post-round projection (if the window goes green):",
           dict(sorted(post.items())))
     oldest = min(r for r in post if post[r])
