@@ -88,12 +88,13 @@ def run_scoped(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     before any consumer runs, making the cache's content, partitioning
     and cost DETERMINISTIC — one build under its own AQE context
     instead of interleaved with the consumers' stages and memory
-    pressure. (tools/measure_cache_race.py quantifies the options: a
-    no-cache multi-branch plan pays one full lineage run PER BRANCH —
-    4.0x measured — while lazy and eager persists both measure 1.0x
-    on Spark 4.1/AQE; eager's win over lazy is determinism, and it is
-    what took link_prediction_holdout_eval from 34.2s to ~16s at sf1
-    while costing ~2s at sf0.1.)
+    pressure. (tests/test_cache_lifecycle.py counts the lineage runs:
+    a no-cache multi-branch plan pays one full lineage run PER BRANCH,
+    while lazy and eager persists both run it once on Spark 4.1/AQE;
+    tools/ab_specs/cache_race.py times the three. Eager's win over
+    lazy is determinism, and it is what took
+    link_prediction_holdout_eval from 34.2s to ~16s at sf1 while
+    costing ~2s at sf0.1.)
 
     Plan tests call the same ``build`` through Query.plan_fn — the
     scale-killer sweep with cache=identity (full tree visible), the
@@ -149,7 +150,7 @@ class SharedScope:
     Keys should embed the dataset (e.g. f"copurchase_edges:{sf_dir}")
     so one scope can serve suites spanning scale factors. Relations
     are persisted SERIALIZED (MEMORY_AND_DISK — the hits ablation's
-    winner for many-scan caches, tools/measure_hits_ablation.py) and
+    winner for many-scan caches, tools/ab_specs/hits.py) and
     materialized eagerly on first lease so the build runs once under
     the leasing query's session confs, deterministically.
 
@@ -437,7 +438,9 @@ def rows_only_due(evidence: Evidence, reg) -> frozenset:
 # Queries whose code, oracle or plan changed since the latest record: they
 # need fresh driver evidence regardless of prior greens, so they lead the
 # window. Every name must be registered (_window_order hard-fails).
-_CHANGED: tuple[str, ...] = ()
+_CHANGED: tuple[str, ...] = (
+    "graph_family_scoped_audit", "hits_hub_authority",
+    "text_family_scoped_audit")
 
 # Each rows-only-by-design query (oracle=None — results DuckDB cannot
 # reproduce bit-for-bit) is paired with a hash-exact companion proving the

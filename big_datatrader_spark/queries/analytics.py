@@ -6892,7 +6892,7 @@ def _mad_plan(spark, sf_dir, cache=lazy_cache):
     # (measured 31 -> 18 exchanges)
     # lazy cache: domain-sized (#types x #distinct cents), and the
     # measured lineage count for lazy-persisted broadcast consumers
-    # is already 1.0 (tools/measure_cache_race.py) — the eager count
+    # is already 1.0 (tests/test_cache_lifecycle.py) — the eager count
     # job cost ~0.4s/run here for no work saved; eager stays reserved
     # for HEAVY builds where cost determinism matters
     cnt = cache(ev.select("event_type",

@@ -471,7 +471,7 @@ def _tri_plan(spark, sf_dir, cache=lazy_cache):
     # build across consumers at shuffle-file grain (ReusedExchange) —
     # swapping that for InMemoryRelation scans measured SLOWER both
     # times it was tried (16.4->22.1s, then 15.5->24.9s at sf0.1 with
-    # the ordered set persisted; tools/measure_shared_scope.py), the
+    # the ordered set persisted; tools/ab_specs/shared_scope.py), the
     # same honest-loss class as the r9 MinHash collapse
     pairs = GR.copurchase_pairs(li, "x", "y", ordered=True)
     deg = (pairs.select(F.col("x").alias("node"))
@@ -681,7 +681,7 @@ def _cdp_plan(spark, sf_dir, cache=lazy_cache):
     # exact-dedup join run once, deterministically, before the
     # funnel-count broadcasts consume them — at 100 TB these survivor
     # sets are what a pipeline checkpoints between stages anyway
-    # (tools/measure_cache_race.py quantifies the cache variants)
+    # (tools/ab_specs/cache_race.py quantifies the cache variants)
     qual = cache(qual, eager=True)
     ex = (qual.groupBy(F.md5(F.lower(F.trim(F.col("text")))))
           .agg(F.min("doc_id").alias("doc_id"))
@@ -1402,7 +1402,7 @@ def _e1audit_plan(spark, sf_dir, cache=lazy_cache):
     # name-grain multiplicity feeds three consumers (the summary agg
     # and both sides of the contribution join) — lazy cache: it is
     # name-domain-sized and lazy-persisted broadcast consumers
-    # measure 1.0 lineage runs (tools/measure_cache_race.py)
+    # measure 1.0 lineage runs (tests/test_cache_lifecycle.py)
     mult = cache(cust.groupBy("nm")
                  .agg(F.count(F.lit(1)).cast("long").alias("m")))
     npairs = _edit1_verified_name_pairs(mult.select("nm"))

@@ -1,8 +1,8 @@
 """Driver evidence ON the SharedScope path (VERDICT r11 ask #3).
 
 Until round 12, the scoped plans executed only under tests
-(tests/test_scope.py, sf0.001) and the builder's measurement tools
-(tools/measure_shared_scope.py) — bench.py and the driver run queries
+(tests/test_scope.py, sf0.001) and the A/B measurement spec
+(tools/ab_specs/shared_scope.py) — bench.py and the driver run queries
 standalone by design, so no CORRECTNESS row ever exercised a leased
 plan. ``graph_family_scoped_audit`` closes that gap: it is a
 REGISTERED, fully-oracled query whose body opens a SharedScope, runs
@@ -36,7 +36,28 @@ from pyspark.sql import functions as F
 from . import (REGISTRY, SharedScope, copurchase_edges_dated_key,
                copurchase_edges_key, doc_tokens_key, query)
 
-# the members the scope serves, with their result summary spec:
+# Member spec: (name, key expr, val expr) in Spark SQL spelling; the
+# DuckDB spelling derives mechanically via _duck_expr. The one
+# dialect split is the 60-bit md5 prefix hash string keys go through:
+# Spark spells it conv(substring(md5 ..), 16, 10), DuckDB
+# ('0x' || substr(md5 ..))::BIGINT.
+_H60_SPARK = ("cast(conv(substring(md5({c}), 1, 15), 16, 10) "
+              "as bigint) % 1073741824")
+_H60_DUCK = ("CAST(('0x' || substr(md5({c}), 1, 15)) AS BIGINT) "
+             "% 1073741824")
+
+
+def _duck_expr(spark_expr: str) -> str:
+    """The DuckDB spelling of a summary expression: identical except
+    for the 60-bit md5 prefix hash. Derived mechanically so the two
+    spellings cannot drift apart."""
+    return spark_expr.replace(
+        _H60_SPARK.format(c="tok"), _H60_DUCK.format(c="tok")).replace(
+        _H60_SPARK.format(c="norm"), _H60_DUCK.format(c="norm")).replace(
+        _H60_SPARK.format(c="term"), _H60_DUCK.format(c="term"))
+
+
+# the graph members the scope serves, with their result summary spec
 # (name, key column, summed value expression). All members have
 # hash-exact standalone oracles; the summary is a plain aggregate of
 # each member's full result, so a single changed value anywhere in
@@ -59,13 +80,14 @@ _GFA_MEMBERS = (
 )
 
 
-def _gfa_oracle() -> str:
+def _family_oracle(members) -> str:
     """Each member's registered oracle, wrapped in the same summary
     aggregate the Spark side computes — built from REGISTRY at import
     time so the audited SQL can never drift from the members' own
-    gate SQL."""
+    gate SQL. Summary expressions use the Spark spelling; _duck_expr
+    maps them to DuckDB (the identity for plain column arithmetic)."""
     parts = []
-    for name, key, val in _GFA_MEMBERS:
+    for name, key, val in members:
         # NOTE: load_registry() imports this module LAST, after every
         # member module has registered — importing scoped_ops directly
         # before the member modules would KeyError here by design.
@@ -85,8 +107,8 @@ def _gfa_oracle() -> str:
         parts.append(f"""
     SELECT '{name}' AS member,
            CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum({key}) AS BIGINT) AS key_sum,
-           CAST(sum({val}) AS BIGINT) AS val_sum
+           CAST(sum({_duck_expr(key)}) AS BIGINT) AS key_sum,
+           CAST(sum({_duck_expr(val)}) AS BIGINT) AS val_sum
     FROM ({inner})""")
     return "\nUNION ALL".join(parts) + "\nORDER BY member"
 
@@ -98,7 +120,7 @@ def _cache_manager_empty(spark) -> bool:
 
 @query(
     "graph_family_scoped_audit",
-    oracle=_gfa_oracle(),
+    oracle=_family_oracle(_GFA_MEMBERS),
     doc="the SharedScope execution path under the driver gate: opens "
         "a scope, runs six graph-family members through their leases "
         "(hits + pagerank + SSSP on the directed co-purchase edge "
@@ -119,25 +141,36 @@ def _cache_manager_empty(spark) -> bool:
         "the moment the last consumer finishes",
 )
 def graph_family_scoped_audit(spark, sf_dir):
+    return _scoped_family_audit(
+        spark, sf_dir, _GFA_MEMBERS,
+        {copurchase_edges_key(sf_dir),
+         f"copurchase_edges_ordered:{sf_dir}",
+         copurchase_edges_dated_key(sf_dir)})
+
+
+def _scoped_family_audit(spark, sf_dir, members, expected_keys):
+    """Run ``members`` inside one SharedScope and return their summary
+    rows (member, n_rows, key_sum, val_sum). Fails when the scope memo
+    is not exactly ``expected_keys`` after the family ran, or when
+    scope exit leaves anything cached."""
     pre_empty = _cache_manager_empty(spark)
     summaries = []
     with SharedScope() as scope:
-        for name, key, val in _GFA_MEMBERS:
+        for name, key, val in members:
             res = REGISTRY[name].spark_fn(spark, sf_dir)
             summaries.append(
                 res.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                        F.sum(F.col(key)).cast("long").alias("key_sum"),
-                        F.sum(F.expr(val)).cast("long").alias("val_sum"))
+                        F.sum(F.expr(key)).cast("long")
+                        .alias("key_sum"),
+                        F.sum(F.expr(val)).cast("long")
+                        .alias("val_sum"))
                 .select(F.lit(name).alias("member"), "n_rows",
                         "key_sum", "val_sum"))
-        expected = {copurchase_edges_key(sf_dir),
-                    f"copurchase_edges_ordered:{sf_dir}",
-                    copurchase_edges_dated_key(sf_dir)}
-        if set(scope._cached) != expected:
+        if set(scope._cached) != expected_keys:
             raise RuntimeError(
                 "scope memo mismatch — a member fell through its "
                 f"lease or leased an unexpected key: have "
-                f"{sorted(scope._cached)}, want {sorted(expected)}")
+                f"{sorted(scope._cached)}, want {sorted(expected_keys)}")
         out = (reduce(lambda a, b: a.unionByName(b), summaries)
                .orderBy("member").localCheckpoint(eager=True))
     # no-leftover at SCOPE exit: the memo must be empty, and a
@@ -159,22 +192,14 @@ def graph_family_scoped_audit(spark, sf_dir):
 # tokenized (doc_id, n_chars, t) relation. This audit runs them
 # through that lease and oracles the scoped values.
 #
-# Member spec: (name, key expr, val expr) in Spark SQL spelling; the
-# DuckDB spelling derives mechanically via _duck_expr.
 # Unlike the graph family, some members key on strings (tok/norm/
-# term), so the summary hashes them through the shared 60-bit md5 —
-# dialect-split because Spark spells it conv(substring(md5 ..), 16,
-# 10) and DuckDB ('0x' || substr(md5 ..))::BIGINT — and reduces
-# mod 2^30 so BIGINT sums cannot overflow (DuckDB sums in HUGEINT,
-# Spark wraps — bounded terms keep both exact). Float columns enter
-# the summary as their round-scaled exact integers (the published
-# 6dp/4dp roundings x 1e6/1e4), so a single changed value anywhere
-# in any member's scoped output flips the driver hash.
-
-_H60_SPARK = ("cast(conv(substring(md5({c}), 1, 15), 16, 10) "
-              "as bigint) % 1073741824")
-_H60_DUCK = ("CAST(('0x' || substr(md5({c}), 1, 15)) AS BIGINT) "
-             "% 1073741824")
+# term), so the summary hashes them through the shared 60-bit md5
+# (_H60_SPARK) and reduces mod 2^30 so BIGINT sums cannot overflow
+# (DuckDB sums in HUGEINT, Spark wraps — bounded terms keep both
+# exact). Float columns enter the summary as their round-scaled exact
+# integers (the published 6dp/4dp roundings x 1e6/1e4), so a single
+# changed value anywhere in any member's scoped output flips the
+# driver hash.
 
 _TFA_MEMBERS = (
     ("text_token_stats", "doc_id",
@@ -198,45 +223,9 @@ _TFA_MEMBERS = (
 )
 
 
-def _duck_expr(spark_expr: str) -> str:
-    """The DuckDB spelling of a summary expression: identical except
-    for the 60-bit md5 prefix hash (dialect-split above). Derived
-    mechanically so the two spellings cannot drift apart."""
-    return spark_expr.replace(
-        _H60_SPARK.format(c="tok"), _H60_DUCK.format(c="tok")).replace(
-        _H60_SPARK.format(c="norm"), _H60_DUCK.format(c="norm")).replace(
-        _H60_SPARK.format(c="term"), _H60_DUCK.format(c="term"))
-
-
-def _tfa_oracle() -> str:
-    """Each text member's registered oracle wrapped in the summary
-    aggregate (the _gfa_oracle convention: built from REGISTRY at
-    import time so the audited SQL cannot drift from the members' own
-    gate SQL; load_registry imports scoped_ops LAST so every member
-    is registered by now)."""
-    parts = []
-    for name, key, val in _TFA_MEMBERS:
-        if name not in REGISTRY:
-            raise KeyError(
-                f"{name} not registered yet — scoped_ops must be "
-                f"imported after the member modules")
-        inner = REGISTRY[name].oracle
-        if inner is None:
-            raise ValueError(f"{name} has no oracle — the scoped "
-                             f"audit summary must be built from the "
-                             f"member's own gate SQL")
-        parts.append(f"""
-    SELECT '{name}' AS member,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum({_duck_expr(key)}) AS BIGINT) AS key_sum,
-           CAST(sum({_duck_expr(val)}) AS BIGINT) AS val_sum
-    FROM ({inner})""")
-    return "\nUNION ALL".join(parts) + "\nORDER BY member"
-
-
 @query(
     "text_family_scoped_audit",
-    oracle=_tfa_oracle(),
+    oracle=_family_oracle(_TFA_MEMBERS),
     doc="driver evidence ON the doc_tokens SharedScope lease "
         "(VERDICT r12 ask #3): opens a scope, runs all seven "
         "text-family members (token stats, corpus/stem frequencies, "
@@ -253,35 +242,11 @@ def _tfa_oracle() -> str:
         "key (a member falling through to a private re-tokenize "
         "fails the query) and that scope exit releases everything. "
         "Measured: the lease takes the seven-member suite 28.0 -> "
-        "23.9s at sf1 (tools/measure_shared_scope.py --family text); "
+        "23.9s at sf1 (tools/measure_ab.py tools/ab_specs/"
+        "shared_scope.py); "
         "at 100 TB one tokenize+scan of the corpus amortizes across "
         "every downstream text job in the session",
 )
 def text_family_scoped_audit(spark, sf_dir):
-    pre_empty = _cache_manager_empty(spark)
-    summaries = []
-    with SharedScope() as scope:
-        for name, key, val in _TFA_MEMBERS:
-            res = REGISTRY[name].spark_fn(spark, sf_dir)
-            summaries.append(
-                res.agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                        F.sum(F.expr(key)).cast("long")
-                        .alias("key_sum"),
-                        F.sum(F.expr(val)).cast("long")
-                        .alias("val_sum"))
-                .select(F.lit(name).alias("member"), "n_rows",
-                        "key_sum", "val_sum"))
-        expected = {doc_tokens_key(sf_dir)}
-        if set(scope._cached) != expected:
-            raise RuntimeError(
-                "scope memo mismatch — a member fell through its "
-                f"lease or leased an unexpected key: have "
-                f"{sorted(scope._cached)}, want {sorted(expected)}")
-        out = (reduce(lambda a, b: a.unionByName(b), summaries)
-               .orderBy("member").localCheckpoint(eager=True))
-    if scope._cached:
-        raise RuntimeError(f"scope exit leaked {sorted(scope._cached)}")
-    if pre_empty and not _cache_manager_empty(spark):
-        raise RuntimeError("scope exit left relations in the "
-                           "CacheManager")
-    return out
+    return _scoped_family_audit(spark, sf_dir, _TFA_MEMBERS,
+                                {doc_tokens_key(sf_dir)})

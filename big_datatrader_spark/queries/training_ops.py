@@ -1020,7 +1020,7 @@ def _pagerank_plan(spark, sf_dir, cache=lazy_cache):
     # eager=True: the build runs once under its own plan, so its
     # cost, content and partitioning are deterministic before the nn
     # broadcast subtrees and iteration stages consume it
-    # (tools/measure_cache_race.py quantifies the variants).
+    # (tools/ab_specs/cache_race.py quantifies the variants).
     ewd = cache(edges.join(outdeg, "src"), eager=True)  # src,dst,deg
     # node set from the CACHED relation (every edge src has a degree
     # row, so ewd's src domain == edges' src domain) — deriving it
@@ -1143,7 +1143,7 @@ def _ppr_oracle() -> str:
         "partition layout agrees bit-for-bit. Cache lifecycle "
         "(VERDICT r9 ask #3): the edge+deg relation is persisted "
         "eagerly ONCE (deterministic build under its own plan — "
-        "tools/measure_cache_race.py quantifies the cache variants), "
+        "tools/ab_specs/cache_race.py quantifies the cache variants), "
         "the seed set derives from that cache instead of re-running "
         "the edge build for its broadcast job, and both are released "
         "after the top-100 result materializes (run_scoped + "
@@ -3229,6 +3229,70 @@ def _hits_iter_width(edges) -> int:
                min(_cpus(), size // _HITS_BYTES_PER_TASK))
 
 
+def _hits_top50(spark, edges, overrides: dict) -> list:
+    """The HITS iteration over a materialized (src, dst) edge relation:
+    seed every source node at 1e6, run _HITS_ITERS authority/hub
+    half-steps with ``overrides`` applied to the session confs, and
+    collect the top-50 rows. The confs are restored and every score
+    cache is released before returning; the edge relation is the
+    caller's to release."""
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    h = nodes.select("node", F.lit(1000000).cast("bigint").alias("h"))
+
+    live = []  # persisted half-steps not yet released
+
+    def linf_norm(raw, col_in, col_out):
+        # raw is node-sized; persist so the max collect and the next
+        # half-step's join don't re-derive the whole upstream chain
+        # (without this the 4 half-steps recompute the edge join
+        # 2^4 times — measured 30.7s -> 8s at sf0.01). Only the
+        # immediately preceding half-step feeds this one, so release
+        # everything older; the predecessor stays live so no job
+        # recomputes an unpersisted chain.
+        raw = raw.persist()
+        m = int(raw.agg(F.max(col_in).alias("m")).collect()[0]["m"])
+        while len(live) > 1:
+            live.pop(0).unpersist()
+        live.append(raw)
+        x = F.col(col_in).cast("decimal(38,0)")
+        return raw.select(
+            "node",
+            ((x * 1000000 - (x * 1000000) % F.lit(m))
+             / F.lit(m)).cast("bigint").alias(col_out))
+
+    saved = {k: spark.conf.get(k) for k in overrides}
+    a = None
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        for _ in range(_HITS_ITERS):
+            a_raw = (h.join(edges, h["node"] == edges["src"])
+                     .groupBy("dst")
+                     .agg(F.sum("h").alias("a_raw"))
+                     .select(F.col("dst").alias("node"), "a_raw"))
+            a = linf_norm(a_raw, "a_raw", "a")
+            h_raw = (a.join(edges, a["node"] == edges["dst"])
+                     .groupBy("src")
+                     .agg(F.sum("a").alias("h_raw"))
+                     .select(F.col("src").alias("node"), "h_raw"))
+            h = linf_norm(h_raw, "h_raw", "h")
+        out = (a.join(h, "node")
+               .select(F.col("node").alias("part_key"),
+                       F.col("a").alias("authority_e6"),
+                       F.col("h").alias("hub_e6"))
+               .orderBy(F.desc("authority_e6"), F.desc("hub_e6"),
+                        "part_key")
+               .limit(50))
+        # top-50 is KB driver state: collect (TakeOrderedAndProject
+        # runs here), then release every score cache deterministically
+        return out.collect()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        for df in live:
+            df.unpersist()
+
+
 def _hits_oracle() -> str:
     # edges is probed by every half-step: MATERIALIZED, or DuckDB
     # re-runs the lineitem self-join per reference (measured 11s -> 2s
@@ -3326,7 +3390,7 @@ def hits_hub_authority(spark, sf_dir):
     # default is the _DESER level): the edge list is scanned 2*iters
     # times by the half-step joins, and the smaller columnar blocks
     # win over per-scan deserialization — measured 4.45s -> 3.61s at
-    # sf0.1, 10.3s -> 9.9s at sf1 (tools/measure_hits_ablation.py,
+    # sf0.1, 10.3s -> 9.9s at sf1 (tools/ab_specs/hits.py,
     # VERDICT r10 ask #2; the lazy-persist and packed-BIGINT variants
     # measure the same within noise, and lazy would materialize the
     # skew-prone build under the loop's AQE-off/8-partition confs on
@@ -3355,64 +3419,11 @@ def hits_hub_authority(spark, sf_dir):
         # honest number arriving (SCALING.md r11)
         edges.count()
         edges_owned = True
-    nodes = edges.select(F.col("src").alias("node")).distinct()
-    h = nodes.select("node", F.lit(1000000).cast("bigint").alias("h"))
-
-    live = []  # persisted half-steps not yet released
-
-    def linf_norm(raw, col_in, col_out):
-        # raw is node-sized; persist so the max collect and the next
-        # half-step's join don't re-derive the whole upstream chain
-        # (without this the 4 half-steps recompute the edge join
-        # 2^4 times — measured 30.7s -> 8s at sf0.01). Only the
-        # immediately preceding half-step feeds this one, so release
-        # everything older; the predecessor stays live so no job
-        # recomputes an unpersisted chain.
-        raw = raw.persist()
-        m = int(raw.agg(F.max(col_in).alias("m")).collect()[0]["m"])
-        while len(live) > 1:
-            live.pop(0).unpersist()
-        live.append(raw)
-        x = F.col(col_in).cast("decimal(38,0)")
-        return raw.select(
-            "node",
-            ((x * 1000000 - (x * 1000000) % F.lit(m))
-             / F.lit(m)).cast("bigint").alias(col_out))
-
-    overrides = {"spark.sql.shuffle.partitions":
-                 str(_hits_iter_width(edges)),
-                 "spark.sql.adaptive.enabled": "false"}
-    saved = {k: spark.conf.get(k) for k in overrides}
-    a = None
     try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        for _ in range(_HITS_ITERS):
-            a_raw = (h.join(edges, h["node"] == edges["src"])
-                     .groupBy("dst")
-                     .agg(F.sum("h").alias("a_raw"))
-                     .select(F.col("dst").alias("node"), "a_raw"))
-            a = linf_norm(a_raw, "a_raw", "a")
-            h_raw = (a.join(edges, a["node"] == edges["dst"])
-                     .groupBy("src")
-                     .agg(F.sum("a").alias("h_raw"))
-                     .select(F.col("src").alias("node"), "h_raw"))
-            h = linf_norm(h_raw, "h_raw", "h")
-        out = (a.join(h, "node")
-               .select(F.col("node").alias("part_key"),
-                       F.col("a").alias("authority_e6"),
-                       F.col("h").alias("hub_e6"))
-               .orderBy(F.desc("authority_e6"), F.desc("hub_e6"),
-                        "part_key")
-               .limit(50))
-        # top-50 is KB driver state: collect (TakeOrderedAndProject
-        # runs here), then release every score cache deterministically
-        rows = out.collect()
+        rows = _hits_top50(spark, edges, {
+            "spark.sql.shuffle.partitions": str(_hits_iter_width(edges)),
+            "spark.sql.adaptive.enabled": "false"})
     finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
-        for df in live:
-            df.unpersist()
         # rows are driver state by here — the edge list is no longer
         # needed by anything this query returns (VERDICT r9 ask #3:
         # no registered query leaves cached relations behind). A
@@ -4635,17 +4646,19 @@ _LPH_TOPK = 20           # predictions scored per query node
         "algebra: a scoring or split regression changes a hit count "
         "and flips the driver hash. Scale: identical wedge-join "
         "discipline as the scorer (cost bounded by the query set, "
-        "never all-pairs). The r10 replan (VERDICT r9 ask #2): the "
-        "dated edge list is built EAGERLY exactly once and the train "
-        "split eagerly once from that cache, BEFORE any consumer is "
-        "planned — a deterministic build under its own AQE context "
-        "instead of interleaved with the wedge/scoring stages and "
-        "their memory pressure. Measured: 34.2s (r9) -> 15.0s (r10 "
-        "bench) at sf1 while sf0.1 ROSE ~2s (the eager builds' fixed "
-        "price) — opposite signs, so the win is plan-shaped, not "
-        "host drift; tools/measure_cache_race.py holds the mechanism "
-        "measurements. Both caches are released after the 50-row "
-        "result materializes (run_scoped)",
+        "never all-pairs). The dated edge list is ONE eager cache, "
+        "built exactly once BEFORE any consumer is planned — a "
+        "deterministic build under its own AQE context instead of "
+        "interleaved with the wedge/scoring stages and their memory "
+        "pressure (r10, VERDICT r9 ask #2: 34.2s -> 15.0s at sf1 "
+        "while sf0.1 ROSE ~2s, the eager build's fixed price — "
+        "opposite signs, so the win is plan-shaped, not host drift). "
+        "The train and test splits are lazy filter views over that "
+        "cache (r15: a second eager train persist re-materialized "
+        "~91% of it; dropping it took sf1 14.69 -> 12.25s, "
+        "tools/measure_ab.py tools/ab_specs/lph_build_variants.py). "
+        "The edge cache and the 50-row query-set cache are released "
+        "after the result materializes (run_scoped)",
     plan_fn=lambda spark, sf_dir, cache: _lph_plan(spark, sf_dir, cache),
 )
 def link_prediction_holdout_eval(spark, sf_dir):

@@ -9,6 +9,18 @@ from big_datatrader_spark.session import get_spark  # noqa: E402
 
 SF0001 = "/root/testdata/sf0.001"
 SF001 = "/root/testdata/sf0.01"
+AB_SPECS = os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools", "ab_specs")
+
+
+def load_ab_spec(name: str):
+    """Import tools/ab_specs/<name>.py (not a package) as a module."""
+    import importlib.util
+    spec = importlib.util.spec_from_file_location(
+        f"ab_specs.{name}", os.path.join(AB_SPECS, f"{name}.py"))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 @pytest.fixture(scope="session")

@@ -136,3 +136,36 @@ def test_hits_restores_session_confs(spark, sf0001):
     REG["hits_hub_authority"].spark_fn(spark, sf0001)
     assert {k: spark.conf.get(k) for k in keys} == before
     spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("mode", ["no_persist", "lazy", "eager"])
+def test_run_scoped_cache_lineage_runs(spark, mode):
+    """run_scoped's cache() over a relation four consumers read (one
+    keyed aggregate + three broadcast branches, tools/ab_specs/
+    cache_race.py): an accumulator UDF counts the base rows actually
+    computed. Without a persist every consumer re-runs the lineage;
+    lazy and eager persists both run it exactly once."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType
+
+    from big_datatrader_spark.queries import lazy_cache, run_scoped
+    from conftest import load_ab_spec
+
+    race = load_ab_spec("cache_race")
+    n_rows = 2000
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf(LongType())
+    def counted(x):
+        acc.add(1)
+        return x * 2 + 1
+
+    def build(s, _sf, cache):
+        wrap = {"no_persist": lazy_cache, "lazy": cache,
+                "eager": lambda df: cache(df, eager=True)}[mode]
+        return race.race_plan(s, wrap, counted, n_rows=n_rows, n_parts=4)
+
+    run_scoped(spark, None, build).collect()
+    runs = race.N_BRANCHES + 1 if mode == "no_persist" else 1
+    assert acc.value == n_rows * runs
+    assert _cache_manager_empty(spark)

@@ -66,3 +66,36 @@ def test_runtime_bloom_filter_prunes_fact_side(spark, sf001):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def test_aqe_skew_join_fires_only_on_direct_shuffle_children(spark):
+    """OptimizeSkewedJoin matches SMJ(Sort(Shuffle), Sort(Shuffle)):
+    with a checkpointed dimension (both join children raw shuffles) it
+    splits the hot key's partition at tuned thresholds, but when the
+    dimension is aggregated inline the rule never fires, which is why
+    salting stays (tools/ab_specs/skew_rescue.py times the variants).
+    Read from the executed plan's skew=true marker."""
+    from conftest import load_ab_spec
+
+    sk = load_ab_spec("skew_rescue")
+    keys = ["spark.sql.autoBroadcastJoinThreshold"] + [
+        "spark.sql.adaptive." + k for k in (
+            "skewJoin.enabled", "skewJoin.skewedPartitionThresholdInBytes",
+            "skewJoin.skewedPartitionFactor",
+            "advisoryPartitionSizeInBytes")]
+    saved = {k: spark.conf.get(k) for k in keys}
+    ev = sk.hot_events(spark, rows=200_000).localCheckpoint(eager=True)
+    dim = sk.spend_of(ev).localCheckpoint(eager=True)
+    try:
+        sk.set_skew_confs(spark, "true", "64KB", "2.0", "256KB")
+        fired, rows = {}, {}
+        for shape, d in (("direct", dim), ("derived", sk.spend_of(ev))):
+            df = sk.rollup(ev, d)
+            rows[shape] = sorted(map(tuple, df.collect()))
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            fired[shape] = "skew=true" in plan
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert fired == {"direct": True, "derived": False}
+    assert rows["direct"] == rows["derived"]

@@ -1,37 +1,42 @@
-"""A/B spec (tools/measure_ab.py): the six r15 persist-before-sort
-conversions (VERDICT r14 ask #5). For each converted query the OLD
-plan is exactly the builder under the identity cache (plan_fn +
-lazy_cache — the pre-conversion lazy tree, sort resamples the
-uncached kernel chain), and the NEW plan is the registered spark_fn
-(run_scoped: pre-sort relation persisted, result checkpointed, caches
-released). One variant pair per query, interleaved by measure_ab.
+"""A/B spec (tools/measure_ab.py): the r15 persist-before-sort
+conversions (VERDICT r14 ask #5). The OLD plan of a converted query is
+exactly its builder under the identity cache (plan_fn + lazy_cache —
+the pre-conversion lazy tree, the sort resamples the uncached kernel
+chain); the NEW plan is the registered spark_fn (run_scoped: pre-sort
+relation persisted, result checkpointed, caches released).
+
+Each variant runs all converted queries and returns every result row
+as (query, JSON row), so --check proves old and new return identical
+rows. The per-query split of the recorded sf1 run is
+plans/r15/ab_presort_sf1.json.
 """
+
+from functools import reduce
+
+from pyspark.sql import functions as F
 
 from big_datatrader_spark.queries import lazy_cache, load_registry
 
-_REG = load_registry()
-# The measured run (plans/r15/ab_presort_sf1.json) covered all six
-# r14-flagged queries; the two fold members (macd_histogram,
-# time_decay_ewma) measured worse/wash and were REVERTED, so this
-# spec now lists only the four landed conversions (the reverted two
-# have no plan_fn to build the old form from).
+# The measured run covered all six r14-flagged queries; the two fold
+# members (macd_histogram, time_decay_ewma) measured worse/wash and
+# were REVERTED, so only the four landed conversions remain (the
+# reverted two have no plan_fn to build the old form from).
 _SIX = ["multimodal_feature_extract", "multimodal_frame_sample",
         "multimodal_ppm_decode", "multimodal_wav_decode"]
 
 
-def _old(name):
+def _all(build):
     def fn(spark, sf_dir):
-        return _REG[name].plan_fn(spark, sf_dir, lazy_cache)
+        reg = load_registry()
+        parts = [build(reg[n], spark, sf_dir).select(
+                     F.lit(n).alias("query"),
+                     F.to_json(F.struct("*")).alias("row"))
+                 for n in _SIX]
+        return reduce(lambda a, b: a.unionByName(b), parts)
     return fn
 
 
-def _new(name):
-    def fn(spark, sf_dir):
-        return _REG[name].spark_fn(spark, sf_dir)
-    return fn
-
-
-VARIANTS = []
-for _n in _SIX:
-    VARIANTS.append((f"{_n}:old", _old(_n)))
-    VARIANTS.append((f"{_n}:new", _new(_n)))
+VARIANTS = [
+    ("old", _all(lambda q, s, d: q.plan_fn(s, d, lazy_cache))),
+    ("new", _all(lambda q, s, d: q.spark_fn(s, d))),
+]
