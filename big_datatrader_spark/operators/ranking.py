@@ -1,13 +1,15 @@
-"""Distributed global ranking: a total row-number without a
+"""Distributed running sums and global ranking without a
 single-partition sort.
 
-``row_number() OVER (ORDER BY ...)`` with no PARTITION BY collapses to
-ONE task in Spark — the classic accidental scale-killer. The standard
-two-phase fix implemented here:
+``sum()`` or ``row_number() OVER (ORDER BY ...)`` with no PARTITION BY
+collapses to ONE task in Spark — the classic accidental scale-killer.
+The standard two-phase fix, implemented once in ``prefix_sums``
+(``global_rank`` is its running count):
 
-1. rank locally inside a coarse bucket that is a PREFIX of the global
-   order (so bucket order == global order between buckets), then
-2. add per-bucket offsets (the running sum of bucket counts — a few
+1. run the window locally inside a coarse bucket that is a PREFIX of
+   the global order (so bucket order == global order between buckets),
+   then
+2. add per-bucket offsets (the running sum of bucket totals — a few
    hundred rows, computed once and broadcast).
 
 Wall-clock cost at any scale: one hash exchange on the bucket key plus
@@ -21,6 +23,59 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .exact import idiv
+
+
+def prefix_sums(df: DataFrame, bucket: Column,
+                order_cols: list[Column | str], sums: dict,
+                *, exclusive: bool = False) -> DataFrame:
+    """Append one running-sum column per ``sums`` entry (output name ->
+    summed column or column name) under the total order (bucket ASC,
+    *order_cols ASC): the sum over every row up to and including the
+    current one, or strictly before it with ``exclusive`` (0 on the
+    first row).
+
+    The two phases, written once here: a ROWS running sum inside each
+    bucket, plus per-bucket offsets — the exclusive running sum of the
+    bucket totals over a #buckets-row relation, windowed once and
+    broadcast-joined back. ``bucket`` carries the same prefix contract
+    as in ``global_rank``; the order must be total (tie-break it) for
+    the sums to be deterministic.
+    """
+    names = list(sums)
+    local_cols = [f"__l{i}" for i in range(len(names))]
+    off_cols = [f"__o{i}" for i in range(len(names))]
+    b = df.withColumn("__bucket", bucket)
+    w_in = (Window.partitionBy("__bucket").orderBy(*order_cols)
+            .rowsBetween(Window.unboundedPreceding,
+                         -1 if exclusive else 0))
+    local = b.select("*", *[F.sum(sums[n]).over(w_in).alias(c)
+                            for n, c in zip(names, local_cols)])
+    w_off = (Window.orderBy("__bucket")
+             .rowsBetween(Window.unboundedPreceding, -1))
+    offsets = (
+        b.groupBy("__bucket")
+        .agg(*[F.sum(sums[n]).alias(c) for n, c in zip(names, off_cols)])
+        # the offsets relation is #buckets rows: the global window over
+        # it is a one-task sort of a few hundred rows, then broadcast
+        .select("__bucket", *[
+            F.coalesce(F.sum(c).over(w_off), F.lit(0)).alias(c)
+            for c in off_cols])
+    )
+
+    def running(lc: str, oc: str) -> Column:
+        # an exclusive frame is empty (NULL) on a bucket's first row
+        within = (F.coalesce(F.col(lc), F.lit(0)) if exclusive
+                  else F.col(lc))
+        return within + F.col(oc)
+
+    return (
+        local.join(F.broadcast(offsets), on="__bucket")
+        .withColumns({n: running(lc, oc)
+                      for n, lc, oc in zip(names, local_cols, off_cols)})
+        .drop("__bucket", *local_cols, *off_cols)
+    )
+
 
 def global_rank(df: DataFrame, bucket: Column,
                 order_cols: list[Column | str],
@@ -33,25 +88,8 @@ def global_rank(df: DataFrame, bucket: Column,
     owns that contract — e.g. bucket = substring(hash, 1, 2) when
     ordering by (hash, id).
     """
-    b = df.withColumn("__bucket", bucket)
-    w_in = Window.partitionBy("__bucket").orderBy(*order_cols)
-    local = b.withColumn("__rn", F.row_number().over(w_in))
-    w_off = (Window.orderBy("__bucket")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offsets = (
-        b.groupBy("__bucket").agg(F.count(F.lit(1)).alias("__cnt"))
-        # the offsets relation is #buckets rows: the global window over
-        # it is a one-task sort of a few hundred rows, then broadcast
-        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_off),
-                                        F.lit(0)))
-        .select("__bucket", "__off")
-    )
-    return (
-        local.join(F.broadcast(offsets), on="__bucket")
-        .withColumn(rank_col, (F.col("__off") + F.col("__rn"))
-                    .cast("long"))
-        .drop("__bucket", "__rn", "__off")
-    )
+    # a running count over a ROWS frame is row_number()
+    return prefix_sums(df, bucket, order_cols, {rank_col: F.lit(1)})
 
 
 def ntile_from_rank(r: Column, n: Column, k: int) -> Column:
@@ -65,11 +103,11 @@ def ntile_from_rank(r: Column, n: Column, k: int) -> Column:
     # approach 2^53 — a real magnitude for a global-rank operator.
     # a DIV b and ceil(a DIV b) = (a + b - 1) DIV b stay exact at any
     # scale (DECIMAL(38,0) intermediate, far past BIGINT).
-    def idiv(a: Column, b: Column) -> Column:
-        a = a.cast("decimal(38,0)")
-        return ((a - a % b) / b).cast("bigint")
+    def dec(c: Column) -> Column:
+        return c.cast("decimal(38,0)")
 
-    q, rem = idiv(n, F.lit(k)), n % k
+    q, rem = idiv(dec(n), F.lit(k)), n % k
     big = rem * (q + 1)  # rows covered by the (q+1)-sized leading tiles
-    return (F.when(r <= big, idiv(r + q, q + 1))
-            .otherwise(rem + idiv(r - big + q - 1, q)).cast("bigint"))
+    return (F.when(r <= big, idiv(dec(r + q), q + 1))
+            .otherwise(rem + idiv(dec(r - big + q - 1), q))
+            .cast("bigint"))

@@ -440,7 +440,19 @@ def rows_only_due(evidence: Evidence, reg) -> frozenset:
 # window. Every name must be registered (_window_order hard-fails).
 _CHANGED: tuple[str, ...] = (
     "graph_family_scoped_audit", "hits_hub_authority",
-    "text_family_scoped_audit")
+    "text_family_scoped_audit",
+    # operators/exact.py + ranking.prefix_sums: the queries whose
+    # plan moved (rounding, DIV or running-sum expressions)
+    "atr_breakout_signals", "brier_logloss_calibration", "equidepth_histogram",
+    "exact_global_quantiles", "gini_spend_concentration",
+    "global_shuffle_rank", "js_divergence_lang_tokens", "kmv_distinct_sketch",
+    "kruskal_wallis_h", "ks_two_sample_test", "local_clustering_coefficient",
+    "mann_whitney_u", "ntile_deciles", "quantile_normalization",
+    "rfm_segmentation", "roc_auc_exact", "seasonal_decompose_additive",
+    "sorted_neighborhood_pairs", "spearman_value_k_corr",
+    "target_encoding_oof", "theil_sen_slope", "twap_per_user",
+    "user_spend_rank_distribution", "vwap_per_part",
+    "wasserstein_distance_drift")
 
 # Each rows-only-by-design query (oracle=None — results DuckDB cannot
 # reproduce bit-for-bit) is paired with a hash-exact companion proving the

@@ -19,6 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..operators.backtest import ma_crossover_backtest
+from ..operators.exact import (floor_round6, idiv, ratio_round6,
+                               signed_ratio_round6)
+from ..operators.ranking import prefix_sums
 from ..sources.parquet_source import table
 from . import lazy_cache, query, run_scoped
 
@@ -2014,42 +2017,10 @@ def twap_per_user(spark, sf_dir):
         seg.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_segments"),
              F.sum("dur").alias("total_secs"),
-             _cents_ratio_round6(F.sum(F.col("vc") * F.col("dur")),
-                                 F.sum("dur")).alias("twap"))
+             signed_ratio_round6(F.sum(F.col("vc") * F.col("dur")),
+                                 100 * F.sum("dur")).alias("twap"))
         .orderBy("user_id")
     )
-
-
-def _cents_ratio_round6(wsum, den):
-    """ROUND(wsum/den/100, 6) with the rounding performed in EXACT
-    integer arithmetic (half away from zero, DECIMAL(38,0) / HUGEINT),
-    then returned as the exactly-representable double e6/1e6.
-
-    Why: cents-scaled weighted averages routinely land on exact
-    5e-7 boundaries (e.g. wsum/qty = ...843750), where Spark's
-    BigDecimal-shortest-string ROUND and DuckDB's multiply-based ROUND
-    disagree on the SAME double — a 1-in-20000-rows hash flip the
-    cross-SF sweep caught at sf0.1. Integer rounding makes the
-    boundary case deterministic on both engines."""
-    a = wsum.cast("decimal(38,0)") * 10000
-    b = den.cast("decimal(38,0)")
-
-    def idiv(x, y):  # truncating division, exact, non-negative args
-        return (x - x % y) / y
-
-    e6 = F.when(a >= 0, idiv(2 * a + b, 2 * b)).otherwise(
-        -idiv(2 * (-a) + b, 2 * b))
-    return e6.cast("bigint").cast("double") / 1000000.0
-
-
-def _int_ratio_round6(num, den):
-    """ROUND(num/den, 6) for exact-integer num/den >= 0, rounding half
-    away from zero in DECIMAL(38,0) — same boundary rationale as
-    _cents_ratio_round6."""
-    a = num.cast("decimal(38,0)") * 1000000
-    b = den.cast("decimal(38,0)")
-    e6 = ((2 * a + b) - (2 * a + b) % (2 * b)) / (2 * b)
-    return e6.cast("bigint").cast("double") / 1000000.0
 
 
 @query(
@@ -2081,7 +2052,7 @@ def _int_ratio_round6(num, den):
         "enough fills for the average to mean something — the "
         "execution-quality benchmark every trading desk computes. The "
         "6-decimal rounding is pure integer arithmetic (see "
-        "_cents_ratio_round6) because cents/qty quotients land on "
+        "operators/exact.py) because cents/qty quotients land on "
         "exact 5e-7 boundaries where the engines' ROUND(double) "
         "disagree — caught by the cross-SF sweep at sf0.1",
 )
@@ -2093,7 +2064,7 @@ def vwap_per_part(spark, sf_dir):
         li.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("n_lines"),
              F.sum(qty).alias("total_qty"),
-             _cents_ratio_round6(F.sum(cents * qty), F.sum(qty))
+             signed_ratio_round6(F.sum(cents * qty), 100 * F.sum(qty))
              .alias("vwap"))
         .filter(F.col("n_lines") >= 8)
         .orderBy("l_partkey")
@@ -2397,8 +2368,8 @@ def t_closeness_audit(spark, sf_dir):
            .agg(F.sum("term").cast("long").alias("emd_scaled")))
     return (emd.select(
         "c_nationkey", "bal_bucket", "group_n", "emd_scaled",
-        _int_ratio_round6(F.col("emd_scaled"),
-                          2 * F.col("group_n") * F.col("n"))
+        ratio_round6(F.col("emd_scaled"),
+                     2 * F.col("group_n") * F.col("n"))
         .alias("t6"))
         .orderBy("c_nationkey", "bal_bucket"))
 
@@ -2627,10 +2598,10 @@ def market_basket_lift(spark, sf_dir):
            .crossJoin(F.broadcast(nn))
            .select(
                "brand_a", "brand_b", "n_ab",
-               _int_ratio_round6(F.col("n_ab") * F.col("n_orders"),
-                                 F.col("n_a") * F.col("n_b"))
+               ratio_round6(F.col("n_ab") * F.col("n_orders"),
+                            F.col("n_a") * F.col("n_b"))
                .alias("lift"),
-               _int_ratio_round6(F.col("n_ab"), F.col("n_a"))
+               ratio_round6(F.col("n_ab"), F.col("n_a"))
                .alias("confidence")))
     return out.orderBy(F.desc("lift"), "brand_a", "brand_b").limit(50)
 
@@ -3376,14 +3347,14 @@ def seasonal_decompose_additive(spark, sf_dir):
         F.count(F.lit(1)).over(wu).alias("n"),
         F.sum("cents").over(wh).alias("hs"),
         F.count(F.lit(1)).over(wh).alias("hn"))
-    # exact-integer rounding (_cents_ratio_round6): these averages hit
-    # the 5e-7 shortest-repr boundaries where double ROUND diverges
-    lvl = _cents_ratio_round6(F.col("s"), F.col("n"))
-    sea = _cents_ratio_round6(
+    # exact-integer rounding of cents ratios: these averages hit the
+    # 5e-7 shortest-repr boundaries where double ROUND diverges
+    lvl = signed_ratio_round6(F.col("s"), 100 * F.col("n"))
+    sea = signed_ratio_round6(
         F.col("hs") * F.col("n") - F.col("s") * F.col("hn"),
-        F.col("hn") * F.col("n"))
-    res = _cents_ratio_round6(
-        F.col("cents") * F.col("hn") - F.col("hs"), F.col("hn"))
+        100 * F.col("hn") * F.col("n"))
+    res = signed_ratio_round6(
+        F.col("cents") * F.col("hn") - F.col("hs"), 100 * F.col("hn"))
     return (w.select("user_id", "ts", "event_id",
                      lvl.alias("level"),
                      sea.alias("seasonal"),
@@ -3434,7 +3405,7 @@ def seasonal_decompose_additive(spark, sf_dir):
         "greatest(h-l, |h-prev_close|, |l-prev_close|) in exact "
         "integer cents (the first bar's missing prev_close "
         "degenerates to h-l via coalesce on BOTH engines), ATR is an "
-        "exact-integer rounded ratio (_cents_ratio_round6), breakout "
+        "exact-integer rounded ratio (signed_ratio_round6), breakout "
         "fires when close exceeds the prior 20 bars' high. One "
         "grouped aggregation then three frames of ONE per-symbol "
         "window ordering — the bar relation is days-sized per key, so "
@@ -3474,7 +3445,7 @@ def atr_breakout_signals(spark, sf_dir):
                 "user_id",
                 F.date_format("bar_day", "yyyy-MM-dd").alias("day"),
                 "tr",
-                _cents_ratio_round6(F.col("satr"), F.col("n14"))
+                signed_ratio_round6(F.col("satr"), 100 * F.col("n14"))
                 .alias("atr14"),
                 F.coalesce(F.col("c") > F.col("dhi"), F.lit(False))
                 .alias("breakout"))
@@ -3533,9 +3504,6 @@ def atr_breakout_signals(spark, sf_dir):
 def psi_feature_drift(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
-
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
 
     binned = ev.select(
         F.greatest(F.lit(0),
@@ -3610,9 +3578,6 @@ def spearman_value_k_corr(spark, sf_dir):
     from ..operators.ranking import global_rank
 
     ev = table(spark, sf_dir, "events")
-
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
 
     base = ev.select(
         "event_type", "event_id",
@@ -3689,11 +3654,11 @@ def spearman_value_k_corr(spark, sf_dir):
         "click and purchase value distributions — the standard "
         "distribution-shift test for a numeric feature. D = "
         "max_v |F1(v) - F2(v)| evaluated WITHOUT floats: per-value "
-        "counts, distributed prefix sums (two-phase: within-bucket "
-        "cumsum + broadcast bucket offsets, same shape as "
-        "global_rank — no single-task ORDER BY over the value "
-        "domain), then the CDF gap cross-multiplied to the exact "
-        "integer |cum1*n2 - cum2*n1| in DECIMAL(38)/HUGEINT; the "
+        "counts, distributed prefix sums (ranking.prefix_sums: "
+        "within-bucket cumsum + broadcast bucket offsets — no "
+        "single-task ORDER BY over the value domain), then the CDF "
+        "gap cross-multiplied to the exact integer "
+        "|cum1*n2 - cum2*n1| in DECIMAL(38)/HUGEINT; the "
         "argmax value reports where the distributions diverge most "
         "(ties -> smallest value, via lexicographic struct max on "
         "both engines). Only the final division is IEEE, rounded 6. "
@@ -3702,9 +3667,6 @@ def spearman_value_k_corr(spark, sf_dir):
 def ks_two_sample_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
 
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
-
     base = (ev.filter(F.col("event_type").isin("click", "purchase"))
             .select(F.round(F.col("value") * 100).cast("bigint")
                     .alias("cents"),
@@ -3712,30 +3674,11 @@ def ks_two_sample_test(spark, sf_dir):
                     .alias("s")))
     counts = (base.groupBy("cents")
               .agg(F.sum("s").alias("c1"),
-                   F.sum(1 - F.col("s")).alias("c2"))
-              .withColumn("bkt", idiv(F.col("cents"), F.lit(2500))))
-    # two-phase prefix sum over the value domain (no global sort):
-    # within-bucket running sums ride a per-bucket window; bucket
-    # offsets are a #buckets-row relation, windowed once + broadcast
-    w_in = (Window.partitionBy("bkt").orderBy("cents")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    local = counts.select(
-        "cents", "bkt",
-        F.sum("c1").over(w_in).alias("l1"),
-        F.sum("c2").over(w_in).alias("l2"))
-    btot = counts.groupBy("bkt").agg(
-        F.sum("c1").alias("b1"), F.sum("c2").alias("b2"))
-    w_off = (Window.orderBy("bkt")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = btot.select(
-        "bkt",
-        F.coalesce(F.sum("b1").over(w_off), F.lit(0)).alias("o1"),
-        F.coalesce(F.sum("b2").over(w_off), F.lit(0)).alias("o2"))
-    cum = (local.join(F.broadcast(offs), "bkt")
-           .select("cents",
-                   (F.col("l1") + F.col("o1")).alias("cum1"),
-                   (F.col("l2") + F.col("o2")).alias("cum2")))
-    tot = btot.agg(F.sum("b1").alias("n1"), F.sum("b2").alias("n2"))
+                   F.sum(1 - F.col("s")).alias("c2")))
+    # prefix sums over the value domain, no global sort
+    cum = prefix_sums(counts, idiv(F.col("cents"), F.lit(2500)),
+                      ["cents"], {"cum1": "c1", "cum2": "c2"})
+    tot = counts.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
     d = (cum.crossJoin(F.broadcast(tot))
          .select("n1", "n2", "cents",
                  F.abs(F.col("cum1").cast("decimal(38,0)")
@@ -3982,12 +3925,11 @@ def chi2_independence_test(spark, sf_dir):
         "AUC = (sum over distinct scores of c1*(below0 + c0/2)) / "
         "(n1*n0), kept integral as 2U = sum c1*(2*below0 + c0) so "
         "ties never produce a fractional intermediate. The exclusive "
-        "CDF rides the same two-phase prefix sum as global_rank "
-        "(within-bucket window + broadcast bucket offsets — no "
-        "single-task ORDER BY over the score domain), products are "
-        "DECIMAL(38)/HUGEINT, and the ONLY division is the final "
-        "AUC ratio, rounded half-away in exact integers "
-        "(_int_ratio_round6 semantics with denominator 2*n1*n0). "
+        "CDF is ranking.prefix_sums (within-bucket window + "
+        "broadcast bucket offsets — no single-task ORDER BY over the "
+        "score domain), products are DECIMAL(38)/HUGEINT, and the "
+        "ONLY division is the final AUC ratio, rounded half-away in "
+        "exact integers (ratio_round6 with denominator 2*n1*n0). "
         "At 100 TB: one map-side-partial count per score value, then "
         "score-cardinality-scale relations; the totals are a 1-row "
         "broadcast scalar. ref: main.py has no model eval — this is "
@@ -3996,9 +3938,6 @@ def chi2_independence_test(spark, sf_dir):
 def roc_auc_exact(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
 
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
-
     base = (ev.filter(F.col("event_type").isin("click", "purchase"))
             .select(F.round(F.col("value") * 100).cast("bigint")
                     .alias("cents"),
@@ -4006,35 +3945,20 @@ def roc_auc_exact(spark, sf_dir):
                     .alias("y")))
     counts = (base.groupBy("cents")
               .agg(F.sum("y").alias("c1"),
-                   F.sum(1 - F.col("y")).alias("c0"))
-              .withColumn("bkt", idiv(F.col("cents"), F.lit(2500))))
-    # two-phase exclusive prefix sum of the negative counts
-    w_in = (Window.partitionBy("bkt").orderBy("cents")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    local = counts.select(
-        "cents", "bkt", "c1", "c0",
-        F.coalesce(F.sum("c0").over(w_in), F.lit(0)).alias("l0"))
-    btot = counts.groupBy("bkt").agg(
-        F.sum("c1").alias("b1"), F.sum("c0").alias("b0"))
-    w_off = (Window.orderBy("bkt")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = btot.select(
-        "bkt", F.coalesce(F.sum("b0").over(w_off), F.lit(0)).alias("o0"))
-    cum = (local.join(F.broadcast(offs), "bkt")
-           .select("c1", "c0",
-                   (F.col("l0") + F.col("o0")).alias("below0")))
+                   F.sum(1 - F.col("y")).alias("c0")))
+    # exclusive prefix sum of the negative counts
+    cum = prefix_sums(counts, idiv(F.col("cents"), F.lit(2500)),
+                      ["cents"], {"below0": "c0"}, exclusive=True)
     u = cum.agg(F.sum(F.col("c1").cast("decimal(38,0)")
                       * (2 * F.col("below0") + F.col("c0")))
                 .cast("decimal(38,0)").alias("u2"))
-    tot = btot.agg(F.sum("b1").alias("n1"), F.sum("b0").alias("n0"))
+    tot = counts.agg(F.sum("c1").alias("n1"), F.sum("c0").alias("n0"))
     j = tot.crossJoin(F.broadcast(u))
-    num = 2 * F.col("u2") * 1000000 \
-        + 2 * F.col("n1").cast("decimal(38,0)") * F.col("n0")
-    den = 4 * F.col("n1").cast("decimal(38,0)") * F.col("n0")
     return j.select(
         F.col("n1").alias("n_pos"), F.col("n0").alias("n_neg"),
-        (((num - num % den) / den).cast("bigint").cast("double")
-         / 1000000.0).alias("auc"))
+        ratio_round6(F.col("u2"),
+                     2 * F.col("n1").cast("decimal(38,0)") * F.col("n0"))
+        .alias("auc"))
 
 
 _PR_THRESHOLDS = (1000, 2500, 5000, 7500, 9000)
@@ -4109,12 +4033,12 @@ def precision_recall_thresholds(spark, sf_dir):
         for t in _PR_THRESHOLDS])).alias("r")).select("r.*")
     return (rows.select(
         "threshold_cents", "tp", "fp", "fn", "tn",
-        _int_ratio_round6(F.col("tp"), F.col("tp") + F.col("fp"))
+        ratio_round6(F.col("tp"), F.col("tp") + F.col("fp"))
         .alias("precision6"),
-        _int_ratio_round6(F.col("tp"), F.col("tp") + F.col("fn"))
+        ratio_round6(F.col("tp"), F.col("tp") + F.col("fn"))
         .alias("recall6"),
-        _int_ratio_round6(2 * F.col("tp"),
-                          2 * F.col("tp") + F.col("fp") + F.col("fn"))
+        ratio_round6(2 * F.col("tp"),
+                     2 * F.col("tp") + F.col("fp") + F.col("fn"))
         .alias("f1"))
         .orderBy("threshold_cents"))
 
@@ -4167,7 +4091,7 @@ def event_markov_transitions(spark, sf_dir):
     wrow = Window.partitionBy("from_type")
     return (cnt.withColumn("row_n", F.sum("n").over(wrow))
             .select("from_type", "to_type", "n",
-                    _int_ratio_round6(F.col("n"), F.col("row_n"))
+                    ratio_round6(F.col("n"), F.col("row_n"))
                     .alias("prob"))
             .orderBy("from_type", "to_type"))
 
@@ -4225,10 +4149,8 @@ def theil_sen_slope(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     bars = (ev.groupBy(
         "user_id",
-        ((F.floor(F.unix_timestamp(F.date_trunc("day", F.col("ts"))))
-          .cast("bigint") - F.floor(
-              F.unix_timestamp(F.date_trunc("day", F.col("ts"))))
-          .cast("bigint") % 86400) / 86400).cast("bigint").alias("d"))
+        idiv(F.floor(F.unix_timestamp(F.date_trunc("day", F.col("ts"))))
+             .cast("bigint"), 86400).alias("d"))
         .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
              .alias("cents")))
     a = bars.alias("a")
@@ -4247,33 +4169,12 @@ def theil_sen_slope(spark, sf_dir):
         "user_id", "dc", "dd",
         F.row_number().over(wrk).alias("rn"),
         F.count(F.lit(1)).over(wnp).alias("np"))
-
-    def idiv(x, y):
-        return (x - x % y) / y
-
-    adc = F.abs(F.col("dc")).cast("decimal(38,0)")
-    ddd = F.col("dd").cast("decimal(38,0)")
-    mag = idiv(2 * adc * 1000000 + ddd, 2 * ddd).cast("bigint")
-    slope6 = (F.when(F.col("dc") >= 0, mag).otherwise(-mag)
-              .cast("double") / 1000000.0)
-    return (rk.filter(F.col("rn")
-                      == ((F.col("np") + 1)
-                          - (F.col("np") + 1) % 2) / 2)
+    return (rk.filter(F.col("rn") == idiv(F.col("np") + 1, 2))
             .select("user_id", F.col("np").cast("bigint")
                     .alias("n_pairs"),
-                    slope6.alias("sen_slope"))
+                    signed_ratio_round6(F.col("dc"), F.col("dd"))
+                    .alias("sen_slope"))
             .orderBy("user_id"))
-
-
-def _sgn_ratio_round6(num, den):
-    """ROUND(num/den, 6) for exact-integer num (any sign) and den != 0,
-    half away from zero in DECIMAL(38,0) — the signed companion of
-    _int_ratio_round6 (shared by every closed-form solver below)."""
-    an, ad = F.abs(num), F.abs(den)
-    mag = (((2 * an * 1000000 + ad)
-            - (2 * an * 1000000 + ad) % (2 * ad)) / (2 * ad))
-    sgn = F.when((num >= 0) == (den >= 0), F.lit(1)).otherwise(F.lit(-1))
-    return (sgn * mag).cast("bigint").cast("double") / 1000000.0
 
 
 @query(
@@ -4345,9 +4246,7 @@ def quadratic_trend_fit(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     day = (F.floor(F.unix_timestamp(F.date_trunc("day", F.col("ts"))))
            .cast("bigint"))
-    bars = (ev.groupBy("user_id",
-                       ((day - day % 86400) / 86400).cast("bigint")
-                       .alias("d"))
+    bars = (ev.groupBy("user_id", idiv(day, 86400).alias("d"))
             .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
                  .alias("y")))
     wmin = Window.partitionBy("user_id")
@@ -4385,11 +4284,11 @@ def quadratic_trend_fit(spark, sf_dir):
                    dc.alias("dc"))
     return (det.filter(F.col("dd") != 0)
             .select("user_id", "n_days",
-                    _sgn_ratio_round6(F.col("da"), F.col("dd"))
+                    signed_ratio_round6(F.col("da"), F.col("dd"))
                     .alias("a_cents"),
-                    _sgn_ratio_round6(F.col("db"), F.col("dd"))
+                    signed_ratio_round6(F.col("db"), F.col("dd"))
                     .alias("b_cents"),
-                    _sgn_ratio_round6(F.col("dc"), F.col("dd"))
+                    signed_ratio_round6(F.col("dc"), F.col("dd"))
                     .alias("c_cents"))
             .orderBy("user_id"))
 
@@ -4458,9 +4357,8 @@ def percentile_interpolated_per_type(spark, sf_dir):
     ix = (v.select("event_type", "n").distinct()
           .crossJoin(F.broadcast(qs))
           .select("event_type", "p", "den",
-                  (((F.col("n") - 1) * F.col("p")
-                    - ((F.col("n") - 1) * F.col("p")) % F.col("den"))
-                   / F.col("den")).cast("bigint").alias("lo_i"),
+                  idiv((F.col("n") - 1) * F.col("p"), F.col("den"))
+                  .alias("lo_i"),
                   (((F.col("n") - 1) * F.col("p")) % F.col("den"))
                   .alias("rem")))
     lo = v.select(F.col("event_type").alias("et_lo"),
@@ -4478,8 +4376,7 @@ def percentile_interpolated_per_type(spark, sf_dir):
             .withColumn("v_hi", F.coalesce("v_hi", "v_lo")))
     return (pick.select(
         "event_type",
-        (((F.col("p") * 100) - (F.col("p") * 100) % F.col("den"))
-         / F.col("den")).cast("bigint").alias("pct"),
+        idiv(F.col("p") * 100, F.col("den")).alias("pct"),
         ((F.col("v_lo").cast("decimal(38,0)") * F.col("den")
           + F.col("rem") * (F.col("v_hi") - F.col("v_lo")))
          .cast("double") / (F.col("den") * F.lit(100.0)))
@@ -4566,9 +4463,7 @@ def isotonic_calibration(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
     b = F.least(F.lit(_ISO_BINS - 1),
-                F.greatest(F.lit(0),
-                           ((cents - cents % _ISO_W) / _ISO_W)
-                           .cast("bigint")))
+                F.greatest(F.lit(0), idiv(cents, _ISO_W)))
     base = (ev.filter(F.col("event_type").isin("click", "purchase"))
             .select(b.alias("b"),
                     (F.col("event_type") == "purchase").cast("bigint")
@@ -4615,9 +4510,9 @@ def isotonic_calibration(spark, sf_dir):
     return (bins.join(iso, "b")
             .select(F.col("b").alias("bin"), F.col("nb").alias("n"),
                     F.col("pb").alias("pos"),
-                    _int_ratio_round6(F.col("pb"), F.col("nb"))
+                    ratio_round6(F.col("pb"), F.col("nb"))
                     .alias("rate6"),
-                    _int_ratio_round6(F.col("mx.num"), F.col("mx.den"))
+                    ratio_round6(F.col("mx.num"), F.col("mx.den"))
                     .alias("iso6"))
             .orderBy("bin"))
 
@@ -4663,8 +4558,7 @@ def isotonic_calibration(spark, sf_dir):
 def woe_information_value(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     cents = F.round(F.col("value") * 100).cast("bigint")
-    b = F.least(F.lit(9), F.greatest(F.lit(0),
-                ((cents - cents % 1000) / 1000).cast("bigint")))
+    b = F.least(F.lit(9), F.greatest(F.lit(0), idiv(cents, 1000)))
     base = (ev.filter(F.col("event_type").isin("click", "purchase"))
             .select(b.alias("bin"),
                     (F.col("event_type") == "purchase").cast("bigint")
@@ -4719,14 +4613,10 @@ def equidepth_histogram(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     v = ev.select(F.round(F.col("value") * 100).cast("bigint")
                   .alias("cents"), "event_id")
-    bucket = ((F.col("cents") - F.col("cents") % 2500) / 2500) \
-        .cast("bigint")
-    rk = global_rank(v, bucket, ["cents", "event_id"])
+    rk = global_rank(v, idiv(F.col("cents"), 2500), ["cents", "event_id"])
     n = rk.agg(F.count(F.lit(1)).alias("n"))
     j = rk.crossJoin(F.broadcast(n))
-    bin_ = (((F.col("rank") - 1) * _ED_BINS
-             - ((F.col("rank") - 1) * _ED_BINS) % F.col("n"))
-            / F.col("n")).cast("bigint")
+    bin_ = idiv((F.col("rank") - 1) * _ED_BINS, F.col("n"))
     return (j.select(bin_.alias("bin"), "cents")
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n_rows"),
@@ -4990,7 +4880,7 @@ def cuped_adjusted_lift(spark, sf_dir):
 def kaplan_meier_survival(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     eday = (F.floor(F.unix_timestamp(F.col("ts"))).cast("bigint"))
-    day = ((eday - eday % 86400) / 86400).cast("bigint")
+    day = idiv(eday, 86400)
     span = (ev.groupBy("user_id")
             .agg(F.min(day).alias("d0"),
                  F.min(F.when(F.col("event_type") == "purchase", day))
@@ -5083,10 +4973,8 @@ def gini_spend_concentration(spark, sf_dir):
     num = (2 * F.col("si")
            - (F.col("n") + 1).cast("decimal(38,0)") * F.col("s"))
     den = F.col("n").cast("decimal(38,0)") * F.col("s")
-    g6 = (((2 * num * 1000000 + den)
-           - (2 * num * 1000000 + den) % (2 * den)) / (2 * den)) \
-        .cast("bigint").cast("double") / 1000000.0
-    return (mom.select("event_type", "n", g6.alias("gini6"))
+    return (mom.select("event_type", "n",
+                       ratio_round6(num, den).alias("gini6"))
             .orderBy("event_type"))
 
 
@@ -5350,7 +5238,7 @@ _HW_LEN = 8  # Haar window: first 8 days per user (2^3 -> 3 levels)
 def haar_wavelet_coeffs(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
     eday = F.floor(F.unix_timestamp(F.col("ts"))).cast("bigint")
-    day = ((eday - eday % 86400) / 86400).cast("bigint")
+    day = idiv(eday, 86400)
     bars = (ev.groupBy("user_id", day.alias("d"))
             .agg(F.sum(F.round(F.col("value") * 100).cast("bigint"))
                  .alias("y")))
@@ -5365,9 +5253,7 @@ def haar_wavelet_coeffs(spark, sf_dir):
     def level(df, icol):
         even = F.when(F.col(icol) % 2 == 0, F.col("y")).otherwise(0)
         odd = F.when(F.col(icol) % 2 == 1, F.col("y")).otherwise(0)
-        return (df.groupBy("user_id",
-                           ((F.col(icol) - F.col(icol) % 2) / 2)
-                           .cast("bigint").alias("j"))
+        return (df.groupBy("user_id", idiv(F.col(icol), 2).alias("j"))
                 .agg((F.sum(even) + F.sum(odd)).alias("a"),
                      (F.sum(even) - F.sum(odd)).alias("dt")))
 
@@ -5492,8 +5378,7 @@ def cohort_ltv_curves(spark, sf_dir):
     spend = (ev.filter(F.col("event_type") == "purchase")
              .join(first_seen, "user_id")
              .select("cohort",
-                     ((age - age % 604800) / 604800).cast("bigint")
-                     .alias("age_weeks"),
+                     idiv(age, 604800).alias("age_weeks"),
                      F.round(F.col("value") * 100).cast("bigint")
                      .alias("cents")))
     wk = (spend.groupBy("cohort", "age_weeks")
@@ -5506,8 +5391,7 @@ def cohort_ltv_curves(spark, sf_dir):
          .withColumn("cum_cents", F.sum("wk_cents").over(wcum)))
     s = F.col("cum_cents").cast("decimal(38,0)")
     u = F.col("cohort_users").cast("decimal(38,0)")
-    ltv = (((2 * s * 100 + u) - (2 * s * 100 + u) % (2 * u))
-           / (2 * u)).cast("bigint").cast("double") / 100.0
+    ltv = idiv(2 * s * 100 + u, 2 * u).cast("double") / 100.0
     return (j.select("cohort", "age_weeks", "cohort_users",
                      "cum_cents", ltv.alias("ltv_per_user_cents"))
             .orderBy("cohort", "age_weeks"))
@@ -5580,8 +5464,7 @@ def conformal_interval_coverage(spark, sf_dir):
     c = F.count(F.lit(1)).cast("decimal(38,0)")
     pred = (base.filter(F.col("split") == 0)
             .groupBy("user_id")
-            .agg((((2 * s + c) - (2 * s + c) % (2 * c)) / (2 * c))
-                 .cast("bigint").alias("yhat")))
+            .agg(idiv(2 * s + c, 2 * c).alias("yhat")))
     calib = (base.filter(F.col("split") == 1)
              .join(F.broadcast(pred), "user_id")
              .select(F.abs(F.col("cents") - F.col("yhat"))
@@ -5589,7 +5472,7 @@ def conformal_interval_coverage(spark, sf_dir):
     kth_num = (F.count(F.lit(1)) + 1) * 9 + 9
     k = calib.agg(
         F.count(F.lit(1)).alias("n"),
-        ((kth_num - kth_num % 10) / 10).cast("bigint").alias("kth"))
+        idiv(kth_num, 10).alias("kth"))
     rc = calib.groupBy("r").agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("r").rowsBetween(
         Window.unboundedPreceding, 0)
@@ -5612,7 +5495,7 @@ def conformal_interval_coverage(spark, sf_dir):
         F.col("n").alias("n_calib"),
         F.col("q_hat").alias("q_hat_cents"),
         "n_test", "covered",
-        _int_ratio_round6(F.col("covered"), F.col("n_test"))
+        ratio_round6(F.col("covered"), F.col("n_test"))
         .alias("coverage6"))
 
 
@@ -5683,19 +5566,14 @@ def macd_histogram(spark, sf_dir):
             .agg(F.max(tagged)["v"].alias("close")))
     out = with_macd(bars, "close", ["user_id"], ["bar_day"])
 
-    # floor(x*1e6 + 0.5)/1e6 instead of ROUND(x, 6): identical IEEE
-    # sequence on both engines, immune to the 5e-7 representability
-    # boundary where Spark/DuckDB ROUND disagree (bit HW at sf0.01)
-    def r6(c):
-        return (F.floor(c * F.lit(1000000.0) + F.lit(0.5))
-                / F.lit(1000000.0))
-
+    # floor_round6, not ROUND(x, 6): the 5e-7 representability
+    # boundary where Spark/DuckDB ROUND disagree bit HW at sf0.01
     return (out.select(
                 "user_id",
                 F.date_format("bar_day", "yyyy-MM-dd").alias("day"),
-                r6(F.col("macd")).alias("macd"),
-                r6(F.col("macd_signal")).alias("macd_signal"),
-                r6(F.col("macd") - F.col("macd_signal"))
+                floor_round6(F.col("macd")).alias("macd"),
+                floor_round6(F.col("macd_signal")).alias("macd_signal"),
+                floor_round6(F.col("macd") - F.col("macd_signal"))
                 .alias("histogram"))
             .orderBy("user_id", "day"))
 
@@ -5746,7 +5624,7 @@ def macd_histogram(spark, sf_dir):
         "%K = (close - min low14) / (max high14 - min low14) over a "
         "14-bar trailing frame, %D = 3-bar mean of %K — entirely "
         "exact-integer window algebra (cents in, half-away integer "
-        "rounding to 1e-6 units, the _int_ratio_round6 pattern; "
+        "rounding to 1e-6 units, the ratio_round6 pattern; "
         "flat-range bars where high14 == low14 are dropped on both "
         "engines). Two frames over ONE per-symbol window ordering of "
         "the days-sized bar relation; %K stays an integer so the %D "
@@ -5774,8 +5652,7 @@ def stochastic_oscillator(spark, sf_dir):
         F.min("l").over(w14).alias("l14"))
     a = ((F.col("c") - F.col("l14")).cast("decimal(38,0)"))
     b = ((F.col("h14") - F.col("l14")).cast("decimal(38,0)"))
-    k_e6 = (((2 * a * 1000000 + b) - (2 * a * 1000000 + b) % (2 * b))
-            / (2 * b)).cast("bigint")
+    k_e6 = idiv(2 * a * 1000000 + b, 2 * b)
     k = (wnd.filter(F.col("h14") > F.col("l14"))
          .select("user_id", "bar_day", k_e6.alias("k_e6")))
     w3 = w.rowsBetween(-2, 0)
@@ -5785,8 +5662,7 @@ def stochastic_oscillator(spark, sf_dir):
         F.count(F.lit(1)).over(w3).alias("n3"))
     sk = F.col("sk").cast("decimal(38,0)")
     n3 = F.col("n3").cast("decimal(38,0)")
-    d_e6 = (((2 * sk + n3) - (2 * sk + n3) % (2 * n3))
-            / (2 * n3)).cast("bigint")
+    d_e6 = idiv(2 * sk + n3, 2 * n3)
     return (d.select(
                 "user_id",
                 F.date_format("bar_day", "yyyy-MM-dd").alias("day"),
@@ -5982,14 +5858,11 @@ def sortino_downside_ratio(spark, sf_dir):
         "ONLY float work is the final one-row z expression, written "
         "literal-for-literal identically on both engines. Scale: one "
         "map-side-partial count per distinct value, a value-domain "
-        "prefix sum, and a 1-row reduction — input volume never "
-        "touches a sort",
+        "prefix sum (ranking.prefix_sums), and a 1-row reduction — "
+        "input volume never touches a sort",
 )
 def mann_whitney_u(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
-
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
 
     base = (ev.filter(F.col("event_type").isin("click", "purchase"))
             .select(F.round(F.col("value") * 100).cast("bigint")
@@ -5998,21 +5871,9 @@ def mann_whitney_u(spark, sf_dir):
                     .alias("y")))
     counts = (base.groupBy("cents")
               .agg(F.sum("y").alias("c1"),
-                   F.sum(1 - F.col("y")).alias("c0"))
-              .withColumn("bkt", idiv(F.col("cents"), F.lit(2500))))
-    w_in = (Window.partitionBy("bkt").orderBy("cents")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    local = counts.select(
-        "cents", "bkt", "c1", "c0",
-        F.coalesce(F.sum("c0").over(w_in), F.lit(0)).alias("l0"))
-    btot = counts.groupBy("bkt").agg(F.sum("c0").alias("b0"))
-    w_off = (Window.orderBy("bkt")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = btot.select(
-        "bkt", F.coalesce(F.sum("b0").over(w_off), F.lit(0)).alias("o0"))
-    cum = (local.join(F.broadcast(offs), "bkt")
-           .select("c1", "c0",
-                   (F.col("l0") + F.col("o0")).alias("below0")))
+                   F.sum(1 - F.col("y")).alias("c0")))
+    cum = prefix_sums(counts, idiv(F.col("cents"), F.lit(2500)),
+                      ["cents"], {"below0": "c0"}, exclusive=True)
     t = (F.col("c1") + F.col("c0")).cast("decimal(38,0)")
     agg = cum.agg(
         F.sum(F.col("c1").cast("decimal(38,0)")
@@ -6105,36 +5966,20 @@ def mann_whitney_u(spark, sf_dir):
         "list_reduce over list(...ORDER BY event_type) vs Spark "
         "F.aggregate over array_sort(collect_list(...)) — identical "
         "left-to-right IEEE sequence). Scale: value-domain prefix "
-        "sum (two-phase bucketed, as in roc_auc_exact — no "
-        "single-task window) + one groups-sized relation; no global "
-        "sort of raw rows",
+        "sum (ranking.prefix_sums — no single-task window) + one "
+        "groups-sized relation; no global sort of raw rows",
 )
 def kruskal_wallis_h(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
-
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
 
     counts = (ev.select(F.round(F.col("value") * 100).cast("bigint")
                         .alias("cents"), "event_type")
               .groupBy("cents", "event_type")
               .agg(F.count(F.lit(1)).alias("n")))
-    tv = (counts.groupBy("cents").agg(F.sum("n").alias("t"))
-          .withColumn("bkt", idiv(F.col("cents"), F.lit(2500))))
-    # two-phase exclusive prefix sum over the value domain
-    w_in = (Window.partitionBy("bkt").orderBy("cents")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    local = tv.select(
-        "cents", "bkt", "t",
-        F.coalesce(F.sum("t").over(w_in), F.lit(0)).alias("lt"))
-    btot = tv.groupBy("bkt").agg(F.sum("t").alias("bt"))
-    w_off = (Window.orderBy("bkt")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = btot.select(
-        "bkt", F.coalesce(F.sum("bt").over(w_off), F.lit(0)).alias("ot"))
-    cum = (local.join(F.broadcast(offs), "bkt")
-           .select("cents", "t",
-                   (F.col("lt") + F.col("ot")).alias("below")))
+    tv = counts.groupBy("cents").agg(F.sum("n").alias("t"))
+    # exclusive prefix sum over the value domain
+    cum = prefix_sums(tv, idiv(F.col("cents"), F.lit(2500)), ["cents"],
+                      {"below": "t"}, exclusive=True)
     rg = (counts.join(cum, "cents")
           .groupBy("event_type")
           .agg(F.sum("n").alias("n_g"),
@@ -6356,14 +6201,11 @@ def kmv_distinct_sketch(spark, sf_dir):
               .select(F.lit("ALL").alias("scope"), "n_exact",
                       F.col("h60").alias("kth_h60")))
     uni = per_type.unionByName(merged)
-    num = (2 * F.lit(_KMV_K - 1).cast("decimal(38,0)")
-           * F.lit(1152921504606846976).cast("decimal(38,0)")
-           * 1000000 + F.col("kth_h60"))
-    den = 2 * F.col("kth_h60").cast("decimal(38,0)")
+    num = (F.lit(_KMV_K - 1).cast("decimal(38,0)")
+           * F.lit(1152921504606846976).cast("decimal(38,0)"))
     return (uni.select(
                 "scope", "n_exact", "kth_h60",
-                (((num - num % den) / den).cast("bigint")
-                 .cast("double") / 1000000.0).alias("kmv_est6"))
+                ratio_round6(num, F.col("kth_h60")).alias("kmv_est6"))
             .orderBy("scope"))
 
 
@@ -6514,12 +6356,9 @@ def brier_logloss_calibration(spark, sf_dir):
                     (F.col("event_id") % 2).alias("split")))
     ks = (F.sum("y") + 1).cast("decimal(38,0)")
     ns = (F.count(F.lit(1)) + 2).cast("decimal(38,0)")
-    p_num = 2 * ks * 1000000 + ns
-    p_den = 2 * ns
     model = (base.filter(F.col("split") == 0)
              .groupBy("hod")
-             .agg((((p_num - p_num % p_den) / p_den)).cast("bigint")
-                  .alias("p_e6"),
+             .agg(idiv(2 * ks * 1000000 + ns, 2 * ns).alias("p_e6"),
                   F.count(F.lit(1)).alias("n_h")))
     test = (base.filter(F.col("split") == 1)
             .join(F.broadcast(model.select("hod", "p_e6")), "hod")
@@ -6542,13 +6381,10 @@ def brier_logloss_calibration(spark, sf_dir):
     tr = (base.filter(F.col("split") == 0)
           .agg(F.count(F.lit(1)).alias("n_train")))
     j = agg.crossJoin(F.broadcast(tr))
-    bnum = (2 * F.col("bsum") * 1000000
-            + F.col("n_test").cast("decimal(38,0)") * 1000000000000)
-    bden = (2 * F.col("n_test").cast("decimal(38,0)") * 1000000000000)
     return j.select(
         "n_train", "n_test",
-        (((bnum - bnum % bden) / bden).cast("bigint").cast("double")
-         / 1000000.0).alias("brier6"),
+        ratio_round6(F.col("bsum"), F.col("n_test").cast("decimal(38,0)")
+                     * 1000000000000).alias("brier6"),
         F.round(F.col("lsum") / F.col("n_test").cast("double"), 6)
         .alias("logloss6"))
 
@@ -6621,17 +6457,12 @@ def holt_winters_seasonal(spark, sf_dir):
                        .alias("bar_day"))
             .agg(F.max(tagged)["v"].alias("close")))
     out = with_holt_winters(bars, "close", ["user_id"], ["bar_day"])
-
-    def r6(c):
-        return (F.floor(F.col(c) * F.lit(1000000.0) + F.lit(0.5))
-                / F.lit(1000000.0))
-
     return (out.select(
                 "user_id",
                 F.date_format("bar_day", "yyyy-MM-dd").alias("day"),
-                r6("level").alias("level"),
-                r6("trend").alias("trend"),
-                r6("seasonal").alias("seasonal"))
+                floor_round6(F.col("level")).alias("level"),
+                floor_round6(F.col("trend")).alias("trend"),
+                floor_round6(F.col("seasonal")).alias("seasonal"))
             .orderBy("user_id", "day"))
 
 
@@ -6991,8 +6822,7 @@ def correlation_matrix_daily(spark, sf_dir):
     c = F.count(F.lit(1)).cast("decimal(38,0)")
     daily = (ev.groupBy("event_type",
                         F.date_trunc("day", F.col("ts")).alias("d"))
-             .agg((((2 * s + c) - (2 * s + c) % (2 * c)) / (2 * c))
-                  .cast("bigint").alias("mean_cents")))
+             .agg(idiv(2 * s + c, 2 * c).alias("mean_cents")))
     a = daily.select(F.col("event_type").alias("type_a"), "d",
                      F.col("mean_cents").alias("xa"))
     b = daily.select(F.col("event_type").alias("type_b"),
@@ -7085,7 +6915,8 @@ def correlation_matrix_daily(spark, sf_dir):
         "a group's rows landing on pooled value v is "
         "floor(phi_v*n_g/N) - floor((phi_v - pc_v)*n_g/N), exact "
         "integers from the pooled CDF — so the whole operator is "
-        "counts, one domain-sized cumulative window, and a "
+        "counts, one domain-sized cumulative sum "
+        "(ranking.prefix_sums), and a "
         "groups-sized broadcast. Reported per group: original vs "
         "normalized mean (normalized means coincide across groups up "
         "to discreteness — the invariant the property test pins) "
@@ -7100,10 +6931,6 @@ def quantile_normalization(spark, sf_dir):
 
 def _qn_plan(spark, sf_dir, cache=lazy_cache):
     ev = table(spark, sf_dir, "events")
-
-    def idiv(x, y):
-        return (x - x % y) / y
-
     # lazy cache — domain-sized; see the mad_robust_outliers note
     cnt = cache(ev.select("event_type",
                           F.round(F.col("value") * 100).cast("bigint")
@@ -7112,24 +6939,11 @@ def _qn_plan(spark, sf_dir, cache=lazy_cache):
                 .agg(F.count(F.lit(1)).alias("c")))
     tots = cnt.groupBy("event_type").agg(F.sum("c").alias("n_g"))
     grand = cnt.agg(F.sum("c").alias("n"))
-    pooled = (cnt.groupBy("cents").agg(F.sum("c").alias("pc"))
-              .withColumn("bkt", ((F.col("cents")
-                                   - F.col("cents") % 2500) / 2500)
-                          .cast("bigint")))
-    # two-phase inclusive prefix sum over the value domain (the
-    # roc_auc_exact pattern — no single-task window over the CDF)
-    w_in = (Window.partitionBy("bkt").orderBy("cents")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    local = pooled.select("cents", "bkt", "pc",
-                          F.sum("pc").over(w_in).alias("lphi"))
-    w_off = (Window.orderBy("bkt")
-             .rowsBetween(Window.unboundedPreceding, -1))
-    offs = (pooled.groupBy("bkt").agg(F.sum("pc").alias("bp"))
-            .select("bkt", F.coalesce(F.sum("bp").over(w_off),
-                                      F.lit(0)).alias("ophi")))
-    cdf = (local.join(F.broadcast(offs), "bkt")
-           .select("cents", "pc",
-                   (F.col("lphi") + F.col("ophi")).alias("phi")))
+    pooled = cnt.groupBy("cents").agg(F.sum("c").alias("pc"))
+    # inclusive prefix sum over the value domain (no single-task
+    # window over the CDF)
+    cdf = prefix_sums(pooled, idiv(F.col("cents"), 2500), ["cents"],
+                      {"phi": "pc"})
     mapped = (cdf.crossJoin(F.broadcast(tots))
               .crossJoin(F.broadcast(grand))
               .select("event_type", "cents",
@@ -7147,17 +6961,12 @@ def _qn_plan(spark, sf_dir, cache=lazy_cache):
         F.sum(F.col("c").cast("decimal(38,0)") * F.col("cents"))
         .cast("decimal(38,0)").alias("osum"))
     j = (tots.join(norm, "event_type").join(orig, "event_type"))
-    ng = F.col("n_g").cast("decimal(38,0)")
-
-    def mean6(s):
-        num = 2 * s * 10000 + ng
-        den = 2 * ng
-        return (((num - num % den) / den).cast("bigint")
-                .cast("double") / 1000000.0)
-
+    ng100 = 100 * F.col("n_g").cast("decimal(38,0)")
     return (j.select("event_type", "n_g",
-                     mean6(F.col("osum")).alias("orig_mean6"),
-                     mean6(F.col("nsum")).alias("norm_mean6"),
+                     ratio_round6(F.col("osum"), ng100)
+                     .alias("orig_mean6"),
+                     ratio_round6(F.col("nsum"), ng100)
+                     .alias("norm_mean6"),
                      "n_check")
             .orderBy("event_type"))
 

@@ -21,12 +21,12 @@ from ..functions import text as TX
 from ..functions.dedup import h60
 from ..functions import graph as GR
 from ..functions import similarity as SIM
+from ..operators.exact import ratio_round6
 from ..sources.parquet_source import table
 from . import (lazy_cache, leased_copurchase_edges,
                leased_dated_copurchase_edges, query, run_scoped)
 from .llm_dedup import (BANDS, NUM_HASHES, _SHINGLES, _band_struct_sql,
                         _minhash_sig_sql)
-from .analytics import _int_ratio_round6
 from .training_ops import _TOKS, _grams_sql, _gram_rows, _h60_sql
 
 _R = 6
@@ -1649,9 +1649,9 @@ def ngram_containment_pairs(spark, sf_dir):
             .filter(2 * F.col("inter")
                     >= F.least(F.col("n_a"), F.col("n_b")))
             .select("doc_a", "doc_b", "inter", "n_a", "n_b",
-                    _int_ratio_round6(F.col("inter"), F.col("n_a"))
+                    ratio_round6(F.col("inter"), F.col("n_a"))
                     .alias("cont_a"),
-                    _int_ratio_round6(F.col("inter"), F.col("n_b"))
+                    ratio_round6(F.col("inter"), F.col("n_b"))
                     .alias("cont_b"))
             .orderBy("doc_a", "doc_b"))
 
@@ -2201,7 +2201,7 @@ def url_canonicalization(spark, sf_dir):
         "distinct raw URLs collapse after canonicalization — "
         "dedup_rate6 = (n_distinct_raw - n_distinct_canon) / "
         "n_distinct_raw as the exact round-half-up 6dp integer "
-        "ratio (the _int_ratio_round6 convention). The curation "
+        "ratio (the exact.ratio_round6 convention). The curation "
         "dashboard number that decides which domains get crawled "
         "less: one groupBy at domain grain (map-side combinable "
         "distincts via partial aggregation), output rows = #domains "
@@ -2228,7 +2228,7 @@ def domain_dedup_rate_profile(spark, sf_dir):
     return (agg.select(
         "registered_domain", "n_urls", "n_distinct_raw",
         "n_distinct_canon",
-        _int_ratio_round6(
+        ratio_round6(
             F.col("n_distinct_raw") - F.col("n_distinct_canon"),
             F.col("n_distinct_raw")).alias("dedup_rate6"))
         .orderBy("registered_domain"))

@@ -13,6 +13,7 @@ from pyspark.sql import Window, functions as F
 
 from ..functions import dedup as DD
 from ..functions import similarity as SIM
+from ..operators.exact import ratio_round6
 from ..sources.parquet_source import table
 from . import lazy_cache, query, run_scoped
 
@@ -552,12 +553,11 @@ def lsh_vs_exact_eval(spark, sf_dir):
                 .alias("fp"),
                 F.sum(F.col("in_exact") * (1 - F.col("in_lsh")))
                 .alias("fn"))
-    from .analytics import _int_ratio_round6
     return agg.select(
         "n_exact", "n_lsh", "tp", "fp", "fn",
-        _int_ratio_round6(F.col("tp"), F.col("n_lsh"))
+        ratio_round6(F.col("tp"), F.col("n_lsh"))
         .alias("precision6"),
-        _int_ratio_round6(F.col("tp"), F.col("n_exact"))
+        ratio_round6(F.col("tp"), F.col("n_exact"))
         .alias("recall6"))
 
 
@@ -651,8 +651,6 @@ def _blocking_metrics(docs):
     n_caught — and therefore the metric row and its oracle — are
     unchanged, while the truth stage's duplication^2 posting-list
     cost collapses to distinct-text grain."""
-    from .analytics import _int_ratio_round6
-
     truth = (DD.ngram_jaccard_pairs_collapsed(docs, n=3,
                                               threshold=0.8)
              .select("doc_a", "doc_b"))
@@ -675,9 +673,9 @@ def _blocking_metrics(docs):
     all_pairs = F.expr("(n_docs * (n_docs - 1)) DIV 2")
     return m.select(
         "n_docs", "n_true", "n_cand", "n_caught",
-        _int_ratio_round6(F.col("n_caught"), F.col("n_true"))
+        ratio_round6(F.col("n_caught"), F.col("n_true"))
         .alias("pairs_completeness6"),
-        _int_ratio_round6(all_pairs - F.col("n_cand"), all_pairs)
+        ratio_round6(all_pairs - F.col("n_cand"), all_pairs)
         .alias("reduction_ratio6"))
 
 

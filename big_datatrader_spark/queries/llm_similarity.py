@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..functions import similarity as SIM
+from ..operators.exact import ratio_round6
 from ..sources.parquet_source import table
 from . import query
 
@@ -179,7 +180,6 @@ _IVF_PROBES = (1, 2, 4, 8)
         "100 TB you run this audit on a sampled block, same shape",
 )
 def ivf_vs_exact_eval(spark, sf_dir):
-    from .analytics import _int_ratio_round6
     from .vector_ops import _quantized
 
     emb = table(spark, sf_dir, "embeddings")
@@ -238,7 +238,7 @@ def ivf_vs_exact_eval(spark, sf_dir):
                     F.coalesce(F.col("n_hit"), F.lit(0))
                     .cast("bigint").alias("n_hit"))
             .withColumn("recall6",
-                        _int_ratio_round6(F.col("n_hit"), F.lit(K)))
+                        ratio_round6(F.col("n_hit"), F.lit(K)))
             .orderBy("n_probe", "query_id"))
 
 

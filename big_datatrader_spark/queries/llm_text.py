@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from ..functions import text as TX
+from ..operators.exact import ratio_round6
 from ..session import scan_floor
 from ..sources.parquet_source import table
 from . import leased_doc_tokens, query
@@ -842,16 +843,13 @@ def span_corruption_mask(spark, sf_dir):
     masked = F.size(F.filter(
         "pos", lambda i: F.exists(
             "starts", lambda s: (s <= i) & (s + (_SC_LEN - 1) >= i))))
-    num = F.col("n_masked").cast("decimal(38,0)") * 1000000
-    den = F.col("n_tokens").cast("decimal(38,0)")
-    e6 = (((2 * num + den) - (2 * num + den) % (2 * den)) / (2 * den))
     return (d.select("doc_id",
                      F.col("n_tokens").cast("bigint")
                      .alias("n_tokens"),
                      F.size("starts").cast("bigint").alias("n_spans"),
                      masked.cast("bigint").alias("n_masked"))
             .withColumn("corrupt_ratio",
-                        e6.cast("bigint").cast("double") / 1000000.0)
+                        ratio_round6(F.col("n_masked"), F.col("n_tokens")))
             .orderBy("doc_id"))
 
 
@@ -918,12 +916,10 @@ def ngram_novelty_score(spark, sf_dir):
                     F.sum(F.when(F.col("first_doc") == F.col("doc_id"),
                                  1).otherwise(0)).cast("bigint")
                     .alias("n_novel")))
-    num = F.col("n_novel").cast("decimal(38,0)") * 1000000
-    den = F.col("n_shingles").cast("decimal(38,0)")
-    e6 = (((2 * num + den) - (2 * num + den) % (2 * den)) / (2 * den))
     return (per_doc.select("doc_id", "n_shingles", "n_novel")
             .withColumn("novelty_ratio",
-                        e6.cast("bigint").cast("double") / 1000000.0)
+                        ratio_round6(F.col("n_novel"),
+                                     F.col("n_shingles")))
             .orderBy("doc_id"))
 
 
@@ -969,13 +965,11 @@ def ngram_novelty_score(spark, sf_dir):
         "far above ~1.3 flags slices the pre-tokenizer fragments). "
         "Counts reuse the token_count_bpe_ish regex convention; both "
         "ratios are exact integer fractions rounded half-away-from-"
-        "zero (the _int_ratio_round6 convention), so the result is "
+        "zero (the exact.ratio_round6 convention), so the result is "
         "hash-exact under any partitioning. One scan, one tiny "
         "groupBy — trivially 100 TB-safe",
 )
 def tokenizer_fertility(spark, sf_dir):
-    from .analytics import _int_ratio_round6
-
     docs = table(spark, sf_dir, "documents")
     g = (docs.select(
             "lang", "source",
@@ -990,9 +984,9 @@ def tokenizer_fertility(spark, sf_dir):
               F.sum("nch").cast("long").alias("n_chars")))
     return (g.select(
                 "lang", "source", "n_docs", "bpe_tokens", "ws_tokens",
-                _int_ratio_round6(F.col("bpe_tokens"),
-                                  F.col("ws_tokens")).alias("fertility6"),
-                _int_ratio_round6(F.col("n_chars"),
-                                  F.col("bpe_tokens"))
+                ratio_round6(F.col("bpe_tokens"),
+                             F.col("ws_tokens")).alias("fertility6"),
+                ratio_round6(F.col("n_chars"),
+                             F.col("bpe_tokens"))
                 .alias("chars_per_token6"))
             .orderBy("lang", "source"))

@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import Window, functions as F
 
 from ..functions import text as TX
+from ..operators.exact import ratio_round6
 from ..session import scan_floor
 from ..sources.parquet_source import table
 from . import query
@@ -749,11 +750,10 @@ def hard_negative_mining(spark, sf_dir):
            .withColumn("i", F.coalesce("i", F.lit(0)))
            .crossJoin(F.broadcast(qn)))
     union = F.col("qn") + F.col("n_sh") - F.col("i")
-    from .analytics import _int_ratio_round6
     cand = (total.join(jac, "doc_id")
             .filter(2 * F.col("i") < union)
             .select("doc_id", "bm25",
-                    _int_ratio_round6(F.col("i"), union)
+                    ratio_round6(F.col("i"), union)
                     .alias("jaccard_to_q")))
     top = cand.orderBy(F.desc("bm25"), "doc_id").limit(_HN_TOPK)
     w = Window.orderBy(F.desc("bm25"), "doc_id")

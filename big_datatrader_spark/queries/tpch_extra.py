@@ -26,9 +26,9 @@ from __future__ import annotations
 
 from pyspark.sql import Window, functions as F
 
+from ..operators.exact import idiv, ratio_round6
 from ..sources.parquet_source import table
 from . import query
-from .analytics import _int_ratio_round6
 
 _R = 6
 
@@ -528,7 +528,7 @@ def rec_hitrate_popularity(spark, sf_dir):
     return hits.agg(
         F.count(F.lit(1)).alias("n_users"),
         F.sum("hit").alias("hits"),
-        _int_ratio_round6(F.sum("hit"), F.count(F.lit(1)))
+        ratio_round6(F.sum("hit"), F.count(F.lit(1)))
         .alias("hitrate6"))
 
 
@@ -690,9 +690,6 @@ def rfm_segmentation(spark, sf_dir):
                     "f_orders", "m_cents"))
     n = cust.agg(F.count(F.lit(1)).alias("n_total"))
 
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
-
     # ONE rank chain over the melted (metric, value) relation instead
     # of three chained/parallel global_rank calls: chaining nests each
     # chain's offset branch inside the next (2^k plan blowup, 11
@@ -737,12 +734,10 @@ def rfm_segmentation(spark, sf_dir):
               .alias("m_q")))
     s = F.col("sum_m").cast("decimal(38,0)")
     c = F.col("n_customers").cast("decimal(38,0)")
-    num = 2 * s * 10000 + c
-    den = 2 * c
     return (q.groupBy("r_q", "f_q", "m_q")
             .agg(F.count(F.lit(1)).alias("n_customers"),
                  F.sum("m_cents").alias("sum_m"))
             .select("r_q", "f_q", "m_q", "n_customers",
-                    ((num - num % den) / den).cast("bigint")
+                    idiv(2 * s * 10000 + c, 2 * c)
                     .alias("avg_monetary_e6"))
             .orderBy("r_q", "f_q", "m_q"))

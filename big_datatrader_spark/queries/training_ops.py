@@ -20,6 +20,7 @@ from pyspark.sql import Window, functions as F
 from ..functions import text as TX
 from ..functions.dedup import h60
 from ..functions import graph as GR
+from ..operators.exact import idiv, ratio_round6, signed_ratio_round6
 from ..session import _cpus
 from ..sources.parquet_source import table
 from . import (active_scope, copurchase_edges_key as _edges_key,
@@ -1809,7 +1810,6 @@ _BF_BPK, _BF_K = 10, 3  # ~10 bits per key, 3 hash rows: the filter is
         "tuning is bits per key, and this query is the measurement",
 )
 def bloom_exact_membership(spark, sf_dir):
-    from .analytics import _int_ratio_round6
 
     ev = table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
@@ -1843,8 +1843,8 @@ def bloom_exact_membership(spark, sf_dir):
         (F.col("n_users") - F.col("n_keys")).alias("n_nonmembers"),
         (F.col("n_passed") - F.col("n_keys"))
         .alias("n_false_positives"),
-        _int_ratio_round6(F.col("n_passed") - F.col("n_keys"),
-                          F.col("n_users") - F.col("n_keys"))
+        ratio_round6(F.col("n_passed") - F.col("n_keys"),
+                     F.col("n_users") - F.col("n_keys"))
         .alias("fpr6"))
 
 
@@ -2908,12 +2908,9 @@ def target_encoding_oof(spark, sf_dir):
                    (F.col("s_all") - F.col("s")).alias("s_oof")))
     s, n = F.col("s_oof").cast("decimal(38,0)"), \
         F.col("n_oof").cast("decimal(38,0)")
-    mag_pos = ((2 * s * 10000 + n) - (2 * s * 10000 + n) % (2 * n)) \
-        / (2 * n)
-    mag_neg = ((2 * (-s) * 10000 + n)
-               - (2 * (-s) * 10000 + n) % (2 * n)) / (2 * n)
-    te = (F.when(F.col("s_oof") >= 0, mag_pos).otherwise(-mag_neg)
-          .cast("bigint").cast("double") / 10000.0)
+    mag = idiv(2 * F.abs(s) * 10000 + n, 2 * n)
+    te = (F.when(F.col("s_oof") >= 0, mag).otherwise(-mag)
+          .cast("double") / 10000.0)
     return (base.join(F.broadcast(oof), ["event_type", "fold"])
             .select("event_id", "event_type", "fold",
                     te.alias("te_value"))
@@ -2981,8 +2978,7 @@ def lag_feature_matrix(spark, sf_dir):
         F.dayofweek("day").cast("bigint").alias("dow"))
     s, c = F.col("sum7").cast("decimal(38,0)"), \
         F.col("cnt7").cast("decimal(38,0)")
-    roll = (((2 * s * 100 + c) - (2 * s * 100 + c) % (2 * c))
-            / (2 * c)).cast("bigint").cast("double") / 100.0
+    roll = idiv(2 * s * 100 + c, 2 * c).cast("double") / 100.0
     return (feat.filter(F.col("lag7").isNotNull())
             .select("user_id", "day", "y", "lag1", "lag7",
                     roll.alias("roll7_mean"), "dow",
@@ -3219,7 +3215,12 @@ def _hits_iter_width(edges) -> int:
     """Iteration shuffle width from the edge cache's materialized
     size: cached-plan stats are exact after the eager count, so this
     costs no job. Clamped below by the sf0.1-calibrated floor and
-    above by the session's core budget."""
+    above by the session's core budget.
+
+    Precondition: ``edges`` must already be materialized (both shipped
+    call sites count it first). On a cache no action has filled yet,
+    the plan stats are the optimizer's pre-cache size estimate, not
+    the cached bytes."""
     try:
         size = int(edges._jdf.queryExecution().optimizedPlan()
                    .stats().sizeInBytes())
@@ -3487,10 +3488,6 @@ def hits_hub_authority(spark, sf_dir):
 )
 def wasserstein_distance_drift(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
-
-    def idiv(x, y):
-        return ((x - x % y) / y).cast("bigint")
-
     base = (ev.filter(F.col("event_type").isin("click", "purchase"))
             .select(F.round(F.col("value") * 100).cast("bigint")
                     .alias("cents"),
@@ -3533,13 +3530,11 @@ def wasserstein_distance_drift(spark, sf_dir):
     num = (cum.crossJoin(F.broadcast(tot))
            .agg(F.sum(term).cast("decimal(38,0)").alias("s")))
     j = num.crossJoin(F.broadcast(tot))
-    nn = F.col("n1").cast("decimal(38,0)") * F.col("n0")
-    wnum = 2 * F.col("s") * 1000000 + nn
-    wden = 2 * nn
     return j.select(
         F.col("n1").alias("n_purchase"), F.col("n0").alias("n_click"),
-        (((wnum - wnum % wden) / wden).cast("bigint").cast("double")
-         / 1000000.0).alias("w1_cents6"))
+        ratio_round6(F.col("s"),
+                     F.col("n1").cast("decimal(38,0)") * F.col("n0"))
+        .alias("w1_cents6"))
 
 
 # ---------------------------------------------------------------------------
@@ -3626,14 +3621,10 @@ def js_divergence_lang_tokens(spark, sf_dir):
                      .alias("t_n9"))
     s = terms.agg(F.sum("t_n9").cast("decimal(38,0)").alias("sn9"))
     out = s.crossJoin(F.broadcast(tot))
-    den = F.lit(2000000000).cast("decimal(38,0)")
-    jn = 2 * F.col("sn9") * 1000000 + den
-    jd = 2 * den
     return out.select(
         F.col("ta").alias("n_tokens_en"),
         F.col("tb").alias("n_tokens_rest"), "vocab",
-        (((jn - jn % jd) / jd).cast("bigint").cast("double")
-         / 1000000.0).alias("jsd6"))
+        ratio_round6(F.col("sn9"), F.lit(2000000000)).alias("jsd6"))
 
 
 # ---------------------------------------------------------------------------
@@ -3728,9 +3719,7 @@ def poisson_bootstrap_ci(spark, sf_dir):
     s = F.sum(F.col("w") * F.col("cents")).cast("decimal(38,0)")
     c = F.sum("w").cast("decimal(38,0)")
     means = (reps.groupBy("b")
-             .agg((((2 * s * 1000000 + c)
-                    - (2 * s * 1000000 + c) % (2 * c)) / (2 * c))
-                  .cast("bigint").alias("m_e6")))
+             .agg(idiv(2 * s * 1000000 + c, 2 * c).alias("m_e6")))
     # B-row relation: the global order-statistic window is bounded
     wr = Window.orderBy("m_e6", "b")
     ranked = means.select("m_e6", F.row_number().over(wr).alias("rn"))
@@ -3741,8 +3730,7 @@ def poisson_bootstrap_ci(spark, sf_dir):
     sp = F.sum("cents").cast("decimal(38,0)")
     cp = F.count(F.lit(1)).cast("decimal(38,0)")
     pt = base.agg(
-        (((2 * sp * 1000000 + cp) - (2 * sp * 1000000 + cp) % (2 * cp))
-         / (2 * cp)).cast("bigint").alias("m_e6"),
+        idiv(2 * sp * 1000000 + cp, 2 * cp).alias("m_e6"),
         F.count(F.lit(1)).alias("n"))
     out = (pt.crossJoin(F.broadcast(lo)).crossJoin(F.broadcast(hi)))
     return out.select(
@@ -3896,7 +3884,6 @@ def window_funnel_depth(spark, sf_dir):
         "community-sized aggregates and a 1-row m scalar",
 )
 def modularity_brand_partition(spark, sf_dir):
-    from .analytics import _sgn_ratio_round6
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
@@ -3924,7 +3911,7 @@ def modularity_brand_partition(spark, sf_dir):
            - F.col("d_c").cast("decimal(38,0)") * F.col("d_c"))
     den = 4 * md * F.col("m")
     return (comm.select("brand", "m_c", "d_c",
-                        _sgn_ratio_round6(num, den).alias("contrib6"))
+                        signed_ratio_round6(num, den).alias("contrib6"))
             .orderBy("brand"))
 
 
@@ -4035,13 +4022,10 @@ def _lcc_plan(spark, sf_dir, cache=lazy_cache):
          .join(tcnt, "node", "left")
          .select("node", "deg",
                  F.coalesce(F.col("n_tri"), F.lit(0)).alias("n_tri")))
-    num = (2 * (2 * F.col("n_tri")).cast("decimal(38,0)") * 1000000
-           + F.col("deg").cast("decimal(38,0)") * (F.col("deg") - 1))
-    den = (2 * F.col("deg").cast("decimal(38,0)")
-           * (F.col("deg") - 1))
     return (j.select(F.col("node").alias("part_key"), "deg", "n_tri",
-                     (((num - num % den) / den).cast("bigint")
-                      .cast("double") / 1000000.0).alias("lcc6"))
+                     ratio_round6(2 * F.col("n_tri"),
+                                  F.col("deg").cast("decimal(38,0)")
+                                  * (F.col("deg") - 1)).alias("lcc6"))
             .orderBy(F.desc("lcc6"), F.desc("deg"), "part_key")
             .limit(50))
 
@@ -4367,7 +4351,6 @@ def ridge_normal_equations(spark, sf_dir):
 )
 def ips_policy_value(spark, sf_dir):
     from ..functions.dedup import h60
-    from .analytics import _int_ratio_round6
 
     ev = table(spark, sf_dir, "events")
     arms_w = Window.orderBy("event_type")
@@ -4393,9 +4376,9 @@ def ips_policy_value(spark, sf_dir):
         F.sum("r_cents").cast("long").alias("total_cents"))
     return agg.select(
         "n", "n_matched",
-        _int_ratio_round6(F.col("n_arms") * F.col("matched_cents"),
-                          F.col("n")).alias("v_target_cents6"),
-        _int_ratio_round6(F.col("total_cents"), F.col("n"))
+        ratio_round6(F.col("n_arms") * F.col("matched_cents"),
+                     F.col("n")).alias("v_target_cents6"),
+        ratio_round6(F.col("total_cents"), F.col("n"))
         .alias("v_logged_cents6"))
 
 

@@ -35,6 +35,7 @@ from pyspark.sql import Window, functions as F
 
 from ..functions import similarity as SIM
 from ..functions.similarity import QUANT_SCALE
+from ..operators.exact import ratio_round6
 from ..sources.parquet_source import table
 from . import query
 
@@ -387,8 +388,6 @@ def ann_pq_adc_topk(spark, sf_dir):
         "shape is unchanged",
 )
 def pq_vs_exact_eval(spark, sf_dir):
-    from .analytics import _int_ratio_round6
-
     emb = table(spark, sf_dir, "embeddings")
     atop = (ann_pq_adc_topk(spark, sf_dir)
             .select("query_id", "neighbor_id"))
@@ -418,8 +417,8 @@ def pq_vs_exact_eval(spark, sf_dir):
                     F.coalesce(F.col("n_hit"), F.lit(0))
                     .cast("bigint").alias("n_hit"))
             .withColumn("recall6",
-                        _int_ratio_round6(F.col("n_hit"),
-                                          F.lit(_PQ_TOPK)))
+                        ratio_round6(F.col("n_hit"),
+                                     F.lit(_PQ_TOPK)))
             .orderBy("query_id"))
 
 
@@ -764,11 +763,10 @@ def ann_dim_truncation_recall(spark, sf_dir):
         F.row_number().over(wt).alias("rt"))
     hit = ((F.col("rf") <= _TR_K) & (F.col("rt") <= _TR_K)) \
         .cast("bigint")
-    from .analytics import _int_ratio_round6
     return (rk.groupBy("query_id")
             .agg(F.sum(hit).alias("overlap"))
             .select("query_id", "overlap",
-                    _int_ratio_round6(F.col("overlap"), F.lit(_TR_K))
+                    ratio_round6(F.col("overlap"), F.lit(_TR_K))
                     .alias("recall6"))
             .orderBy("query_id"))
 
@@ -857,8 +855,6 @@ def knn_prototype_accuracy(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from .analytics import _int_ratio_round6
-
     emb = table(spark, sf_dir, "embeddings")
 
     def quant(M):
@@ -904,7 +900,7 @@ def knn_prototype_accuracy(spark, sf_dir):
                  F.sum((F.col("pred") == F.col("label").cast("long"))
                        .cast("bigint")).cast("long").alias("n_correct"))
             .select("label", "n", "n_correct",
-                    _int_ratio_round6(F.col("n_correct"), F.col("n"))
+                    ratio_round6(F.col("n_correct"), F.col("n"))
                     .alias("accuracy6"))
             .orderBy("label"))
 

@@ -1,8 +1,10 @@
 """A/B spec (tools/measure_ab.py): hits_hub_authority's edge cache and
 iteration-loop confs. ``current`` is the registered query; every other
 variant builds the same edge list and runs the package's own iteration
-(training_ops._hits_top50) with ONE lever changed, so all variants
-return identical rows (run with --check).
+(training_ops._hits_top50) with one lever changed, so all variants
+return identical rows (run with --check). The exception is ``lazy``:
+it also moves the width, since _hits_iter_width reads an unfilled
+cache's pre-cache size estimate.
 
 Edge materialization (VERDICT r10 ask #2; the shipped plan persists
 the edges SERIALIZED and eagerly, under the session confs):
@@ -13,7 +15,8 @@ the edges SERIALIZED and eagerly, under the session confs):
 - packed: eager serialized cache of one BIGINT column
   (src << 32 | dst), unpacked once per half-step join
 Each runs the shipped loop confs, with the width _hits_iter_width
-derives from that variant's own cache.
+derives from that variant's own cache (for ``lazy``, from the
+optimizer's estimate: nothing has materialized it yet).
 
 Loop confs (VERDICT r14 ask #2; the shipped loop runs AQE off at the
 _hits_iter_width shuffle width):
