@@ -1,6 +1,8 @@
-"""Shared co-purchase graph construction (pagerank / HITS / SSSP /
-triangles / LCC / modularity all derive their edge list from "parts
-appearing on the same order").
+"""Shared co-purchase graph construction and iteration: pagerank /
+PPR / LPA / HITS / GNN / SSSP / temporal reachability / triangles /
+LCC / modularity / k-core all derive their edge list from "parts
+appearing on the same order", and every message-passing loop among
+them steps through ``superstep``.
 
 One-scan build: groupBy(l_orderkey) -> collect_set(l_partkey) ->
 within-order pair explode -> distinct. The classic self-join build
@@ -12,6 +14,24 @@ explode — measured 2x faster cold at sf0.1 (2.9s -> 1.6s) with an
 identical 2.39M-edge result set. A hot order with k parts costs k^2
 either way; the per-order set is bounded by order line count, so the
 collected array is never corpus-scale.
+
+Transpose invariant: the directed relation (``ordered=False``) is its
+own transpose. Every order emits both (a, b) and (b, a), and the dated
+build takes the minimum day over the same orders in both directions,
+so (a, b, d) is an edge iff (b, a, d) is (tests/test_graph.py pins
+it). Hence one direction serves every loop: a step that reads the
+neighbours of a node — HITS' hub half-step, the LPA vote, the GNN
+neighbour sum — is the same forward ``superstep`` (join ``src``,
+group ``dst``) as a step that pushes mass along out-edges.
+
+Hold rule for loop state: a loop holds a relation through its
+query's run_scoped ``cache`` only when a later step reads it twice or
+the loop collects a value from it (HITS' per-half-step max, SSSP's
+emptiness test, the SSSP and temporal-reachability unions). Nothing
+else is held and no loop checkpoints: the edge list is one eager cache
+(queries.leased_copurchase_edges), node-sized state is recomputed from
+it where read once, and run_scoped releases every hold when the query
+returns.
 """
 
 from __future__ import annotations
@@ -59,3 +79,16 @@ def copurchase_pairs(li: DataFrame, a_name: str, b_name: str,
              .select(F.col("p.a").alias(a_name),
                      F.col("p.b").alias(b_name)))
     return pairs.filter(cond).distinct()
+
+
+def superstep(state: DataFrame, edges: DataFrame, *aggs: Column,
+              by: tuple[str, ...] = ()) -> DataFrame:
+    """One message-passing step: join the node-keyed ``state`` (a
+    ``node`` column plus values) to ``edges`` on ``src`` and aggregate
+    ``aggs`` per ``dst`` plus ``by``. Returns ``node`` (the ``dst``),
+    the ``by`` columns and the aggregates. The aggregates see the
+    state's columns and the edge's other columns (e.g. ``d``), so a
+    per-edge predicate goes inside the aggregate (``min(when(...))``);
+    a node with no incoming edge from the state has no row."""
+    return (state.withColumnRenamed("node", "src").join(edges, "src")
+            .groupBy(F.col("dst").alias("node"), *by).agg(*aggs))

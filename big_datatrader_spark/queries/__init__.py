@@ -20,6 +20,7 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -82,7 +83,10 @@ def run_scoped(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     result is materialized eagerly (localCheckpoint — bounded rows by
     query design), then EVERY cache is released in finally, so no
     registered query leaves persisted relations behind in a long-lived
-    session (tests/test_cache_lifecycle.py asserts it).
+    session (tests/test_cache_lifecycle.py asserts it). Every cache
+    persists at MEMORY_AND_DISK (serialized), the level SharedScope
+    leases use, so a relation is held the same way with or without a
+    scope open.
 
     ``eager=True`` additionally materializes the cache with a count()
     before any consumer runs, making the cache's content, partitioning
@@ -104,7 +108,7 @@ def run_scoped(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     caches = []
 
     def cache(df: DataFrame, eager: bool = False) -> DataFrame:
-        df = df.persist()
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
         caches.append(df)
         if eager:
             df.count()
@@ -169,7 +173,6 @@ class SharedScope:
     def get(self, key: str, df: DataFrame) -> DataFrame:
         with self._lock:
             if key not in self._cached:
-                from pyspark import StorageLevel
                 df = df.persist(StorageLevel.MEMORY_AND_DISK)
                 try:
                     df.count()
@@ -206,90 +209,61 @@ def active_scope() -> "SharedScope | None":
 
 def copurchase_edges_key(sf_dir: str) -> str:
     """SharedScope lease key for the directed co-purchase edge list —
-    one definition so the run_scoped builders (training_ops) and the
-    ordered-consumer derivation below can never key different
-    relations for the same dataset."""
+    one definition so every consumer and the ordered derivation below
+    can never key different relations for the same dataset."""
     return f"copurchase_edges_directed:{sf_dir}"
-
-
-def leased_copurchase_edges(sf_dir: str, li: DataFrame, a_name: str,
-                            b_name: str, *, ordered: bool = False
-                            ) -> tuple[DataFrame, bool]:
-    """Co-purchase edges for the ordered / renamed consumers
-    (triangles, LCC, modularity, SSSP), derivable from the directed
-    SharedScope lease: the ordered edge set IS the directed set
-    filtered to a < b (both are DISTINCT over the same per-order
-    explode), and renames are projections. Returns ``(edges, owned)``
-    — ``owned=True`` means no scope was open and the caller received
-    today's direct unpersisted build (it persists/checkpoints as it
-    always did); ``owned=False`` means the relation derives from the
-    scope's cached lease, which the scope releases at exit.
-
-    Unscoped, the direct build stays deliberately: deriving ordered
-    from directed would pay a distinct over BOTH directions (2x rows)
-    for a result the a<b pre-filter halves — only the scope's
-    amortization makes the derivation the cheaper plan."""
-    from pyspark.sql import functions as F
-
-    from ..functions import graph as GR
-
-    scope = _ACTIVE_SCOPE
-    if scope is None:
-        return (GR.copurchase_pairs(li, a_name, b_name,
-                                    ordered=ordered), True)
-    directed = scope.get(copurchase_edges_key(sf_dir),
-                         GR.copurchase_pairs(li, "src", "dst"))
-    if ordered:
-        # the ordered set gets its OWN lease, derived from the cached
-        # directed relation (one filter pass over the cache): the
-        # heavy consumers (triangles, LCC) scan their edge relation
-        # several times, and repeatedly filtering the 2x-rows
-        # directed cache measured SLOWER than the unscoped direct
-        # build (22.1s vs 16.4s for triangles at sf0.1) — persisting
-        # the right-sized derivation restores the win while still
-        # paying the per-order explode only once per scope
-        out = scope.get(f"copurchase_edges_ordered:{sf_dir}",
-                        directed.filter(F.col("src") < F.col("dst")))
-    else:
-        out = directed
-    return (out.select(F.col("src").alias(a_name),
-                       F.col("dst").alias(b_name)), False)
 
 
 def copurchase_edges_dated_key(sf_dir: str) -> str:
     """SharedScope lease key for the DATED directed co-purchase edge
     list (src, dst, d = earliest co-order day) — the attribute-
-    carrying relation the directed lease cannot serve (VERDICT r11
-    ask #4): link_prediction_holdout_eval and
-    temporal_reachability_copurchase both rebuild it."""
+    carrying relation the directed lease cannot serve
+    (link_prediction_holdout_eval and temporal_reachability_copurchase
+    both read it)."""
     return f"copurchase_edges_dated:{sf_dir}"
 
 
-def leased_dated_copurchase_edges(sf_dir: str, li: DataFrame,
-                                  odays: DataFrame, a_name: str,
-                                  b_name: str) -> tuple[DataFrame, bool]:
-    """Dated co-purchase edges (edge date = MIN co-order day) for the
-    temporal consumers, leased from the active SharedScope when one is
-    open. The lease is keyed canonically (src, dst, d) and consumer
-    names are projections, exactly the leased_copurchase_edges
-    convention. Returns ``(edges, owned)``: ``owned=True`` means no
-    scope was open and the caller received the direct unpersisted
-    build (it persists/releases as it always did — unscoped plans stay
-    bit-identical to the pre-lease form); ``owned=False`` means the
-    relation derives from the scope's cached lease, released at scope
-    exit."""
+def leased_copurchase_edges(cache, sf_dir: str, li: DataFrame,
+                            a_name: str, b_name: str, *,
+                            ordered: bool = False,
+                            attrs: DataFrame | None = None) -> DataFrame:
+    """The one way a query gets the co-purchase edge list
+    (functions/graph.copurchase_pairs over ``li``), as columns
+    (a_name, b_name[, the ``attrs`` attribute]).
+
+    With a SharedScope open it is the scope's lease: the directed
+    relation, the dated one (``attrs``), and the ordered set (a < b) as
+    its own lease derived from the cached directed one — the heavy
+    ordered consumers scan it several times, and re-filtering the
+    2x-rows directed cache measured slower than the unscoped direct
+    build (22.1s vs 16.4s for triangles at sf0.1). With no scope open
+    it is ``cache(direct build, eager=True)``: run_scoped's cache
+    materializes it once under the session confs, and lazy_cache hands
+    the lazy build to consumers that read it once per branch (LCC,
+    modularity, k-core)."""
     from pyspark.sql import functions as F
 
     from ..functions import graph as GR
 
     scope = _ACTIVE_SCOPE
     if scope is None:
-        return (GR.copurchase_pairs(li, a_name, b_name, attrs=odays),
-                True)
-    dated = scope.get(copurchase_edges_dated_key(sf_dir),
-                      GR.copurchase_pairs(li, "src", "dst", attrs=odays))
-    return (dated.select(F.col("src").alias(a_name),
-                         F.col("dst").alias(b_name), "d"), False)
+        return cache(GR.copurchase_pairs(li, a_name, b_name,
+                                         ordered=ordered, attrs=attrs),
+                     eager=True)
+    a_lt_b = F.col("src") < F.col("dst")
+    if attrs is not None:
+        rel = scope.get(copurchase_edges_dated_key(sf_dir),
+                        GR.copurchase_pairs(li, "src", "dst",
+                                            attrs=attrs))
+        rel = rel.filter(a_lt_b) if ordered else rel
+    else:
+        rel = scope.get(copurchase_edges_key(sf_dir),
+                        GR.copurchase_pairs(li, "src", "dst"))
+        if ordered:
+            rel = scope.get(f"copurchase_edges_ordered:{sf_dir}",
+                            rel.filter(a_lt_b))
+    return rel.select(F.col("src").alias(a_name),
+                      F.col("dst").alias(b_name), *rel.columns[2:])
 
 
 def doc_tokens_key(sf_dir: str) -> str:
@@ -333,25 +307,6 @@ def leased_doc_tokens(spark, sf_dir: str) -> "DataFrame | None":
         F.length("text").cast("long").alias("n_chars"),
         TX.tokens(F.col("text")).alias("t"))
     return scope.get(doc_tokens_key(sf_dir), rel)
-
-
-def shared_or(cache, key: str, df: DataFrame, *, eager: bool = True,
-              passthrough: bool = False) -> DataFrame:
-    """Route a relation through the active SharedScope when one is
-    open, else fall back to the query-local behavior: ``cache(df,
-    eager=...)`` for relations the query persists today, or the bare
-    ``df`` (``passthrough=True``) for relations it consumes lazily
-    today (e.g. the raw edge list under pagerank's ewd cache). Called
-    INSIDE run_scoped builders so the plan-audit cache callables
-    (lazy_cache and the tests' identity lambdas) never see a new
-    keyword — with no scope open the builder's plan is bit-identical
-    to the pre-scope form."""
-    scope = _ACTIVE_SCOPE
-    if scope is not None:
-        return scope.get(key, df)
-    if passthrough:
-        return df
-    return cache(df, eager=eager)
 
 
 # ---------------------------------------------------------------------------
@@ -452,7 +407,13 @@ _CHANGED: tuple[str, ...] = (
     "sorted_neighborhood_pairs", "spearman_value_k_corr",
     "target_encoding_oof", "theil_sen_slope", "twap_per_user",
     "user_spend_rank_distribution", "vwap_per_part",
-    "wasserstein_distance_drift")
+    "wasserstein_distance_drift",
+    # functions/graph.superstep: the loops whose plan or lifecycle moved
+    # (k-core: the one-scan ordered edge build behind its checkpoint)
+    "gnn_feature_propagation", "k_core_membership",
+    "label_propagation_communities", "pagerank_copurchase",
+    "personalized_pagerank", "sssp_copurchase",
+    "temporal_reachability_copurchase")
 
 # Each rows-only-by-design query (oracle=None — results DuckDB cannot
 # reproduce bit-for-bit) is paired with a hash-exact companion proving the

@@ -23,8 +23,7 @@ from ..functions import graph as GR
 from ..functions import similarity as SIM
 from ..operators.exact import ratio_round6
 from ..sources.parquet_source import table
-from . import (lazy_cache, leased_copurchase_edges,
-               leased_dated_copurchase_edges, query, run_scoped)
+from . import lazy_cache, leased_copurchase_edges, query, run_scoped
 from .llm_dedup import (BANDS, NUM_HASHES, _SHINGLES, _band_struct_sql,
                         _minhash_sig_sql)
 from .training_ops import _TOKS, _grams_sql, _gram_rows, _h60_sql
@@ -1099,40 +1098,38 @@ _BFS_MAX_HOPS = 6
         "over the co-purchase graph — the iterative-graph-algorithm "
         "slot next to pagerank and connected components. Spark runs "
         "frontier-based BFS: each round expands ONLY the newly "
-        "settled frontier against the edge list (equi-join), "
-        "anti-joins out already-settled nodes, and localCheckpoints "
-        "to truncate lineage — per-round cost is O(frontier "
-        "out-degree), the Pregel pattern, and a settled node is never "
-        "re-expanded. The oracle is a DuckDB recursive CTE whose "
-        "UNION-dedup bounds tuples by nodes x hops. Both sides "
-        "compute the identical min-hop map",
+        "settled frontier against the edge list (one functions/"
+        "graph.superstep taking min(hop_dist + 1) per reached node) "
+        "and anti-joins out already-settled nodes — per-round cost "
+        "is O(frontier out-degree), the Pregel pattern, and a "
+        "settled node is never re-expanded. Cache lifecycle "
+        "(run_scoped, the graph hold rule): the edge list is one "
+        "eager cache; each frontier is held because the loop tests "
+        "it for emptiness and the next round reads it, each distance "
+        "union because the next round reads it twice; all are "
+        "released when the result materializes. The oracle is a "
+        "DuckDB recursive CTE whose UNION-dedup bounds tuples by "
+        "nodes x hops. Both sides compute the identical min-hop map",
 )
 def sssp_copurchase(spark, sf_dir):
+    return run_scoped(spark, sf_dir, _sssp_build)
+
+
+def _sssp_build(spark, sf_dir, cache):
     li = (table(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_partkey"))
-    edges, owned = leased_copurchase_edges(sf_dir, li, "x", "y")
-    if owned:
-        # today's unscoped path: pin the edge relation once so the
-        # BFS iterations never re-derive the build; a scope lease is
-        # already persisted+materialized, so checkpointing it again
-        # would only copy the cache
-        edges = edges.localCheckpoint(eager=True)
-    spark_ = li.sparkSession
-    dist = spark_.createDataFrame([( _BFS_SRC, 0)],
-                                  "node long, hop_dist long")
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
+    dist = spark.createDataFrame([(_BFS_SRC, 0)],
+                                 "node long, hop_dist long")
     frontier = dist
-    for i in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (frontier
-               .join(edges, frontier.node == edges.x)
-               .select(F.col("y").alias("node"))
-               .distinct()
-               .join(dist, "node", "left_anti")
-               .select("node", F.lit(i).cast("long")
-                       .alias("hop_dist")))
-        nxt = nxt.localCheckpoint(eager=True)
+    for _ in range(_BFS_MAX_HOPS):
+        nxt = cache(GR.superstep(frontier, edges,
+                                 F.min(F.col("hop_dist") + 1)
+                                 .alias("hop_dist"))
+                    .join(dist, "node", "left_anti"))
         if nxt.isEmpty():
             break
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = cache(dist.unionByName(nxt))
         frontier = nxt
     return (dist.select(F.col("node").alias("part_key"), "hop_dist")
             .orderBy("part_key"))
@@ -1704,7 +1701,9 @@ def _kcore_ctes(k: int, rounds: int) -> str:
         "replayable as pure SQL on both engines; extra rounds after "
         "convergence are no-ops, and convergence ON the data is "
         "asserted by an independent python peel in "
-        "tests/test_corpus_ops.py. Every round is degree-agg + two "
+        "tests/test_corpus_ops.py. The edge list is the graph "
+        "family's one-scan ordered build (queries."
+        "leased_copurchase_edges). Every round is degree-agg + two "
         "semi-joins on node id — the same bounded equi-join "
         "discipline as the triangle/PageRank family; at 100 TB each "
         "round's edge relation only shrinks, and the peel would run "
@@ -1715,12 +1714,8 @@ def _kcore_ctes(k: int, rounds: int) -> str:
 def k_core_membership(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("k"),
-                  F.col("l_partkey").alias("u"))
-    b = li.select(F.col("l_orderkey").alias("k"),
-                  F.col("l_partkey").alias("v"))
-    edges = (a.join(b, "k").filter(F.col("u") < F.col("v"))
-             .select("u", "v").distinct())
+    edges = leased_copurchase_edges(lazy_cache, sf_dir, li, "u", "v",
+                                    ordered=True)
     # each round references the edge relation three times (two degree
     # legs + the prune join): without a lineage break the logical plan
     # grows 3^rounds and the optimizer, not the data, becomes the
@@ -1801,47 +1796,45 @@ def _temporal_reach_oracle() -> str:
         "earliest order day the pair co-appeared (days since epoch, "
         "exact BIGINT); earliest-arrival is a min-fold, so the "
         "iteration is bit-deterministic and the oracle unrolls the "
-        "same hops. Scale shape identical to sssp_copurchase: dated "
-        "edge list built once and persisted (released once the last "
-        "hop's checkpoint materializes — VERDICT r9 ask #3), per-hop "
-        "work is one edges-to-frontier join + node-sized min "
-        "aggregations, arrival state never exceeds one row per node",
+        "same hops. Scale shape identical to sssp_copurchase: the "
+        "dated edge list is one eager cache, each hop is one "
+        "functions/graph.superstep (the d >= arrival predicate "
+        "inside its min) + a node-sized min union, each union but "
+        "the last is held because the next hop reads it twice, and "
+        "run_scoped releases every cache when the result "
+        "materializes; arrival state never exceeds one row per node",
+    plan_fn=lambda spark, sf_dir, cache: _temporal_reach_plan(
+        spark, sf_dir, cache),
 )
 def temporal_reachability_copurchase(spark, sf_dir):
+    return run_scoped(spark, sf_dir, _temporal_reach_plan)
+
+
+def _temporal_reach_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
     odays = table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("l_orderkey"),
         (F.unix_micros("o_orderdate") / 86400000000).cast("bigint")
         .alias("d"))
-    # one-scan dated edge build (VERDICT r7 ask #3): the shared
-    # collect_set+explode shape with the order day attached at ORDER
-    # grain after the aggregation, so lineitem is scanned once and
-    # the orders join touches one row per order, not per lineitem.
-    # Under an open SharedScope the build is LEASED instead (VERDICT
-    # r11 ask #4 — link_prediction_holdout_eval needs the identical
-    # relation); unscoped, the query-local persist is unchanged.
-    tedges, owned = leased_dated_copurchase_edges(sf_dir, li, odays,
-                                                  "x", "y")
-    if owned:
-        tedges = tedges.persist()
-    arr = tedges.sparkSession.createDataFrame(
-        [(_BFS_SRC, 0)], "node long, arr long")
-    for _ in range(_TR_HOPS):
-        nxt = (arr.join(tedges, (arr["node"] == tedges["x"])
-                        & (tedges["d"] >= arr["arr"]))
-               .groupBy(F.col("y").alias("n2"))
-               .agg(F.min("d").alias("arr2")))
-        arr = (arr.unionByName(nxt.select(F.col("n2").alias("node"),
-                                          F.col("arr2").alias("arr")))
-               .groupBy("node").agg(F.min("arr").alias("arr"))
-               .localCheckpoint(eager=True))
-    # the last hop's eager checkpoint holds the full arrival state;
-    # nothing downstream re-reads the edge list (VERDICT r9 ask #3).
-    # A scope-leased edge cache belongs to the scope, which knows
-    # when ALL its consumers are done.
-    if owned:
-        tedges.unpersist()
+    # one-scan dated edge build: the shared collect_set+explode shape
+    # with the order day attached at ORDER grain after the
+    # aggregation, so lineitem is scanned once and the orders join
+    # touches one row per order, not per lineitem
+    tedges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst",
+                                     attrs=odays)
+    arr = spark.createDataFrame([(_BFS_SRC, 0)], "node long, arr long")
+    for hop in range(_TR_HOPS):
+        # an edge is usable only on or after the arrival day: the
+        # predicate lives in the aggregate, and a node reached only by
+        # edges that happened too early gets a null and drops out
+        usable = F.when(F.col("d") >= F.col("arr"), F.col("d"))
+        nxt = (GR.superstep(arr, tedges, F.min(usable).alias("arr"))
+               .filter(F.col("arr").isNotNull()))
+        arr = (arr.unionByName(nxt)
+               .groupBy("node").agg(F.min("arr").alias("arr")))
+        # the next hop reads arr twice (its superstep and its union)
+        arr = cache(arr) if hop < _TR_HOPS - 1 else arr
     return (arr.filter(F.col("node") != _BFS_SRC)
             .select(F.col("node").alias("part_key"),
                     F.col("arr").alias("arrival_day"))

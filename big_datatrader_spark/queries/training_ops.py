@@ -23,10 +23,8 @@ from ..functions import graph as GR
 from ..operators.exact import idiv, ratio_round6, signed_ratio_round6
 from ..session import _cpus
 from ..sources.parquet_source import table
-from . import (active_scope, copurchase_edges_key as _edges_key,
-               lazy_cache, leased_copurchase_edges,
-               leased_dated_copurchase_edges, leased_doc_tokens,
-               query, run_scoped, shared_or)
+from . import (lazy_cache, leased_copurchase_edges, leased_doc_tokens,
+               query, run_scoped)
 
 _R = 6
 
@@ -1003,43 +1001,37 @@ def _pagerank_oracle() -> str:
     """)
 
 
+def _pr_push(pr, outdeg, edges):
+    """One PageRank push shared by the global and personalized loops:
+    every scored node sends pr_mu DIV out-degree along its out-edges,
+    summed per receiving node -> (node, s). The degree attaches to
+    the node-sized scores BEFORE the edge join (AQE broadcasts the
+    small side), so no edge-scale edges ⋈ outdeg relation exists."""
+    return GR.superstep(
+        pr.join(outdeg, pr["node"] == outdeg["src"])
+        .select("node", F.expr("pr_mu DIV deg").alias("c")),
+        edges, F.sum("c").alias("s"))
+
+
 def _pagerank_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    # passthrough lease: today's plan consumes the raw edge list
-    # lazily under the ewd cache; inside a SharedScope the scope's
-    # cached copy replaces the build subtree
-    edges = shared_or(cache, _edges_key(sf_dir),
-                      GR.copurchase_pairs(li, "src", "dst"),
-                      passthrough=True)
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # the graph is reused by every iteration: cache it once instead
-    # of re-deriving the edge-build subtree per iteration (without
-    # this the 3-iteration plan re-runs the one-scan edge build 4x —
-    # measured 45 exchanges vs 17 on the join-era build; at scale,
-    # caching the edge list IS the distributed-PageRank cost model).
-    # eager=True: the build runs once under its own plan, so its
-    # cost, content and partitioning are deterministic before the nn
-    # broadcast subtrees and iteration stages consume it
-    # (tools/ab_specs/cache_race.py quantifies the variants).
-    ewd = cache(edges.join(outdeg, "src"), eager=True)  # src,dst,deg
-    # node set from the CACHED relation (every edge src has a degree
-    # row, so ewd's src domain == edges' src domain) — deriving it
-    # from raw edges would re-run the one-scan build a second time
-    nodes = cache(ewd.select(F.col("src").alias("node")).distinct())
+    # the personalized_pagerank shape (see _pr_push); the node set is
+    # outdeg's keys, since every node has an out-edge
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
+    outdeg = cache(edges.groupBy("src")
+                   .agg(F.count(F.lit(1)).alias("deg")))
+    nodes = outdeg.select(F.col("src").alias("node"))
     nn = nodes.agg(F.count(F.lit(1)).alias("n"))
 
     pr = (nodes.join(F.broadcast(nn))
           .select("node", F.round(F.lit(1e9) / F.col("n"))
                   .cast("bigint").alias("pr_mu")))
     for _ in range(_PR_ITERS):
-        contrib = (
-            pr.join(ewd, pr["node"] == ewd["src"])
-            .select("dst", F.expr("pr_mu DIV deg").alias("c"))
-            .groupBy("dst").agg(F.sum("c").alias("s")))
+        contrib = _pr_push(pr, outdeg, edges)
         pr = (
             nodes.join(F.broadcast(nn))
-            .join(contrib, F.col("node") == F.col("dst"), "left")
+            .join(contrib, "node", "left")
             .select(
                 "node",
                 (F.round(F.lit(0.15) * 1e9 / F.col("n")).cast("bigint")
@@ -1065,9 +1057,11 @@ def _pagerank_plan(spark, sf_dir, cache=lazy_cache):
         "scale: scores are node-sized (tiny vs edges), edges partition "
         "by src and the per-iteration shuffle is the groupBy(dst) — "
         "the standard distributed PageRank cost model. Cache "
-        "lifecycle (VERDICT r9 ask #3): the edge+deg list is "
-        "persisted eagerly ONCE, the top-100 result is materialized, "
-        "and every cache is released before returning (run_scoped)",
+        "lifecycle: the edge list is persisted eagerly ONCE with a "
+        "node-sized out-degree beside it, each iteration is one "
+        "functions/graph.superstep, the top-100 result is "
+        "materialized, and every cache is released before returning "
+        "(run_scoped)",
 )
 def pagerank_copurchase(spark, sf_dir):
     return run_scoped(spark, sf_dir, _pagerank_plan)
@@ -1141,15 +1135,16 @@ def _ppr_oracle() -> str:
         "result instead of left-joining the full node list. Same "
         "exact-integer algebra as pagerank (1e-9-unit mass, floor-div "
         "contributions, truncated 85% damping), so every engine and "
-        "partition layout agrees bit-for-bit. Cache lifecycle "
-        "(VERDICT r9 ask #3): the edge+deg relation is persisted "
-        "eagerly ONCE (deterministic build under its own plan — "
-        "tools/ab_specs/cache_race.py quantifies the cache variants), "
-        "the seed set derives from that cache instead of re-running "
-        "the edge build for its broadcast job, and both are released "
-        "after the top-100 result materializes (run_scoped + "
-        "finally-unpersist, the golden_record_survivorship "
-        "pattern)",
+        "partition layout agrees bit-for-bit. Cache lifecycle: the "
+        "edge list is persisted eagerly ONCE (deterministic build "
+        "under its own plan — tools/ab_specs/cache_race.py "
+        "quantifies the cache variants) beside a node-sized "
+        "out-degree, the seed set derives from that cache instead of "
+        "re-running the edge build for its broadcast job, each "
+        "iteration is one functions/graph.superstep whose node-sized "
+        "scores are not held (the graph hold rule: read once), and "
+        "run_scoped releases every cache when the top-100 result has "
+        "materialized",
     plan_fn=lambda spark, sf_dir, cache: _ppr_plan(spark, sf_dir, cache),
 )
 def personalized_pagerank(spark, sf_dir):
@@ -1159,21 +1154,7 @@ def personalized_pagerank(spark, sf_dir):
 def _ppr_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    # r14 replan (guide §2.4 "remove shuffles outright"): the previous
-    # plan materialized a query-PRIVATE ewd = edges ⋈ outdeg cache
-    # (2.4M x 3-col rows at sf0.1) on top of the edge build. The
-    # degree lookup is node-sized, so cache the plain edge list (the
-    # graph family's shared lease key — under a SharedScope this query
-    # now materializes NOTHING edge-scale itself) plus a node-sized
-    # outdeg, and attach deg to the frontier BEFORE the edge join:
-    # pr ⋈ outdeg is frontier x node-sized (AQE broadcasts the small
-    # side at runtime — scale-adaptive, no forced node-sized hint),
-    # and the edge join streams the cached edge list against the tiny
-    # (node, c) frontier exactly as it streamed ewd before. Same
-    # rows, same arithmetic; the ewd join+persist materialization is
-    # gone.
-    edges = shared_or(cache, _edges_key(sf_dir),
-                      GR.copurchase_pairs(li, "src", "dst"))
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
     outdeg = cache(edges.groupBy("src")
                    .agg(F.count(F.lit(1)).alias("deg")))
     # seed set from the CACHED relation: deriving it from raw edges
@@ -1186,20 +1167,14 @@ def _ppr_plan(spark, sf_dir, cache=lazy_cache):
         "node",
         F.lit(round(1e9 / _PPR_SEEDS)).cast("bigint").alias("pr_mu"))
     for _ in range(_PPR_ITERS):
-        frontier = (pr.join(outdeg, pr["node"] == outdeg["src"])
-                    .select("node",
-                            F.expr("pr_mu DIV deg").alias("c")))
-        contrib = (
-            frontier.join(edges, frontier["node"] == edges["src"])
-            .select("dst", "c")
-            .groupBy("dst").agg(F.sum("c").alias("s")))
+        contrib = _pr_push(pr, outdeg, edges)
         is_seed = F.col("seed_node").isNotNull()
         pr = (
             contrib.join(
                 F.broadcast(seeds.select(F.col("node")
                                          .alias("seed_node"))),
-                contrib["dst"] == F.col("seed_node"), "left")
-            .select(F.col("dst").alias("node"),
+                contrib["node"] == F.col("seed_node"), "left")
+            .select("node",
                     (F.when(is_seed, restart).otherwise(F.lit(0))
                      + F.expr("(85 * s) DIV 100")).alias("pr_mu")))
     return (pr.select(F.col("node").alias("part_key"), "pr_mu")
@@ -1265,15 +1240,15 @@ def label_propagation_communities(spark, sf_dir):
 def _lpa_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    edges = shared_or(cache, _edges_key(sf_dir),
-                      GR.copurchase_pairs(li, "src", "dst"))
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
     lbl = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl"))
     w = Window.partitionBy("node").orderBy(F.desc("nv"), "lbl")
     for _ in range(_LP_ITERS):
-        votes = (edges.join(lbl, edges["dst"] == lbl["node"])
-                 .groupBy(edges["src"].alias("node"), "lbl")
-                 .agg(F.count(F.lit(1)).cast("long").alias("nv")))
+        # a label sent along out-edges is the neighbours' vote
+        votes = GR.superstep(lbl, edges,
+                             F.count(F.lit(1)).cast("long").alias("nv"),
+                             by=("lbl",))
         lbl = (votes.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") == 1).select("node", "lbl"))
     return (lbl.select(F.col("node").alias("part_key"),
@@ -3209,6 +3184,7 @@ _HITS_ITERS = 2
 # at sf0.1, so the loop keeps AQE off and scales by width instead).
 _HITS_ITER_PARTITIONS = 8
 _HITS_BYTES_PER_TASK = 16 << 20
+_HITS_SCHEMA = "part_key long, authority_e6 long, hub_e6 long"
 
 
 def _hits_iter_width(edges) -> int:
@@ -3217,8 +3193,8 @@ def _hits_iter_width(edges) -> int:
     costs no job. Clamped below by the sf0.1-calibrated floor and
     above by the session's core budget.
 
-    Precondition: ``edges`` must already be materialized (both shipped
-    call sites count it first). On a cache no action has filled yet,
+    Precondition: ``edges`` must already be materialized (the edge
+    lease counts it). On a cache no action has filled yet,
     the plan stats are the optimizer's pre-cache size estimate, not
     the cached bytes."""
     try:
@@ -3227,34 +3203,28 @@ def _hits_iter_width(edges) -> int:
     except Exception:  # stats unavailable -> keep the floor
         size = 0
     return max(_HITS_ITER_PARTITIONS,
-               min(_cpus(), size // _HITS_BYTES_PER_TASK))
+               min(_cpus(edges.sparkSession),
+                   size // _HITS_BYTES_PER_TASK))
 
 
-def _hits_top50(spark, edges, overrides: dict) -> list:
+def _hits_top50(spark, edges, cache, overrides: dict) -> list:
     """The HITS iteration over a materialized (src, dst) edge relation:
     seed every source node at 1e6, run _HITS_ITERS authority/hub
-    half-steps with ``overrides`` applied to the session confs, and
-    collect the top-50 rows. The confs are restored and every score
-    cache is released before returning; the edge relation is the
-    caller's to release."""
+    half-steps (each one functions/graph.superstep) with ``overrides``
+    applied to the session confs, and collect the top-50 rows. Each
+    half-step's raw scores are held through ``cache`` — the loop
+    collects their max and the next half-step reads them again — so up to
+    2 * _HITS_ITERS node-sized score relations stay live until the
+    caller's run_scoped releases them. The confs are restored before
+    returning; the override covers the top-50 collect."""
     nodes = edges.select(F.col("src").alias("node")).distinct()
     h = nodes.select("node", F.lit(1000000).cast("bigint").alias("h"))
 
-    live = []  # persisted half-steps not yet released
-
     def linf_norm(raw, col_in, col_out):
-        # raw is node-sized; persist so the max collect and the next
-        # half-step's join don't re-derive the whole upstream chain
-        # (without this the 4 half-steps recompute the edge join
-        # 2^4 times — measured 30.7s -> 8s at sf0.01). Only the
-        # immediately preceding half-step feeds this one, so release
-        # everything older; the predecessor stays live so no job
-        # recomputes an unpersisted chain.
-        raw = raw.persist()
+        # held: without it the 4 half-steps recompute the edge join
+        # 2^4 times (measured 30.7s -> 8s at sf0.01)
+        raw = cache(raw)
         m = int(raw.agg(F.max(col_in).alias("m")).collect()[0]["m"])
-        while len(live) > 1:
-            live.pop(0).unpersist()
-        live.append(raw)
         x = F.col(col_in).cast("decimal(38,0)")
         return raw.select(
             "node",
@@ -3262,36 +3232,27 @@ def _hits_top50(spark, edges, overrides: dict) -> list:
              / F.lit(m)).cast("bigint").alias(col_out))
 
     saved = {k: spark.conf.get(k) for k in overrides}
-    a = None
     try:
         for k, v in overrides.items():
             spark.conf.set(k, v)
         for _ in range(_HITS_ITERS):
-            a_raw = (h.join(edges, h["node"] == edges["src"])
-                     .groupBy("dst")
-                     .agg(F.sum("h").alias("a_raw"))
-                     .select(F.col("dst").alias("node"), "a_raw"))
-            a = linf_norm(a_raw, "a_raw", "a")
-            h_raw = (a.join(edges, a["node"] == edges["dst"])
-                     .groupBy("src")
-                     .agg(F.sum("a").alias("h_raw"))
-                     .select(F.col("src").alias("node"), "h_raw"))
-            h = linf_norm(h_raw, "h_raw", "h")
-        out = (a.join(h, "node")
-               .select(F.col("node").alias("part_key"),
-                       F.col("a").alias("authority_e6"),
-                       F.col("h").alias("hub_e6"))
-               .orderBy(F.desc("authority_e6"), F.desc("hub_e6"),
-                        "part_key")
-               .limit(50))
-        # top-50 is KB driver state: collect (TakeOrderedAndProject
-        # runs here), then release every score cache deterministically
-        return out.collect()
+            # hub = authorities of the out-neighbours: in the
+            # symmetric graph, the same forward superstep
+            a = linf_norm(GR.superstep(h, edges, F.sum("h").alias("a_raw")),
+                          "a_raw", "a")
+            h = linf_norm(GR.superstep(a, edges, F.sum("a").alias("h_raw")),
+                          "h_raw", "h")
+        # the top-50 is KB: collected, TakeOrderedAndProject runs here
+        return (a.join(h, "node")
+                .select(F.col("node").alias("part_key"),
+                        F.col("a").alias("authority_e6"),
+                        F.col("h").alias("hub_e6"))
+                .orderBy(F.desc("authority_e6"), F.desc("hub_e6"),
+                         "part_key")
+                .limit(50).collect())
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-        for df in live:
-            df.unpersist()
 
 
 def _hits_oracle() -> str:
@@ -3357,12 +3318,14 @@ def _hits_oracle() -> str:
         "collected driver state (the codebook precedent — building "
         "it lazily as a broadcast cross join instead duplicates the "
         "upstream plan per half-step, an exponentially-sized analyzed "
-        "tree that OOMed an 8g driver). Cache lifecycle (VERDICT r5 "
-        "ask #4 / r6 ask #4): each half-step persists node-sized "
-        "scores, is materialized by its max collect, and every "
-        "half-step older than the immediate predecessor is released "
-        "as the loop advances — the GraphX/Pregel rotation, <= 2 "
-        "score relations live at any moment instead of 2*iters. "
+        "tree that ran an 8g heap out of memory). Each half-step is one "
+        "functions/graph.superstep (the hub half-step runs forward "
+        "too: the co-purchase relation is its own transpose). Cache "
+        "lifecycle (run_scoped, the graph hold rule): the edge list "
+        "is one eager serialized cache, and each half-step's "
+        "node-sized raw scores are held because the loop collects "
+        "their max and the next half-step reads them again — up to "
+        "2*iters score relations stay live until the query returns. "
         "Sums are bigint (score <= 1e6 so overflow needs in-degree "
         "> 9.2e12 — more edges on one node than a 100 TB corpus "
         "holds); only the node-sized x1e6 rescale is decimal. The "
@@ -3375,65 +3338,27 @@ def _hits_oracle() -> str:
         "the cores (interleaved A/B: 10.84 -> ~10.4s; AQE-on loses "
         "at sf0.1, so the loop scales by width instead). The "
         "skew-prone edge BUILD still "
-        "materializes under the session's AQE confs.The top-50 is "
+        "materializes under the session's AQE confs. The top-50 is "
         "TakeOrderedAndProject inside the final driver collect (the "
-        "bpe_learn_merges precedent); all score caches AND the edge "
-        "list are released before returning (VERDICT r9 ask #3: no "
-        "registered query leaves cached relations behind)",
+        "bpe_learn_merges precedent), still under the loop confs; "
+        "run_scoped releases the score caches AND the edge list "
+        "before returning",
 )
 def hits_hub_authority(spark, sf_dir):
-    from pyspark import StorageLevel
+    return run_scoped(spark, sf_dir, _hits_build)
+
+
+def _hits_build(spark, sf_dir, cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    # one-scan edge build (functions/graph.py): 2x faster cold than
-    # the lineitem self-join, identical edge set. SERIALIZED cache
-    # (PySpark's MEMORY_AND_DISK has deserialized=False; the persist()
-    # default is the _DESER level): the edge list is scanned 2*iters
-    # times by the half-step joins, and the smaller columnar blocks
-    # win over per-scan deserialization — measured 4.45s -> 3.61s at
-    # sf0.1, 10.3s -> 9.9s at sf1 (tools/ab_specs/hits.py,
-    # VERDICT r10 ask #2; the lazy-persist and packed-BIGINT variants
-    # measure the same within noise, and lazy would materialize the
-    # skew-prone build under the loop's AQE-off/8-partition confs on
-    # a real cluster, so eager-under-session-confs stays)
-    scope = active_scope()
-    if scope is not None:
-        # SharedScope lease (VERDICT r10 ask #7): the scope owns the
-        # persist and releases it at scope exit — the one lever below
-        # the per-query edge-build floor, now available to a harness
-        # that runs the graph family together
-        edges = scope.get(_edges_key(sf_dir),
-                          GR.copurchase_pairs(li, "src", "dst"))
-        edges_owned = False
-    else:
-        edges = GR.copurchase_pairs(li, "src", "dst").persist(
-            StorageLevel.MEMORY_AND_DISK)
-        # materialize the edge build under the session confs (AQE
-        # handles its skew); the conf override below applies only to
-        # action time, so count() pins the build plan before the
-        # switch. NOTE the r9 bench context for this query (1.83s
-        # sf0.1 / 7.1s sf1) is NOT a reachable target: r9's finally
-        # released only the score caches and LEAKED the edge persist,
-        # so bench.py's samples 2-3 ran against a warm edge cache and
-        # min-of-3 recorded the warm cost; the r10 finally-release
-        # made every sample cold — the "2.3x regression" was the
-        # honest number arriving (SCALING.md r11)
-        edges.count()
-        edges_owned = True
-    try:
-        rows = _hits_top50(spark, edges, {
-            "spark.sql.shuffle.partitions": str(_hits_iter_width(edges)),
-            "spark.sql.adaptive.enabled": "false"})
-    finally:
-        # rows are driver state by here — the edge list is no longer
-        # needed by anything this query returns (VERDICT r9 ask #3:
-        # no registered query leaves cached relations behind). A
-        # scope-leased edge cache belongs to the scope, which knows
-        # when ALL its consumers are done.
-        if edges_owned:
-            edges.unpersist()
-    return spark.createDataFrame(
-        rows, "part_key long, authority_e6 long, hub_e6 long")
+    # the lease's eager serialized cache (4.45s -> 3.61s at sf0.1 over
+    # deserialized, tools/ab_specs/hits.py) builds the skew-prone edge
+    # list under the session confs, before the AQE-off override
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
+    rows = _hits_top50(spark, edges, cache, {
+        "spark.sql.shuffle.partitions": str(_hits_iter_width(edges)),
+        "spark.sql.adaptive.enabled": "false"})
+    return spark.createDataFrame(rows, _HITS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -3887,8 +3812,8 @@ def modularity_brand_partition(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
     part = table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    pairs, _ = leased_copurchase_edges(sf_dir, li, "x", "y",
-                                       ordered=True)
+    pairs = leased_copurchase_edges(lazy_cache, sf_dir, li, "x", "y",
+                                    ordered=True)
     px = F.broadcast(part.select(F.col("p_partkey").alias("x"),
                                  F.col("p_brand").alias("bx")))
     py = F.broadcast(part.select(F.col("p_partkey").alias("y"),
@@ -3979,8 +3904,8 @@ def local_clustering_coefficient(spark, sf_dir):
 def _lcc_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    pairs, _ = leased_copurchase_edges(sf_dir, li, "x", "y",
-                                       ordered=True)
+    pairs = leased_copurchase_edges(lazy_cache, sf_dir, li, "x", "y",
+                                    ordered=True)
     deg = cache(pairs.select(F.col("x").alias("node"))
                 .unionAll(pairs.select(F.col("y").alias("node")))
                 .groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
@@ -4516,8 +4441,7 @@ def link_prediction_common_neighbors(spark, sf_dir):
 def _lnk_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
-    edges = shared_or(cache, _edges_key(sf_dir),
-                      GR.copurchase_pairs(li, "src", "dst"))
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     # q stays UNcached here (unlike _lph_plan's five-consumer q): its
     # two consumers share the deg subtree inline, so caching would
@@ -4655,14 +4579,11 @@ def _lph_plan(spark, sf_dir, cache=lazy_cache):
         F.col("o_orderkey").alias("l_orderkey"),
         (F.unix_micros("o_orderdate") / 86400000000).cast("bigint")
         .alias("d"))
-    # dated edge build: leased from the active SharedScope when one
-    # is open (VERDICT r11 ask #4 — temporal_reachability_copurchase
-    # rebuilds the identical relation); unscoped, the query-local
-    # eager cache below is bit-identical to the pre-lease plan
-    dedges, owned = leased_dated_copurchase_edges(sf_dir, li, odays,
-                                                  "src", "dst")
-    if owned:
-        dedges = cache(dedges, eager=True)
+    # dated edge build: the SharedScope lease when one is open
+    # (temporal_reachability_copurchase reads the identical relation),
+    # else the query's own eager cache
+    dedges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst",
+                                     attrs=odays)
     # r15 replan (guide §5 "caching is only worth it when recomputing
     # is more expensive than the memory pressure"; VERDICT r14 ask
     # #3 redirected by the r15 sf1 profile): the eager TRAIN persist
@@ -4815,25 +4736,18 @@ def _gnn_plan(spark, sf_dir, cache=lazy_cache):
         "p_partkey",
         F.round(F.col("p_retailprice") * 100).cast("bigint")
         .alias("h"))
-    edges = shared_or(cache, _edges_key(sf_dir),
-                      GR.copurchase_pairs(li, "src", "dst"))
+    edges = leased_copurchase_edges(cache, sf_dir, li, "src", "dst")
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    # every intermediate feature frame is consumed TWICE (by the next
-    # round and by the output join), so cache each — node-sized
-    # relations, the HITS/PageRank discipline — or the final 3-way
-    # join re-derives the whole propagation chain per branch
+    # each feature frame is read by the next round (its superstep
+    # and its own-value join) and by the output join, so it is held
     feats = [cache(nodes.join(part, nodes["node"] == part["p_partkey"])
                    .select("node", "h"))]
     for r in range(_GNN_ROUNDS):
         cur = feats[-1]
         nxt = (
-            edges
-            .join(cur.withColumnRenamed("node", "src"), "src")
-            .join(cur.select(F.col("node").alias("dst"),
-                             F.col("h").alias("nh")), "dst")
-            .groupBy(F.col("src").alias("node"), "h")
-            .agg(F.sum("nh").alias("s"),
-                 F.count(F.lit(1)).alias("c"))
+            GR.superstep(cur, edges, F.sum("h").alias("s"),
+                         F.count(F.lit(1)).alias("c"))
+            .join(cur, "node")
             .select("node",
                     F.expr("(h + s) DIV (1 + c)").cast("bigint")
                     .alias("h")))

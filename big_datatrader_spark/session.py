@@ -47,8 +47,19 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
-def _cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+def _cpus(spark: SparkSession | None = None) -> int:
+    """The session width: ``$SPARK_GRAFT_CPUS`` when set, else the
+    session's ``defaultParallelism`` (``spark``, or the active session),
+    else — before any session exists — the cores this process may run
+    on. A fixed default would be wrong on every cluster and box it was
+    not tuned on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    spark = spark or SparkSession.getActiveSession()
+    if spark is not None:
+        return spark.sparkContext.defaultParallelism
+    return len(os.sched_getaffinity(0))
 
 
 def scan_floor(df: DataFrame, key: str) -> DataFrame:
@@ -68,7 +79,7 @@ def scan_floor(df: DataFrame, key: str) -> DataFrame:
         n_splits = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if 2 * n_splits <= _cpus():
+    if 2 * n_splits <= _cpus(df.sparkSession):
         return df.repartition(F.col(key))
     return df
 
@@ -79,7 +90,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     # 200 (AQE coalesces down, but the driver-provided session would
     # otherwise schedule 200 tasks per exchange on a 32-core box).
     confs = {**RUNTIME_CONFS,
-             "spark.sql.shuffle.partitions": str(_cpus())}
+             "spark.sql.shuffle.partitions": str(_cpus(spark))}
     for k, v in confs.items():
         try:
             if spark.conf.get(k, None) != v:

@@ -23,8 +23,8 @@ Two assertions per query, after its consumer action completes:
    back runs of a scoped query hold live checkpoint RDDs at 4-6, not
    15, so a long-lived driver session reaches a small steady state
    rather than accumulating one per query). Iterative checkpoint-CHAIN queries
-   (sssp/k-core/CC/temporal-reachability) keep per-round lineage
-   truncations live, bounded by their hop/round constants — each gets
+   (k-core/CC) keep per-round lineage
+   truncations live, bounded by their round constants — each gets
    an explicit bound instead of the default.
 
 Streaming queries are excluded (their state lives in the state store,
@@ -54,7 +54,7 @@ _PERSISTING = [
     "mad_robust_outliers",            # value-domain count, 5 branches
     "quantile_normalization",         # value-domain count, 3 branches
     "bpe_learn_merges",               # initial vocabulary (released)
-    "hits_hub_authority",             # rotated half-steps (released)
+    "hits_hub_authority",             # held half-steps (released)
     "join_cardinality_profile",       # key-grain stats (released r9)
     "max_concurrent_sessions",        # iv + run (released r9)
     "link_prediction_common_neighbors",  # edge list
@@ -62,8 +62,8 @@ _PERSISTING = [
     "kmeans_lloyd_refinement",        # exploded (row, dim) relation
     "golden_record_survivorship",     # fingerprinted attr relation
     "edit1_pair_blowup_audit",        # name-multiplicity relation
-    "temporal_reachability_copurchase",  # dated edges + hop chain
-    "sssp_copurchase",                # frontier checkpoint chain
+    "temporal_reachability_copurchase",  # dated edges + held hops
+    "sssp_copurchase",                # edges + held frontiers
     "k_core_membership",              # peel checkpoint chain
     "dedup_clusters",                 # CC label checkpoint chain
 ]
@@ -72,18 +72,18 @@ _BENCH = sorted(n for n, q in REG.items() if q.bench
 
 # allowed live-RDD delta: default 2 (result checkpoint + one batch
 # artifact); checkpoint-chain queries keep per-round truncations live,
-# bounded by their hop/round constants (edges + nxt/dist per hop for
-# sssp; edges + rounds for k-core; edges + converged label rounds for
-# CC at this sf; hops + result for temporal reachability)
+# bounded by their round constants (edges + rounds for k-core; edges +
+# converged label rounds for CC at this sf)
 _ALLOWED = {
-    "sssp_copurchase": 12,
     "k_core_membership": 14,
     "dedup_clusters": 30,
-    "temporal_reachability_copurchase": 5,
 }
-# the r10 scoped-cache queries release EVERYTHING except their own
-# eager result checkpoint — exactly one live RDD
+# the scoped-cache queries release EVERYTHING except their own eager
+# result checkpoint — exactly one live RDD (the graph loops hold their
+# state through run_scoped's cache and checkpoint nothing per round)
 _SCOPED = {
+    "sssp_copurchase", "temporal_reachability_copurchase",
+    "hits_hub_authority",
     "corpus_dedup_pipeline", "triangle_count_copurchase",
     "local_clustering_coefficient", "pagerank_copurchase",
     "personalized_pagerank", "label_propagation_communities",

@@ -697,7 +697,9 @@ def test_round8_exchange_budgets(spark, sf001):
         # dropped the anti-join's right side from the full edge list
         # to the query nodes' out-neighborhoods
         "link_prediction_common_neighbors": 6,
-        "gnn_feature_propagation": 10,
+        # r16: 10 -> 8 — each round joins the edge list once (one
+        # superstep) and its own h back on the node-sized side
+        "gnn_feature_propagation": 8,
         "universe_sample_join": 3,
         "kmeans_lloyd_refinement": 4,
     }
@@ -777,7 +779,9 @@ def test_round10_exchange_budgets(spark, sf001):
     budgets = {
         "edit1_pair_blowup_audit": 4,    # name-grain agg, key join,
                                          # deletion-key self-join
-        "pagerank_copurchase": 16,       # edge build + 3 iterations
+        # edge build, node-sized outdeg, 3 supersteps (r16: 16 -> 13,
+        # the edge-scale edges ⋈ outdeg cache and its distinct gone)
+        "pagerank_copurchase": 13,
         "triangle_count_copurchase": 43,
         "corpus_dedup_pipeline": 14,
         "label_propagation_communities": 10,
@@ -804,6 +808,9 @@ def test_round12_exchange_budgets(spark, sf001):
     candidate-grain, never Y x Y."""
     budgets = {
         "csls_margin_pair_mining": 11,
+        # dated edge build + per hop: the superstep's join and group
+        # by dst, the union's min per node
+        "temporal_reachability_copurchase": 9,
     }
     for name, budget in budgets.items():
         n = num_exchanges(_plan_df(name, spark, sf001))

@@ -30,3 +30,19 @@ def test_scan_floor_leaves_a_wide_scan_unchanged(spark, tmp_path):
     assert df.rdd.getNumPartitions() >= _cpus()
     assert scan_floor(df, "k") is df
     assert not _has_hash_exchange(df)
+
+
+def test_session_width_defaults_to_the_session(spark, tmp_path,
+                                               monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the width is the session's own
+    defaultParallelism, not a fixed guess: a scan with that many
+    splits already feeds every core, so scan_floor leaves it alone."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    width = spark.sparkContext.defaultParallelism
+    assert _cpus(spark) == width
+    path = str(tmp_path / "session_wide")
+    spark.range(0, 1000, numPartitions=width) \
+        .selectExpr("id % 7 AS k", "id AS v").write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() >= width
+    assert scan_floor(df, "k") is df

@@ -28,12 +28,11 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from big_datatrader_spark.functions import graph as GR
+from big_datatrader_spark.queries import run_scoped
 from big_datatrader_spark.queries.training_ops import (
-    _hits_iter_width, _hits_top50, hits_hub_authority)
+    _HITS_SCHEMA, _hits_iter_width, _hits_top50, hits_hub_authority)
 from big_datatrader_spark.session import _cpus
 from big_datatrader_spark.sources.parquet_source import table
-
-_SCHEMA = "part_key long, authority_e6 long, hub_e6 long"
 
 
 def _aqe_off(width):
@@ -43,28 +42,32 @@ def _aqe_off(width):
 
 def _hits(spark, sf_dir, *, level=StorageLevel.MEMORY_AND_DISK,
           eager=True, packed=False, overrides=None):
-    li = table(spark, sf_dir, "lineitem").select("l_orderkey",
-                                                 "l_partkey")
-    edges = GR.copurchase_pairs(li, "src", "dst")
-    if packed:
-        edges = edges.select((F.col("src").cast("bigint")
-                              * F.lit(1 << 32) + F.col("dst")).alias("e"))
-    cache = edges.persist(level)
-    try:
-        if eager:
-            cache.count()
+    def build(spark, sf_dir, cache):
+        li = table(spark, sf_dir, "lineitem").select("l_orderkey",
+                                                     "l_partkey")
+        edges = GR.copurchase_pairs(li, "src", "dst")
         if packed:
-            edges = cache.select(
-                F.shiftright("e", 32).alias("src"),
-                F.col("e").bitwiseAND(F.lit((1 << 32) - 1)).alias("dst"))
-        else:
-            edges = cache
-        if overrides is None:
-            overrides = _aqe_off(_hits_iter_width(cache))
-        rows = _hits_top50(spark, edges, overrides)
-    finally:
-        cache.unpersist()
-    return spark.createDataFrame(rows, _SCHEMA)
+            edges = edges.select((F.col("src").cast("bigint")
+                                  * F.lit(1 << 32) + F.col("dst"))
+                                 .alias("e"))
+        held = edges.persist(level)
+        try:
+            if eager:
+                held.count()
+            if packed:
+                edges = held.select(
+                    F.shiftright("e", 32).alias("src"),
+                    F.col("e").bitwiseAND(F.lit((1 << 32) - 1))
+                    .alias("dst"))
+            else:
+                edges = held
+            rows = _hits_top50(spark, edges, cache,
+                               _aqe_off(_hits_iter_width(held))
+                               if overrides is None else overrides)
+        finally:
+            held.unpersist()
+        return spark.createDataFrame(rows, _HITS_SCHEMA)
+    return run_scoped(spark, sf_dir, build)
 
 
 VARIANTS = [

@@ -41,7 +41,6 @@ Spec catalogue (tools/ab_specs/):
     cache_race.py           multi-branch consumer: no / lazy / eager persist
     skew_rescue.py          hot-key join: AQE skew-join vs salting (synthetic)
     lph_build_variants.py   link_prediction_holdout_eval dated edge build
-    ppr_checkpoint.py       personalized_pagerank per-iteration capping
     presort_persist_six.py  persist-before-sort conversions, old vs new
 """
 
