@@ -14,8 +14,11 @@ Conventions (SURVEY.md §7.4):
 
 from __future__ import annotations
 
+import atexit
 import json
 import re
+import shutil
+import tempfile
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Callable
@@ -26,18 +29,17 @@ from pyspark.sql import DataFrame, SparkSession
 
 @dataclass
 class Query:
+    """A registered query: spark_fn is what __spark_entry__.py runs, oracle its
+    DuckDB twin. plan_fn is set only for a @query(scoped=True) query: it
+    is the builder spark_fn runs through run_scoped, and the plan audits
+    run it under an audit handle (plan_of) to see the lazy
+    pre-checkpoint plan instead of the result's Scan ExistingRDD."""
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => driver runs the weaker rows-only check
     doc: str = ""
     bench: bool = False  # included in bench.py headline suite
     tags: tuple = field(default_factory=tuple)
-    # Pre-materialization plan builder for queries whose spark_fn
-    # returns an eagerly-checkpointed result (the scoped-cache
-    # pattern): plan tests assert exchange budgets / scale-killer
-    # rules on THIS lazy plan — asserting on spark_fn would see only
-    # a Scan ExistingRDD (VERDICT r9 ADVICE #1, the vacuous-budget
-    # finding). None => spark_fn itself returns the lazy plan.
     plan_fn: Callable[..., DataFrame] | None = None  # (spark, sf_dir, cache)
 
 
@@ -45,87 +47,138 @@ REGISTRY: dict[str, Query] = {}
 
 
 def query(name: str, oracle: str | None, *, doc: str = "",
-          bench: bool = False, tags: tuple = (),
-          plan_fn=None):  # decorator
+          bench: bool = False, tags: tuple = (), scoped: bool = False):
+    """Register the decorated function as query ``name``.
+
+    Plain: the function is the spark_fn ``(spark, sf_dir) -> DataFrame``.
+    ``scoped=True``: the function is a builder ``(spark, sf_dir, cache)``
+    that returns the query's lazy plan, holding what it reads twice
+    through ``cache(df)`` and writing any sink into ``cache.stage(..)``.
+    The registry derives spark_fn = run_scoped over the builder (result
+    checkpointed, every hold released) and plan_fn = the builder, so a
+    materializing query is registered once and audited as the plan it
+    runs. The decorator returns the function unchanged."""
     def wrap(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        REGISTRY[name] = Query(name, fn, oracle, doc=doc, bench=bench,
-                               tags=tags, plan_fn=plan_fn)
+        q = Query(name, fn, oracle, doc=doc, bench=bench, tags=tags)
+        if scoped:
+            def spark_fn(spark, sf_dir):
+                return run_scoped(spark, sf_dir, fn)
+            spark_fn.__name__ = spark_fn.__qualname__ = name
+            q.spark_fn, q.plan_fn = spark_fn, fn
+        REGISTRY[name] = q
         return fn
     return wrap
 
 
 def plan_of(q: Query, spark: SparkSession, sf_dir: str,
             cache=None) -> DataFrame:
-    """The lazy plan to audit for a query: plan_fn when the registered
-    fn materializes eagerly, else the registered fn's own return.
+    """The lazy plan to audit for a query: a scoped query's builder run
+    under an audit handle, else the registered fn's own return (which
+    runs the query in full when it collects on the driver — the
+    `_OPAQUE` set in tests/test_plans.py names those).
 
-    ``cache`` picks the audit mode for plan_fn builders:
+    ``cache`` picks the audit handle for scoped builders:
     - None/lazy_cache (default): identity — the FULL unpersisted tree,
       every subtree visible (the scale-killer sweep needs to see
       inside what the runtime would cache);
-    - a persisting cache (tests/test_plans.py exchange budgets): the
-      executed shape, multi-consumer subtrees collapsed to
-      InMemoryRelation exactly as run_scoped runs them — budgets stay
-      calibrated to real shuffle work, not static duplication. The
-      caller owns cleanup (spark.catalog.clearCache())."""
+    - persisting_cache (exchange budgets, tools/dump_plans.py
+      --executed): the executed shape, multi-consumer subtrees
+      collapsed to InMemoryRelation as run_scoped runs them — budgets
+      stay calibrated to real shuffle work, not static duplication.
+      The caller owns cleanup (spark.catalog.clearCache()).
+    Either handle writes a staged builder's sink for real and keeps it
+    until the interpreter exits, so the returned plan stays readable."""
     if q.plan_fn is None:
         return q.spark_fn(spark, sf_dir)
     return q.plan_fn(spark, sf_dir, cache or lazy_cache)
 
 
+class Hold:
+    """The ``cache`` handle a scoped builder receives.
+
+    ``hold(df, eager=False)`` holds a relation that several branches
+    (or the driver) read; ``hold.stage(prefix)`` returns a fresh temp
+    dir for a sink the builder writes and re-reads. run_scoped's handle
+    persists at MEMORY_AND_DISK (``eager=True`` also counts the
+    relation at once) and its release() unpersists every hold and
+    deletes every staged dir. The two audit handles below never
+    materialize a hold, and keep their staged dirs until the
+    interpreter exits, because the plan they return still reads them."""
+
+    def __init__(self, level: StorageLevel | None = None, *,
+                 scoped: bool = False):
+        self._level, self._scoped = level, scoped
+        self._held: list[DataFrame] = []
+        self._staged: list[str] = []
+
+    def __call__(self, df: DataFrame, eager: bool = False) -> DataFrame:
+        if self._level is None:
+            return df
+        df = df.persist(self._level)
+        if self._scoped:
+            self._held.append(df)
+            if eager:
+                df.count()
+        return df
+
+    def stage(self, prefix: str) -> str:
+        path = tempfile.mkdtemp(prefix=prefix)
+        if self._scoped:
+            self._staged.append(path)
+        else:
+            atexit.register(shutil.rmtree, path, ignore_errors=True)
+        return path
+
+    def release(self) -> None:
+        for df in self._held:
+            df.unpersist()
+        for path in self._staged:
+            shutil.rmtree(path, ignore_errors=True)
+
+
 def run_scoped(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     """Scoped-cache query execution (VERDICT r9 ask #3, generalizing
     the golden_record_survivorship pattern): ``build(spark, sf_dir,
-    cache)`` constructs the lazy plan, routing every relation that
-    multiple branches consume through ``cache(df, eager=False)``. The
-    result is materialized eagerly (localCheckpoint — bounded rows by
-    query design), then EVERY cache is released in finally, so no
-    registered query leaves persisted relations behind in a long-lived
-    session (tests/test_cache_lifecycle.py asserts it). Every cache
-    persists at MEMORY_AND_DISK (serialized), the level SharedScope
-    leases use, so a relation is held the same way with or without a
-    scope open.
+    cache)`` constructs the lazy plan with a fresh scoped Hold as
+    ``cache``, routing every relation that multiple branches consume
+    through ``cache(df, eager=False)`` and every sink through
+    ``cache.stage(prefix)``. The result is materialized eagerly
+    (localCheckpoint — bounded rows by query design), then EVERY hold
+    is released and every staged dir deleted in finally, so no
+    registered query leaves persisted relations or files behind in a
+    long-lived session (tests/test_cache_lifecycle.py asserts both).
+    Every hold persists at MEMORY_AND_DISK (serialized), the level
+    SharedScope leases use, so a relation is held the same way with or
+    without a scope open.
 
-    ``eager=True`` additionally materializes the cache with a count()
-    before any consumer runs, making the cache's content, partitioning
-    and cost DETERMINISTIC — one build under its own AQE context
-    instead of interleaved with the consumers' stages and memory
-    pressure. (tests/test_cache_lifecycle.py counts the lineage runs:
-    a no-cache multi-branch plan pays one full lineage run PER BRANCH,
-    while lazy and eager persists both run it once on Spark 4.1/AQE;
+    ``eager=True`` additionally materializes the hold with a count()
+    before any consumer runs, making its content, partitioning and cost
+    DETERMINISTIC — one build under its own AQE context instead of
+    interleaved with the consumers' stages and memory pressure.
+    (tests/test_cache_lifecycle.py counts the lineage runs: a no-cache
+    multi-branch plan pays one full lineage run PER BRANCH, while lazy
+    and eager persists both run it once on Spark 4.1/AQE;
     tools/ab_specs/cache_race.py times the three. Eager's win over
     lazy is determinism, and it is what took
     link_prediction_holdout_eval from 34.2s to ~16s at sf1 while
     costing ~2s at sf0.1.)
 
-    Plan tests call the same ``build`` through Query.plan_fn — the
-    scale-killer sweep with cache=identity (full tree visible), the
-    exchange budgets with a real persisting cache (executed shape) —
-    so the audited plan is the real pre-checkpoint shape, never a
-    Scan ExistingRDD (VERDICT r9 ADVICE #1; see plan_of)."""
-    caches = []
-
-    def cache(df: DataFrame, eager: bool = False) -> DataFrame:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(df)
-        if eager:
-            df.count()
-        return df
-
+    @query(scoped=True) registers a builder once: this function is its
+    spark_fn, and the builder itself is its plan_fn (see plan_of)."""
+    hold = Hold(StorageLevel.MEMORY_AND_DISK, scoped=True)
     try:
-        return build(spark, sf_dir, cache).localCheckpoint(eager=True)
+        return build(spark, sf_dir, hold).localCheckpoint(eager=True)
     finally:
-        for df in caches:
-            df.unpersist()
+        hold.release()
 
 
-def lazy_cache(df: DataFrame, eager: bool = False) -> DataFrame:
-    """cache= argument for plan-audit mode: identity (no persist, no
-    materialization), so builders stay side-effect-free under
-    Query.plan_fn."""
-    return df
+# cache= handles for plan audits (plan_of): identity (no persist, no
+# materialization) for the full tree, and a persist that is never
+# materialized for the executed shape.
+lazy_cache = Hold()
+persisting_cache = Hold(StorageLevel.MEMORY_AND_DISK_DESER)
 
 
 # ---------------------------------------------------------------------------
@@ -413,7 +466,14 @@ _CHANGED: tuple[str, ...] = (
     "gnn_feature_propagation", "k_core_membership",
     "label_propagation_communities", "pagerank_copurchase",
     "personalized_pagerank", "sssp_copurchase",
-    "temporal_reachability_copurchase")
+    "temporal_reachability_copurchase",
+    # @query(scoped=True): the staged and k-means run paths that moved
+    # most (the window keeps 8 slots for due rows-only pairs, so the
+    # other seven staged queries rotate in by staleness)
+    "compacted_scan_equivalence", "kmeans_lloyd_refinement",
+    "orc_roundtrip_revenue", "scan_pruning_preflight",
+    "streaming_cdc_upsert", "streaming_watermark_late_drop",
+    "zorder_incremental_recluster")
 
 # Each rows-only-by-design query (oracle=None — results DuckDB cannot
 # reproduce bit-for-bit) is paired with a hash-exact companion proving the

@@ -455,12 +455,8 @@ def lang_mixture_rebalance(spark, sf_dir):
         "wedge join and closure are equi-joins (no cross product). "
         "The oriented-edge cache is released after the top-20 result "
         "materializes (run_scoped, VERDICT r9 ask #3)",
-    plan_fn=lambda spark, sf_dir, cache: _tri_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def triangle_count_copurchase(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _tri_plan)
-
-
 def _tri_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -649,12 +645,8 @@ _PIPE_QUAL = f"""
         "aggregate by construction, the one place that shape is "
         "fine). Survivor-set caches are released after the 1-row "
         "funnel summary materializes (run_scoped, VERDICT r9 ask #3)",
-    plan_fn=lambda spark, sf_dir, cache: _cdp_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def corpus_dedup_pipeline(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _cdp_plan)
-
-
 def _cdp_plan(spark, sf_dir, cache=lazy_cache):
     docs = table(spark, sf_dir, "documents")
     per = (
@@ -1284,12 +1276,8 @@ def _edit1_verified_name_pairs(names):
         "records shuffled once; per-key collision groups are bounded "
         "by how many records actually share a deletion — the "
         "blocking guarantee, same discipline as the MinHash bands",
-    plan_fn=lambda spark, sf_dir, cache: _e1_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def edit1_deletion_neighborhood_pairs(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _e1_plan)
-
-
 def _e1_plan(spark, sf_dir, cache=lazy_cache):
     # Replan (round 9, measured): the original id-grain candidate
     # join ran 5.7s at sf0.1 but 497s at sf1 — 87x for 10x data —
@@ -1387,12 +1375,8 @@ def _e1_plan(spark, sf_dir, cache=lazy_cache):
         "applied to the ER family. All name-grain: the heaviest "
         "relation is (len+1) deletion keys per DISTINCT name, "
         "invariant under corpus duplication",
-    plan_fn=lambda spark, sf_dir, cache: _e1audit_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def edit1_pair_blowup_audit(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _e1audit_plan)
-
-
 def _e1audit_plan(spark, sf_dir, cache=lazy_cache):
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"), F.col("c_name").alias("nm"))
@@ -1803,13 +1787,8 @@ def _temporal_reach_oracle() -> str:
         "the last is held because the next hop reads it twice, and "
         "run_scoped releases every cache when the result "
         "materializes; arrival state never exceeds one row per node",
-    plan_fn=lambda spark, sf_dir, cache: _temporal_reach_plan(
-        spark, sf_dir, cache),
+    scoped=True,
 )
-def temporal_reachability_copurchase(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _temporal_reach_plan)
-
-
 def _temporal_reach_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -1923,24 +1902,11 @@ def _kml_oracle() -> str:
         "shuffles carry (vec, cid, dist) triples, never vectors; the "
         f"exploded input is persisted once and reused by all "
         f"{_KML_ITERS + 1} assignment joins, then released once the "
-        "per-cluster result materializes (VERDICT r9 ask #3)",
-    plan_fn=lambda spark, sf_dir, cache: _kml_plan(spark, sf_dir, cache),
+        "per-cluster result materializes (run_scoped)",
+    scoped=True,
 )
-def kmeans_lloyd_refinement(spark, sf_dir):
-    iv = SIM.quantized_components(
-        table(spark, sf_dir, "embeddings")).persist()
-    try:
-        return _kml_body(spark, iv).localCheckpoint(eager=True)
-    finally:
-        iv.unpersist()
-
-
 def _kml_plan(spark, sf_dir, cache=lazy_cache):
-    return _kml_body(spark, cache(SIM.quantized_components(
-        table(spark, sf_dir, "embeddings"))))
-
-
-def _kml_body(spark, iv):
+    iv = cache(SIM.quantized_components(table(spark, sf_dir, "embeddings")))
     # Centroids live on the driver between rounds (k*dim rows, KBs —
     # the MLlib k-means design and this repo's codebook precedent,
     # functions/pq.py): each round's plan references a LITERAL
@@ -2304,13 +2270,8 @@ _SWP_K = 3     # report pairs sharing >= K window positions
         "pair aggregates (doc_a, doc_b[, delta]) are the only "
         "shuffles; nothing is all-pairs. Pairs sharing >= "
         f"{_SWP_K} windows are reported",
-    plan_fn=lambda spark, sf_dir, cache: _swp_plan(spark, sf_dir,
-                                                   cache),
+    scoped=True,
 )
-def suffix_window_pair_dedup(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _swp_plan)
-
-
 def _swp_plan(spark, sf_dir, cache=lazy_cache):
     return _swp_core(table(spark, sf_dir, "documents"), cache)
 

@@ -4,17 +4,17 @@ whose oracle runs on the ORIGINAL table, so the driver's hash equality
 IS the proof that the format round-trip lost nothing (values, nulls,
 timestamps) and that the re-read plan computes the same answer.
 
-Each query stages its sink in a temp dir, materializes the (small)
-aggregated result with an eager localCheckpoint, then removes the
-staging — the sink side-effect never outlives the call and repeated
-driver runs are hermetic.
+Each staged query is a @query(scoped=True) builder: it writes its sink
+under ``cache.stage(prefix)`` and returns the lazy re-read, so the plan
+audits see the real re-read plan. run_scoped materializes the (small)
+aggregated result with an eager localCheckpoint and then deletes the
+staging — the sink never outlives the call and repeated runs of the
+query are hermetic.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -40,29 +40,22 @@ from . import query
         "either direction flips the hash. The quantity filter is "
         "applied on the RE-READ side, so ORC predicate pushdown is on "
         "the tested path (plan-asserted in tests/test_format_ops.py)",
+    scoped=True,
 )
-def orc_roundtrip_revenue(spark, sf_dir):
+def orc_roundtrip_revenue(spark, sf_dir, cache):
     li = table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_discount",
         "l_shipdate")
-    root = tempfile.mkdtemp(prefix="bdt_orc_")
-    try:
-        path = os.path.join(root, "lineitem_orc")
-        li.write.option("compression", "snappy").orc(path)
-        back = spark.read.orc(path)
-        out = (back.filter(F.col("l_quantity") < 25)
-               .groupBy(F.year("l_shipdate").cast("bigint")
-                        .alias("ship_year"))
-               .agg(F.count(F.lit(1)).cast("long").alias("n_items"),
-                    F.sum(F.round(F.col("l_extendedprice")
-                                  * (1 - F.col("l_discount")) * 100)
-                          .cast("bigint")).cast("long")
-                    .alias("revenue_cents"))
-               .orderBy("ship_year")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_orc_"), "lineitem_orc")
+    li.write.option("compression", "snappy").orc(path)
+    return (spark.read.orc(path).filter(F.col("l_quantity") < 25)
+            .groupBy(F.year("l_shipdate").cast("bigint").alias("ship_year"))
+            .agg(F.count(F.lit(1)).cast("long").alias("n_items"),
+                 F.sum(F.round(F.col("l_extendedprice")
+                               * (1 - F.col("l_discount")) * 100)
+                       .cast("bigint")).cast("long")
+                 .alias("revenue_cents"))
+            .orderBy("ship_year"))
 
 
 @query(
@@ -86,34 +79,28 @@ def orc_roundtrip_revenue(spark, sf_dir):
         "sub-second timestamp fidelity are both on the hash. "
         "Timestamps travel as ISO-8601 with microseconds "
         "(timestampFormat pinned on both write and read)",
+    scoped=True,
 )
-def jsonl_roundtrip_events(spark, sf_dir):
+def jsonl_roundtrip_events(spark, sf_dir, cache):
     fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    root = tempfile.mkdtemp(prefix="bdt_jsonl_")
-    try:
-        path = os.path.join(root, "events_jsonl")
-        ev.write.option("timestampFormat", fmt).json(path)
-        back = spark.read.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double").option(
-            "timestampFormat", fmt).json(path)
-        out = (back.groupBy("event_type")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                    F.countDistinct("user_id").cast("long")
-                    .alias("n_users"),
-                    F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                    .cast("long").alias("sum_cents"),
-                    F.min(F.unix_micros("ts")).cast("long")
-                    .alias("first_us"),
-                    F.max(F.unix_micros("ts")).cast("long")
-                    .alias("last_us"))
-               .orderBy("event_type")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_jsonl_"), "events_jsonl")
+    ev.write.option("timestampFormat", fmt).json(path)
+    back = spark.read.schema(
+        "event_id long, ts timestamp, user_id long, "
+        "event_type string, value double").option(
+        "timestampFormat", fmt).json(path)
+    return (back.groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
+                 F.countDistinct("user_id").cast("long").alias("n_users"),
+                 F.sum(F.round(F.col("value") * 100).cast("bigint"))
+                 .cast("long").alias("sum_cents"),
+                 F.min(F.unix_micros("ts")).cast("long")
+                 .alias("first_us"),
+                 F.max(F.unix_micros("ts")).cast("long")
+                 .alias("last_us"))
+            .orderBy("event_type"))
 
 
 @query(
@@ -135,19 +122,14 @@ def jsonl_roundtrip_events(spark, sf_dir):
         "integer-cent sums; the oracle filters the original unsplit "
         "table, so the partitioned re-write provably preserved every "
         "row and value",
+    scoped=True,
 )
-def partitioned_pruned_event_scan(spark, sf_dir):
+def partitioned_pruned_event_scan(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    root = tempfile.mkdtemp(prefix="bdt_part_")
-    try:
-        path = os.path.join(root, "events_by_type")
-        ev.write.partitionBy("event_type").parquet(path)
-        out = (pruned_purchase_rollup(spark, path)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_part_"), "events_by_type")
+    ev.write.partitionBy("event_type").parquet(path)
+    return pruned_purchase_rollup(spark, path)
 
 
 def pruned_purchase_rollup(spark, path: str):
@@ -204,21 +186,16 @@ _RPT_LO, _RPT_HI = "2024-01-10 00:00:00", "2024-01-13 00:00:00"
         "(quantified against an unsorted twin in "
         "tests/test_format_ops.py) — at 100 TB the difference between "
         "reading ~3 days and scanning a month",
+    scoped=True,
 )
-def range_pruned_time_scan(spark, sf_dir):
+def range_pruned_time_scan(spark, sf_dir, cache):
     from ..sources.sinks import write_clustered
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    root = tempfile.mkdtemp(prefix="bdt_rangep_")
-    try:
-        path = os.path.join(root, "events_by_time")
-        write_clustered(ev, path, "ts", n_files=16)
-        out = (range_pruned_rollup(spark, path)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_rangep_"), "events_by_time")
+    write_clustered(ev, path, "ts", n_files=16)
+    return range_pruned_rollup(spark, path)
 
 
 def range_pruned_rollup(spark, path: str):
@@ -288,21 +265,16 @@ _ZP_USER_MAX = 8  # user_id < 8 exists at every sf (ids are 0..15k*sf)
         "tests/test_format_ops.py). At 100 TB this is the difference "
         "between one layout serving every query axis and one rewrite "
         "per axis",
+    scoped=True,
 )
-def zorder_pruned_scan(spark, sf_dir):
+def zorder_pruned_scan(spark, sf_dir, cache):
     from ..sources.sinks import write_zordered
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    root = tempfile.mkdtemp(prefix="bdt_zord_")
-    try:
-        path = os.path.join(root, "events_z")
-        write_zordered(ev, path, ["ts", "user_id"], n_files=16)
-        out = (zorder_pruned_rollup(spark, path)
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_zord_"), "events_z")
+    write_zordered(ev, path, ["ts", "user_id"], n_files=16)
+    return zorder_pruned_rollup(spark, path)
 
 
 def zorder_pruned_rollup(spark, path: str):
@@ -355,35 +327,30 @@ def zorder_pruned_rollup(spark, path: str):
         "schema-drift contract a 100 TB lake lives by: readers span "
         "file generations without rewrites, and the footer-merge cost "
         "is per-FILE metadata, never a data scan",
+    scoped=True,
 )
-def schema_evolution_union_scan(spark, sf_dir):
+def schema_evolution_union_scan(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
-    root = tempfile.mkdtemp(prefix="bdt_evo_")
-    try:
-        path = os.path.join(root, "events_evolved")
-        (ev.filter(F.col("event_id") % 2 == 0)
-         .write.parquet(path))  # old generation: no quality_flag
-        (ev.filter(F.col("event_id") % 2 == 1)
-         .withColumn("quality_flag", F.col("value") >= 50.0)
-         .write.mode("append").parquet(path))  # evolved generation
-        back = spark.read.option("mergeSchema", "true").parquet(path)
-        out = (back.groupBy("event_type")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                    F.count("quality_flag").cast("long")
-                    .alias("n_flagged_schema"),
-                    # coalesce: a group whose rows are ALL old
-                    # generation sums NULL, but the oracle emits 0
-                    F.coalesce(F.sum(F.col("quality_flag")
-                                     .cast("bigint")), F.lit(0))
-                    .cast("long").alias("n_quality"),
-                    F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                    .cast("long").alias("sum_cents"))
-               .orderBy("event_type")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_evo_"), "events_evolved")
+    (ev.filter(F.col("event_id") % 2 == 0)
+     .write.parquet(path))  # old generation: no quality_flag
+    (ev.filter(F.col("event_id") % 2 == 1)
+     .withColumn("quality_flag", F.col("value") >= 50.0)
+     .write.mode("append").parquet(path))  # evolved generation
+    back = spark.read.option("mergeSchema", "true").parquet(path)
+    return (back.groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
+                 F.count("quality_flag").cast("long")
+                 .alias("n_flagged_schema"),
+                 # coalesce: a group whose rows are ALL old
+                 # generation sums NULL, but the oracle emits 0
+                 F.coalesce(F.sum(F.col("quality_flag").cast("bigint")),
+                            F.lit(0))
+                 .cast("long").alias("n_quality"),
+                 F.sum(F.round(F.col("value") * 100).cast("bigint"))
+                 .cast("long").alias("sum_cents"))
+            .orderBy("event_type"))
 
 
 @query(
@@ -412,8 +379,9 @@ def schema_evolution_union_scan(spark, sf_dir):
         "silent coercion, no lost rows. At 100 TB this is the ingest "
         "contract: one malformed line must never kill a batch, and "
         "every malformed line must stay auditable",
+    scoped=True,
 )
-def csv_quarantine_scan(spark, sf_dir):
+def csv_quarantine_scan(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
     line = F.concat_ws(
@@ -425,29 +393,23 @@ def csv_quarantine_scan(spark, sf_dir):
          # is bit-identical to the original, so the cents sum can
          # never drift on a formatting boundary
          .otherwise(F.col("value").cast("string")))
-    root = tempfile.mkdtemp(prefix="bdt_csvq_")
-    try:
-        path = os.path.join(root, "events_csv")
-        ev.select(line.alias("value")).write.text(path)
-        back = (spark.read
-                .schema("event_id long, event_type string, "
-                        "value double, _corrupt string")
-                .option("mode", "PERMISSIVE")
-                .option("columnNameOfCorruptRecord", "_corrupt")
-                .csv(path))
-        out = (back.groupBy("event_type")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                    F.sum(F.col("_corrupt").isNotNull().cast("bigint"))
-                    .cast("long").alias("n_quarantined"),
-                    F.sum(F.when(F.col("_corrupt").isNull(),
-                                 F.round(F.col("value") * 100)
-                                 .cast("bigint")).otherwise(0))
-                    .cast("long").alias("clean_cents"))
-               .orderBy("event_type")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    path = os.path.join(cache.stage("bdt_csvq_"), "events_csv")
+    ev.select(line.alias("value")).write.text(path)
+    back = (spark.read
+            .schema("event_id long, event_type string, "
+                    "value double, _corrupt string")
+            .option("mode", "PERMISSIVE")
+            .option("columnNameOfCorruptRecord", "_corrupt")
+            .csv(path))
+    return (back.groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
+                 F.sum(F.col("_corrupt").isNotNull().cast("bigint"))
+                 .cast("long").alias("n_quarantined"),
+                 F.sum(F.when(F.col("_corrupt").isNull(),
+                              F.round(F.col("value") * 100)
+                              .cast("bigint")).otherwise(0))
+                 .cast("long").alias("clean_cents"))
+            .orderBy("event_type"))
 
 
 @query(
@@ -479,39 +441,33 @@ def csv_quarantine_scan(spark, sf_dir):
         "here; at 100 TB this operator is the difference between a "
         "namenode melting under KB-files and uniform shard-sized "
         "scans",
+    scoped=True,
 )
-def compacted_scan_equivalence(spark, sf_dir):
+def compacted_scan_equivalence(spark, sf_dir, cache):
     from ..sources.sinks import compact_files
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value")
-    root = tempfile.mkdtemp(prefix="bdt_compact_")
-    try:
-        frag = os.path.join(root, "fragmented")
-        comp = os.path.join(root, "compacted")
-        ev.repartition(64).write.parquet(frag)
-        n_rows = spark.read.parquet(frag).count()
-        n_files = compact_files(spark, frag, comp,
-                                target_rows_per_file=max(
-                                    1, n_rows // 4))
-        assert n_files < 64, n_files  # compaction must compact
-        back = spark.read.parquet(comp)
-        out = (back.groupBy("event_type")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                    F.sum(F.round(F.col("value") * 100)
-                          .cast("bigint")).cast("long")
-                    .alias("sum_cents"),
-                    F.min("event_id").cast("long").alias("first_id"),
-                    F.max("event_id").cast("long").alias("last_id"),
-                    F.min(F.unix_micros("ts")).cast("long")
-                    .alias("first_us"),
-                    F.max(F.unix_micros("ts")).cast("long")
-                    .alias("last_us"))
-               .orderBy("event_type")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    root = cache.stage("bdt_compact_")
+    frag = os.path.join(root, "fragmented")
+    comp = os.path.join(root, "compacted")
+    ev.repartition(64).write.parquet(frag)
+    n_rows = spark.read.parquet(frag).count()
+    n_files = compact_files(spark, frag, comp,
+                            target_rows_per_file=max(1, n_rows // 4))
+    assert n_files < 64, n_files  # compaction must compact
+    return (spark.read.parquet(comp).groupBy("event_type")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
+                 F.sum(F.round(F.col("value") * 100)
+                       .cast("bigint")).cast("long")
+                 .alias("sum_cents"),
+                 F.min("event_id").cast("long").alias("first_id"),
+                 F.max("event_id").cast("long").alias("last_id"),
+                 F.min(F.unix_micros("ts")).cast("long")
+                 .alias("first_us"),
+                 F.max(F.unix_micros("ts")).cast("long")
+                 .alias("last_us"))
+            .orderBy("event_type"))
 
 
 @query(
@@ -710,52 +666,15 @@ def _spa_bucket_bounds() -> tuple[int, int]:
         "ref main.py:329-347 re-slices its date window per query; "
         "this is that capability restated as a provable layout "
         "contract",
-    plan_fn=lambda spark, sf_dir, cache: scan_preflight_audit(
-        spark, _spa_plan_layout(spark, sf_dir)),
+    scoped=True,
 )
-def scan_pruning_preflight(spark, sf_dir):
-    ev = _spa_bucketed_events(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="bdt_spa_")
-    try:
-        path = os.path.join(root, "events_by_bucket")
-        (ev.repartition("bucket").write.partitionBy("bucket")
-         .parquet(path))
-        return (scan_preflight_audit(spark, path)
-                .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def _spa_bucketed_events(spark, sf_dir):
-    ev = table(spark, sf_dir, "events").select("ts", "value")
-    return ev.withColumn(
+def scan_pruning_preflight(spark, sf_dir, cache):
+    ev = table(spark, sf_dir, "events").select("ts", "value").withColumn(
         "bucket", F.expr(f"(unix_micros(ts) div {_SPA_US_PER_DAY}) "
                          f"div {_SPA_DAYS_PER_BUCKET}"))
-
-
-# Plan-audit layouts, written once per (process, sf_dir) and removed
-# at interpreter exit: scan_pruning_preflight's spark_fn writes its
-# layout into a per-call tempdir it deletes before returning, so its
-# checkpointed result is Scan ExistingRDD — un-auditable. Exposing
-# the audit over a process-lifetime layout as Query.plan_fn (VERDICT
-# r12 ask #4) lets the runtime allowlist harvest execute the REAL
-# pre-checkpoint plan; the layout is identical to the per-call one
-# (same rule, same writer).
-_SPA_PLAN_LAYOUTS: dict[str, str] = {}
-
-
-def _spa_plan_layout(spark, sf_dir: str) -> str:
-    if sf_dir not in _SPA_PLAN_LAYOUTS:
-        import atexit
-
-        root = tempfile.mkdtemp(prefix="bdt_spa_plan_")
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
-        path = os.path.join(root, "events_by_bucket")
-        (_spa_bucketed_events(spark, sf_dir)
-         .repartition("bucket").write.partitionBy("bucket")
-         .parquet(path))
-        _SPA_PLAN_LAYOUTS[sf_dir] = path
-    return _SPA_PLAN_LAYOUTS[sf_dir]
+    path = os.path.join(cache.stage("bdt_spa_"), "events_by_bucket")
+    ev.repartition("bucket").write.partitionBy("bucket").parquet(path)
+    return scan_preflight_audit(spark, path)
 
 
 def scan_preflight_audit(spark, path: str):
@@ -925,18 +844,14 @@ def _with_zq(ev):
         "scan (this). ref main.py:329-347 re-slices its date window "
         "per query; this is the multi-axis version as a provable "
         "layout contract",
+    scoped=True,
 )
-def zorder_morton_preflight(spark, sf_dir):
+def zorder_morton_preflight(spark, sf_dir, cache):
     ev = _with_zq(table(spark, sf_dir, "events")
                   .select("ts", "user_id", "value"))
-    root = tempfile.mkdtemp(prefix="bdt_zmp_")
-    try:
-        path = os.path.join(root, "events_by_zblock")
-        (ev.repartition("zq").write.partitionBy("zq").parquet(path))
-        return (zmp_preflight_audit(spark, path)
-                .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    path = os.path.join(cache.stage("bdt_zmp_"), "events_by_zblock")
+    ev.repartition("zq").write.partitionBy("zq").parquet(path)
+    return zmp_preflight_audit(spark, path)
 
 
 def zmp_preflight_audit(spark, path: str):
@@ -1091,67 +1006,62 @@ def _zir_canon_spark():
         "Z-footprint, never the table, with the footprint known "
         "before an executor spins up".format(_ZIR_LO, _ZIR_HI,
                                              _ZIR_MOD),
+    scoped=True,
 )
-def zorder_incremental_recluster(spark, sf_dir):
+def zorder_incremental_recluster(spark, sf_dir, cache):
     ev = _with_zq(table(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"))
     is_delta = ((F.col("ts") >= _ZIR_LO) & (F.col("ts") < _ZIR_HI)
                 & (F.col("event_id") % _ZIR_MOD == 0))
-    root = tempfile.mkdtemp(prefix="bdt_zir_")
-    saved = spark.conf.get("spark.sql.sources.partitionOverwriteMode",
-                           "static")
+    path = os.path.join(cache.stage("bdt_zir_"), "events_zblocks")
+    (ev.filter(~is_delta).repartition("zq")
+     .write.partitionBy("zq").parquet(path))
+    delta = ev.filter(is_delta)
+    touched = sorted(r["zq"] for r in
+                     delta.select("zq").distinct().collect())
+    predicted = set(_zir_predicted_blocks())
+    outside = [b for b in touched if b not in predicted]
+    # merge = affected base partitions + backfill, rewritten via
+    # dynamic partition overwrite; materialize BEFORE the write
+    # (reading and overwriting the same partitions lazily would
+    # race the file replacement)
+    base_aff = (spark.read.parquet(path)
+                .filter(F.col("zq").isin(touched))
+                .select(*delta.columns))
+    merged = (base_aff.unionByName(delta).repartition("zq")
+              .localCheckpoint(eager=True))
+    mode = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(mode, "static")
+    spark.conf.set(mode, "dynamic")
     try:
-        path = os.path.join(root, "events_zblocks")
-        (ev.filter(~is_delta).repartition("zq")
-         .write.partitionBy("zq").parquet(path))
-        delta = ev.filter(is_delta)
-        touched = sorted(r["zq"] for r in
-                         delta.select("zq").distinct().collect())
-        predicted = set(_zir_predicted_blocks())
-        outside = [b for b in touched if b not in predicted]
-        # merge = affected base partitions + backfill, rewritten via
-        # dynamic partition overwrite; materialize BEFORE the write
-        # (reading and overwriting the same partitions lazily would
-        # race the file replacement)
-        base_aff = (spark.read.parquet(path)
-                    .filter(F.col("zq").isin(touched))
-                    .select(*delta.columns))
-        merged = (base_aff.unionByName(delta).repartition("zq")
-                  .localCheckpoint(eager=True))
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       "dynamic")
-        (merged.write.mode("overwrite").partitionBy("zq")
-         .parquet(path))
-        back = spark.read.parquet(path)
-        unt = (back.filter(~F.col("zq").isin(touched))
-               .select(F.conv(F.substring(F.md5(_zir_canon_spark()),
-                                          1, 15), 16, 10)
-                       .cast("long").alias("h")))
-        fp = unt.agg(
-            F.count(F.lit(1)).cast("long").alias("untouched_rows"),
-            (F.sum(F.col("h").cast("decimal(38,0)"))
-             % F.lit(_FP_MOD).cast("decimal(38,0)"))
-            .cast("long").alias("untouched_fp"))
-        tot = back.agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows_total"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("long").alias("cents_total"),
-            F.countDistinct("zq").cast("long").alias("n_blocks_total"))
-        files = (back.filter(F.col("zq").isin(touched))
-                 .withColumn("fname", F.input_file_name())
-                 .agg(F.countDistinct("fname").cast("long")
-                      .alias("n_files_touched")))
-        out = (tot.crossJoin(F.broadcast(files))
-               .crossJoin(F.broadcast(fp))
-               .select("n_blocks_total",
-                       F.lit(len(touched)).cast("long")
-                       .alias("n_blocks_touched"),
-                       F.lit(len(outside)).cast("long")
-                       .alias("n_outside_prediction"),
-                       "n_files_touched", "untouched_rows",
-                       "untouched_fp", "n_rows_total", "cents_total"))
-        return out.localCheckpoint(eager=True)
+        merged.write.mode("overwrite").partitionBy("zq").parquet(path)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       saved)
-        shutil.rmtree(root, ignore_errors=True)
+        spark.conf.set(mode, saved)
+    back = spark.read.parquet(path)
+    unt = (back.filter(~F.col("zq").isin(touched))
+           .select(F.conv(F.substring(F.md5(_zir_canon_spark()),
+                                      1, 15), 16, 10)
+                   .cast("long").alias("h")))
+    fp = unt.agg(
+        F.count(F.lit(1)).cast("long").alias("untouched_rows"),
+        (F.sum(F.col("h").cast("decimal(38,0)"))
+         % F.lit(_FP_MOD).cast("decimal(38,0)"))
+        .cast("long").alias("untouched_fp"))
+    tot = back.agg(
+        F.count(F.lit(1)).cast("long").alias("n_rows_total"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("long").alias("cents_total"),
+        F.countDistinct("zq").cast("long").alias("n_blocks_total"))
+    files = (back.filter(F.col("zq").isin(touched))
+             .withColumn("fname", F.input_file_name())
+             .agg(F.countDistinct("fname").cast("long")
+                  .alias("n_files_touched")))
+    return (tot.crossJoin(F.broadcast(files))
+            .crossJoin(F.broadcast(fp))
+            .select("n_blocks_total",
+                    F.lit(len(touched)).cast("long")
+                    .alias("n_blocks_touched"),
+                    F.lit(len(outside)).cast("long")
+                    .alias("n_outside_prediction"),
+                    "n_files_touched", "untouched_rows",
+                    "untouched_fp", "n_rows_total", "cents_total"))

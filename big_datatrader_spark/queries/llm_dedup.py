@@ -15,7 +15,7 @@ from ..functions import dedup as DD
 from ..functions import similarity as SIM
 from ..operators.exact import ratio_round6
 from ..sources.parquet_source import table
-from . import lazy_cache, query, run_scoped
+from . import lazy_cache, query
 
 # ---- DuckDB oracle snippets (tokens / shingles / h60) --------------------
 
@@ -368,12 +368,8 @@ def dedup_exact_kept(spark, sf_dir):
         "keyed joins: the shuffle carries 16-byte fingerprints and "
         "attribute values, never document bodies — at 100 TB "
         "survivorship costs the same as the dedup groupBy it extends",
-    plan_fn=lambda spark, sf_dir, cache: _grs_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def golden_record_survivorship(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _grs_plan)
-
-
 def _grs_plan(spark, sf_dir, cache=lazy_cache):
     tokset_fp = F.md5(F.array_join(F.array_sort(F.array_distinct(
         F.split(F.lower(F.trim(F.col("text"))), " "))), " "))
@@ -383,8 +379,8 @@ def _grs_plan(spark, sf_dir, cache=lazy_cache):
     # token-set md5 over every text (3 corpus scans; the review
     # finding the join_cardinality_profile pattern fixed in r8).
     # Result is cluster-grain (small); run_scoped materializes it and
-    # releases the cache (exposed pre-checkpoint as Query.plan_fn so
-    # the exchange-budget test audits the REAL plan — ADVICE r9 #1).
+    # releases the cache (the exchange-budget test audits this
+    # pre-checkpoint builder, the REAL plan — ADVICE r9 #1).
     d = cache(table(spark, sf_dir, "documents")
               .select(tokset_fp.alias("fp"),
                       "doc_id", "lang", "source", "n_chars"))

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..functions import multimodal as MM
 from ..sources.parquet_source import table
-from . import lazy_cache, query, run_scoped
+from . import lazy_cache, query
 
 # r15 replan for the four decode queries below (guide §2.4 / §4, the
 # edit1 persist-before-sort recipe, VERDICT r14 ask #5): each ends in
@@ -108,13 +108,8 @@ def multimodal_binary_meta(spark, sf_dir):
         "the same integer half-away formula on both engines. Narrow "
         "Arrow-batched map, zero shuffle; decode output persisted "
         "before the output sort (r15, see module note)",
-    plan_fn=lambda spark, sf_dir, cache: _mfe_plan(spark, sf_dir,
-                                                   cache),
+    scoped=True,
 )
-def multimodal_feature_extract(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _mfe_plan)
-
-
 def _mfe_plan(spark, sf_dir, cache=lazy_cache):
     media = MM.with_mixed_media(table(spark, sf_dir, "documents"))
     return cache(
@@ -150,13 +145,8 @@ def _mfe_plan(spark, sf_dir, cache=lazy_cache):
         "ASCII so the oracle reproduces the byte slicing with string "
         "ops and hashes the identical frames; frame rows persisted "
         "before the output sort (r15, see module note)",
-    plan_fn=lambda spark, sf_dir, cache: _mfs_plan(spark, sf_dir,
-                                                   cache),
+    scoped=True,
 )
-def multimodal_frame_sample(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _mfs_plan)
-
-
 def _mfs_plan(spark, sf_dir, cache=lazy_cache):
     media = MM.with_binary_content(table(spark, sf_dir, "documents"))
     return cache(MM.sample_frames(media)).orderBy("doc_id",
@@ -204,13 +194,8 @@ def _mfs_plan(spark, sf_dir, cache=lazy_cache):
         "container can actually parse. No shuffle: decode is a narrow "
         "Arrow-batched map, persisted before the output sort (r15, "
         "see module note)",
-    plan_fn=lambda spark, sf_dir, cache: _mpd_plan(spark, sf_dir,
-                                                   cache),
+    scoped=True,
 )
-def multimodal_ppm_decode(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _mpd_plan)
-
-
 def _mpd_plan(spark, sf_dir, cache=lazy_cache):
     docs = table(spark, sf_dir, "documents")
     media = MM.with_ppm_payload(docs)
@@ -263,13 +248,8 @@ def _mpd_plan(spark, sf_dir, cache=lazy_cache):
         "from per-character codepoints. Narrow Arrow-batched map, "
         "no shuffle — the audio twin of multimodal_ppm_decode; "
         "persisted before the output sort (r15, see module note)",
-    plan_fn=lambda spark, sf_dir, cache: _mwd_plan(spark, sf_dir,
-                                                   cache),
+    scoped=True,
 )
-def multimodal_wav_decode(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _mwd_plan)
-
-
 def _mwd_plan(spark, sf_dir, cache=lazy_cache):
     docs = table(spark, sf_dir, "documents")
     media = MM.with_wav_payload(docs)

@@ -322,11 +322,9 @@ def streaming_enriched_rollup(spark, sf_dir):
         "driver-exact evidence for the foreachBatch merge-sink "
         "family (the first-write-wins variant is order-undefined by "
         "design and stays pytest-only)",
+    scoped=True,
 )
-def streaming_cdc_upsert(spark, sf_dir):
-    import shutil
-    import tempfile
-
+def streaming_cdc_upsert(spark, sf_dir, cache):
     from ..streaming.pipeline import (
         events_stream, run_stream_latest_merge_to_parquet)
     ch = events_stream(spark, sf_dir).select(
@@ -335,21 +333,15 @@ def streaming_cdc_upsert(spark, sf_dir):
         F.when(F.col("event_type") == "error", "D")
         .when(F.col("event_type") == "signup", "I")
         .otherwise("U").alias("op"))
-    root = tempfile.mkdtemp(prefix="bdt_cdc_")
-    try:
-        store = run_stream_latest_merge_to_parquet(
-            ch, spark, root + "/store", key_col="user_id",
-            order_cols=["ts", "event_id"])
-        out = (store.filter(F.col("op") != "D")
-               .select("user_id",
-                       F.col("cents").alias("final_cents"),
-                       F.col("ts").alias("last_ts"),
-                       F.col("op").alias("last_op"))
-               .orderBy("user_id")
-               .localCheckpoint(eager=True))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    store = run_stream_latest_merge_to_parquet(
+        ch, spark, cache.stage("bdt_cdc_") + "/store", key_col="user_id",
+        order_cols=["ts", "event_id"])
+    return (store.filter(F.col("op") != "D")
+            .select("user_id",
+                    F.col("cents").alias("final_cents"),
+                    F.col("ts").alias("last_ts"),
+                    F.col("op").alias("last_op"))
+            .orderBy("user_id"))
 
 
 # ---------------------------------------------------------------------------
@@ -484,11 +476,10 @@ def _wm_batch_expr(u, eid, t0: int, t1: int):
         "is the proven late-drop behavior. At scale this is the "
         "state-bound contract: watermark caps how long any window's "
         "state lives regardless of corpus size",
+    scoped=True,
 )
-def streaming_watermark_late_drop(spark, sf_dir):
+def streaming_watermark_late_drop(spark, sf_dir, cache):
     import os
-    import shutil
-    import tempfile
 
     ev = table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value",
@@ -497,47 +488,41 @@ def streaming_watermark_late_drop(spark, sf_dir):
     b = _wm_batch_expr(F.col("u"), F.col("event_id"), t0, t1)
     staged = ev.withColumn("b", b)
 
-    root = tempfile.mkdtemp(prefix="bdt_wm_")
+    root = cache.stage("bdt_wm_")
     stage = os.path.join(root, "arrivals")
     os.makedirs(stage)
-    try:
-        for i in range(3):
-            part_dir = os.path.join(root, f"part{i}")
-            (staged.filter(F.col("b") == i)
-             .select("event_id", "ts", "event_type", "value")
-             .coalesce(1).write.parquet(part_dir))
-            src = next(f for f in os.listdir(part_dir)
-                       if f.endswith(".parquet"))
-            dst = os.path.join(stage, f"b{i}.parquet")
-            os.rename(os.path.join(part_dir, src), dst)
-            # file-source ordering is by modification time: pin a
-            # strictly increasing mtime so arrival order is b0,b1,b2
-            os.utime(dst, (1_000_000_000 + i * 1000,
-                           1_000_000_000 + i * 1000))
+    for i in range(3):
+        part_dir = os.path.join(root, f"part{i}")
+        (staged.filter(F.col("b") == i)
+         .select("event_id", "ts", "event_type", "value")
+         .coalesce(1).write.parquet(part_dir))
+        src = next(f for f in os.listdir(part_dir)
+                   if f.endswith(".parquet"))
+        dst = os.path.join(stage, f"b{i}.parquet")
+        os.rename(os.path.join(part_dir, src), dst)
+        # file-source ordering is by modification time: pin a
+        # strictly increasing mtime so arrival order is b0,b1,b2
+        os.utime(dst, (1_000_000_000 + i * 1000,
+                       1_000_000_000 + i * 1000))
 
-        work = spark.newSession()
-        schema = ("event_id long, ts timestamp, event_type string, "
-                  "value double")
-        stream = (work.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", 1)
-                  .parquet(stage))
-        agg = (stream.withWatermark("ts", "1 hour")
-               .groupBy(F.window("ts", "1 hour").alias("w"),
-                        "event_type")
-               .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                    F.sum(F.round(F.col("value") * 100).cast("bigint"))
-                    .cast("long").alias("sum_cents")))
-        drained = run_stream_to_memory(
-            agg.select(F.col("w.start").alias("wstart"), "event_type",
-                       "n_events", "sum_cents"),
-            work, output_mode="append", shuffle_partitions=4)
-        # memory-sink tables are session-scoped and lazy: materialize
-        # before the staging dir disappears
-        out = drained.orderBy("wstart", "event_type").localCheckpoint(
-            eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-    return out
+    work = spark.newSession()
+    schema = ("event_id long, ts timestamp, event_type string, "
+              "value double")
+    stream = (work.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1)
+              .parquet(stage))
+    agg = (stream.withWatermark("ts", "1 hour")
+           .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+           .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
+                F.sum(F.round(F.col("value") * 100).cast("bigint"))
+                .cast("long").alias("sum_cents")))
+    drained = run_stream_to_memory(
+        agg.select(F.col("w.start").alias("wstart"), "event_type",
+                   "n_events", "sum_cents"),
+        work, output_mode="append", shuffle_partitions=4)
+    # memory-sink tables are session-scoped and lazy: run_scoped
+    # materializes the result before the staging dir is deleted
+    return drained.orderBy("wstart", "event_type")
 
 
 # ---------------------------------------------------------------------------

@@ -1013,6 +1013,26 @@ def _pr_push(pr, outdeg, edges):
         edges, F.sum("c").alias("s"))
 
 
+@query(
+    "pagerank_copurchase",
+    oracle=_pagerank_oracle(),
+    doc=f"PageRank ({_PR_ITERS} iterations, d=0.85) over the part "
+        "co-purchase graph (parts sharing an order): the iterative-"
+        "algorithm shape — per iteration one join edges+scores, one "
+        "groupBy-sum, one left join back to nodes. All arithmetic is "
+        "integer (1e-9-unit scores, floor-div contributions), so "
+        "scores are bit-identical on any engine or partition layout; "
+        "the oracle unrolls the same iterations as chained CTEs. At "
+        "scale: scores are node-sized (tiny vs edges), edges partition "
+        "by src and the per-iteration shuffle is the groupBy(dst) — "
+        "the standard distributed PageRank cost model. Cache "
+        "lifecycle: the edge list is persisted eagerly ONCE with a "
+        "node-sized out-degree beside it, each iteration is one "
+        "functions/graph.superstep, the top-100 result is "
+        "materialized, and every cache is released before returning "
+        "(run_scoped)",
+    scoped=True,
+)
 def _pagerank_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -1041,30 +1061,6 @@ def _pagerank_plan(spark, sf_dir, cache=lazy_cache):
         pr.select(F.col("node").alias("part_key"), "pr_mu")
         .orderBy(F.desc("pr_mu"), "part_key").limit(100)
     )
-
-
-@query(
-    "pagerank_copurchase",
-    oracle=_pagerank_oracle(),
-    plan_fn=_pagerank_plan,
-    doc=f"PageRank ({_PR_ITERS} iterations, d=0.85) over the part "
-        "co-purchase graph (parts sharing an order): the iterative-"
-        "algorithm shape — per iteration one join edges+scores, one "
-        "groupBy-sum, one left join back to nodes. All arithmetic is "
-        "integer (1e-9-unit scores, floor-div contributions), so "
-        "scores are bit-identical on any engine or partition layout; "
-        "the oracle unrolls the same iterations as chained CTEs. At "
-        "scale: scores are node-sized (tiny vs edges), edges partition "
-        "by src and the per-iteration shuffle is the groupBy(dst) — "
-        "the standard distributed PageRank cost model. Cache "
-        "lifecycle: the edge list is persisted eagerly ONCE with a "
-        "node-sized out-degree beside it, each iteration is one "
-        "functions/graph.superstep, the top-100 result is "
-        "materialized, and every cache is released before returning "
-        "(run_scoped)",
-)
-def pagerank_copurchase(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _pagerank_plan)
 
 
 # ---------------------------------------------------------------------------
@@ -1145,12 +1141,8 @@ def _ppr_oracle() -> str:
         "scores are not held (the graph hold rule: read once), and "
         "run_scoped releases every cache when the top-100 result has "
         "materialized",
-    plan_fn=lambda spark, sf_dir, cache: _ppr_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def personalized_pagerank(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _ppr_plan)
-
-
 def _ppr_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -1231,12 +1223,8 @@ def _lpa_oracle() -> str:
         "persisted once (functions/graph.py one-scan build), released "
         "after the result materializes (run_scoped, VERDICT r9 ask "
         "#3), and the oracle unrolls the same rounds as chained CTEs",
-    plan_fn=lambda spark, sf_dir, cache: _lpa_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def label_propagation_communities(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _lpa_plan)
-
-
 def _lpa_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -3895,12 +3883,8 @@ def modularity_brand_partition(spark, sf_dir):
         "TakeOrderedAndProject. Degree and oriented-edge caches are "
         "released after the result materializes (run_scoped, VERDICT "
         "r9 ask #3)",
-    plan_fn=lambda spark, sf_dir, cache: _lcc_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def local_clustering_coefficient(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _lcc_plan)
-
-
 def _lcc_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -4432,12 +4416,8 @@ _LNK_TOPK = 100
         "once (deterministic build under its own plan) and released "
         "after the result materializes (run_scoped, VERDICT r9 "
         "ask #3)",
-    plan_fn=lambda spark, sf_dir, cache: _lnk_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def link_prediction_common_neighbors(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _lnk_plan)
-
-
 def _lnk_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -4566,12 +4546,8 @@ _LPH_TOPK = 20           # predictions scored per query node
         "tools/measure_ab.py tools/ab_specs/lph_build_variants.py). "
         "The edge cache and the 50-row query-set cache are released "
         "after the result materializes (run_scoped)",
-    plan_fn=lambda spark, sf_dir, cache: _lph_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def link_prediction_holdout_eval(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _lph_plan)
-
-
 def _lph_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")
@@ -4723,12 +4699,8 @@ def _gnn_oracle() -> str:
         "caches (edge list + per-round feature frames) are released "
         "after the result materializes (run_scoped, VERDICT r9 "
         "ask #3)",
-    plan_fn=lambda spark, sf_dir, cache: _gnn_plan(spark, sf_dir, cache),
+    scoped=True,
 )
-def gnn_feature_propagation(spark, sf_dir):
-    return run_scoped(spark, sf_dir, _gnn_plan)
-
-
 def _gnn_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
                                                  "l_partkey")

@@ -33,9 +33,14 @@ audited by tests/test_streaming_plans.py).
 
 from __future__ import annotations
 
+import ast
+import os
+from pathlib import Path
+
 import pytest
 
-from big_datatrader_spark.queries import load_registry
+import big_datatrader_spark
+from big_datatrader_spark.queries import load_registry, run_scoped
 
 REG = load_registry()
 
@@ -148,7 +153,7 @@ def test_run_scoped_cache_lineage_runs(spark, mode):
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
-    from big_datatrader_spark.queries import lazy_cache, run_scoped
+    from big_datatrader_spark.queries import lazy_cache
     from conftest import load_ab_spec
 
     race = load_ab_spec("cache_race")
@@ -169,3 +174,70 @@ def test_run_scoped_cache_lineage_runs(spark, mode):
     runs = race.N_BRANCHES + 1 if mode == "no_persist" else 1
     assert acc.value == n_rows * runs
     assert _cache_manager_empty(spark)
+
+
+def test_run_scoped_deletes_staged_dirs(spark):
+    """A cache.stage dir lives until the result has materialized, then
+    run_scoped deletes it — after a normal return and after a build
+    that raises."""
+    staged = []
+
+    def build(s, _sf, cache):
+        path = os.path.join(cache.stage("bdt_stage_t_"), "rows")
+        staged.append(path)
+        s.range(10).write.parquet(path)
+        return s.read.parquet(path)
+
+    def broken(s, _sf, cache):
+        build(s, _sf, cache)
+        raise RuntimeError("build failed")
+
+    out = run_scoped(spark, None, build)
+    assert not os.path.exists(os.path.dirname(staged[0]))
+    assert out.count() == 10  # the checkpoint outlives its staging
+    with pytest.raises(RuntimeError, match="build failed"):
+        run_scoped(spark, None, broken)
+    assert len(staged) == 2
+    assert not os.path.exists(os.path.dirname(staged[1]))
+
+
+# --- guard: materializing queries register scoped --------------------------
+
+def _unscoped_idioms(tree):
+    """(line, idiom) for every mkdtemp call and plan_fn= keyword."""
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        if getattr(fn, "attr", getattr(fn, "id", None)) == "mkdtemp":
+            yield node.lineno, "mkdtemp"
+        if any(k.arg == "plan_fn" for k in node.keywords):
+            yield node.lineno, "plan_fn="
+
+
+def test_materializing_queries_are_not_re_pasted():
+    """A query stages sinks through cache.stage and registers its
+    builder with @query(scoped=True): no query module but the registry
+    calls tempfile.mkdtemp, and no module passes plan_fn=."""
+    pkg = Path(big_datatrader_spark.__file__).parent
+    bad = []
+    for p in sorted(pkg.rglob("*.py")):
+        rel = p.relative_to(pkg)
+        for line, idiom in _unscoped_idioms(ast.parse(p.read_text())):
+            if idiom == "mkdtemp" and (rel.parent.name != "queries"
+                                       or rel.name == "__init__.py"):
+                continue
+            bad.append(f"{rel}:{line}: {idiom}")
+    assert not bad, "\n".join(bad)
+
+
+def test_unscoped_guard_sees_the_idioms_it_forbids():
+    src = ("import tempfile\n"
+           "from tempfile import mkdtemp\n"
+           "root = tempfile.mkdtemp(prefix='x')\n"
+           "other = mkdtemp()\n"
+           "@query('q', None, plan_fn=lambda s, d, c: b(s, d, c))\n"
+           "def q(spark, sf_dir):\n"
+           "    pass\n")
+    assert sorted(_unscoped_idioms(ast.parse(src))) == [
+        (3, "mkdtemp"), (4, "mkdtemp"), (5, "plan_fn=")]

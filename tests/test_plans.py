@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 from big_datatrader_spark.plans.explain import (
     num_exchanges, scan_read_columns, physical_plan, uses_broadcast_join,
     uses_top_k)
-from big_datatrader_spark.queries import load_registry, plan_of
+from big_datatrader_spark.queries import (
+    load_registry, persisting_cache, plan_of)
 from big_datatrader_spark.sources.parquet_source import table
 
 REG = load_registry()
@@ -35,18 +36,18 @@ def _clean_cache(spark):
 
 
 def _plan_df(name, spark, sf_dir):
-    """The lazy plan to audit for exchange budgets: Query.plan_fn for
-    scoped-cache queries (their spark_fn returns an eagerly-
+    """The lazy plan to audit for exchange budgets: the builder of a
+    @query(scoped=True) query (its spark_fn returns an eagerly-
     materialized checkpoint, whose plan is just Scan ExistingRDD —
     asserting budgets there is vacuous, ADVICE r9 #1), else the
-    registered fn's own return. Builders run with a REAL persisting
-    cache so multi-consumer subtrees collapse to InMemoryRelation
-    exactly as run_scoped executes them — budgets stay calibrated to
-    executed shuffle work, not static subtree duplication. Budget
-    tests clear the session cache afterward (the persists here are
-    never materialized — clearCache drops the registrations)."""
-    return plan_of(REG[name], spark, sf_dir,
-                   cache=lambda df, eager=False: df.persist())
+    registered fn's own return. Builders run under persisting_cache,
+    a REAL persist, so multi-consumer subtrees collapse to
+    InMemoryRelation exactly as run_scoped executes them — budgets
+    stay calibrated to executed shuffle work, not static subtree
+    duplication. Budget tests clear the session cache afterward (the
+    persists here are never materialized — clearCache drops the
+    registrations)."""
+    return plan_of(REG[name], spark, sf_dir, cache=persisting_cache)
 
 
 def test_q1_scan_prunes_columns_and_pushes_filter(spark, sf001):
@@ -251,6 +252,8 @@ _BNLJ_OK = {
     "edit1_pair_blowup_audit",     # two 1-row profile scalars
     "ngram_pair_blowup_audit",     # two 1-row profile scalars
     "scan_pruning_preflight",      # two 1-row audit scalars
+    "zorder_morton_preflight",     # 1-row audit scalars
+    "zorder_incremental_recluster",  # 1-row audit scalars
 }
 # these two route event-scale ranking through the two-phase
 # global_rank; their ONLY partition-less window is the per-bucket
@@ -279,13 +282,42 @@ _SP_WINDOW_OK = {"global_shuffle_rank", "user_spend_rank_distribution",
                 "max_concurrent_sessions"}
 
 
+# Queries whose audited plan is a result scan with no source under it:
+# each returns driver state, so there is no lazy plan to audit, and an
+# uncached audit run would re-run its loop. Every other batch query must
+# show the sweep a plan that reads a source; an entry whose plan does
+# read one is stale.
+_OPAQUE = {
+    "hits_hub_authority",       # half-step maxima collected per round
+    "sssp_copurchase",          # frontier emptiness tested per hop
+    "bpe_learn_merges",         # merges learned on the driver
+    "mmr_diverse_rerank",       # greedy selection on the driver
+    "dedup_clusters",           # CC label rounds behind checkpoints
+    "k_core_membership",        # peel rounds behind checkpoints
+    "graph_family_scoped_audit",  # members run inside a SharedScope
+    "text_family_scoped_audit",   # members run inside a SharedScope
+    "bucketed_copartitioned_join",  # broadcast-off conf must hold
+                                    # through the action
+}
+
+
+def _reads_source(plan: str) -> bool:
+    """A file scan, a batch (DSv2 / Python data source) scan, or a
+    relation inside a recursive CTE's loop, in a formatted plan."""
+    import re
+    return bool(re.search(r"\bScan (parquet|orc|json|csv|text)\b"
+                          r"|\bBatchScan\b|\bLogicalRelation\b", plan))
+
+
 def test_no_scale_killers_in_any_registered_plan(spark, sf001):
     """Repo-wide 100 TB audit: EVERY registered batch query must plan
     without (a) CartesianProduct, (b) a single-partition exchange of
     real data, (c) row-at-a-time Python UDFs (BatchEvalPython).
     BroadcastNestedLoopJoin is allowed ONLY for the known
     broadcast-scalar / tiny-broadcast-side cross joins, listed
-    explicitly so any new BNLJ fails loudly here."""
+    explicitly so any new BNLJ fails loudly here. A plan that reads
+    no source is flagged unless it is in _OPAQUE, so a materializing
+    query cannot hide its plan behind its result checkpoint."""
     bnlj_ok, sp_window_ok = _BNLJ_OK, _SP_WINDOW_OK
     from big_datatrader_spark.plans.explain import (
         single_partition_sort_or_window)
@@ -306,14 +338,17 @@ def test_no_scale_killers_in_any_registered_plan(spark, sf001):
             flags.append("row-at-a-time-udf")
         if "BroadcastNestedLoopJoin" in plan and name not in bnlj_ok:
             flags.append("unexpected-bnlj")
+        if _reads_source(plan) == (name in _OPAQUE):
+            flags.append("stale _OPAQUE entry" if name in _OPAQUE
+                         else "opaque-plan (no source scan)")
         if flags:
             offenders[name] = flags
 
     items = [(n, q) for n, q in sorted(REG.items())
              if not n.startswith("streaming_")]
     # pooled (guide §2.6, VERDICT r14 ask #1): most entries only PLAN
-    # (fast but latency-bound over 339 queries); the plan_fn-less
-    # eager queries execute their sf0.01 jobs concurrently. Session-
+    # (fast but latency-bound over 339 queries); the _OPAQUE queries
+    # execute their sf0.01 jobs concurrently. Session-
     # global mutators (conftest.SERIAL_QUERIES) audit serially after
     # the pool drains.
     errors = run_query_pool(
@@ -341,10 +376,10 @@ _BNLJ_RUNTIME_MAX = {
 _BNLJ_RUNTIME_DEFAULT = 8          # 1-row scalars / 5-row vector sets
 # Closed in round 13 (VERDICT r12 ask #4): the three checkpoint-opaque
 # entries (join_cardinality_profile, max_concurrent_sessions,
-# scan_pruning_preflight) now expose their pre-checkpoint builders as
-# Query.plan_fn, so the harvest executes their real plans like every
-# other entry. Kept as an (empty) set so a future opaque query must
-# appear here explicitly with its justification.
+# scan_pruning_preflight) are scoped builders, so the harvest executes
+# their real plans like every other entry. Kept as an (empty) set so a
+# future opaque query must appear here explicitly with its
+# justification.
 _BNLJ_RUNTIME_OPAQUE: set[str] = set()
 _SP_RUNTIME_MAX = {
     "conformal_interval_coverage": 10_001,  # residual-domain CDF:

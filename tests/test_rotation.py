@@ -14,6 +14,7 @@ one the hand-kept evidence sets produced before they were derived.
 from __future__ import annotations
 
 import hashlib
+import inspect
 import json
 import subprocess
 import sys
@@ -261,7 +262,13 @@ def test_registered_fn_is_the_query_it_claims_to_be():
     and threw at gate time). Every registered spark_fn must be the
     function named after the query (the `_q` suffix is the one
     sanctioned alias, used where a module exposes both a query
-    wrapper and a library fn of the same name)."""
+    wrapper and a library fn of the same name). A scoped query's
+    spark_fn is derived by the registry, so its check is on the
+    builder instead: it must take (spark, sf_dir, cache)."""
     bad = {n: q.spark_fn.__name__ for n, q in REG.items()
            if q.spark_fn.__name__ not in (n, n + "_q")}
+    bad.update({n: q.plan_fn.__name__ for n, q in REG.items()
+                if q.plan_fn is not None
+                and list(inspect.signature(q.plan_fn).parameters)
+                != ["spark", "sf_dir", "cache"]})
     assert not bad, f"decorator registered the wrong function: {bad}"

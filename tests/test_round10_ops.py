@@ -5,7 +5,7 @@ registered (materialized) forms.
 
 from __future__ import annotations
 
-from big_datatrader_spark.queries import load_registry
+from big_datatrader_spark.queries import lazy_cache, load_registry
 
 REG = load_registry()
 
@@ -34,21 +34,22 @@ def test_blowup_audit_predicts_the_expansion_exactly(spark, sf0001):
 
 
 def test_scoped_builders_match_registered_results(spark, sf0001):
-    """Every scoped-cache query's Query.plan_fn (the lazy builder the
-    plan tests audit) must produce the SAME rows as its registered
-    spark_fn (run_scoped: eager caches + checkpoint + release) — the
-    two forms may never drift apart, or the plan tests would audit a
-    different query than the driver runs."""
+    """Every scoped query's builder (Query.plan_fn, the lazy plan the
+    plan tests audit) must produce the SAME rows under the identity
+    handle as its registered spark_fn (run_scoped: eager caches,
+    staged sinks, checkpoint, release) — the two forms may never
+    drift apart, or the plan tests would audit a different query than
+    __spark_entry__.py runs."""
     names = ["personalized_pagerank", "label_propagation_communities",
              "link_prediction_holdout_eval", "golden_record_survivorship",
-             "edit1_pair_blowup_audit", "mad_robust_outliers"]
+             "edit1_pair_blowup_audit", "mad_robust_outliers",
+             "orc_roundtrip_revenue", "scan_pruning_preflight",
+             "kmeans_lloyd_refinement"]
     for name in names:
         q = REG[name]
         assert q.plan_fn is not None, name
         got = sorted(map(tuple, q.spark_fn(spark, sf0001).collect()))
-        via_builder = sorted(map(tuple,
-                                 q.plan_fn(spark, sf0001,
-                                           lambda df, eager=False: df)
-                                 .collect()))
+        via_builder = sorted(map(tuple, q.plan_fn(spark, sf0001,
+                                                  lazy_cache).collect()))
         assert got == via_builder, name
         spark.catalog.clearCache()

@@ -3,17 +3,21 @@
 Usage: python tools/dump_plans.py <round> <tag> [--executed] [query ...]
        (no query names => every bench=True query)
 
-For queries whose registered fn materializes eagerly (scoped-cache
-pattern), the audited plan is Query.plan_fn with the identity cache —
-the same lazy pre-checkpoint tree the plan tests assert on (plan_of).
-With ``--executed`` the builder runs with a REAL persisting cache
+For a @query(scoped=True) query the dumped plan is its builder under
+the identity handle (queries.lazy_cache) — the same lazy
+pre-checkpoint tree the plan tests assert on (plan_of). With
+``--executed`` the builder runs under queries.persisting_cache
 instead, so the dump shows the executed shape (multi-consumer /
 pre-sort subtrees as InMemoryRelation) — cache-mechanism replans are
 invisible in the identity dump (VERDICT r14 what's-wrong #5: the
 edit1 persist could not be seen in plans/r14). The session cache is
-cleared between queries so dumps stay independent. Planning only:
-nothing is executed, so this is safe to run while other work is on
-the box.
+cleared between queries so dumps stay independent.
+
+Mostly planning, not wholly: a staged builder (the format round-trips
+and pre-flights) writes its layout for real before its re-read is
+planned, and a query that collects on the driver (the _OPAQUE set in
+tests/test_plans.py: hits, sssp, k-core, ...) runs in full and dumps
+only its result scan.
 """
 
 from __future__ import annotations
@@ -23,7 +27,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from big_datatrader_spark.queries import load_registry, plan_of  # noqa: E402
+from big_datatrader_spark.queries import (  # noqa: E402
+    load_registry, persisting_cache, plan_of)
 from big_datatrader_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,8 +47,7 @@ def main() -> int:
         os.path.abspath(__file__))), "plans", f"r{rnd}")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-plans")
-    cache = ((lambda df, eager=False: df.persist()) if executed
-             else None)
+    cache = persisting_cache if executed else None
     for n in names:
         q = reg[n]
         try:
