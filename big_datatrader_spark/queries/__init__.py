@@ -33,7 +33,16 @@ class Query:
     DuckDB twin. plan_fn is set only for a @query(scoped=True) query: it
     is the builder spark_fn runs through run_scoped, and the plan audits
     run it under an audit handle (plan_of) to see the lazy
-    pre-checkpoint plan instead of the result's Scan ExistingRDD."""
+    pre-checkpoint plan instead of the result's Scan ExistingRDD.
+
+    ``exchanges`` is the query's declared shuffle count,
+    ``plans.explain.num_exchanges`` over the plan the query runs: for a
+    batch query ``plan_of(q, ..., cache=persisting_cache)`` at sf0.01 on
+    a fresh session from a clean cache; for a ``streaming_*`` query the
+    drained StreamingQuery's executed plan (``streaming.pipeline.
+    DRAIN_PLANS``). None only for the queries whose audited plan is
+    driver state (``_OPAQUE`` in tests/test_plans.py). Tests compare it
+    with ``==``; nothing at runtime reads it."""
     name: str
     spark_fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # None => driver runs the weaker rows-only check
@@ -41,13 +50,15 @@ class Query:
     bench: bool = False  # included in bench.py headline suite
     tags: tuple = field(default_factory=tuple)
     plan_fn: Callable[..., DataFrame] | None = None  # (spark, sf_dir, cache)
+    exchanges: int | None = None
 
 
 REGISTRY: dict[str, Query] = {}
 
 
 def query(name: str, oracle: str | None, *, doc: str = "",
-          bench: bool = False, tags: tuple = (), scoped: bool = False):
+          bench: bool = False, tags: tuple = (), scoped: bool = False,
+          exchanges: int | None = None):
     """Register the decorated function as query ``name``.
 
     Plain: the function is the spark_fn ``(spark, sf_dir) -> DataFrame``.
@@ -57,11 +68,13 @@ def query(name: str, oracle: str | None, *, doc: str = "",
     The registry derives spark_fn = run_scoped over the builder (result
     checkpointed, every hold released) and plan_fn = the builder, so a
     materializing query is registered once and audited as the plan it
-    runs. The decorator returns the function unchanged."""
+    runs. ``exchanges`` declares the query's shuffle count (see Query).
+    The decorator returns the function unchanged."""
     def wrap(fn):
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
-        q = Query(name, fn, oracle, doc=doc, bench=bench, tags=tags)
+        q = Query(name, fn, oracle, doc=doc, bench=bench, tags=tags,
+                  exchanges=exchanges)
         if scoped:
             def spark_fn(spark, sf_dir):
                 return run_scoped(spark, sf_dir, fn)

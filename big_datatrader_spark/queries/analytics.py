@@ -51,6 +51,7 @@ _R = 6
     """,
     doc="grouped aggregation over the fact table (TPC-H Q1 shape)",
     bench=True,
+    exchanges=1,
 )
 def q1_pricing_summary(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -96,6 +97,7 @@ def q1_pricing_summary(spark, sf_dir):
     doc="broadcast dim join + grouped agg + TakeOrderedAndProject top-k "
         "(TPC-H Q3 shape)",
     bench=True,
+    exchanges=1,
 )
 def q3_top_unshipped_orders(spark, sf_dir):
     cust = table(spark, sf_dir, "customer").filter(
@@ -139,6 +141,8 @@ def q3_top_unshipped_orders(spark, sf_dir):
     """,
     doc="6-way snowflake join, dims broadcast (TPC-H Q5 shape)",
     bench=True,
+    # only the fact-side join + final agg may shuffle
+    exchanges=1,
 )
 def q5_supplier_volume_by_nation(spark, sf_dir):
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -183,6 +187,7 @@ def q5_supplier_volume_by_nation(spark, sf_dir):
     FROM ranked WHERE rk <= 3
     """,
     doc="per-group top-N via ranking window",
+    exchanges=1,
 )
 def top_orders_per_customer(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
@@ -211,6 +216,7 @@ def top_orders_per_customer(spark, sf_dir):
     FROM events
     """,
     doc="cumulative sum window per key",
+    exchanges=1,
 )
 def running_total_per_user(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -232,6 +238,7 @@ def running_total_per_user(spark, sf_dir):
     SELECT o_custkey AS c_custkey FROM orders WHERE o_orderstatus = 'F'
     """,
     doc="INTERSECT (distinct) of two key sets",
+    exchanges=1,
 )
 def set_ops_high_value_customers(spark, sf_dir):
     cust = table(spark, sf_dir, "customer").filter(
@@ -250,6 +257,7 @@ def set_ops_high_value_customers(spark, sf_dir):
     SELECT o_custkey AS c_custkey FROM orders WHERE o_totalprice > 400000
     """,
     doc="EXCEPT (distinct) — customers with no large order",
+    exchanges=1,
 )
 def set_ops_except(spark, sf_dir):
     cust = table(spark, sf_dir, "customer").select("c_custkey")
@@ -267,6 +275,7 @@ def set_ops_except(spark, sf_dir):
     SELECT user_id FROM events WHERE value > 90
     """,
     doc="UNION (distinct) of two selections",
+    exchanges=1,
 )
 def union_distinct_event_users(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -287,6 +296,7 @@ def union_distinct_event_users(spark, sf_dir):
                     AND o_orderpriority = '1-URGENT')
     """,
     doc="left-semi join (EXISTS)",
+    exchanges=0,
 )
 def semi_join_customers_with_urgent_orders(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -304,6 +314,7 @@ def semi_join_customers_with_urgent_orders(spark, sf_dir):
                       WHERE l_partkey = p_partkey AND l_quantity > 45)
     """,
     doc="left-anti join (NOT EXISTS): parts never ordered in bulk",
+    exchanges=0,
 )
 def anti_join_parts_no_bulk_orders(spark, sf_dir):
     part = table(spark, sf_dir, "part")
@@ -328,6 +339,7 @@ def anti_join_parts_no_bulk_orders(spark, sf_dir):
     FROM customer GROUP BY c_mktsegment
     """,
     doc="grouped multi-aggregate incl. count distinct",
+    exchanges=2,
 )
 def segment_stats(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -353,6 +365,7 @@ def segment_stats(spark, sf_dir):
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
     doc="ROLLUP grouping sets (engine capability beyond reference)",
+    exchanges=1,
 )
 def rollup_revenue(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -375,6 +388,7 @@ def rollup_revenue(spark, sf_dir):
     GROUP BY 1, 2
     """,
     doc="time-bucketed rollup (hypertable continuous-aggregate shape)",
+    exchanges=1,
 )
 def hourly_event_rollup(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -399,6 +413,7 @@ def hourly_event_rollup(spark, sf_dir):
     GROUP BY CUBE (o_orderstatus, o_orderpriority)
     """,
     doc="CUBE grouping sets over two dimensions",
+    exchanges=1,
 )
 def cube_order_stats(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
@@ -423,6 +438,7 @@ def cube_order_stats(spark, sf_dir):
     doc="exact interpolated percentiles per group (Spark percentile == "
         "DuckDB quantile_cont); at 100 TB swap to approx_percentile "
         "with a documented error bound",
+    exchanges=1,
 )
 def value_percentiles(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -449,6 +465,7 @@ def value_percentiles(spark, sf_dir):
     GROUP BY o_orderpriority
     """,
     doc="EXISTS semi join + grouped count (TPC-H Q4 shape)",
+    exchanges=1,
 )
 def q4_order_priority_check(spark, sf_dir):
     orders = table(spark, sf_dir, "orders").filter(
@@ -482,6 +499,7 @@ def q4_order_priority_check(spark, sf_dir):
     """,
     doc="count-of-counts distribution via left join + two grouped "
         "aggregations (TPC-H Q13 shape)",
+    exchanges=2,
 )
 def q13_customer_order_distribution(spark, sf_dir):
     cust = table(spark, sf_dir, "customer").select("c_custkey")
@@ -513,6 +531,7 @@ def q13_customer_order_distribution(spark, sf_dir):
     """,
     doc="correlated per-group average threshold, decorrelated into agg "
         "+ join (TPC-H Q17 shape)",
+    exchanges=2,
 )
 def q17_small_quantity_revenue(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -545,6 +564,7 @@ def q17_small_quantity_revenue(spark, sf_dir):
     doc="disjunction-of-conjunctions predicate over a broadcast join "
         "(TPC-H Q19 shape); Catalyst extracts the common l_quantity "
         "bounds for scan pushdown",
+    exchanges=1,
 )
 def q19_disjunctive_revenue(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select(
@@ -587,6 +607,7 @@ def q19_disjunctive_revenue(spark, sf_dir):
     """,
     doc="scalar subquery + anti join + substring bucketing "
         "(TPC-H Q22 shape)",
+    exchanges=2,
 )
 def q22_inactive_customers(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -630,6 +651,7 @@ def q22_inactive_customers(spark, sf_dir):
     """,
     doc="bidirectional nation-pair trade volume by ship year "
         "(TPC-H Q7 shape)",
+    exchanges=1,
 )
 def q7_nation_pair_volume(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select(
@@ -686,6 +708,7 @@ def q7_nation_pair_volume(spark, sf_dir):
     """,
     doc="aggregate view + global-max scalar subquery (TPC-H Q15 shape); "
         "comparison on the rounded total so engines agree on the argmax",
+    exchanges=3,
 )
 def q15_top_supplier(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").filter(
@@ -721,6 +744,7 @@ def q15_top_supplier(spark, sf_dir):
     """,
     doc="distinct suppliers per part-attribute combination "
         "(TPC-H Q16 shape)",
+    exchanges=2,
 )
 def q16_supplier_variety(spark, sf_dir):
     part = table(spark, sf_dir, "part").filter(
@@ -755,6 +779,7 @@ def q16_supplier_variety(spark, sf_dir):
     """,
     doc="argmax row per group via deterministic ranking window "
         "(rank-1 join-back shape)",
+    exchanges=1,
 )
 def priciest_lineitem_per_part(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -786,6 +811,7 @@ def priciest_lineitem_per_part(spark, sf_dir):
     """,
     doc="MERGE/upsert expressed relationally: left join + coalesce "
         "(the batch primitive under Delta/Iceberg MERGE INTO)",
+    exchanges=0,
 )
 def upsert_customers_merge(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -817,6 +843,7 @@ def upsert_customers_merge(spark, sf_dir):
     """,
     doc="RANGE window frame over event time (all rows in the trailing "
         "hour, however many) vs the ROWS frames of W1/W2",
+    exchanges=1,
 )
 def range_frame_hourly_avg(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -841,6 +868,7 @@ def range_frame_hourly_avg(spark, sf_dir):
     """,
     doc="explicit GROUPING SETS: two independent single-column "
         "aggregations in one pass",
+    exchanges=1,
 )
 def grouping_sets_revenue(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -867,6 +895,7 @@ def grouping_sets_revenue(spark, sf_dir):
     GROUP BY 1, 2
     """,
     doc="date-part extraction (year/quarter) feeding a grouped rollup",
+    exchanges=1,
 )
 def orders_by_quarter(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
@@ -897,6 +926,7 @@ def orders_by_quarter(spark, sf_dir):
     """,
     doc="scalar string surface: case, length, replace, substring, "
         "concat, contains",
+    exchanges=0,
 )
 def string_functions_showcase(spark, sf_dir):
     part = table(spark, sf_dir, "part")
@@ -935,6 +965,7 @@ def string_functions_showcase(spark, sf_dir):
     doc="range (band) join via time-bucket quantization: equi-join on "
         "(key, bucket +- 1) then exact band filter — a hash join doing "
         "O(matches) work instead of an O(n*m) inequality join",
+    exchanges=2,
 )
 def range_join_nearby_clicks(spark, sf_dir):
     from ..operators.range_join import range_join
@@ -975,6 +1006,7 @@ def range_join_nearby_clicks(spark, sf_dir):
     """,
     doc="sliding 1h/30min event-time windows (each event lands in two "
         "overlapping windows); oracle expands buckets by hand",
+    exchanges=1,
 )
 def sliding_window_rollup(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1008,6 +1040,8 @@ def sliding_window_rollup(spark, sf_dir):
     doc="as-of join: each purchase matched to the user's most recent "
         "click at-or-before it; implemented shuffle-once via "
         "union + last(ignorenulls) window, not a range cross join",
+    # union repartition + window; no range cross join
+    exchanges=2,
 )
 def asof_join_purchase_to_click(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1100,6 +1134,8 @@ _NEAR_TOL_US = 4 * 3600 * 1_000_000  # 4 h in microseconds
         "because DuckDB runs at oracle scale, the engine plan never "
         "does. At 100 TB this is the standard sorted-merge as-of "
         "cost: no range cross join, state bounded by one row per side",
+    # dedup + 1 user hash + sort
+    exchanges=3,
 )
 def asof_join_nearest_tolerance(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1222,6 +1258,7 @@ _ATTR_LOOKBACK_US = 7 * 86400 * 1_000_000
         "window) are excluded from both, keeping the columns "
         "comparable. At 100 TB: the same one-pass shape as the as-of "
         "join, with frame state bounded by the lookback",
+    exchanges=5,
 )
 def touch_attribution_revenue(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1283,6 +1320,7 @@ def touch_attribution_revenue(spark, sf_dir):
     """,
     doc="filter-heavy whole-table aggregate (TPC-H Q6 shape); all four "
         "predicates push into the parquet scan",
+    exchanges=1,
 )
 def q6_forecast_revenue(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -1317,6 +1355,7 @@ def q6_forecast_revenue(spark, sf_dir):
     """,
     doc="pivot via conditional aggregation (count/sum FILTER) — the "
         "shuffle-free way to widen by category",
+    exchanges=1,
 )
 def event_type_pivot(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1351,6 +1390,7 @@ def event_type_pivot(spark, sf_dir):
     """,
     doc="conditional-numerator ratio over a broadcast join "
         "(TPC-H Q14 shape)",
+    exchanges=1,
 )
 def q14_promo_share(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").filter(
@@ -1386,6 +1426,7 @@ def q14_promo_share(spark, sf_dir):
     """,
     doc="correlated-scalar-subquery shape, decorrelated into an "
         "aggregate + join (what Catalyst does to EXISTS/IN too)",
+    exchanges=1,
 )
 def orders_above_customer_avg(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
@@ -1417,6 +1458,7 @@ def orders_above_customer_avg(spark, sf_dir):
     """,
     doc="W5/W6 first/last row values per series via min_by/max_by — "
         "single hash aggregate, no window sort",
+    exchanges=1,
 )
 def last_tick_per_user(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1453,6 +1495,7 @@ def last_tick_per_user(spark, sf_dir):
     """,
     doc="grouped HAVING feeding a join (TPC-H Q18 shape); the aggregate "
         "side shrinks before the join, never after",
+    exchanges=1,
 )
 def q18_large_orders(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -1489,6 +1532,7 @@ def q18_large_orders(spark, sf_dir):
     """,
     doc="returned-item revenue per customer, deterministic top-20 "
         "(TPC-H Q10 shape)",
+    exchanges=1,
 )
 def q10_top_return_customers(spark, sf_dir):
     cust = table(spark, sf_dir, "customer").select(
@@ -1543,6 +1587,7 @@ def q10_top_return_customers(spark, sf_dir):
     """,
     doc="gap-based sessionization (30-min inactivity): lag + cumulative "
         "flag sum + grouped bounds, one window partitioning throughout",
+    exchanges=1,
 )
 def sessionize_events(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1660,6 +1705,7 @@ _CROSSOVER_KEPT_SQL = """
         "run-collapse window reduction (valid because the cash gate "
         "never binds at budget=10x per_trade on this corpus)",
     bench=True,
+    exchanges=1,
 )
 def ma_crossover_backtest_q(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("user_id", "ts",
@@ -1686,6 +1732,7 @@ def ma_crossover_backtest_q(spark, sf_dir):
         "(entry/exit pairs incl. forced final close, main.py:419-439); "
         "exact oracle: entry/exit are raw tick values, so no fp "
         "accumulation enters the comparison at all",
+    exchanges=1,
 )
 def ma_crossover_positions_q(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select("user_id", "ts",
@@ -1734,6 +1781,7 @@ def ma_crossover_positions_q(spark, sf_dir):
         "on the tracked attribute, then lead() closes each validity "
         "interval; both windows share one (user) exchange. The "
         "daily-merge variant of this shape is upsert_customers_merge",
+    exchanges=2,
 )
 def scd2_user_state(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -1786,6 +1834,7 @@ def scd2_user_state(spark, sf_dir):
         "shuffle sort-merge both sides on the same key — which AQE "
         "coalesces after the upstream aggregates have already shrunk "
         "the data to per-key rows",
+    exchanges=3,
 )
 def full_outer_daily_activity(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1844,6 +1893,7 @@ def full_outer_daily_activity(spark, sf_dir):
         "matching them exactly proves the distributed decomposition "
         "correct. At 100 TB: one bucket-key exchange + two tiny "
         "broadcasts; no single-partition sort of user-scale data",
+    exchanges=8,
 )
 def user_spend_rank_distribution(spark, sf_dir):
     from ..operators.ranking import global_rank, ntile_from_rank
@@ -1890,6 +1940,7 @@ def user_spend_rank_distribution(spark, sf_dir):
         "ever hash-match across engines). Reduction is map-side "
         "combinable; the value per group is bounded by source "
         "cardinality, not row count",
+    exchanges=3,
 )
 def listagg_sources_by_lang(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1940,6 +1991,7 @@ def listagg_sources_by_lang(spark, sf_dir):
         "intersectAll/exceptAll compile to count-compare aggregates "
         "with map-side partials, same cost shape as a groupBy — no "
         "row-by-row matching",
+    exchanges=6,
 )
 def set_ops_bag_semantics(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2000,6 +2052,7 @@ def set_ops_bag_semantics(spark, sf_dir):
         "user — per-key, never global. TWAP is what a trading engine "
         "reports when ticks arrive irregularly and a plain mean would "
         "over-weight bursts",
+    exchanges=2,
 )
 def twap_per_user(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2055,6 +2108,7 @@ def twap_per_user(spark, sf_dir):
         "operators/exact.py) because cents/qty quotients land on "
         "exact 5e-7 boundaries where the engines' ROUND(double) "
         "disagree — caught by the cross-SF sweep at sf0.1",
+    exchanges=2,
 )
 def vwap_per_part(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -2115,6 +2169,7 @@ def vwap_per_part(spark, sf_dir):
         "arithmetic on cents, so pattern flags can never flip on fp "
         "noise; the bar table is days x symbols rows, so the window "
         "input is already aggregate-sized at any tick volume",
+    exchanges=3,
 )
 def candle_patterns(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2185,6 +2240,7 @@ def candle_patterns(spark, sf_dir):
         "day. The risk summary every trading desk publishes daily; "
         "per-key windows and aggregates throughout — the return "
         "series per symbol is days-sized regardless of tick volume",
+    exchanges=3,
 )
 def daily_var_per_user(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2239,6 +2295,8 @@ def daily_var_per_user(spark, sf_dir):
         "map-side-combined groupBy; the quasi-identifier filter "
         "happens post-aggregate on group counts, so the shuffle "
         "carries one row per class, not per customer",
+    # one agg + output sort
+    exchanges=2,
 )
 def k_anonymity_audit(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -2275,6 +2333,7 @@ def k_anonymity_audit(spark, sf_dir):
         "must generalize even when k_anonymity_audit passes them. "
         "One groupBy with a distinct-count (two-phase partial under "
         "the hood); the shuffle carries one row per class",
+    exchanges=3,
 )
 def l_diversity_audit(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -2343,6 +2402,7 @@ def l_diversity_audit(spark, sf_dir):
         "with the BOUNDED segment domain (5 rows, broadcast) before "
         "the left join. Shuffles carry one row per (class, segment), "
         "never per customer — same scale shape as its two siblings",
+    exchanges=6,
 )
 def t_closeness_audit(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -2398,6 +2458,8 @@ def t_closeness_audit(spark, sf_dir):
         "running max beats it, or a same-price part is strictly "
         "bigger. O(n log n) per brand, partitioned windows only, no "
         "self-join of the big side",
+    # price-group agg, window, join
+    exchanges=3,
 )
 def skyline_parts_per_brand(spark, sf_dir):
     part = table(spark, sf_dir, "part")
@@ -2457,6 +2519,7 @@ def skyline_parts_per_brand(spark, sf_dir):
         "constant-size nested loop per row — O(|intervals| * 24), "
         "never an interval cross join; at 100 TB the big side stays "
         "partition-local and unshuffled",
+    exchanges=3,
 )
 def interval_overlap_join(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -2512,6 +2575,8 @@ def interval_overlap_join(spark, sf_dir):
         "(degenerate zero-variance classes emit 0). Stats are one "
         "map-side-combined groupBy (rows = #classes) broadcast back "
         "over the fact — the fact table itself never shuffles",
+    # class stats + output sort
+    exchanges=2,
 )
 def feature_standardize(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -2570,6 +2635,7 @@ def feature_standardize(spark, sf_dir):
         "single divisions of exact integer products (bit-identical "
         "both engines), top 50 by lift via TakeOrderedAndProject. The "
         "per-brand totals and the order count are tiny broadcasts",
+    exchanges=11,
 )
 def market_basket_lift(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select(
@@ -2632,6 +2698,7 @@ def market_basket_lift(spark, sf_dir):
         "13), so the recursion is a bounded semi-naive loop — the "
         "iterative-computation shape (amortization, BOM explosion, "
         "reachability) SQL engines run without leaving the optimizer",
+    exchanges=1,
 )
 def recursive_interest_schedule(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2701,6 +2768,7 @@ def recursive_interest_schedule(spark, sf_dir):
         "zero-variance windows emit 0). The market series is "
         "days-sized and broadcast; per-key windows only — no global "
         "sort anywhere",
+    exchanges=4,
 )
 def rolling_market_correlation(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2786,6 +2854,7 @@ def rolling_market_correlation(spark, sf_dir):
         "exact BIGINT; the alarm fires when the statistic exceeds a "
         "$5.00-equivalent drift at that scaling. Per-key windows only; "
         "at 100 TB the state per symbol is its days-sized bar series",
+    exchanges=5,
 )
 def cusum_change_detection(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2871,6 +2940,8 @@ def cusum_change_detection(spark, sf_dir):
         "Scale shape: ONE hash-partition-by-user exchange feeds every "
         "window (shared sort), no joins, no collect; at 100 TB this "
         "is the canonical partition-local indicator scan",
+    # series window + output sort
+    exchanges=2,
 )
 def rsi_bollinger_bands(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -2957,6 +3028,7 @@ def rsi_bollinger_bands(spark, sf_dir):
         "groupBy assembles sum(mid) + lo*|below| + hi*|above| from "
         "exact integer cents. One exchange for the window (shared by "
         "the groupBy key), deterministic tie-break by event_id",
+    exchanges=2,
 )
 def winsorized_user_stats(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -3041,6 +3113,7 @@ def winsorized_user_stats(spark, sf_dir):
         "wins, flat) surface as NULL, not NaN. One diff window + one "
         "map-side-combined groupBy riding the same per-symbol "
         "exchange — the classic two-op indicator plan",
+    exchanges=2,
 )
 def kelly_position_sizing(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -3139,6 +3212,7 @@ def _mi_block(name: str, yexpr: str) -> str:
         "the CELL table (classes x buckets rows — never the facts) "
         "and a 1-row total broadcast. MI is label-invariant, so "
         "engine-specific weekday numbering cannot change the result",
+    exchanges=25,
 )
 def mutual_information_features(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3207,6 +3281,7 @@ def mutual_information_features(spark, sf_dir):
         "tallies in the same pass; nothing but the per-key exchange. "
         "At scale this runs per micro-batch over the delta, not the "
         "store (the streaming merge sink is the incremental twin)",
+    exchanges=2,
 )
 def cdc_apply_changes(spark, sf_dir):
     ch = table(spark, sf_dir, "events").select(
@@ -3261,6 +3336,7 @@ def cdc_apply_changes(spark, sf_dir):
         "Unlike percentile()/quantile_cont (holistic, gathers the "
         "group) this never concentrates more than one bucket on a "
         "task; ranks and targets are pure integer arithmetic",
+    exchanges=5,
 )
 def exact_global_quantiles(spark, sf_dir):
     from ..operators.ranking import global_rank
@@ -3333,6 +3409,7 @@ def exact_global_quantiles(spark, sf_dir):
         "same cancellation-free form) rounded in EXACT integer "
 "arithmetic (the vwap boundary fix). Two partition windows "
 "(user; user x hour), no joins, no folds",
+    exchanges=2,
 )
 def seasonal_decompose_additive(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -3411,6 +3488,7 @@ def seasonal_decompose_additive(spark, sf_dir):
         "window ordering — the bar relation is days-sized per key, so "
         "at 100 TB the window state is bounded by calendar length, "
         "never by tick volume",
+    exchanges=3,
 )
 def atr_breakout_signals(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3500,6 +3578,7 @@ def atr_breakout_signals(spark, sf_dir):
         "only post-agg work is 20-row-relation joins (the 1-row "
         "totals cross join is a broadcast scalar — allowlisted); at "
         "100 TB the exchange carries <=20 rows per partition",
+    exchanges=3,
 )
 def psi_feature_drift(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3573,6 +3652,7 @@ def psi_feature_drift(spark, sf_dir):
         "the two-phase global_rank (bucketed by (type, value-range "
         "block)), so no per-type single-task sort exists anywhere — "
         "the per-type normalization is a broadcast of #types rows",
+    exchanges=17,
 )
 def spearman_value_k_corr(spark, sf_dir):
     from ..operators.ranking import global_rank
@@ -3663,6 +3743,7 @@ def spearman_value_k_corr(spark, sf_dir):
         "(ties -> smallest value, via lexicographic struct max on "
         "both engines). Only the final division is IEEE, rounded 6. "
         "The 1-row totals cross join is a broadcast scalar",
+    exchanges=8,
 )
 def ks_two_sample_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3735,6 +3816,7 @@ def ks_two_sample_test(spark, sf_dir):
         "defined, and every emitted double is a single identical "
         "IEEE expression of exact integers. The 1-row total is a "
         "broadcast scalar cross join",
+    exchanges=3,
 )
 def benford_first_digit_audit(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3798,6 +3880,7 @@ def benford_first_digit_audit(spark, sf_dir):
         "integers using the n*q - s^2 cancellation-free variance "
         "form. No join, no window, no second pass — the entire "
         "reduction is one 1-row aggregate at any scale",
+    exchanges=1,
 )
 def welch_t_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3865,6 +3948,7 @@ def welch_t_test(spark, sf_dir):
         "cells-sized rollups broadcast back, and the 1-row grand "
         "total is a broadcast scalar. At 100 TB the post-agg relation "
         "is #types x 24 rows regardless of input volume",
+    exchanges=8,
 )
 def chi2_independence_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3934,6 +4018,7 @@ def chi2_independence_test(spark, sf_dir):
         "score-cardinality-scale relations; the totals are a 1-row "
         "broadcast scalar. ref: main.py has no model eval — this is "
         "the training-pipeline extension family",
+    exchanges=8,
 )
 def roc_auc_exact(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4009,6 +4094,7 @@ _PR_THRESHOLDS = (1000, 2500, 5000, 7500, 9000)
         "DECIMAL(38)/HUGEINT like every ratio in the repo. At 100 TB "
         "this is a full scan + constant-size state — the cheapest "
         "possible shape for a threshold sweep",
+    exchanges=1,
 )
 def precision_recall_thresholds(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4074,6 +4160,7 @@ def precision_recall_thresholds(spark, sf_dir):
         "broadcast and the probability is one exact integer ratio, "
         "rounded half-away in DECIMAL(38)/HUGEINT. At 100 TB: one "
         "shuffle by user for the lead, constant-size state after",
+    exchanges=4,
 )
 def event_markov_transitions(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4144,6 +4231,7 @@ def event_markov_transitions(spark, sf_dir):
         "with signed half-away rounding in DECIMAL(38)/HUGEINT — no "
         "float ever enters the comparison-or-rounding path "
         "ambiguously. One shuffle by user, windows ride it",
+    exchanges=4,
 )
 def theil_sen_slope(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4241,6 +4329,7 @@ def theil_sen_slope(spark, sf_dir):
         "min() rides the same exchange as the moment aggregate. At "
         "100 TB this is a scan + one partial-aggregated groupBy: "
         "the classic 'train a million tiny models in one pass' shape",
+    exchanges=3,
 )
 def quadratic_trend_fit(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4343,6 +4432,7 @@ _PCTS = ((5, 10), (9, 10), (99, 100))  # q as exact rationals p/den
         "(operators/ranking.py) per group; the op's join shape "
         "(two order statistics per (group, p)) is already "
         "rank-equality, never a sort-merge of the full series",
+    exchanges=4,
 )
 def percentile_interpolated_per_type(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4458,6 +4548,7 @@ _ISO_BINS, _ISO_W = 20, 500
         "travels through the minimax, so the reported iso6 is the "
         "half-away integer rounding of the true rational — no "
         "float accumulates anywhere",
+    exchanges=7,
 )
 def isotonic_calibration(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4554,6 +4645,7 @@ def isotonic_calibration(spark, sf_dir):
         "and both engines evaluate the identical ln expression, "
         "rounded 6. At 100 TB: full scan to 10 cells, constant "
         "state after",
+    exchanges=4,
 )
 def woe_information_value(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4607,6 +4699,7 @@ _ED_BINS = 8
         "global_shuffle_rank, never one sorted partition of the "
         "corpus). Ties broken by event_id so both engines bucket "
         "identically",
+    exchanges=7,
 )
 def equidepth_histogram(spark, sf_dir):
     from ..operators.ranking import global_rank
@@ -4646,6 +4739,7 @@ def equidepth_histogram(spark, sf_dir):
         "path counts are a |types|^3-bounded relation and the top-k "
         "is TakeOrderedAndProject — no global sort of real data at "
         "any scale",
+    exchanges=2,
 )
 def clickstream_paths_topk(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4693,6 +4787,7 @@ def clickstream_paths_topk(spark, sf_dir):
         "rounded 6). ALL ten functions share ONE window spec -> ONE "
         "exchange + sort; the full-frame variants reuse the sorted "
         "run. API-parity entry for the window-function family",
+    exchanges=2,
 )
 def window_functions_showcase(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4769,6 +4864,7 @@ _CUPED_CUT = "2024-01-15"
         "The theta relation is a 1-row broadcast scalar. At 100 TB: "
         "scan -> per-user partial agg -> 1-row moments -> 2-row "
         "output; nothing holistic anywhere",
+    exchanges=5,
 )
 def cuped_adjusted_lift(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4876,6 +4972,7 @@ def cuped_adjusted_lift(spark, sf_dir):
         "travels through float. The time relation is "
         "distinct-days-sized: windows over it are trivially small "
         "at ANY corpus scale (per-user reduction happens first)",
+    exchanges=7,
 )
 def kaplan_meier_survival(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4957,6 +5054,7 @@ def kaplan_meier_survival(spark, sf_dir):
         "division rounds half-away in exact integers. At 100 TB the "
         "per-type rank swaps to the two-phase bucket rank; the "
         "moment aggregate shape is unchanged",
+    exchanges=2,
 )
 def gini_spend_concentration(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5010,6 +5108,7 @@ def gini_spend_concentration(spark, sf_dir):
         "one sqrt of an exact integer and one division, identical "
         "IEEE on both engines, rounded 6. One shuffle by user; the "
         "moment aggregate rides the window's exchange",
+    exchanges=2,
 )
 def interarrival_burstiness(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5079,6 +5178,7 @@ def interarrival_burstiness(spark, sf_dir):
         "asof_join_purchase_to_click. The oracle replays it as the "
         "literal interval join, so the two formulations "
         "cross-validate each other",
+    exchanges=3,
 )
 def pit_dimension_lookup(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5151,6 +5251,7 @@ def pit_dimension_lookup(spark, sf_dir):
         "prices|, and the same two-phase bucket-prefix trick as "
         "global_rank applies if a single flag's price domain ever "
         "outgrows one task",
+    exchanges=3,
 )
 def weighted_median_price(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -5234,6 +5335,7 @@ _HW_LEN = 8  # Haar window: first 8 days per user (2^3 -> 3 levels)
         "coefficients, all riding the user partitioning. Users "
         "without a full dyadic window are dropped by an exact count "
         "predicate on both engines",
+    exchanges=9,
 )
 def haar_wavelet_coeffs(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5305,6 +5407,7 @@ def haar_wavelet_coeffs(spark, sf_dir):
         "The hourly relation is built once and both coarser grains "
         "reuse it in the same plan — date_trunc('week') is "
         "Monday-start on both engines",
+    exchanges=6,
 )
 def rollup_cascade_reuse(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5365,6 +5468,7 @@ def rollup_cascade_reuse(spark, sf_dir):
         "is an exact integer division rounded half-away to 1e-2 "
         "cents. The first-seen relation joins back broadcast; one "
         "corpus scan for spend, one for cohorts",
+    exchanges=6,
 )
 def cohort_ltv_curves(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5454,6 +5558,7 @@ def cohort_ltv_curves(spark, sf_dir):
         "100 TB: three scans' worth of conditional aggregates, a "
         "broadcast per-user model, and a value-domain-sized CDF — "
         "no global sort of raw residuals",
+    exchanges=14,
 )
 def conformal_interval_coverage(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5553,6 +5658,8 @@ def conformal_interval_coverage(spark, sf_dir):
         "(interleaved sf1 A/B: 1.70s direct vs 1.87s persisted; "
         "plans/r15/ab_presort_sf1.json) — the recipe pays only when "
         "the resampled kernel is expensive (the multimodal decodes)",
+    # bars agg, series fold, sort
+    exchanges=3,
 )
 def macd_histogram(spark, sf_dir):
     from ..operators.indicators import with_macd
@@ -5629,6 +5736,8 @@ def macd_histogram(spark, sf_dir):
         "engines). Two frames over ONE per-symbol window ordering of "
         "the days-sized bar relation; %K stays an integer so the %D "
         "mean is itself exact — no double-rounding drift",
+    # bars agg, series window, sort
+    exchanges=3,
 )
 def stochastic_oscillator(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5705,6 +5814,8 @@ def stochastic_oscillator(spark, sf_dir):
         "algebra over the days-sized bar relation: one grouped "
         "aggregation, one lag, one cumulative frame, same per-symbol "
         "ordering throughout -> a single exchange at 100 TB",
+    # bars agg, series window, sort
+    exchanges=3,
 )
 def obv_indicator(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5774,6 +5885,8 @@ def obv_indicator(spark, sf_dir):
         "identical double expression (s/n)/sqrt(ssq_neg/n) on "
         "identical integers. One window pass + one "
         "map-side-combinable groupBy at any scale",
+    # series window+agg, sort
+    exchanges=2,
 )
 def sortino_downside_ratio(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5860,6 +5973,7 @@ def sortino_downside_ratio(spark, sf_dir):
         "map-side-partial count per distinct value, a value-domain "
         "prefix sum (ranking.prefix_sums), and a 1-row reduction — "
         "input volume never touches a sort",
+    exchanges=6,
 )
 def mann_whitney_u(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -5968,6 +6082,7 @@ def mann_whitney_u(spark, sf_dir):
         "left-to-right IEEE sequence). Scale: value-domain prefix "
         "sum (ranking.prefix_sums — no single-task window) + one "
         "groups-sized relation; no global sort of raw rows",
+    exchanges=14,
 )
 def kruskal_wallis_h(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -6062,6 +6177,7 @@ def kruskal_wallis_h(spark, sf_dir):
         "(event_type, hod) on both engines — the same ordered-fold "
         "determinism trick as kruskal_wallis_h. Post-agg state is "
         "#types x 24 rows at any input scale",
+    exchanges=11,
 )
 def cramers_v_effect(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -6163,6 +6279,8 @@ _KMV_K = 16
         "sketch is a bounded-state window, the merge is k*#types "
         "rows. True distincts are reported alongside for the "
         "accuracy audit",
+    # +1: merge-pool DISTINCT (k-sized)
+    exchanges=10,
 )
 def kmv_distinct_sketch(spark, sf_dir):
     from ..functions.dedup import h60
@@ -6252,6 +6370,7 @@ def kmv_distinct_sketch(spark, sf_dir):
         "sorted-list fold (same trick as kruskal_wallis_h), and every "
         "remaining float op is one identical IEEE expression on both "
         "engines. Post-agg state is k rows at any input volume",
+    exchanges=2,
 )
 def anova_f_oneway(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -6346,6 +6465,7 @@ def anova_f_oneway(spark, sf_dir):
         "order (deterministic IEEE sequence; smoothing keeps p away "
         "from 0 and 1 so ln is always finite). Model is a 24-row "
         "broadcast; everything else is map-side-combinable counts",
+    exchanges=4,
 )
 def brier_logloss_calibration(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -6445,6 +6565,8 @@ def brier_logloss_calibration(spark, sf_dir):
         "sf0.01 flipped). Bar relation is days-sized per key: fold "
         "state and oracle both scale with calendar length, never "
         "tick volume",
+    # bars agg, series fold, sort
+    exchanges=3,
 )
 def holt_winters_seasonal(spark, sf_dir):
     from ..operators.indicators import with_holt_winters
@@ -6536,6 +6658,8 @@ _SPRT = {
         "crossing is min(struct(rn, k)) under a crossing flag (no "
         "second pass); everything shares one per-user window "
         "ordering -> a single exchange at any scale",
+    # series window+agg, sort
+    exchanges=2,
 )
 def sprt_sequential_test(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -6624,6 +6748,8 @@ def sprt_sequential_test(spark, sf_dir):
         "A/B: min 1.63 vs 1.49s, medians equal; plans/r15/"
         "ab_presort_sf1.json): the fold is a cheap state machine, so "
         "the resample costs about what the persist does",
+    # series fold + output sort
+    exchanges=2,
 )
 def time_decay_ewma(spark, sf_dir):
     from ..operators.indicators import with_time_decay_ewma
@@ -6710,6 +6836,8 @@ def time_decay_ewma(spark, sf_dir):
         "per-type result materializes (run_scoped, VERDICT r9 "
         "ask #3)",
     scoped=True,
+    # five branches over the persisted value-domain count relation
+    exchanges=18,
 )
 def _mad_plan(spark, sf_dir, cache=lazy_cache):
     ev = table(spark, sf_dir, "events")
@@ -6810,6 +6938,8 @@ def _mad_plan(spark, sf_dir, cache=lazy_cache):
         "integer-scaled-moments pattern, generalized from the "
         "pairwise rolling_market_correlation to every pair at "
         "once). Post-agg state is types^2 rows at any scale",
+    # daily agg x2, pair agg, sort
+    exchanges=4,
 )
 def correlation_matrix_daily(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -6920,6 +7050,8 @@ def correlation_matrix_daily(spark, sf_dir):
         "count cache is released after the per-type result "
         "materializes (run_scoped, VERDICT r9 ask #3)",
     scoped=True,
+    # persisted cnt, 2-phase CDF
+    exchanges=12,
 )
 def _qn_plan(spark, sf_dir, cache=lazy_cache):
     ev = table(spark, sf_dir, "events")
@@ -7023,6 +7155,7 @@ def _fd_oracle() -> str:
         "measure Metanome-style FD discovery ranks by) that decides "
         "whether a column is safe as a hierarchy level or join key "
         "before a 100 TB backfill bakes the assumption in",
+    exchanges=18,
 )
 def functional_dependency_audit(spark, sf_dir):
     outs = []
@@ -7083,6 +7216,7 @@ def functional_dependency_audit(spark, sf_dir):
         "100 TB join commits to the wrong strategy (the repo's "
         "skew_salted_join is the mitigation this profile triggers)",
     scoped=True,
+    exchanges=5,
 )
 def _jcp_plan(spark, sf_dir, cache=lazy_cache):
     # a, b, m each feed two output branches: route the KEY-GRAIN
@@ -7183,6 +7317,7 @@ def _jcp_plan(spark, sf_dir, cache=lazy_cache):
         "over session boundaries is a single-task window at 100 TB. "
         "The oracle states the same semantics with the naive window",
     scoped=True,
+    exchanges=8,
 )
 def _mcs_plan(spark, sf_dir, cache=lazy_cache):
     # a scoped builder, so the runtime allowlist harvest verifies the

@@ -80,6 +80,7 @@ _QF_TOP_FRAC = 0.15
         "text); the per-doc reduction is map-side combinable, so at "
         "100 TB the only shuffle is doc-sized aggregates, never raw "
         "text",
+    exchanges=3,
 )
 def corpus_quality_filter(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -146,6 +147,7 @@ _XD_N = 5
         "table shuffles only (gram-hash, count) pairs and the df join "
         "is gram-partitioned on both sides — one exchange feeds both "
         "the count and the join at 100 TB",
+    exchanges=4,
 )
 def cross_doc_repetition(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -204,6 +206,7 @@ _CH_N = 8
         "hash — partially aggregatable (map-side combine), so the "
         "shuffle carries one row per DISTINCT chunk, not per "
         "occurrence; no window sort over skewed boilerplate groups",
+    exchanges=4,
 )
 def chunk_dedup_substrings(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -276,6 +279,7 @@ _PACK_BUDGET = 256
         "partitioned by source: at 100 TB each source packs "
         "independently (no global order), matching how shard-local "
         "packing actually runs",
+    exchanges=2,
 )
 def sequence_packing_bins(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -336,6 +340,7 @@ def _strat_case_sql() -> str:
         "re-runs, repartitioning, and appends, and the id checksum "
         "proves the SAME rows are chosen on any engine. Single scan, "
         "map-side combinable aggregate — no shuffle of sampled rows",
+    exchanges=2,
 )
 def stratified_sample_events(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -387,6 +392,7 @@ def stratified_sample_events(spark, sf_dir):
         "targets plug in as the thr table). The counts table is "
         "languages-sized: it broadcasts, so the corpus is scanned "
         "once and never shuffled",
+    exchanges=5,
 )
 def lang_mixture_rebalance(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -456,6 +462,7 @@ def lang_mixture_rebalance(spark, sf_dir):
         "The oriented-edge cache is released after the top-20 result "
         "materializes (run_scoped, VERDICT r9 ask #3)",
     scoped=True,
+    exchanges=43,
 )
 def _tri_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -550,6 +557,7 @@ _KM_SCALE = SIM.QUANT_SCALE  # 1e-6 units -> exact BIGINT L2^2
         "(vec, centroid, dist) triples. The semantic-clustering "
         "primitive behind cluster-balanced sampling; the Lloyd "
         "UPDATE step of this shape fits IVF (functions/similarity)",
+    exchanges=4,
 )
 def embedding_kmeans_assign(spark, sf_dir):
     iv = SIM.quantized_components(table(spark, sf_dir, "embeddings"))
@@ -646,6 +654,7 @@ _PIPE_QUAL = f"""
         "fine). Survivor-set caches are released after the 1-row "
         "funnel summary materializes (run_scoped, VERDICT r9 ask #3)",
     scoped=True,
+    exchanges=14,
 )
 def _cdp_plan(spark, sf_dir, cache=lazy_cache):
     docs = table(spark, sf_dir, "documents")
@@ -724,6 +733,7 @@ _RES_K = 5
         "window needs only (lang, doc_id, hash) — ids and hashes "
         "shuffle, text bodies never do; a TopK-per-key aggregate "
         "replaces the full sort when k is small",
+    exchanges=2,
 )
 def per_group_reservoir(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -760,6 +770,7 @@ _SALT_N = 16
         "change the total. This is THE pattern for power-law keys at "
         "100 TB when map-side combine alone can't absorb the skew "
         "(e.g. high-cardinality payloads under the hot key)",
+    exchanges=3,
 )
 def salted_hot_key_agg(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -813,6 +824,7 @@ _CH_SIZE, _CH_STRIDE = 32, 24
         "inherit the parent's partitioning so at 100 TB this is a "
         "narrow map stage with NO shuffle (the ORDER BY here is only "
         "the oracle's canonical presentation)",
+    exchanges=1,
 )
 def doc_chunking(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -875,6 +887,7 @@ _TM_TOTAL = 500
         "anywhere, and incrementally stable as new data appends). At "
         "100 TB: one count aggregate, one window partitioned by "
         "stratum — no global sort, no collect",
+    exchanges=5,
 )
 def temperature_mixture_sample(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -931,6 +944,7 @@ _NEG_K = 3
         "projection fan-out, no shuffle beyond the presentation sort. "
         "Docs-table ids are dense 0..n-1 here; a sparse-id corpus "
         "would first build a position index (global_shuffle_rank)",
+    exchanges=2,
 )
 def negative_sampling(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -976,6 +990,8 @@ _ES_DEN = (1 << 60) + 1  # h60 in [0, 2^60) -> u = (h+1)/_ES_DEN in (0,1)
         "TakeOrderedAndProject: at 100 TB every partition offers its "
         "local top-k and only k rows travel — the same reservoir the "
         "per-partition A-ExpJ variant maintains, with no RNG state",
+    # pure projection + top-k
+    exchanges=0,
 )
 def weighted_sample_es(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").filter(
@@ -1031,6 +1047,7 @@ _CF_TOPK = 5
         "exact BIGINTs; ranking compares the identical IEEE double in "
         "both engines with an id tie-break, and the per-item top-k "
         "window is partitioned by item — no global sort anywhere",
+    exchanges=9,
 )
 def item_item_similarity(spark, sf_dir):
     op = (table(spark, sf_dir, "lineitem")
@@ -1164,6 +1181,7 @@ def _sssp_build(spark, sf_dir, cache):
         "element literal array), so the plan is shuffle-hash-"
         "joinable at any scale: O(w*n) candidate pairs by "
         "construction instead of the all-pairs quadratic",
+    exchanges=7,
 )
 def sorted_neighborhood_pairs(spark, sf_dir):
     from ..functions.multimodal import ascii_text
@@ -1277,6 +1295,9 @@ def _edit1_verified_name_pairs(names):
         "by how many records actually share a deletion — the "
         "blocking guarantee, same discipline as the MinHash bands",
     scoped=True,
+    # r14: tightened 4 -> 3 — pre-sort union persisted (the sort
+    # samples the cache, not a recomputed verify chain)
+    exchanges=3,
 )
 def _e1_plan(spark, sf_dir, cache=lazy_cache):
     # Replan (round 9, measured): the original id-grain candidate
@@ -1376,6 +1397,8 @@ def _e1_plan(spark, sf_dir, cache=lazy_cache):
         "relation is (len+1) deletion keys per DISTINCT name, "
         "invariant under corpus duplication",
     scoped=True,
+    # name-grain agg, key join, deletion-key self-join
+    exchanges=4,
 )
 def _e1audit_plan(spark, sf_dir, cache=lazy_cache):
     cust = table(spark, sf_dir, "customer").select(
@@ -1462,6 +1485,7 @@ _BP_CHUNK, _BP_DF = 8, 4
         "state is bounded by doc length — nothing global. "
         "ref main.py has no corpus ops; this extends the LLM-pipeline "
         "family (CCNet: Wenzek et al., arXiv:1911.00359)",
+    exchanges=4,
 )
 def boilerplate_chunk_removal(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1538,6 +1562,7 @@ _CAP_K = 8
         "anywhere. At 100 TB hot domains are exactly the point: the "
         "cap bounds any single domain's contribution to the corpus "
         "no matter how skewed the crawl",
+    exchanges=2,
 )
 def domain_cap_sample(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1604,6 +1629,7 @@ _CT_N, _CT_MAXDF, _CT_THR = 5, 50, 0.5
         "2*inter >= min(n_a, n_b) is evaluated in exact integers; "
         "the reported ratios are single integer divisions rounded "
         "half-away in DECIMAL(38)/HUGEINT",
+    exchanges=12,
 )
 def ngram_containment_pairs(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1788,6 +1814,9 @@ def _temporal_reach_oracle() -> str:
         "run_scoped releases every cache when the result "
         "materializes; arrival state never exceeds one row per node",
     scoped=True,
+    # dated edge build + per hop: the superstep's join and group
+    # by dst, the union's min per node
+    exchanges=9,
 )
 def _temporal_reach_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -1904,6 +1933,9 @@ def _kml_oracle() -> str:
         f"{_KML_ITERS + 1} assignment joins, then released once the "
         "per-cluster result materializes (run_scoped)",
     scoped=True,
+    # centroids ride as driver state between rounds, so the
+    # plan is ONE assignment — constant depth per iteration
+    exchanges=4,
 )
 def _kml_plan(spark, sf_dir, cache=lazy_cache):
     iv = cache(SIM.quantized_components(table(spark, sf_dir, "embeddings")))
@@ -2133,6 +2165,7 @@ def canonicalize_urls(d):
         "has no URL column), so hash equality checks the "
         "canonicalization itself. At 100 TB this runs as a "
         "map-only stage ahead of the per-domain dedup profile",
+    exchanges=1,
 )
 def url_canonicalization(spark, sf_dir):
     return _url_canon_df(spark, sf_dir).orderBy("doc_id")
@@ -2165,6 +2198,7 @@ def url_canonicalization(spark, sf_dir):
         "less: one groupBy at domain grain (map-side combinable "
         "distincts via partial aggregation), output rows = #domains "
         "— a broadcast-sized profile at any corpus size",
+    exchanges=4,
 )
 def domain_dedup_rate_profile(spark, sf_dir):
     c = _url_canon_df(spark, sf_dir)
@@ -2271,6 +2305,7 @@ _SWP_K = 3     # report pairs sharing >= K window positions
         "shuffles; nothing is all-pairs. Pairs sharing >= "
         f"{_SWP_K} windows are reported",
     scoped=True,
+    exchanges=8,
 )
 def _swp_plan(spark, sf_dir, cache=lazy_cache):
     return _swp_core(table(spark, sf_dir, "documents"), cache)

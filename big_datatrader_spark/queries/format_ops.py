@@ -41,6 +41,7 @@ from . import query
         "applied on the RE-READ side, so ORC predicate pushdown is on "
         "the tested path (plan-asserted in tests/test_format_ops.py)",
     scoped=True,
+    exchanges=2,
 )
 def orc_roundtrip_revenue(spark, sf_dir, cache):
     li = table(spark, sf_dir, "lineitem").select(
@@ -80,6 +81,7 @@ def orc_roundtrip_revenue(spark, sf_dir, cache):
         "Timestamps travel as ISO-8601 with microseconds "
         "(timestampFormat pinned on both write and read)",
     scoped=True,
+    exchanges=3,
 )
 def jsonl_roundtrip_events(spark, sf_dir, cache):
     fmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
@@ -123,6 +125,7 @@ def jsonl_roundtrip_events(spark, sf_dir, cache):
         "table, so the partitioned re-write provably preserved every "
         "row and value",
     scoped=True,
+    exchanges=2,
 )
 def partitioned_pruned_event_scan(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select(
@@ -187,6 +190,7 @@ _RPT_LO, _RPT_HI = "2024-01-10 00:00:00", "2024-01-13 00:00:00"
         "tests/test_format_ops.py) — at 100 TB the difference between "
         "reading ~3 days and scanning a month",
     scoped=True,
+    exchanges=2,
 )
 def range_pruned_time_scan(spark, sf_dir, cache):
     from ..sources.sinks import write_clustered
@@ -266,6 +270,7 @@ _ZP_USER_MAX = 8  # user_id < 8 exists at every sf (ids are 0..15k*sf)
         "between one layout serving every query axis and one rewrite "
         "per axis",
     scoped=True,
+    exchanges=3,
 )
 def zorder_pruned_scan(spark, sf_dir, cache):
     from ..sources.sinks import write_zordered
@@ -328,6 +333,7 @@ def zorder_pruned_rollup(spark, path: str):
         "file generations without rewrites, and the footer-merge cost "
         "is per-FILE metadata, never a data scan",
     scoped=True,
+    exchanges=2,
 )
 def schema_evolution_union_scan(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select(
@@ -380,6 +386,7 @@ def schema_evolution_union_scan(spark, sf_dir, cache):
         "contract: one malformed line must never kill a batch, and "
         "every malformed line must stay auditable",
     scoped=True,
+    exchanges=2,
 )
 def csv_quarantine_scan(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select(
@@ -442,6 +449,7 @@ def csv_quarantine_scan(spark, sf_dir, cache):
         "namenode melting under KB-files and uniform shard-sized "
         "scans",
     scoped=True,
+    exchanges=2,
 )
 def compacted_scan_equivalence(spark, sf_dir, cache):
     from ..sources.sinks import compact_files
@@ -503,6 +511,10 @@ def compacted_scan_equivalence(spark, sf_dir, cache):
         "duplication moves the sum. The drift companion to "
         "snapshot_diff (which diffs WHICH rows changed; this detects "
         "THAT something changed at minimum cost)",
+    # one map-side-combinable global agg: the scan's partial rows
+    # + the 1-row final — no other exchange may ever appear (the
+    # whole point of the sort-free fingerprint)
+    exchanges=1,
 )
 def dataset_content_fingerprint(spark, sf_dir):
     od = table(spark, sf_dir, "orders")
@@ -667,6 +679,7 @@ def _spa_bucket_bounds() -> tuple[int, int]:
         "this is that capability restated as a provable layout "
         "contract",
     scoped=True,
+    exchanges=5,
 )
 def scan_pruning_preflight(spark, sf_dir, cache):
     ev = table(spark, sf_dir, "events").select("ts", "value").withColumn(
@@ -845,6 +858,7 @@ def _with_zq(ev):
         "per query; this is the multi-axis version as a provable "
         "layout contract",
     scoped=True,
+    exchanges=5,
 )
 def zorder_morton_preflight(spark, sf_dir, cache):
     ev = _with_zq(table(spark, sf_dir, "events")
@@ -1007,6 +1021,7 @@ def _zir_canon_spark():
         "before an executor spins up".format(_ZIR_LO, _ZIR_HI,
                                              _ZIR_MOD),
     scoped=True,
+    exchanges=5,
 )
 def zorder_incremental_recluster(spark, sf_dir, cache):
     ev = _with_zq(table(spark, sf_dir, "events").select(

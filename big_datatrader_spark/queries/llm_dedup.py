@@ -50,6 +50,7 @@ ROWS_PER_BAND = NUM_HASHES // BANDS
     """,
     doc="exact dedup: hash-groupBy on content fingerprint; keeps min id "
         "per group (one shuffle of 16-byte keys, never of bodies)",
+    exchanges=1,
 )
 def dedup_exact(spark, sf_dir):
     return DD.exact_dedup(table(spark, sf_dir, "documents"))
@@ -89,6 +90,7 @@ def dedup_exact(spark, sf_dir):
         "scale_path_total that excludes this member",
     bench=True,
     tags=("exact_semantics",),
+    exchanges=15,
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     return DD.ngram_jaccard_pairs_collapsed(
@@ -138,6 +140,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         "(rep, shingle) posting list itself, invariant under corpus "
         "duplication — the same pass the join would do anyway, "
         "minus the join",
+    exchanges=6,
 )
 def ngram_pair_blowup_audit(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -219,6 +222,7 @@ def _band_struct_sql() -> str:
         "minhash_lsh_pairs_collapsed carries the numbers and stays "
         "the documented form for extreme-duplication corpora)",
     bench=True,
+    exchanges=2,
 )
 def dedup_minhash_lsh(spark, sf_dir):
     return DD.minhash_lsh_pairs(
@@ -251,6 +255,7 @@ def _simhash_sql(bits: int = 16) -> str:
     """,
     doc="32-bit SimHash near-dup pairs (hamming <= 2); majority vote "
         "per bit over token hashes",
+    exchanges=1,
 )
 def dedup_simhash(spark, sf_dir):
     return DD.simhash_pairs(
@@ -314,6 +319,7 @@ def dedup_clusters(spark, sf_dir):
     """,
     doc="exact dedup APPLIED: the cleaned corpus (one representative "
         "row per content fingerprint, min doc_id wins)",
+    exchanges=1,
 )
 def dedup_exact_kept(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -369,6 +375,7 @@ def dedup_exact_kept(spark, sf_dir):
         "attribute values, never document bodies — at 100 TB "
         "survivorship costs the same as the dedup groupBy it extends",
     scoped=True,
+    exchanges=6,
 )
 def _grs_plan(spark, sf_dir, cache=lazy_cache):
     tokset_fp = F.md5(F.array_join(F.array_sort(F.array_distinct(
@@ -427,6 +434,7 @@ def _grs_plan(spark, sf_dir, cache=lazy_cache):
     """,
     doc="embedding-cosine near-dup pairs, blocked on label so the join "
         "is per-block rather than all-pairs",
+    exchanges=0,
 )
 def dedup_embedding_cosine(spark, sf_dir):
     return SIM.embedding_near_dup_pairs(
@@ -511,6 +519,7 @@ def dedup_embedding_cosine(spark, sf_dir):
         "half-away. At 100 TB you run this on a SAMPLED block of the "
         "corpus (the truth side is quadratic in df) — the harness "
         "shape is unchanged",
+    exchanges=11,
 )
 def lsh_vs_exact_eval(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -633,6 +642,12 @@ def lsh_vs_exact_eval(spark, sf_dir):
         "pairs-completeness) or with the df-capped truth variant; "
         "the blocker being measured stays linear either way",
     tags=("exact_semantics",),
+    # 44 > the original 23: the truth side's duplication collapse
+    # (round 9) adds fingerprint groupBy/expansion stages to the
+    # PLANNED tree — but the duplication^2 posting-list cost they
+    # remove measured 67s -> 8.0s at sf1 (SCALING.md); the extra
+    # exchanges are fp/id-narrow
+    exchanges=44,
 )
 def blocking_quality_metrics(spark, sf_dir):
     return _blocking_metrics(table(spark, sf_dir, "documents"))
@@ -744,6 +759,7 @@ _SAMPLE_PRED_SQL = f"({_h60('CAST(doc_id AS VARCHAR)')} % 4) < 2"
         "fits one executor wave). Hash-exact: the sample predicate is "
         "the shared 60-bit md5 both engines compute bit-identically, "
         "so this is a full-oracle query, not a bound check",
+    exchanges=44,
 )
 def blocking_quality_metrics_sampled(spark, sf_dir):
     docs = (table(spark, sf_dir, "documents")

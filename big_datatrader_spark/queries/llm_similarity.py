@@ -45,6 +45,7 @@ _COS = ("list_dot_product(q.embedding::DOUBLE[], c.embedding::DOUBLE[])"
         "dot products via zip_with/aggregate (JVM-side); ranking on "
         "rounded similarity for cross-engine determinism",
     bench=True,
+    exchanges=1,
 )
 def ann_bruteforce_topk(spark, sf_dir):
     return SIM.brute_force_topk(
@@ -61,6 +62,7 @@ def ann_bruteforce_topk(spark, sf_dir):
         "collides with the query in ANY table, deduped before "
         "scoring — the corpus-scale path. Recall vs brute force is "
         "property-tested (>=15/25 at sf0.001).",
+    exchanges=2,
 )
 def ann_lsh_topk(spark, sf_dir):
     return SIM.lsh_topk(
@@ -78,6 +80,7 @@ def ann_lsh_topk(spark, sf_dir):
         "partitioned by inverted list, queries probe their 2 nearest "
         "lists — the partition-pruning ANN path at corpus scale. "
         "Recall vs brute force is property-tested (>=15/25).",
+    exchanges=1,
 )
 def ann_ivf_topk(spark, sf_dir):
     return SIM.ivf_topk(
@@ -178,6 +181,7 @@ _IVF_PROBES = (1, 2, 4, 8)
         "shuffle only within probed lists (n_probe/n_lists of the "
         "data); truth side is |Q| x corpus with Q broadcast — and at "
         "100 TB you run this audit on a sampled block, same shape",
+    exchanges=9,
 )
 def ivf_vs_exact_eval(spark, sf_dir):
     from .vector_ops import _quantized
@@ -253,6 +257,7 @@ def ivf_vs_exact_eval(spark, sf_dir):
     """,
     doc="vector-column arithmetic via higher-order functions (norms, "
         "component sums) — the building blocks of similarity ops",
+    exchanges=0,
 )
 def embedding_norms(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
@@ -292,6 +297,7 @@ def embedding_norms(spark, sf_dir):
         "one d^2-sized shuffle — the corpus itself never moves. "
         "Per-product micro-rounding makes the matrix bit-exact and "
         "order-independent (hash oracle on 64x65/2 cells)",
+    exchanges=3,
 )
 def embedding_gram_matrix(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
@@ -357,6 +363,7 @@ _HAM_WORD = 63  # dims packed per BIGINT word (63 keeps 1<<pos positive)
         "the corpus-side scan reads 2 words/row; the exact-cosine "
         "rerank of the Hamming shortlist is ann_bruteforce_topk on "
         "k' candidates",
+    exchanges=5,
 )
 def ann_hamming_sign_topk(spark, sf_dir):
     iv = SIM.quantized_components(table(spark, sf_dir, "embeddings"))

@@ -39,6 +39,7 @@ from . import lazy_cache, query
     """,
     doc="binary media columns with typed metadata struct (byte length, "
         "mime, magic prefix)",
+    exchanges=0,
 )
 def multimodal_binary_meta(spark, sf_dir):
     media = MM.with_binary_content(table(spark, sf_dir, "documents"))
@@ -109,6 +110,8 @@ def multimodal_binary_meta(spark, sf_dir):
         "Arrow-batched map, zero shuffle; decode output persisted "
         "before the output sort (r15, see module note)",
     scoped=True,
+    # orderBy only; decode narrow
+    exchanges=1,
 )
 def _mfe_plan(spark, sf_dir, cache=lazy_cache):
     media = MM.with_mixed_media(table(spark, sf_dir, "documents"))
@@ -146,6 +149,7 @@ def _mfe_plan(spark, sf_dir, cache=lazy_cache):
         "ops and hashes the identical frames; frame rows persisted "
         "before the output sort (r15, see module note)",
     scoped=True,
+    exchanges=1,
 )
 def _mfs_plan(spark, sf_dir, cache=lazy_cache):
     media = MM.with_binary_content(table(spark, sf_dir, "documents"))
@@ -195,6 +199,7 @@ def _mfs_plan(spark, sf_dir, cache=lazy_cache):
         "Arrow-batched map, persisted before the output sort (r15, "
         "see module note)",
     scoped=True,
+    exchanges=1,
 )
 def _mpd_plan(spark, sf_dir, cache=lazy_cache):
     docs = table(spark, sf_dir, "documents")
@@ -249,6 +254,8 @@ def _mpd_plan(spark, sf_dir, cache=lazy_cache):
         "no shuffle — the audio twin of multimodal_ppm_decode; "
         "persisted before the output sort (r15, see module note)",
     scoped=True,
+    # narrow decode + output sort
+    exchanges=1,
 )
 def _mwd_plan(spark, sf_dir, cache=lazy_cache):
     docs = table(spark, sf_dir, "documents")
@@ -302,6 +309,8 @@ def _mwd_plan(spark, sf_dir, cache=lazy_cache):
         "(pixel = p DIV 3, row = pixel DIV 8, patch = row DIV 4). "
         "Per-row fan-out (4 patches/doc) stays inside the Arrow "
         "batch — no shuffle",
+    # narrow decode + output sort
+    exchanges=1,
 )
 def image_patchify(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -366,6 +375,7 @@ def image_patchify(spark, sf_dir):
         "from per-character codepoints through window algebra. The "
         "kernel is a narrow Arrow-batched mapInPandas over the "
         "binary column — zero shuffle, like every decode path",
+    exchanges=1,
 )
 def audio_frame_features(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")

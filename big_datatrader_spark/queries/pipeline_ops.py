@@ -47,6 +47,7 @@ def _split(spark, sf_dir):
         "drop_batch) per incoming document against a persisted "
         "fingerprint store — the daily-ingest shape of a training-data "
         "pipeline; only 16-byte fingerprints shuffle",
+    exchanges=2,
 )
 def incremental_dedup_exact(spark, sf_dir):
     batch, store = _split(spark, sf_dir)
@@ -94,6 +95,7 @@ def _sig_chain_sql(rel: str, prefix: str) -> str:
         "joined against the corpus's persisted signature store on "
         "(band, bucket) — each ingest costs O(batch), never a "
         "whole-corpus self-join",
+    exchanges=2,
 )
 def incremental_dedup_minhash(spark, sf_dir):
     batch, store = _split(spark, sf_dir)
@@ -162,6 +164,7 @@ def incremental_dedup_minhash(spark, sf_dir):
         "result; same-text members pair at jaccard 1.0 while their "
         "representative keeps a surviving shingle",
     bench=True,
+    exchanges=29,
 )
 def dedup_ngram_jaccard_capped(spark, sf_dir):
     return DD.ngram_jaccard_pairs_collapsed(

@@ -43,6 +43,7 @@ def _ticks(spark, sf_dir):
                  AND TIMESTAMP '2024-01-20 00:00:00'
     """,
     doc="F1 inclusive-both-ends time-range filter (main.py:318-320)",
+    exchanges=0,
 )
 def date_range_filter(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -62,6 +63,7 @@ def date_range_filter(spark, sf_dir):
     WHERE value > 5 AND value < 50 AND event_type = 'click'
     """,
     doc="F3 JSON {col:{gt/lt/eq:v}} predicate compiler (main.py:265-289)",
+    exchanges=0,
 )
 def json_filter(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -84,6 +86,8 @@ def json_filter(spark, sf_dir):
     FROM events
     """,
     doc="W4 stride buy signals, default step 10 (main.py:349-360)",
+    # one exchange for the shared window spec
+    exchanges=1,
 )
 def stride_signals(spark, sf_dir):
     sig = with_stride_signals(_ticks(spark, sf_dir), ["user_id"], ["ts", "event_id"])
@@ -108,6 +112,7 @@ def stride_signals(spark, sf_dir):
     """,
     doc="W4 stride with step = max(n_rows // max_trades, 1), "
         "max_trades=7 (main.py:354-357)",
+    exchanges=1,
 )
 def stride_signals_derived_step(spark, sf_dir):
     sig = with_stride_signals(_ticks(spark, sf_dir), ["user_id"], ["ts", "event_id"],
@@ -134,6 +139,8 @@ def stride_signals_derived_step(spark, sf_dir):
     """,
     doc="W1/W2 trailing rolling means 5/20, min_periods=1 "
         "(main.py:403-404)",
+    # both rolling windows share (partition, order) -> ONE shuffle
+    exchanges=1,
 )
 def rolling_ma(spark, sf_dir):
     df = _ticks(spark, sf_dir)
@@ -170,6 +177,7 @@ def rolling_ma(spark, sf_dir):
     FROM lagged
     """,
     doc="W3 golden/death cross via lag (main.py:409-423)",
+    exchanges=1,
 )
 def crossover_signals(spark, sf_dir):
     df = _ticks(spark, sf_dir)
@@ -199,6 +207,7 @@ def crossover_signals(spark, sf_dir):
     """,
     doc="O2 ordered limit over buy rows -> TakeOrderedAndProject "
         "(main.py:380-381)",
+    exchanges=1,
 )
 def topk_earliest_buys(spark, sf_dir):
     sig = with_stride_signals(_ticks(spark, sf_dir), ["user_id"], ["ts", "event_id"])
@@ -272,6 +281,7 @@ def _rounded_backtest(df):
     doc="§2.12 pipeline 1/3: per-symbol evenly-spaced-buys backtest "
         "(main.py:366-390; parallel variant main.py:448-486)",
     bench=True,
+    exchanges=2,
 )
 def evenly_spaced_backtest_q(spark, sf_dir):
     res = evenly_spaced_backtest(
@@ -341,6 +351,7 @@ FROM finals f LEFT JOIN agg a USING (user_id)
     """,
     doc="S4 export table: buy rows + trade_amount/shares computed "
         "columns (main.py:526-528)",
+    exchanges=1,
 )
 def export_buy_rows(spark, sf_dir):
     sig = with_stride_signals(_ticks(spark, sf_dir), ["user_id"], ["ts", "event_id"])
@@ -371,6 +382,7 @@ def export_buy_rows(spark, sf_dir):
     """,
     doc="U1 as an Arrow-batched pandas_udf (parity demo; equals the "
         "column expression, which is the hot-path form)",
+    exchanges=0,
 )
 def shares_vectorized_udf(spark, sf_dir):
     from pyspark.sql.functions import pandas_udf
@@ -395,6 +407,7 @@ def shares_vectorized_udf(spark, sf_dir):
     oracle=_EVENLY_ORACLE_MAXTRADES,
     doc="evenly-spaced backtest with explicit max_trades=5 -> derived "
         "step (main.py:354-357, 372-373)",
+    exchanges=2,
 )
 def evenly_spaced_backtest_maxtrades_q(spark, sf_dir):
     res = evenly_spaced_backtest(
@@ -456,6 +469,7 @@ FROM per
         "combined starting budget. The roll-up the reference's GUI "
         "user computes by hand across runs, as one extra aggregate on "
         "the per-symbol plan",
+    exchanges=3,
 )
 def evenly_spaced_portfolio(spark, sf_dir):
     res = evenly_spaced_backtest(
@@ -555,6 +569,7 @@ _SL_PCT, _TP_PCT = 97, 105  # exit bands, percent of entry cents
         "oracle. Band predicates are integer cross-multiplications — "
         "no float anywhere. At 100 TB each series folds locally after "
         "one user-hash exchange; state is one open position",
+    exchanges=2,
 )
 def stoploss_takeprofit_backtest(spark, sf_dir):
     import numpy as np

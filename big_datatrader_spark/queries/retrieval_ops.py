@@ -162,6 +162,7 @@ def _bm25_parts(spark, sf_dir):
         "corpus to matching postings BEFORE any shuffle — the classic "
         "impact-ordered posting scan, and the final top-k is "
         "TakeOrderedAndProject, never a global sort",
+    exchanges=16,
 )
 def bm25_more_like_this(spark, sf_dir):
     _, _, _, total = _bm25_parts(spark, sf_dir)
@@ -371,6 +372,7 @@ _BPE_PAIR_TOPK = 100
         "Integer counts only, so the hash is exact on any engine or "
         "partition layout. At 100 TB: the corpus is touched once; "
         "everything after the word groupBy is vocabulary-sized",
+    exchanges=2,
 )
 def bpe_pair_counts_round1(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -428,6 +430,7 @@ def bpe_pair_counts_round1(spark, sf_dir):
         "this one is deliberately also SQL-expressible so the oracle "
         "pins the semantics exactly. Narrow op: no shuffle, fan-out "
         "stays inside the Arrow batch",
+    exchanges=1,
 )
 def udtf_sentence_spans(spark, sf_dir):
     from pyspark.sql.functions import udtf
@@ -492,6 +495,7 @@ def udtf_sentence_spans(spark, sf_dir):
         "holistic UDAF: each group's values gather to one worker — "
         "fine for bounded groups (per-type, per-symbol), wrong for "
         "unbounded ones (use approx sketches there)",
+    exchanges=2,
 )
 def udaf_median_cents(spark, sf_dir):
     import numpy as np
@@ -576,6 +580,16 @@ _RRF_OUT = 10
         "double expression on integer ranks, so fusion scores are "
         "engine-exact; absent-from-pool ranks surface as 0, not "
         "NULL, keeping the column integer-typed in both engines",
+    # two full ranker chains. 33 > the pre-r15 26: scan_floor's
+    # conditional doc_id repartition fires on the one-row-group test
+    # layout and the static count charges it once per docs-subtree
+    # embedding across the two ranker chains (ReusedExchange at
+    # runtime — ONE extra real shuffle). The extra exchange is the
+    # trade that moves the tokenize+explode off the single scan task:
+    # tf stage 1.98 -> 0.47s at sf1 (OPTIMIZATION_r15.md); on
+    # multi-row-group layouts the floor is inert and the plan returns
+    # to the old 26.
+    exchanges=33,
 )
 def hybrid_rrf_retrieval(spark, sf_dir):
     tk, tf, sc, total = _bm25_parts(spark, sf_dir)
@@ -657,6 +671,7 @@ _PH_W1, _PH_W2 = "data", "stream"   # the query phrase "data stream"
         "to the tokenize stage), so the join touches only the two "
         "terms' postings — at 100 TB that is df(w1)+df(w2) rows, "
         "not the corpus; both sides share the doc_id partitioning",
+    exchanges=2,
 )
 def phrase_search_positional(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -731,6 +746,7 @@ _HN_TOPK = 10
         f"{_HN_TOPK} negatives via TakeOrderedAndProject. The mined "
         "(query, negative) pairs feed straight into "
         "negative_sampling's contrastive builder",
+    exchanges=32,
 )
 def hard_negative_mining(spark, sf_dir):
     from ..functions import dedup as DD

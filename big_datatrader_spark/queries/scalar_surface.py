@@ -40,6 +40,7 @@ _R = 6
     """,
     doc="JSON path extraction from a string column (get_json_object) "
         "feeding a grouped aggregate",
+    exchanges=2,
 )
 def json_props_extract(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -78,6 +79,7 @@ def json_props_extract(spark, sf_dir):
         "The array itself is emitted as a CSV of integer micro-units "
         "(a scalar the driver's canonicalizer can hash; float "
         "formatting never enters the encoding)",
+    exchanges=2,
 )
 def array_values_per_user(spark, sf_dir):
     ev = table(spark, sf_dir, "events").filter(
@@ -121,6 +123,7 @@ def array_values_per_user(spark, sf_dir):
         "entries, read back via map_keys/map_values; keys and values "
         "are emitted as CSV scalars so the driver canonicalizer can "
         "hash the row (raw array cells are unhashable in pandas)",
+    exchanges=3,
 )
 def map_event_type_counts(spark, sf_dir):
     per = (
@@ -159,6 +162,7 @@ def map_event_type_counts(spark, sf_dir):
     """,
     doc="regexp_extract / regexp_count / rlike surface (patterns kept "
         "to a Java-and-RE2-common subset)",
+    exchanges=1,
 )
 def regex_doc_numbers(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -201,6 +205,7 @@ def regex_doc_numbers(spark, sf_dir):
         "are rounded to 1e-4 units and summed as BIGINT so the total "
         "is exact and independent of parallel summation order (the "
         "q9/q11 integer-cents pattern)",
+    exchanges=2,
 )
 def math_null_surface(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -240,6 +245,7 @@ def math_null_surface(spark, sf_dir):
     doc="approx_count_distinct (HyperLogLog++) and percentile_approx "
         "per event_type — sketch outputs are engine-defined, so the "
         "gate is rows-only plus an error-bound pytest",
+    exchanges=2,
 )
 def approx_aggregates(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -295,6 +301,7 @@ _AA_MED_SLACK_PCT = 1   # returned median's rank within 1% of n/2;
         "the driver gate — not a hand-run pytest — now pins the last "
         "free-floating rows-only query's mechanism. All comparisons "
         "are exact BIGINT cross-multiplications; no float thresholds",
+    exchanges=6,
 )
 def approx_aggregates_error_audit(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -370,6 +377,8 @@ def approx_aggregates_error_audit(spark, sf_dir):
         "into the JVM (no regex, no per-row Python); DuckDB's "
         "native JSON functions are the oracle twin. One map-side-"
         "combinable aggregate over the extracted fields",
+    # distinct partials + sort
+    exchanges=3,
 )
 def variant_props_stats(spark, sf_dir):
     from ..sources.parquet_source import table
@@ -425,6 +434,8 @@ def variant_props_stats(spark, sf_dir):
         "against DuckDB regenerating the identical stream — a "
         "connector inside the correctness gate, not beside it. "
         "sf_dir is unused: this query exercises the source surface",
+    # per-sym agg + output sort
+    exchanges=2,
 )
 def python_datasource_ticks(spark, sf_dir):
     from ..sources import python_datasource as PDS

@@ -66,6 +66,8 @@ _SALT_N = 8          # join-salt fan-out
         "exact join, so the result equals the plain join (the oracle). "
         "Same mechanism as Catalyst's InjectRuntimeFilter, usable when "
         "the dim is too big to broadcast whole but its key bitmap is not",
+    # bucket distinct, group agg, sort
+    exchanges=3,
 )
 def runtime_filter_semi_join(spark, sf_dir):
     dim = (
@@ -121,6 +123,7 @@ def runtime_filter_semi_join(spark, sf_dir):
         "when skew is known up front. Per-row values are integer "
         "cents, so partial order can't move the total and the result "
         "is bit-identical to the plain join (the oracle)",
+    exchanges=3,
 )
 def skew_salted_join(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -182,6 +185,10 @@ _CURR_TOP = 300
         "(rank, lang_idx) codes; a language that runs out of documents "
         "leaves gaps, which downstream consumers treat as skipped "
         "turns — the standard data-mixing curriculum shape",
+    # per-lang rank window + the langs-sized distinct/window/
+    # broadcast chain (rows = #langs) + TakeOrdered; all key- or
+    # langs-sized
+    exchanges=3,
 )
 def curriculum_interleave(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select(
@@ -267,6 +274,7 @@ def _uni_sql(key: str) -> str:
         "Lineitem carries no custkey, so it joins the sampled orders; "
         "revenue in exact cent-percent BIGINT units with the 10x "
         "universe scale-up as a second exact column",
+    exchanges=3,
 )
 def universe_sample_join(spark, sf_dir):
     keep = lambda c: (h60(c.cast("string")) % _UNI_MOD) < _UNI_PCT

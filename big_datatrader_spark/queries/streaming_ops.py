@@ -25,6 +25,7 @@ from . import query
     """,
     doc="tumbling 1h window + 2h watermark over the events file stream "
         "(availableNow drain) — streaming result == batch rollup",
+    exchanges=1,
 )
 def streaming_hourly_rollup(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
@@ -39,6 +40,7 @@ def streaming_hourly_rollup(spark, sf_dir):
     doc="streaming dedup via dropDuplicates on a watermarked stream "
         "(availableNow drain == batch DISTINCT; state bounded by the "
         "watermark in continuous operation)",
+    exchanges=1,
 )
 def streaming_distinct_user_types(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
@@ -69,6 +71,8 @@ def streaming_distinct_user_types(spark, sf_dir):
         "half-away-from-zero before summing), so the drained state is "
         "order-independent and hash-matches the batch integer-scaled "
         "sum exactly — an exact oracle for a stateful stream",
+    # groupBy before state fold
+    exchanges=1,
 )
 def streaming_running_position(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
@@ -99,6 +103,8 @@ def streaming_running_position(spark, sf_dir):
         "clicks at most 30 min earlier, both sides watermarked so the "
         "join state is bounded in continuous operation; availableNow "
         "drain == the batch self-join",
+    # one per join side
+    exchanges=2,
 )
 def streaming_click_purchase_join(spark, sf_dir):
     # stream-stream join state costs scale with state partitions x
@@ -148,6 +154,7 @@ def _click_purchase_join(spark, sf_dir):
         "is dropped once the watermark passes it, so continuous "
         "operation holds bounded state; the availableNow drain equals "
         "batch DISTINCT over the original (un-duplicated) events",
+    exchanges=1,
 )
 def streaming_exactly_once_dedup(spark, sf_dir):
     redelivered = events_stream(spark, sf_dir).unionAll(
@@ -181,6 +188,7 @@ def streaming_exactly_once_dedup(spark, sf_dir):
         "query; continuously, the rank runs over the sink table. "
         "Rank order is total (count desc, then type), so the result "
         "is deterministic and equals the batch window+rank (oracle)",
+    exchanges=1,
 )
 def streaming_topk_trending(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
@@ -239,6 +247,7 @@ def streaming_topk_trending(spark, sf_dir):
         "when the gap is >= the duration (window [ts, ts+gap) "
         "overlap), hence the >= in the oracle where batch "
         "sessionize_events uses >; window.end = last event + gap",
+    exchanges=1,
 )
 def streaming_session_window(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
@@ -270,6 +279,8 @@ def streaming_session_window(spark, sf_dir):
         "streaming-ingest enrichment shape: dimension lookups stay "
         "stateless, only the windowed agg holds state, and the "
         "availableNow drain equals the batch join+rollup exactly",
+    # dim join + rollup agg
+    exchanges=2,
 )
 def streaming_enriched_rollup(spark, sf_dir):
     stream = events_stream(spark, sf_dir)
@@ -323,6 +334,10 @@ def streaming_enriched_rollup(spark, sf_dir):
         "family (the first-write-wins variant is order-undefined by "
         "design and stays pytest-only)",
     scoped=True,
+    # foreachBatch merge sink: the merge runs as batch plans
+    # inside foreachBatch; the streaming plan is the source
+    # projection
+    exchanges=0,
 )
 def streaming_cdc_upsert(spark, sf_dir, cache):
     from ..streaming.pipeline import (
@@ -371,6 +386,7 @@ def streaming_cdc_upsert(spark, sf_dir, cache):
         "to a single batch). The drained aggregation is hash-exact "
         "against DuckDB regenerating the identical deterministic "
         "feed — a streaming connector inside the correctness gate",
+    exchanges=1,
 )
 def streaming_python_datasource(spark, sf_dir):
     from ..sources import python_datasource as PDS
@@ -477,6 +493,8 @@ def _wm_batch_expr(u, eid, t0: int, t1: int):
         "state-bound contract: watermark caps how long any window's "
         "state lives regardless of corpus size",
     scoped=True,
+    # windowed agg over the staged 3-batch file source
+    exchanges=1,
 )
 def streaming_watermark_late_drop(spark, sf_dir, cache):
     import os
@@ -576,6 +594,8 @@ _OS_WIN_SEC = 3600                       # 1 h tumbling windows
         "by the offset high-water mark, exactly-once via offset "
         "replay (readBetweenOffsets). Hash-exact: DuckDB regenerates "
         "the identical feed and applies the same emission rule",
+    # tumbling-window agg over the offset-tracked feed
+    exchanges=1,
 )
 def streaming_offset_source_windowed(spark, sf_dir):
     from ..sources import python_datasource as PDS
@@ -663,6 +683,9 @@ def streaming_offset_source_windowed(spark, sf_dir):
         "sides; the null-emission path costs one state-eviction scan "
         "per micro-batch, partitioned on the join key like the "
         "matches",
+    # one per join side; null emission rides the state
+    # eviction
+    exchanges=2,
 )
 def streaming_outer_join_null_emission(spark, sf_dir):
     work = spark.newSession()
@@ -761,6 +784,8 @@ def _drain_with_state_rows(result, spark, *, output_mode="complete"):
         "the streaming engine: at 100 TB, state size is the "
         "difference between a stream that runs forever and one that "
         "OOMs its state store after a week",
+    # per-user complete-mode agg
+    exchanges=1,
 )
 def streaming_state_preflight(spark, sf_dir):
     agg = (events_stream(spark, sf_dir)

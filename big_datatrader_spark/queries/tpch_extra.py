@@ -86,6 +86,7 @@ _SUPPLY_SQL = """
     doc="TPC-H Q2 shape: cheapest regional supplier per part; the "
         "correlated min subquery is decorrelated into a window min so "
         "the plan is one shuffle on p_partkey, dims broadcast",
+    exchanges=2,
 )
 def q2_min_cost_supplier(spark, sf_dir):
     eu = (
@@ -142,6 +143,7 @@ def q2_min_cost_supplier(spark, sf_dir):
     """,
     doc="TPC-H Q8 shape: 8-way snowflake join, share-of-total by year; "
         "every dimension broadcast, single shuffle for the final group",
+    exchanges=2,
 )
 def q8_market_share(spark, sf_dir):
     cust_region = (
@@ -209,6 +211,7 @@ def q8_market_share(spark, sf_dir):
     doc="TPC-H Q9 shape: profit per nation-year; partsupp supply cost "
         "replaced by 0.5*p_retailprice*l_quantity (no partsupp table)",
     bench=True,
+    exchanges=2,
 )
 def q9_profit_by_nation_year(spark, sf_dir):
     supp_nation = (
@@ -267,6 +270,7 @@ def q9_profit_by_nation_year(spark, sf_dir):
     doc="TPC-H Q11 shape: parts whose regional trade value exceeds the "
         "average (scalar subquery in HAVING -> broadcast 1-row join); "
         "threshold is relative so the query is scale-free",
+    exchanges=4,
 )
 def q11_important_parts(spark, sf_dir):
     asia_supp = (
@@ -317,6 +321,7 @@ def q11_important_parts(spark, sf_dir):
     """,
     doc="TPC-H Q12 shape: join + two-class conditional counts "
         "(l_shipmode does not exist; grouped by l_returnflag)",
+    exchanges=2,
 )
 def q12_priority_lines(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").filter(
@@ -360,6 +365,7 @@ def q12_priority_lines(spark, sf_dir):
     """,
     doc="TPC-H Q20 shape: nested aggregation (per-supplier qty vs 1.5x "
         "the part's average) feeding a left-semi join on supplier",
+    exchanges=6,
 )
 def q20_excess_suppliers(spark, sf_dir):
     supply = _supply(spark, sf_dir)
@@ -414,6 +420,7 @@ def q20_excess_suppliers(spark, sf_dir):
     doc="TPC-H Q21 shape: EXISTS/NOT-EXISTS self-joins decorrelated "
         "into one per-order distinct-count pass (lateness adapted to "
         "l_shipdate > o_orderdate + 60 days; no l_receiptdate)",
+    exchanges=4,
 )
 def q21_waiting_suppliers(spark, sf_dir):
     orders = table(spark, sf_dir, "orders").filter(
@@ -499,6 +506,7 @@ _REC_K = 20
         "broadcast (TakeOrderedAndProject, never a global sort of "
         "parts), and the hit flag is a broadcast semi-join — no "
         "step grows with corpus size except the scans",
+    exchanges=6,
 )
 def rec_hitrate_popularity(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
@@ -587,6 +595,7 @@ def rec_hitrate_popularity(spark, sf_dir):
         "(ln(2)/ln(p+1) literal-for-literal), so no summation-order "
         "drift. The model stays a k-row broadcast; position "
         "assignment is a window over those k rows only",
+    exchanges=10,
 )
 def rec_ndcg_popularity(spark, sf_dir):
     orders = table(spark, sf_dir, "orders")
@@ -673,6 +682,9 @@ def rec_ndcg_popularity(spark, sf_dir):
         "operators/ranking.py) feed the closed-form ntile_from_rank "
         "— bit-for-bit ntile at any customer cardinality. The max "
         "order date is a 1-row broadcast scalar",
+    # melted single-rank-chain form; the chained-global_rank
+    # version measured 34 (11 orders scans)
+    exchanges=13,
 )
 def rfm_segmentation(spark, sf_dir):
     from ..operators.ranking import global_rank, ntile_from_rank

@@ -143,6 +143,7 @@ def _grams_sql(n: int) -> str:
         "duplicate-trigram fraction) — the filter inputs of a "
         "Gopher/C4-style corpus cleaning pass; explode+groupBy stays "
         "whole-stage-codegen, the trigram set is a per-row array op",
+    exchanges=4,
 )
 def quality_repetition_signals(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -198,6 +199,7 @@ def quality_repetition_signals(spark, sf_dir):
         "broadcast, so the corpus side never shuffles — at 100 TB this "
         "is a map-side semi-join at scan speed (grams joined on the "
         "60-bit md5, not the string)",
+    exchanges=4,
 )
 def contamination_check(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -241,6 +243,7 @@ def contamination_check(spark, sf_dir):
     doc="per-document top-3 terms by tf-idf: one explode+groupBy for "
         "term frequencies, document frequencies over the (tiny) vocab "
         "broadcast back, deterministic (score desc, term asc) ranking",
+    exchanges=6,
 )
 def tf_idf_top_terms(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -290,6 +293,7 @@ def tf_idf_top_terms(spark, sf_dir):
         "the 60-bit md5 of the doc id): stable under re-runs, "
         "re-partitioning, and corpus growth — the property a training "
         "pipeline needs from a split; no shuffle beyond the count",
+    exchanges=2,
 )
 def dataset_split_assign(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -338,6 +342,7 @@ _PHONE_RE = r"\+1-[0-9]{3}-[0-9]{4}"
         "(the text is deterministically synthesized from customer rows "
         "because the testdata carries no real PII; patterns kept to "
         "the Java-and-RE2-common subset)",
+    exchanges=1,
 )
 def pii_redaction(spark, sf_dir):
     cust = table(spark, sf_dir, "customer")
@@ -384,6 +389,7 @@ def pii_redaction(spark, sf_dir):
         "window max (ts ties are peers in BOTH engines' default "
         "frame, so the prefix is identical), worst trough via min — "
         "one exchange, one sort, order-insensitive final aggregate",
+    exchanges=2,
 )
 def max_drawdown(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -438,6 +444,7 @@ def max_drawdown(spark, sf_dir):
         "— stddev without summation-order sensitivity (the "
         "integer-scaled-moments pattern; plain stddev_samp would be "
         "last-ulp racy under parallel aggregation)",
+    exchanges=2,
 )
 def volatility_sharpe(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -483,6 +490,7 @@ def volatility_sharpe(spark, sf_dir):
     doc="fixed-bound histogram (10 buckets over [0,100), outliers "
         "clamped): a single map-side-combinable groupBy — the "
         "distributed histogram shape",
+    exchanges=2,
 )
 def value_histogram(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -517,6 +525,7 @@ def value_histogram(spark, sf_dir):
         "(brand, size) so the quadratic levenshtein only runs inside "
         "small equi-join blocks — never an all-pairs cross product "
         "(same blocking discipline as the dedup family)",
+    exchanges=1,
 )
 def fuzzy_part_pairs(spark, sf_dir):
     p = table(spark, sf_dir, "part")
@@ -561,6 +570,7 @@ _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus",
         "chosen so string casts are engine-identical) — the "
         "data-quality summary every ingest pipeline runs first; a "
         "single aggregate computes all columns, then unpivots",
+    exchanges=2,
 )
 def table_profile(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
@@ -613,6 +623,7 @@ def table_profile(spark, sf_dir):
         "series (operators/indicators.py:with_ewma), oracled against "
         "a DuckDB RECURSIVE CTE computing the identical float "
         "recursion 0.8*s + 0.2*x",
+    exchanges=2,
 )
 def ewma_indicator(spark, sf_dir):
     from ..operators.indicators import with_ewma
@@ -657,6 +668,7 @@ def ewma_indicator(spark, sf_dir):
         "after their first view, then purchased strictly after that "
         "first qualifying click — each stage is a groupBy-min plus a "
         "join against the (shrinking) prior stage",
+    exchanges=8,
 )
 def funnel_conversion(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -710,6 +722,7 @@ def funnel_conversion(spark, sf_dir):
         "first activity, counted in each subsequent active week "
         "(both engines' date_trunc('week') starts Monday; the offset "
         "is an exact day-difference divided by 7)",
+    exchanges=4,
 )
 def weekly_retention_cohorts(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -764,6 +777,7 @@ def weekly_retention_cohorts(spark, sf_dir):
         "window: mean/stddev come from exact BIGINT sums, so the "
         "flagged set is bit-identical across engines and partition "
         "layouts — no second scan, no join-back",
+    exchanges=2,
 )
 def zscore_anomalies(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -812,6 +826,7 @@ def zscore_anomalies(spark, sf_dir):
         "structs — lexicographic, so ts ties resolve identically on "
         "every engine and partition layout (min_by/max_by leave ties "
         "undefined); no window, no sort, no second scan",
+    exchanges=2,
 )
 def ohlc_bars(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -868,6 +883,7 @@ def ohlc_bars(spark, sf_dir):
         "ties), gaps filled with last(ignorenulls) over a rows frame. "
         "Grid generation and fill both partition by symbol — the "
         "gap-filling shape stays one exchange at any scale",
+    exchanges=3,
 )
 def resample_forward_fill(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -929,6 +945,7 @@ def resample_forward_fill(spark, sf_dir):
         "1e-6-unit values, the Pearson formula then runs on identical "
         "integers in an identical expression on both engines — "
         "correlation without any summation-order sensitivity",
+    exchanges=2,
 )
 def autocorr_lag1(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1032,6 +1049,9 @@ def _pr_push(pr, outdeg, edges):
         "materialized, and every cache is released before returning "
         "(run_scoped)",
     scoped=True,
+    # edge build, node-sized outdeg, 3 supersteps (r16: 16 -> 13,
+    # the edge-scale edges ⋈ outdeg cache and its distinct gone)
+    exchanges=13,
 )
 def _pagerank_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -1142,6 +1162,9 @@ def _ppr_oracle() -> str:
         "run_scoped releases every cache when the top-100 result has "
         "materialized",
     scoped=True,
+    # r14: tightened 10 -> 7 — the query-private ewd=edges⋈outdeg
+    # materialization is gone (deg attaches to the frontier)
+    exchanges=7,
 )
 def _ppr_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -1224,6 +1247,8 @@ def _lpa_oracle() -> str:
         "after the result materializes (run_scoped, VERDICT r9 ask "
         "#3), and the oracle unrolls the same rounds as chained CTEs",
     scoped=True,
+    # 3 rounds x vote+argmax over the held edge list
+    exchanges=10,
 )
 def _lpa_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -1305,6 +1330,8 @@ _STC_W = 1000  # 1e-3-unit tf-idf weights -> exact BIGINT dots
         "tau=0.3 gate is a DECIMAL(38)/HUGEINT cross-multiplication "
         "(no division, no fp), and only the REPORTED cosine touches "
         "floats (identical double ops both engines, rounded to 6)",
+    # postings, norms, pair agg
+    exchanges=20,
 )
 def sparse_tfidf_cosine_pairs(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1412,6 +1439,7 @@ def _wh_sql(pos: str, n: str) -> str:
         "ranking is bit-identical across engines and partitionings. "
         "At 100 TB: the scan is embarrassingly parallel with map-side "
         "combine into <=50 bins; everything after costs nothing",
+    exchanges=4,
 )
 def decision_split_information_gain(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select(
@@ -1467,6 +1495,7 @@ def decision_split_information_gain(spark, sf_dir):
         "reproducible on any engine, stable under repartitioning and "
         "appends (unlike TABLESAMPLE/rand-based sampling) — the "
         "sampling primitive a training pipeline can audit",
+    exchanges=1,
 )
 def deterministic_sample(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1503,6 +1532,7 @@ def deterministic_sample(spark, sf_dir):
         "window — matching it exactly proves the decomposition. At "
         "100 TB: one bucket exchange + two tiny broadcasts; no "
         "single-task sort of event-scale data",
+    exchanges=6,
 )
 def ntile_deciles(spark, sf_dir):
     from ..operators.ranking import global_rank, ntile_from_rank
@@ -1540,6 +1570,7 @@ def ntile_deciles(spark, sf_dir):
         "text (identical ANSI SQL runs on DuckDB as the oracle) — "
         "evidence the engine's surface is usable from pure SQL, not "
         "just the DataFrame API; integer-cents exact revenue",
+    exchanges=2,
 )
 def sql_revenue_by_priority(spark, sf_dir):
     table(spark, sf_dir, "orders").createOrReplaceTempView(
@@ -1573,6 +1604,7 @@ def sql_revenue_by_priority(spark, sf_dir):
         "Computed as bucket-local row_number + broadcast bucket "
         "offsets (bucket = first hex byte of the hash, a prefix of "
         "the order), so no single-partition window exists in the plan",
+    exchanges=4,
 )
 def global_shuffle_rank(spark, sf_dir):
     from ..operators.ranking import global_rank
@@ -1614,6 +1646,7 @@ def global_shuffle_rank(spark, sf_dir):
         "via a partial re-aggregation of the bigram counts themselves "
         "(never a second corpus scan); top-200 under a deterministic "
         "order",
+    exchanges=3,
 )
 def bigram_conditional_prob(spark, sf_dir):
     # zip-gram builder (functions/dedup._zip_grams): grams materialize
@@ -1679,6 +1712,7 @@ _CMS_D, _CMS_W = 4, 256
         "by construction, so the sketch itself is oracle-checked "
         "bit-for-bit; the estimate >= truth guarantee is also "
         "property-tested",
+    exchanges=4,
 )
 def cms_heavy_hitters(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -1771,6 +1805,7 @@ _BF_BPK, _BF_K = 10, 3  # ~10 bits per key, 3 hash rows: the filter is
         "FPR audited. Scale: the filter is n-keys-sized bits and "
         "broadcast; candidates probe map-side; at 100 TB the only "
         "tuning is bits per key, and this query is the measurement",
+    exchanges=17,
 )
 def bloom_exact_membership(spark, sf_dir):
 
@@ -1852,6 +1887,7 @@ _OLS_EPOCH = 1704067200  # 2024-01-01, centers t so products stay narrow
         "both engines, so the rounded slope is bit-identical. No UDF "
         "anywhere; at 100 TB this is a map-side-combined aggregate, "
         "the same plan as a count",
+    exchanges=2,
 )
 def linreg_trend_per_user(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1903,6 +1939,7 @@ def linreg_trend_per_user(spark, sf_dir):
         "(event_type_pivot). Unpivot is a narrow projection (each row "
         "fans out to k metric rows with NO shuffle); the only exchange "
         "here belongs to the upstream aggregate",
+    exchanges=3,
 )
 def unpivot_event_metrics(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -1977,6 +2014,7 @@ def _morton_sql(u: str, h: str) -> str:
         "on zcode. Layout effectiveness is asserted in "
         "tests/test_training_ops.py by comparing per-file min/max "
         "spans against a naive layout",
+    exchanges=2,
 )
 def zorder_locality(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2039,6 +2077,7 @@ def zorder_locality(spark, sf_dir):
         "broadcast-able key set reduced to an aggregate, so at 100 TB "
         "the fact tables stream through map-side joins; nothing wide "
         "ever shuffles",
+    exchanges=8,
 )
 def fk_integrity_checks(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -2113,6 +2152,7 @@ _SNAP_CUT = "2024-01-20"
         "so the diff costs key-cardinality rows regardless of fact "
         "volume; with both versions bucketed on the key the join "
         "needs no exchange at all (sources/bucketed.py)",
+    exchanges=3,
 )
 def snapshot_diff(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2167,6 +2207,7 @@ def snapshot_diff(spark, sf_dir):
         "the direct whole-table sketch estimate exactly (same "
         "deterministic sketch algorithm) and sits within 5% of the "
         "exact distinct count",
+    exchanges=3,
 )
 def hll_partial_merge(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2257,6 +2298,7 @@ _HLL_A = round(0.7213 / (1 + 1.079 / _HLL_M) * _HLL_M * _HLL_M
         "conditions, with ln at 2dp rounding per the doc_perplexity "
         "1e-4 precedent. n_exact sits beside the estimate so the "
         "record shows the sketch error directly (within ~5% here)",
+    exchanges=6,
 )
 def hll_exact_register_sketch(spark, sf_dir):
     from ..functions.dedup import h60
@@ -2343,6 +2385,7 @@ _PPL_SCALE = 10000  # ln terms rounded to 1e-4 units before summing
         "vocabulary-sized: the doc-bigram stream joins them and "
         "reduces per doc — at 100 TB the corpus scans once, and the "
         "same count tables serve bigram_conditional_prob",
+    exchanges=9,
 )
 def doc_perplexity_bigram(spark, sf_dir):
     sp = _leased_gram_rows(spark, sf_dir, 2).select(
@@ -2429,6 +2472,8 @@ def doc_perplexity_bigram(spark, sf_dir):
         "the corpus streams once through the model join exactly like "
         "doc_perplexity_bigram, and the heavy (w1,w2) count shuffle "
         "is shared with it when both run",
+    # gram + 3 model tables + agg
+    exchanges=13,
 )
 def kneser_ney_bigram_ppl(spark, sf_dir):
     sp = _leased_gram_rows(spark, sf_dir, 2).select(
@@ -2485,6 +2530,8 @@ _IVM_CUT = "2024-01-20"
         "the view join costs key-cardinality rows; with both sides "
         "bucketed on the key (sources/bucketed.py) the merge needs "
         "no exchange at all",
+    # base agg, delta agg, merge
+    exchanges=3,
 )
 def incremental_agg_maintenance(spark, sf_dir):
     ev = table(spark, sf_dir, "events").select(
@@ -2566,6 +2613,7 @@ _DSIR_SCALE = 1000000000
         "join side — and the two corpus passes are map-side-combined "
         "groupBys. Nothing here grows with corpus size except the "
         "two streaming scans",
+    exchanges=12,
 )
 def dsir_importance_weights(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -2639,6 +2687,8 @@ def dsir_importance_weights(spark, sf_dir):
         "the sequences match bit-for-bit, so even the one-step "
         "forecast level+trend hashes equal. The forecasting twin of "
         "ewma_indicator",
+    # series fold + output sort
+    exchanges=2,
 )
 def holt_linear_smoothing(spark, sf_dir):
     from ..operators.indicators import with_holt
@@ -2736,6 +2786,7 @@ _SB_ALPHA_SQL = "0.4"   # stupid-backoff discount per level
         "token-scale aggregates of the train half; the T/V scalar "
         "is a 1-row broadcast. At 100 TB: corpus scans once for the "
         "model, once for scoring — the same shape KenLM jobs run",
+    exchanges=12,
 )
 def doc_perplexity_trigram_backoff(spark, sf_dir):
     is_train = F.col("doc_id") % 2 == 0
@@ -2852,6 +2903,7 @@ _TE_FOLDS = 5
         "and the mean is one signed exact integer division rounded "
         "half-away to 1e-4 cents. The full-scan -> tiny-model -> "
         "broadcast-back shape is exactly how this runs at 100 TB",
+    exchanges=4,
 )
 def target_encoding_oof(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2923,6 +2975,9 @@ def target_encoding_oof(spark, sf_dir):
         "(user, day) window exchange; daily bars collapse the raw "
         "scan ~events-per-day-fold before any window state exists. "
         "dow is Sunday=1 (DuckDB's Sunday=0 is shifted +1 to Spark's convention)",
+    # bars agg hashes (user, day); the lag window re-keys to user
+    # alone, + the output sort
+    exchanges=3,
 )
 def lag_feature_matrix(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -2977,6 +3032,7 @@ _FH_BUCKETS = 64
         "(doc, bucket): rows stay partitioned with their doc, counts "
         "partial-aggregate map-side, and there is no join anywhere — "
         "the whole point of hashing over dictionary encoding",
+    exchanges=2,
 )
 def feature_hashing_vectors(spark, sf_dir):
     from ..functions.dedup import h60
@@ -3045,6 +3101,7 @@ def feature_hashing_vectors(spark, sf_dir):
         "EXACT integer sums (HUGEINT/DECIMAL38 cross-products); "
         "slope, intercept and R^2 are the only IEEE divisions, "
         "written identically on both engines and rounded 6",
+    exchanges=2,
 )
 def zipf_law_fit(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -3127,6 +3184,7 @@ _TD_TOPK = 15
         "scanned twice); the slice totals are a 1-row broadcast and "
         "the top-k is TakeOrderedAndProject on the rounded ratio "
         "with token tiebreak — deterministic on both engines",
+    exchanges=4,
 )
 def token_drift_movers(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -3398,6 +3456,7 @@ def _hits_build(spark, sf_dir, cache):
         "crosses bucket edges via the next bucket's min) — no "
         "single-task sort of the value domain, unlike the textbook "
         "ORDER BY formulation",
+    exchanges=10,
 )
 def wasserstein_distance_drift(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3509,6 +3568,7 @@ def wasserstein_distance_drift(spark, sf_dir):
         "but applied to a domain too large for the sorted-list fold. "
         "One corpus explode, one token groupBy with conditional "
         "sums (no self-join, no full outer), 1-row total broadcasts",
+    exchanges=6,
 )
 def js_divergence_lang_tokens(spark, sf_dir):
     docs = table(spark, sf_dir, "documents")
@@ -3610,6 +3670,7 @@ def _boot_w_sql(h: str) -> str:
         "partial sums — the shuffle carries B*partitions rows, "
         "never B*data; this is THE bootstrap that works on data too "
         "large to resample by index",
+    exchanges=3,
 )
 def poisson_bootstrap_ci(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3708,6 +3769,7 @@ def poisson_bootstrap_ci(spark, sf_dir):
         "Timestamps are exact epoch-microsecond integers on both "
         "engines. One exchange: everything shares the per-user "
         "(ts, event_id) ordering; no self-join at any scale",
+    exchanges=2,
 )
 def window_funnel_depth(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -3795,6 +3857,14 @@ def window_funnel_depth(spark, sf_dir):
         "order self-join builds the edge list, brands arrive via two "
         "broadcast dimension joins, then everything is "
         "community-sized aggregates and a 1-row m scalar",
+    # 12 since the one-scan edge build (functions/graph.py): the
+    # unpersisted build subtree repeats under the m/within/deg
+    # branches and its groupBy exchange is counted per occurrence
+    # in the STATIC plan; at runtime AQE collapses the identical
+    # subtrees via ReusedExchange (verified: 7 reused at sf0.001),
+    # so the executed shuffle work is one build + branch aggs —
+    # strictly less IO than the join-era double lineitem scan
+    exchanges=12,
 )
 def modularity_brand_partition(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -3884,6 +3954,11 @@ def modularity_brand_partition(spark, sf_dir):
         "released after the result materializes (run_scoped, VERDICT "
         "r9 ask #3)",
     scoped=True,
+    # degree-oriented triangle pipeline: every exchange is a
+    # node-/edge-scale equi-join key, same family as
+    # triangle_count_copurchase (tightened 34 -> 24 by the r10
+    # scoped-cache audit, 24 -> 22 on the one cold-plan count)
+    exchanges=22,
 )
 def _lcc_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -3998,6 +4073,8 @@ def _rbo_rank_sql(measure: str) -> str:
         "exact integer sum. Each top-50 comes from "
         "TakeOrderedAndProject (distributed top-k, never a global "
         "sort); everything after runs on 50-row relations",
+    # two TakeOrdered feeds
+    exchanges=2,
 )
 def rank_biased_overlap_parts(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -4063,6 +4140,7 @@ def rank_biased_overlap_parts(spark, sf_dir):
         "rows), so recursion depth and state are bounded regardless "
         "of corpus scale; the only corpus-sized work is the one "
         "groupBy(day)",
+    exchanges=2,
 )
 def recursive_cte_date_spine(spark, sf_dir):
     # the spine recurses once per calendar day; lift the default
@@ -4161,6 +4239,7 @@ _CR_N2 = ("(d11*(d22*b3 - b2*d23) - d12*(d12*b3 - b2*d13)"
         "engines perform bit-identical float arithmetic on "
         "bit-identical inputs. At 100 TB this is how a linear probe "
         "or calibration layer fits without an iterative solver",
+    exchanges=1,
 )
 def ridge_normal_equations(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
@@ -4257,6 +4336,7 @@ def ridge_normal_equations(spark, sf_dir):
         "of the 5-row arm table, one global agg: the OPE shape that "
         "scores a policy change against 100 TB of logs without "
         "deploying it",
+    exchanges=3,
 )
 def ips_policy_value(spark, sf_dir):
     from ..functions.dedup import h60
@@ -4331,6 +4411,7 @@ _CHURN_HORIZON_US = 14 * 86400 * 1_000_000  # 14 days
         "driver hash covers every label decision. At 100 TB this is "
         "one user-hash exchange and one sort — the label-build shape "
         "that feeds survival/churn models",
+    exchanges=2,
 )
 def churn_label_generation(spark, sf_dir):
     ev = table(spark, sf_dir, "events")
@@ -4417,6 +4498,16 @@ _LNK_TOPK = 100
         "after the result materializes (run_scoped, VERDICT r9 "
         "ask #3)",
     scoped=True,
+    # +1 exchange vs the unscoped form: the query-set top-k
+    # (TakeOrdered over deg) feeding the broadcast — the trade
+    # that cut the wedge join from 265M rows to query-bounded.
+    # +1 more in r14: the anti-join pre-filter embeds q a second
+    # time (DeduplicateRelations re-aliases the copy, so its deg
+    # exchange is counted separately here — at runtime it is a
+    # ReusedExchange over the identical child), the trade that
+    # dropped the anti-join's right side from the full edge list
+    # to the query nodes' out-neighborhoods
+    exchanges=6,
 )
 def _lnk_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -4547,6 +4638,13 @@ _LPH_TOPK = 20           # predictions scored per query node
         "The edge cache and the 50-row query-set cache are released "
         "after the result materializes (run_scoped)",
     scoped=True,
+    # r14: +2 static counts for the query-set pre-filters — the
+    # anti-join / test-probe sides embed the cached q twice more,
+    # and DeduplicateRelations re-aliases each copy so its deg
+    # exchange counts separately here; at runtime q is ONE cached
+    # 50-row relation and the embeddings are cache reads. The
+    # trade removed the full-train SortMergeJoin LeftAnti.
+    exchanges=13,
 )
 def _lph_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -4700,6 +4798,9 @@ def _gnn_oracle() -> str:
         "after the result materializes (run_scoped, VERDICT r9 "
         "ask #3)",
     scoped=True,
+    # r16: 10 -> 8 — each round joins the edge list once (one
+    # superstep) and its own h back on the node-sized side
+    exchanges=8,
 )
 def _gnn_plan(spark, sf_dir, cache=lazy_cache):
     li = table(spark, sf_dir, "lineitem").select("l_orderkey",
@@ -4772,6 +4873,7 @@ _JIVM_CUT = "1997-06-01"
         "the view merge costs key-cardinality rows — the shape that "
         "keeps a 100 TB materialized join fresh without a nightly "
         "recompute; revenue in exact cent-percent BIGINTs",
+    exchanges=3,
 )
 def incremental_join_maintenance(spark, sf_dir):
     cut = F.lit(_JIVM_CUT).cast("timestamp")
@@ -4857,6 +4959,7 @@ def incremental_join_maintenance(spark, sf_dir):
         "global sort; a skewed stratum is one sorted partition, the "
         "standard per-stratum cost, and the hash-ordered rank means "
         "the split is stable under any physical row order",
+    exchanges=2,
 )
 def stratified_split_exact(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang")

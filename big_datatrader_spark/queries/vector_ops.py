@@ -141,6 +141,9 @@ _SD_ORACLE = f"""
         "noise. The cluster is the scale lever: the pairwise scan is "
         "per-cluster (SemDeDup's whole point), so the join key is the "
         "cluster id and no corpus x corpus pair is ever materialized",
+    # the assignment is a pure projection — only the pair join,
+    # the dedup of drops, and the presentation sort may shuffle
+    exchanges=3,
 )
 def semdedup_embeddings(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
@@ -253,6 +256,7 @@ def _pq_codes_df(spark, sf_dir):
         "rows. This is the compression step that turns a 256 B/row "
         "vector corpus into 8 B/row codes an ADC scan can read at "
         "memory speed",
+    exchanges=3,
 )
 def embedding_pq_codes(spark, sf_dir):
     return (_pq_codes_df(spark, sf_dir)
@@ -297,6 +301,7 @@ def embedding_pq_codes(spark, sf_dir):
         "lossy approximation of true L2. At 100 TB this is the FAISS "
         "IVFADC scan shape: LUT ~ KB-sized broadcast, corpus I/O cut "
         "32x by the encoding",
+    exchanges=6,
 )
 def ann_pq_adc_topk(spark, sf_dir):
     codes = _pq_codes_df(spark, sf_dir).select("vec_id", "m", "code")
@@ -386,6 +391,7 @@ def ann_pq_adc_topk(spark, sf_dir):
         f"|Q|={_PQ_NQ} queries broadcast against the corpus — at "
         "100 TB you run the audit on a sampled corpus block, the "
         "shape is unchanged",
+    exchanges=11,
 )
 def pq_vs_exact_eval(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
@@ -520,6 +526,7 @@ def _trained_codebooks(spark, sf_dir):
         f"{_PQ_M * _PQ_K * _PQ_SUB} cells at ANY corpus size. Exact "
         "integer rounding makes the trained codebook bit-identical to "
         "the oracle's unrolled-CTE replay of the same iterations",
+    exchanges=1,
 )
 def embedding_pq_trained_codes(spark, sf_dir):
     from ..functions.pq import pq_assign_udf
@@ -568,6 +575,7 @@ def embedding_pq_trained_codes(spark, sf_dir):
         "the quantization cells around the data, so ADC distances track "
         "true L2 better than the seed codebook's (recall gate in "
         "tests/test_vector_ops.py)",
+    exchanges=3,
 )
 def ann_pq_adc_trained_topk(spark, sf_dir):
     from pyspark.sql.types import LongType, StructField, StructType
@@ -650,6 +658,7 @@ _JL_K = 16  # target dimensionality; scale factor 1/sqrt(K) = 1/4
         "is generated IN-ENGINE on both sides (no shipped literals) "
         "and broadcast; per-vector work is a narrow explode-join-agg "
         "that shares the vec_id exchange",
+    exchanges=2,
 )
 def jl_random_projection(spark, sf_dir):
     from ..functions.dedup import h60
@@ -735,6 +744,7 @@ _TR_K = 10
         "query_id exchange. At 100 TB the query side is a broadcast "
         "and the corpus is scanned once; the recall relation is "
         f"{_TR_NQ} rows",
+    exchanges=2,
 )
 def ann_dim_truncation_recall(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings")
@@ -850,6 +860,8 @@ _KNN_K = 5
         "corpus scan, per-row O(P) work, the only shuffle is the "
         "final label rollup",
     bench=True,
+    # label rollup + sort
+    exchanges=2,
 )
 def knn_prototype_accuracy(spark, sf_dir):
     import numpy as np
@@ -1103,6 +1115,11 @@ _CSLS_K = 4    # neighborhood size K
         "for full-corpus mining is the same score over LSH/IVF "
         "bucket candidates (ann_lsh_topk / ann_ivf_topk), with this "
         "exact form as the per-bucket scorer",
+    # one batch-broadcast component join + one (x, y) aggregate +
+    # two top-K windows (each re-keys once) + the neighborhood-sum
+    # joins + the margin rank — every one at batch- or
+    # candidate-grain, never Y x Y
+    exchanges=11,
 )
 def csls_margin_pair_mining(spark, sf_dir):
     emb = table(spark, sf_dir, "embeddings").select("vec_id",

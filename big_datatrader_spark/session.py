@@ -102,8 +102,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def get_spark(app_name: str = "big-datatrader-spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "big-datatrader-spark") -> SparkSession:
     """Local session sized for this container; multi-executor semantics
     come from partitioning, which is what we actually design for.
 
@@ -116,8 +115,7 @@ def get_spark(app_name: str = "big-datatrader-spark",
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or cpus))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

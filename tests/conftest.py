@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -25,8 +26,25 @@ def load_ab_spec(name: str):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("bdt-tests", shuffle_partitions=8)
+    s = get_spark("bdt-tests")
     yield s
+
+
+@contextmanager
+def session_width(spark, monkeypatch, width: int):
+    """Run the body at session width ``width``: SPARK_GRAFT_CPUS, which
+    ensure_confs re-derives spark.sql.shuffle.partitions from inside
+    every query (setting the conf alone is reverted at the query's
+    first table() call). The variable and the conf return to their
+    prior values on exit, so no later test runs at this width."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    with monkeypatch.context() as mp:
+        mp.setenv("SPARK_GRAFT_CPUS", str(width))
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
 
 
 @pytest.fixture(scope="session")

@@ -5,6 +5,8 @@ join, global sort under a limit) passes value checks at sf0.01 and
 falls over at scale — these tests pin the plans we actually want.
 """
 
+from contextlib import contextmanager
+
 from pyspark.sql import functions as F
 
 from big_datatrader_spark.plans.explain import (
@@ -22,32 +24,17 @@ import pytest
 
 @pytest.fixture(autouse=True)
 def _clean_cache(spark):
-    """_plan_df builds plans with REAL persists (never materialized);
-    drop the registrations BEFORE each test — so whatever cache state
-    other suites in this session left behind cannot swap
-    InMemoryTableScans into this test's plans and move its exchange
-    counts (VERDICT r14 what's-wrong #3: the lph budget drifted
-    12..14 with ambient cache state) — and AFTER it, so this module
-    leaves none behind either (the round-8 cross-test
+    """persisting_cache builds plans with REAL persists (never
+    materialized); drop the registrations BEFORE each test — so
+    whatever cache state other suites in this session left behind
+    cannot swap InMemoryTableScans into this test's plans and move its
+    exchange counts (VERDICT r14 what's-wrong #3: the lph budget
+    drifted 12..14 with ambient cache state) — and AFTER it, so this
+    module leaves none behind either (the round-8 cross-test
     interference)."""
     spark.catalog.clearCache()
     yield
     spark.catalog.clearCache()
-
-
-def _plan_df(name, spark, sf_dir):
-    """The lazy plan to audit for exchange budgets: the builder of a
-    @query(scoped=True) query (its spark_fn returns an eagerly-
-    materialized checkpoint, whose plan is just Scan ExistingRDD —
-    asserting budgets there is vacuous, ADVICE r9 #1), else the
-    registered fn's own return. Builders run under persisting_cache,
-    a REAL persist, so multi-consumer subtrees collapse to
-    InMemoryRelation exactly as run_scoped executes them — budgets
-    stay calibrated to executed shuffle work, not static subtree
-    duplication. Budget tests clear the session cache afterward (the
-    persists here are never materialized — clearCache drops the
-    registrations)."""
-    return plan_of(REG[name], spark, sf_dir, cache=persisting_cache)
 
 
 def test_q1_scan_prunes_columns_and_pushes_filter(spark, sf001):
@@ -72,20 +59,6 @@ def test_q5_snowflake_broadcasts_all_dims(spark, sf001):
     df = REG["q5_supplier_volume_by_nation"].spark_fn(spark, sf001)
     plan = physical_plan(df)
     assert plan.count("BroadcastHashJoin") >= 4
-    # only the fact-side join + final agg may shuffle
-    assert num_exchanges(df) <= 3
-
-
-def test_rolling_ma_single_exchange(spark, sf001):
-    """Both rolling windows share (partition, order) -> ONE shuffle."""
-    df = REG["rolling_ma"].spark_fn(spark, sf001)
-    assert num_exchanges(df) == 1
-
-
-def test_stride_and_backtest_bounded_exchanges(spark, sf001):
-    # stride signals: one exchange for the shared window spec
-    sig = REG["stride_signals"].spark_fn(spark, sf001)
-    assert num_exchanges(sig) == 1
 
 
 def test_topk_is_take_ordered(spark, sf001):
@@ -111,10 +84,9 @@ def test_date_filter_pushed_to_parquet(spark, sf001):
 
 
 def test_asof_join_single_shuffle(spark, sf001):
-    """The as-of union+window implementation must cost one exchange,
-    not a range cross join."""
+    """The as-of join must plan as a union+window, not a range cross
+    join (its exchange count is declared on the query)."""
     df = REG["asof_join_purchase_to_click"].spark_fn(spark, sf001)
-    assert num_exchanges(df) <= 2  # union repartition + window
     assert "CartesianProduct" not in physical_plan(df)
 
 
@@ -309,6 +281,63 @@ def _reads_source(plan: str) -> bool:
                           r"|\bBatchScan\b|\bLogicalRelation\b", plan))
 
 
+@contextmanager
+def _active(session):
+    """Make ``session`` the JVM's active session for the body. A Python
+    data source registers against the active session, so a fresh session
+    that is not active cannot register a format the shared session
+    already registered (DATA_SOURCE_ALREADY_EXISTS)."""
+    jss = session.sparkContext._jvm.org.apache.spark.sql.SparkSession
+    prev = jss.getActiveSession()
+    jss.setActiveSession(session._jsparkSession)
+    try:
+        yield session
+    finally:
+        if prev.isDefined():
+            jss.setActiveSession(prev.get())
+        else:
+            jss.clearActiveSession()
+
+
+@pytest.mark.parametrize("name", sorted(
+    n for n in REG if not n.startswith("streaming_") and n not in _OPAQUE))
+def test_exchange_budget(spark, sf001, monkeypatch, name):
+    """A batch query's shuffle count equals its ``@query(exchanges=N)``.
+
+    One count for every query: the plan it runs (plan_of under
+    persisting_cache, so multi-consumer subtrees collapse to
+    InMemoryRelation as run_scoped executes them), at sf0.01, on a fresh
+    session (no conf another test set), from a clean cache (the autouse
+    fixture), at a fixed width so scan_floor fires the same way on any
+    box. Serial, never pooled: persisting_cache registers real persists
+    on the shared CacheManager, and a peer's persist would swap
+    InMemoryTableScans into this plan."""
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    q = REG[name]
+    with _active(spark.newSession()) as fresh:
+        n = num_exchanges(plan_of(q, fresh, sf001, cache=persisting_cache))
+    assert n == q.exchanges, (name, n, q.exchanges)
+
+
+def test_every_query_declares_its_exchanges():
+    """Every registered query declares ``exchanges=`` unless its audited
+    plan is driver state (_OPAQUE), and no _OPAQUE query declares one."""
+    undeclared = sorted(n for n, q in REG.items()
+                        if q.exchanges is None and n not in _OPAQUE)
+    assert not undeclared, f"no exchanges= on {undeclared}"
+    declared = sorted(n for n in _OPAQUE if REG[n].exchanges is not None)
+    assert not declared, f"_OPAQUE queries declare exchanges=: {declared}"
+
+
+@pytest.mark.parametrize("name", [
+    "weighted_sample_es", "bm25_more_like_this", "market_basket_lift",
+    "token_drift_movers", "clickstream_paths_topk", "k_core_membership"])
+def test_ordered_limit_plans_as_top_k(spark, sf001, name):
+    """An ordered limit plans as a distributed top-k
+    (TakeOrderedAndProject), never a global sort."""
+    assert uses_top_k(REG[name].spark_fn(spark, sf001))
+
+
 def test_no_scale_killers_in_any_registered_plan(spark, sf001):
     """Repo-wide 100 TB audit: EVERY registered batch query must plan
     without (a) CartesianProduct, (b) a single-partition exchange of
@@ -425,7 +454,7 @@ def test_allowlist_annotations_hold_at_runtime(spark, sf001):
     offenders = {}
 
     def audit(name):
-        df = _plan_df(name, spark, sf001)
+        df = plan_of(REG[name], spark, sf001, cache=persisting_cache)
         bounds = executed_scale_killer_bounds(df)
         flags = []
         if name in _BNLJ_OK and name not in _BNLJ_RUNTIME_OPAQUE:
@@ -482,205 +511,6 @@ def test_single_partition_detector_sees_past_parenthesized_details(spark):
     assert single_partition_sort_or_window(ok) == []
 
 
-def test_round4_flagship_exchange_budgets(spark, sf001):
-    """Pin the shuffle budgets of the round-4 operators: a regression
-    that doubles an exchange count is a 100 TB cost doubling even when
-    sf0.001 timings never notice."""
-    budgets = {
-        "weighted_sample_es": 0,         # pure projection + top-k
-        "k_anonymity_audit": 2,          # one agg + output sort
-        "feature_standardize": 2,        # class stats + output sort
-        "skyline_parts_per_brand": 3,    # price-group agg, window, join
-        "rolling_market_correlation": 4,
-        "cusum_change_detection": 5,
-    }
-    for name, budget in budgets.items():
-        df = _plan_df(name, spark, sf001)
-        n = num_exchanges(df)
-        assert n <= budget, (name, n, budget)
-        spark.catalog.clearCache()
-    assert uses_top_k(REG["weighted_sample_es"].spark_fn(spark, sf001))
-    assert uses_top_k(REG["bm25_more_like_this"].spark_fn(spark, sf001))
-    assert uses_top_k(REG["market_basket_lift"].spark_fn(spark, sf001))
-
-
-def test_round4b_exchange_budgets(spark, sf001):
-    """Shuffle budgets for the second round-4 wave. The decode paths
-    must stay narrow (their single exchange is the output sort); the
-    indicator/fold families ride one partition-by-series exchange plus
-    the output sort; the model-based ops are bounded by their stats
-    chains (every join side is token/doc-scale or a broadcast)."""
-    budgets = {
-        "multimodal_wav_decode": 1,      # narrow decode + output sort
-        "image_patchify": 1,
-        "rsi_bollinger_bands": 2,        # series window + output sort
-        "holt_linear_smoothing": 2,      # series fold + output sort
-        "winnowing_fingerprints": 2,     # per-doc window + distinct
-        "incremental_agg_maintenance": 3,  # base agg, delta agg, merge
-        "item_item_similarity": 9,
-        "dsir_importance_weights": 12,
-        # 16 > the original 14: deriving lt/vocab from tf adds two
-        # token-scale exchanges but removes the second CORPUS-scale
-        # explode+shuffle — measured 19% faster at sf0.1, and the
-        # scan count (the 100 TB cost) drops from 2 to 1
-        "naive_bayes_lang_score": 16,
-        # 33 > the pre-r15 26: scan_floor's conditional
-        # doc_id repartition fires on the one-row-group test layout
-        # and the static count charges it once per docs-subtree
-        # embedding across the two ranker chains (ReusedExchange at
-        # runtime — ONE extra real shuffle). The extra exchange is
-        # the trade that moves the tokenize+explode off the single
-        # scan task: tf stage 1.98 -> 0.47s at sf1
-        # (OPTIMIZATION_r15.md); on multi-row-group layouts the
-        # floor is inert and the plan returns to the old 26.
-        "hybrid_rrf_retrieval": 33,      # two full ranker chains
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
-def test_round4c_exchange_budgets(spark, sf001):
-    """Shuffle budgets for the third round-4 wave (model-eval +
-    corpus-curation + feature-engineering). The containment/LSH-eval
-    chains are bounded by their inverted-index joins (every side is
-    token- or pair-scale); the closed-form solvers are scan + one
-    keyed aggregate; the hashing trick is scan + one groupBy."""
-    budgets = {
-        "feature_hashing_vectors": 2,
-        "quadratic_trend_fit": 3,
-        "theil_sen_slope": 4,
-        "boilerplate_chunk_removal": 4,
-        "gini_spend_concentration": 3,
-        "interarrival_burstiness": 3,
-        "event_markov_transitions": 4,
-        "target_encoding_oof": 4,
-        # bars agg hashes (user, day); the lag window re-keys to user
-        # alone, + the output sort
-        "lag_feature_matrix": 3,
-        "rec_hitrate_popularity": 6,
-        "kaplan_meier_survival": 7,
-        "equidepth_histogram": 7,
-        "lsh_vs_exact_eval": 11,
-        "ngram_containment_pairs": 12,
-        "doc_perplexity_trigram_backoff": 12,
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-    assert uses_top_k(REG["token_drift_movers"].spark_fn(spark, sf001))
-    assert uses_top_k(
-        REG["clickstream_paths_topk"].spark_fn(spark, sf001))
-    assert uses_top_k(REG["k_core_membership"].spark_fn(spark, sf001))
-
-
-def test_round4d_exchange_budgets(spark, sf001):
-    """Shuffle budgets for the indicator wave: each rides the daily-bar
-    aggregation exchange (user, day), one re-key to the per-symbol
-    series (fold or window), and the output sort; the Sortino moments
-    collapse into the existing series window's exchange."""
-    budgets = {
-        "macd_histogram": 3,             # bars agg, series fold, sort
-        "stochastic_oscillator": 3,      # bars agg, series window, sort
-        "obv_indicator": 3,              # bars agg, series window, sort
-        "sortino_downside_ratio": 2,     # series window+agg, sort
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
-def test_round4e_exchange_budgets(spark, sf001):
-    """Shuffle budgets for the hypothesis-test wave. Each is bounded
-    by value-domain / cells-sized relations after one map-side-partial
-    aggregation; the ordered-fold reductions are 1-row collects."""
-    budgets = {
-        "mann_whitney_u": 6,
-        "kruskal_wallis_h": 14,
-        "cramers_v_effect": 11,
-        "kmv_distinct_sketch": 10,  # +1: merge-pool DISTINCT (k-sized)
-        "rec_ndcg_popularity": 10,
-        # melted single-rank-chain form; the chained-global_rank
-        # version measured 34 (11 orders scans) — see query comment
-        "rfm_segmentation": 13,
-        "anova_f_oneway": 3,
-        "brier_logloss_calibration": 4,
-        # hits_hub_authority returns a driver-collected top-50
-        # (LocalTableScan) since the r7 cache rotation: its
-        # iterative jobs run inside the query fn, so there is no
-        # lazy plan left to budget here; its per-half-step shape
-        # is pinned by tests/test_cache_lifecycle.py instead
-        "wasserstein_distance_drift": 10,
-        "js_divergence_lang_tokens": 6,
-        "poisson_bootstrap_ci": 3,
-        "window_funnel_depth": 2,
-        "holt_winters_seasonal": 3,      # bars agg, series fold, sort
-        "sprt_sequential_test": 2,       # series window+agg, sort
-        # 12 since the one-scan edge build (functions/graph.py): the
-        # unpersisted build subtree repeats under the m/within/deg
-        # branches and its groupBy exchange is counted per occurrence
-        # in the STATIC plan; at runtime AQE collapses the identical
-        # subtrees via ReusedExchange (verified: 7 reused at sf0.001),
-        # so the executed shuffle work is one build + branch aggs —
-        # strictly less IO than the join-era double lineitem scan
-        "modularity_brand_partition": 12,
-        "variant_props_stats": 3,        # distinct partials + sort
-        "python_datasource_ticks": 2,    # per-sym agg + output sort
-        "time_decay_ewma": 2,            # series fold + output sort
-        # five branches over the persisted value-domain count relation
-        "mad_robust_outliers": 18,
-        "correlation_matrix_daily": 4,   # daily agg x2, pair agg, sort
-        "quantile_normalization": 12,    # persisted cnt, 2-phase CDF
-        # degree-oriented triangle pipeline: every exchange is a
-        # node-/edge-scale equi-join key, same family as
-        # triangle_count_copurchase (24 on the persisted builder
-        # plan — the r10 scoped-cache audit, tightened from 34)
-        "local_clustering_coefficient": 24,
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
-def test_round5_exchange_budgets(spark, sf001):
-    """Round-5 changes re-pinned: the generic media extract is a
-    narrow decode (its ONE exchange is the output sort of a doc-sized
-    relation), and winnowing dropped its output sort so the per-doc
-    window exchange — which the distinct rides — is the whole plan."""
-    budgets = {
-        "multimodal_feature_extract": 1,  # orderBy only; decode narrow
-        "winnowing_fingerprints": 1,      # doc_id window; no output sort
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
 def test_dated_copurchase_edge_build_is_one_lineitem_scan(spark, sf001):
     """The r8 replan (VERDICT r7 ask #3): the DATED co-purchase edge
     list must come from ONE lineitem scan (collect_set + explode with
@@ -705,49 +535,6 @@ def test_dated_copurchase_edge_build_is_one_lineitem_scan(spark, sf001):
     assert tedges.columns == ["x", "y", "d"]
 
 
-def test_round8_exchange_budgets(spark, sf001):
-    """Round-8 additions pinned: link prediction is one wedge join +
-    one (u,v) agg + anti-join + top-k over the shared persisted edge
-    list; GNN propagation pays per-round node-sized join/agg
-    exchanges (intermediate feature frames persisted, so the final
-    assembly join does NOT re-derive the propagation chain);
-    universe sampling is three pruned scans with the hash predicate
-    scan-local (its whole point) and only the join/agg exchanges;
-    k-means refinement carries centroids as driver state between
-    rounds (k*dim literal relations, the MLlib design), so the
-    returned plan is ONE assignment — constant depth per iteration.
-
-    Cache state from other tests changes these counts (the
-    CacheManager swaps matching subtrees for InMemoryTableScans,
-    which re-partition), so measure from a clean cache."""
-    spark.catalog.clearCache()
-    budgets = {
-        # +1 exchange vs the unscoped form: the query-set top-k
-        # (TakeOrdered over deg) feeding the broadcast — the trade
-        # that cut the wedge join from 265M rows to query-bounded.
-        # +1 more in r14: the anti-join pre-filter embeds q a second
-        # time (DeduplicateRelations re-aliases the copy, so its deg
-        # exchange is counted separately here — at runtime it is a
-        # ReusedExchange over the identical child), the trade that
-        # dropped the anti-join's right side from the full edge list
-        # to the query nodes' out-neighborhoods
-        "link_prediction_common_neighbors": 6,
-        # r16: 10 -> 8 — each round joins the edge list once (one
-        # superstep) and its own h back on the node-sized side
-        "gnn_feature_propagation": 8,
-        "universe_sample_join": 3,
-        "kmeans_lloyd_refinement": 4,
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
 def test_universe_sample_predicate_is_scan_local(spark, sf001):
     """The orders side of universe_sample_join must decide membership
     WITHOUT a join against customer: the plan carries exactly three
@@ -760,101 +547,6 @@ def test_universe_sample_predicate_is_scan_local(spark, sf001):
         ["o_orderkey", "o_custkey"],
         ["l_orderkey", "l_extendedprice", "l_discount"],
     ])), scans
-
-
-def test_round9_exchange_budgets(spark, sf001):
-    """Shuffle budgets for the round-9 operators. The privacy/audit
-    queries are class-grain aggregate chains; the graph pair rides the
-    one-scan co-purchase edge build plus bounded iteration/wedge
-    stages; edit-1 blocking stays at distinct-name grain (the
-    duplication-proof replan — its expansion joins broadcast at this
-    sf); the binary-ANN chain is signature-grain with a broadcast
-    query side."""
-    budgets = {
-        "approx_aggregates_error_audit": 6,
-        # r14: +2 static counts for the query-set pre-filters — the
-        # anti-join / test-probe sides embed the cached q twice more,
-        # and DeduplicateRelations re-aliases each copy so its deg
-        # exchange counts separately here; at runtime q is ONE cached
-        # 50-row relation and the embeddings are cache reads. The
-        # trade removed the full-train SortMergeJoin LeftAnti.
-        # r15 (VERDICT r14 what's-wrong #3): budgets now count from a
-        # clean cache (fixture + per-entry clearCache), so the pin is
-        # the exact fresh-session count, not a ceiling over ambient
-        # cache states.
-        "link_prediction_holdout_eval": 13,
-        "t_closeness_audit": 6,
-        # r14: tightened 10 -> 7 — the query-private ewd=edges⋈outdeg
-        # materialization is gone (deg attaches to the frontier)
-        "personalized_pagerank": 7,
-        # r14: tightened 4 -> 3 — pre-sort union persisted (the sort
-        # samples the cache, not a recomputed verify chain)
-        "edit1_deletion_neighborhood_pairs": 3,
-        "ann_hamming_sign_topk": 5,
-        "golden_record_survivorship": 6,
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
-def test_round10_exchange_budgets(spark, sf001):
-    """Round-10 pins: the cache-lifecycle sweep (VERDICT r9 ask #3)
-    exposed pre-checkpoint builders for every scoped-cache query, so
-    the graph family's executed shapes — previously unbudgetable
-    because their spark_fns persisted mid-chain — get budgets for the
-    first time, plus the new edit-1 blow-up audit. All counts are on
-    the persisted builder plan (_plan_df), i.e. the shape run_scoped
-    executes."""
-    budgets = {
-        "edit1_pair_blowup_audit": 4,    # name-grain agg, key join,
-                                         # deletion-key self-join
-        # edge build, node-sized outdeg, 3 supersteps (r16: 16 -> 13,
-        # the edge-scale edges ⋈ outdeg cache and its distinct gone)
-        "pagerank_copurchase": 13,
-        "triangle_count_copurchase": 43,
-        "corpus_dedup_pipeline": 14,
-        "label_propagation_communities": 10,
-        # one map-side-combinable global agg: the scan's partial rows
-        # + the 1-row final — no other exchange may ever appear (the
-        # whole point of the sort-free fingerprint)
-        "dataset_content_fingerprint": 1,
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
-
-
-def test_round12_exchange_budgets(spark, sf001):
-    """Round-12 pins: CSLS margin mining is one batch-broadcast
-    component join + one (x, y) aggregate + two top-K windows (each
-    re-keys once) + the neighborhood-sum joins + the margin rank —
-    eleven exchanges on the static plan, every one at batch- or
-    candidate-grain, never Y x Y."""
-    budgets = {
-        "csls_margin_pair_mining": 11,
-        # dated edge build + per hop: the superstep's join and group
-        # by dst, the union's min per node
-        "temporal_reachability_copurchase": 9,
-    }
-    for name, budget in budgets.items():
-        n = num_exchanges(_plan_df(name, spark, sf001))
-        assert n <= budget, (name, n, budget)
-        # each entry counted from a clean cache: an earlier entry's
-        # unmaterialized persists must not swap InMemoryTableScans
-        # into this plan (cache-state-independent budgets, VERDICT
-        # r14 what's-wrong #3)
-        spark.catalog.clearCache()
 
 
 def test_bucketed_join_query_is_exchange_free_at_the_join(spark, sf001):

@@ -9,8 +9,7 @@ import re
 
 import numpy as np
 
-from big_datatrader_spark.queries import (
-    load_registry, persisting_cache, plan_of)
+from big_datatrader_spark.queries import load_registry
 from big_datatrader_spark.queries.vector_ops import (
     _KNN_K, _KNN_P, _MMR_CAND, _MMR_K, _MMR_Q)
 from big_datatrader_spark.sources.parquet_source import table
@@ -508,49 +507,6 @@ def test_recursive_cte_runs_in_spark_and_fills_gaps(spark):
     for r in out.itertuples():
         assert r.n_events == int(counts.get(r.day, 0))
         assert r.is_gap == (r.n_events == 0)
-
-
-def test_late_round7_exchange_budgets(spark):
-    """Exact shuffle-count pins for the late-round-7 queries (the
-    flagship-budget convention): a new Exchange in any of these plans
-    fails loudly here instead of silently doubling a 100 TB shuffle.
-    Every entry is counted on its audited plan (plan_of under
-    persisting_cache), so a scoped query's pin counts its builder's
-    shuffles, not the 0 of its result checkpoint."""
-    from big_datatrader_spark.plans.explain import num_exchanges
-    # Exchange counts depend on what the shared CacheManager holds (a
-    # cached subtree from an earlier test replaces a scan and re-plans
-    # around it) and on session conf: measure every plan COLD on a
-    # fresh-conf session, clearing the audit persists after each
-    # entry, so the pins are order-independent across the suite.
-    spark.catalog.clearCache()
-    work = spark.newSession()
-    budgets = {
-        "kneser_ney_bigram_ppl": 13,      # gram + 3 model tables + agg
-        "tokenizer_fertility": 2,
-        "knn_prototype_accuracy": 2,      # label rollup + sort
-        "label_propagation_communities": 10,  # 3 rounds x vote+argmax
-                                              # over the held edge list
-        "sparse_tfidf_cosine_pairs": 20,  # postings, norms, pair agg
-        "asof_join_nearest_tolerance": 3,  # dedup + 1 user hash + sort
-        "decision_split_information_gain": 4,
-        "rank_biased_overlap_parts": 2,   # two TakeOrdered feeds
-        # 44 > the original 23: the truth side's duplication collapse
-        # (round 9) adds fingerprint groupBy/expansion stages to the
-        # PLANNED tree — but the duplication^2 posting-list cost they
-        # remove measured 67s -> 8.0s at sf1 (SCALING.md); the extra
-        # exchanges are fp/id-narrow
-        "blocking_quality_metrics": 44,
-        "recursive_cte_date_spine": 2,
-    }
-    over = {}
-    for name, budget in budgets.items():
-        n = num_exchanges(plan_of(REG[name], work, SF,
-                                  cache=persisting_cache))
-        spark.catalog.clearCache()
-        if n > budget:
-            over[name] = (n, budget)
-    assert not over, over
 
 
 def test_ridge_betas_match_numpy_solve(spark):

@@ -11,13 +11,9 @@ and asserts over what actually ran:
 - no single-partition exchange — state stores are partitioned by group
   key (``hashpartitioning(key, N)``), never collapsed to one task, so
   streaming state scales out exactly like a batch shuffle would;
-- an EXACT per-query exchange budget, pinned like the batch gate's
-  ``num_exchanges`` budgets so a new shuffle in a streaming plan fails
-  loudly here.
-
-``streaming_cdc_upsert`` budget is 0: its merge runs inside
-foreachBatch (batch plans, audited by the batch gate's conventions);
-the streaming plan proper is just the source projection.
+- the exchange count the query declares (``@query(exchanges=N)``),
+  read from the same executed plans, so a new shuffle in a streaming
+  plan fails loudly here.
 """
 
 from __future__ import annotations
@@ -31,34 +27,14 @@ from big_datatrader_spark.streaming import pipeline as P
 
 REG = load_registry()
 
-# exact executed-exchange budgets per streaming query
-EXCHANGE_BUDGET = {
-    "streaming_cdc_upsert": 0,            # foreachBatch merge sink
-    "streaming_click_purchase_join": 2,   # one per join side
-    "streaming_distinct_user_types": 1,
-    "streaming_enriched_rollup": 2,       # dim join + rollup agg
-    "streaming_exactly_once_dedup": 1,
-    "streaming_hourly_rollup": 1,
-    "streaming_offset_source_windowed": 1,  # tumbling-window agg over
-                                            # the offset-tracked feed
-    "streaming_outer_join_null_emission": 2,  # one per join side;
-                                              # null emission rides
-                                              # the state eviction
-    "streaming_python_datasource": 1,
-    "streaming_running_position": 1,      # groupBy before state fold
-    "streaming_session_window": 1,
-    "streaming_state_preflight": 1,   # per-user complete-mode agg
-    "streaming_topk_trending": 1,
-    "streaming_watermark_late_drop": 1,   # windowed agg over the
-                                          # staged 3-batch file source
-}
 
-
-@pytest.mark.parametrize("name", sorted(EXCHANGE_BUDGET))
+@pytest.mark.parametrize(
+    "name", sorted(n for n in REG if n.startswith("streaming_")))
 def test_streaming_drain_plan_is_scale_safe(spark, sf001, name):
     P.DRAIN_PLANS.clear()
     REG[name].spark_fn(spark, sf001).collect()
-    if EXCHANGE_BUDGET[name] == 0 and not P.DRAIN_PLANS:
+    declared = REG[name].exchanges
+    if declared == 0 and not P.DRAIN_PLANS:
         return  # plan capture requires an executed batch; sink-only
     assert P.DRAIN_PLANS, f"{name}: no executed plan captured"
     for plan in P.DRAIN_PLANS:
@@ -70,12 +46,6 @@ def test_streaming_drain_plan_is_scale_safe(spark, sf001, name):
         assert not re.search(r"hashpartitioning\([^)]*?, 1\)", plan), (
             f"{name}: state store hashed to a single partition")
         n_ex = plan.count("Exchange ")
-        assert n_ex <= EXCHANGE_BUDGET[name], (
-            f"{name}: {n_ex} exchanges at drain, budget "
-            f"{EXCHANGE_BUDGET[name]} — a new shuffle appeared")
+        assert n_ex == declared, (
+            f"{name}: {n_ex} exchanges at drain, declared {declared}")
 
-
-def test_every_streaming_query_has_a_budget():
-    """A new streaming_* query must pin a drain budget here or fail."""
-    streaming = {n for n in REG if n.startswith("streaming_")}
-    assert streaming == set(EXCHANGE_BUDGET)

@@ -13,6 +13,7 @@ import pytest
 
 from big_datatrader_spark.queries import load_registry
 from big_datatrader_spark.sources.parquet_source import table
+from conftest import session_width
 
 REG = load_registry()
 SF = "/root/testdata/sf0.001"
@@ -136,12 +137,11 @@ def test_holt_matches_independent_recursion(spark):
     assert got_sym.b.tolist() == exp_b
 
 
-def test_round4_ops_partition_invariant(spark):
+def test_round4_ops_partition_invariant(spark, monkeypatch):
     """Round-4 exactness contract: integer-exact pipelines (NB
     nano-nat sums, winnowing packed mins, DSIR bucket sums, RSI/
     Bollinger integer-cent windows) and the per-series Holt fold must
     produce bit-identical results at ANY shuffle-partition count."""
-    import os
 
     def canon(pdf):
         # row order is not part of any query's contract (winnowing has
@@ -154,12 +154,8 @@ def test_round4_ops_partition_invariant(spark):
                  "holt_linear_smoothing"):
         base = canon(REG[name].spark_fn(spark, SF).toPandas())
         for p in (1, 7):
-            os.environ["SPARK_GRAFT_CPUS"] = str(p)
-            try:
+            with session_width(spark, monkeypatch, p):
                 again = canon(REG[name].spark_fn(spark, SF).toPandas())
-            finally:
-                os.environ["SPARK_GRAFT_CPUS"] = "32"
-                spark.conf.set("spark.sql.shuffle.partitions", "32")
             assert base.equals(again), (name, p)
 
 
@@ -447,7 +443,8 @@ def test_feature_hashing_conserves_tokens_and_bounds_buckets(spark):
     assert (out.signed_sum.abs() <= out.cnt).all()
 
 
-def test_window_funnel_deterministic_under_ts_ties(spark, tmp_path):
+def test_window_funnel_deterministic_under_ts_ties(spark, tmp_path,
+                                                  monkeypatch):
     """Round-4 advice regression: the funnel's window order is
     (tus, event_id) on BOTH window stages, so same-timestamp events
     cannot make the depth partition-layout-dependent. Synthesizes the
@@ -478,17 +475,15 @@ def test_window_funnel_deterministic_under_ts_ties(spark, tmp_path):
     # click precedes its view in (tus, event_id) order, so no anchor
     expected = {1: 3, 2: 1}
     for p in (1, 5):
-        spark.conf.set("spark.sql.shuffle.partitions", str(p))
-        try:
+        with session_width(spark, monkeypatch, p):
             got = {r.user_id: r.funnel_depth
                    for r in REG["window_funnel_depth"]
                    .spark_fn(spark, sf).collect()}
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", "32")
         assert got == expected, (p, got)
 
 
-def test_tie_sensitive_queries_deterministic_under_ties(spark, tmp_path):
+def test_tie_sensitive_queries_deterministic_under_ties(
+        spark, tmp_path, monkeypatch):
     """The round-5 tie-order sweep: every window that feeds a
     tie-sensitive function (row_number/lag/lead/ROWS frames/folds)
     orders by (ts, event_id) on both engines. On a synthetic events
@@ -521,9 +516,6 @@ def test_tie_sensitive_queries_deterministic_under_ties(spark, tmp_path):
                  "evenly_spaced_backtest", "ma_crossover_backtest"):
         outs = []
         for p in (1, 5):
-            spark.conf.set("spark.sql.shuffle.partitions", str(p))
-            try:
+            with session_width(spark, monkeypatch, p):
                 outs.append(canon(REG[name].spark_fn(spark, sf)))
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", "32")
         assert outs[0].equals(outs[1]), name
